@@ -374,10 +374,7 @@ def records_from_warc(files: DataFrame, bytes_col: str = "warc",
 
     sel = files.select(F.col(id_col).cast("string").alias("warc_id"),
                        F.col(bytes_col).alias("warc"))
-    # the alias is a plan-visible marker: dispatch_spans warns when fed
-    # this subtree un-landed (each family branch would re-run the parse)
-    return sel.mapInArrow(_parse, schema=RECORDS_SCHEMA) \
-        .alias("warc_records_unlanded")
+    return sel.mapInArrow(_parse, schema=RECORDS_SCHEMA)
 
 
 def warc_to_pages(files: DataFrame, bytes_col: str = "warc",
@@ -569,8 +566,7 @@ XLSX_MIME = ("application/vnd.openxmlformats-officedocument."
 EPUB_MIME = "application/epub+zip"
 
 
-def dedupe_captures(recs: DataFrame,
-                    strategy: str = "shuffle") -> DataFrame:
+def dedupe_captures(recs: DataFrame) -> DataFrame:
     """Latest capture per (target_uri, warc_type) wins.  Revisits and
     re-crawls are routine in crawl segments — a segment can carry two
     response records for one URI — and since dispatch keys documents by
@@ -579,88 +575,29 @@ def dedupe_captures(recs: DataFrame,
     different captures into one corrupted span array, and the flat
     families would emit duplicate doc_id rows.  Winner = max
     (WARC-Date, warc_id, rec_idx) lexicographically, so the newest
-    capture is kept with a total deterministic tie-break.
+    capture is kept with a total deterministic tie-break; exact
+    physical duplicates (the same segment fed twice) collapse to one
+    row.
 
     warc_type is part of the key because request records carry the
     same WARC-Target-URI as their response — deduping on URI alone
     could keep the request and drop the payload.  Records with no
     WARC-Target-URI at all (warcinfo, some metadata records) have no
-    capture identity: they pass through untouched in both strategies.
+    capture identity: they pass through untouched.
 
-    Two strategies, identical capture SELECTION (the same winning
-    capture per key).  One documented divergence: exact physical
-    duplicates of the winning row — same (target_uri, warc_type,
-    warc_id, rec_idx), i.e. the same record ingested twice via a
-    repeated segment manifest — collapse to one row under 'shuffle'
-    but survive as duplicates under 'broadcast' (identity-based
-    anti-join cannot tell copies apart; it removes losing IDENTITIES,
-    never the winning one).  Feed each segment once, or use 'shuffle',
-    when the input may contain repeated files.
-
-    - ``strategy='shuffle'`` (default, always correct): one shuffle on
-      (target_uri, warc_type) with map-side partial ``max_by`` combine.
-      Duplicate captures collapse inside each map task before the
-      exchange — but every surviving row's PAYLOAD still crosses the
-      wire once, so at 100 TB this moves the corpus.
-    - ``strategy='broadcast'``: the full rows never move.  A slim
-      projection (key + ordering columns, no payload) shuffles to find
-      the LOSING captures — revisits are a small fraction of a crawl,
-      so the loser set is small — which broadcast to a left_anti join
-      against the records.  Two map-only scans of the (landed) records
-      table, zero payload shuffle.  Use when the loser set fits the
-      broadcast budget (it is one row per superseded capture, not per
-      record); fall back to 'shuffle' for adversarial revisit-heavy
-      segments."""
-    key = ["target_uri", "warc_type"]
+    Shape: one shuffle on (target_uri, warc_type) with map-side
+    partial ``max_by`` combine — duplicate captures collapse inside
+    each map task before the exchange, but every surviving row's
+    payload still crosses the wire once."""
     ordk = F.struct(
         F.coalesce(F.col("warc_date"), F.lit("")).alias("d"),
         F.col("warc_id").alias("w"), F.col("rec_idx").alias("i"))
-    # Records with no WARC-Target-URI (warcinfo, some metadata) have
-    # no capture identity to dedupe on: they pass through untouched
-    # rather than being dropped or collapsed into one NULL-key group.
-    # Both strategies keep the passthrough inside ONE scan of `recs`
-    # (a where/union split would reference the subtree twice, and when
-    # the input is the un-landed container parse that re-runs the
-    # parse once per branch — measured 2x on the dispatch bench).
-    if strategy == "broadcast":
-        cap = F.struct(F.col("warc_id").alias("w"),
-                       F.col("rec_idx").alias("i"))
-        # losers are computed from URI-carrying records only (a slim
-        # no-payload projection); NULL-URI rows on the probe side can
-        # never equal a loser key, so the left_anti join keeps them —
-        # the passthrough falls out of standard NULL join semantics
-        live = recs.where(F.col("target_uri").isNotNull())
-        losers = (live.groupBy(*key)
-                  .agg(F.collect_list(F.struct(ordk.alias("o"),
-                                               cap.alias("c")))
-                       .alias("caps"))
-                  .where(F.size("caps") > 1)
-                  .select(*key,
-                          F.expr("element_at(array_sort(caps), -1).c")
-                          .alias("_win"),
-                          F.explode(F.expr(
-                              # drop the max element (the winner);
-                              # struct sort is lexicographic on
-                              # (o, c), so the last entry is kept
-                              "slice(array_sort(caps), 1, "
-                              "size(caps) - 1)"))
-                          .alias("l"))
-                  # a loser entry that shares the WINNING identity is
-                  # an exact physical duplicate of the kept row —
-                  # anti-joining it would delete the winner too, so
-                  # losers are identities strictly different from the
-                  # winner's
-                  .where((F.col("l.c.w") != F.col("_win.w"))
-                         | (F.col("l.c.i") != F.col("_win.i")))
-                  .select(*key, F.col("l.c.w").alias("warc_id"),
-                          F.col("l.c.i").alias("rec_idx"))
-                  .distinct())
-        return recs.join(F.broadcast(losers),
-                         on=key + ["warc_id", "rec_idx"],
-                         how="left_anti")
     # NULL-URI rows get a per-record surrogate group key so each
     # passes through as its own group in the SAME aggregation — one
-    # scan, one exchange.  The isNull flag is part of the grouping
+    # scan, one exchange (a where/union split would reference the
+    # subtree twice, and when the input is the un-landed container
+    # parse that re-runs the parse once per branch — measured 2x on
+    # the dispatch bench).  The isNull flag is part of the grouping
     # key so a crafted real URI (headers are attacker-controlled
     # bytes) can never collide with a surrogate, whatever its content
     gkey = F.coalesce(
@@ -675,31 +612,26 @@ def dedupe_captures(recs: DataFrame,
             .select(*recs.columns))
 
 
-def _media_span_docs(media_recs: DataFrame,
-                     sniff: bool = True) -> DataFrame:
+def _media_span_docs(media_recs: DataFrame) -> DataFrame:
     """Standalone image ``resource`` records -> single-media-span
-    documents.  With ``sniff`` the span's ``text`` carries the typed
+    documents.  The span's ``text`` carries the typed
     header metadata ('<mime> <width>x<height>', e.g. 'image/png
     16x9') sniffed from the container bytes by
     ``multimodal.sniff_image`` — PNG/JPEG/GIF/BMP/WebP, header bytes
     only, one map-only Arrow pass, no codec library — so dispatch
     output preserves image dimensions without a decode stage."""
+    from .multimodal import image_header_meta
     sel = media_recs.select(F.col("target_uri").alias("doc_id"),
                             F.col("payload"))
-    if sniff:
-        from .multimodal import image_header_meta
-        meta = image_header_meta(sel, bytes_col="payload",
-                                 ref_col="doc_id")
-        sel = meta.select(
-            F.col("media_ref").alias("doc_id"),
-            F.when(F.col("mime").isNull(), F.lit(""))
-            .when(F.col("width").isNull(), F.col("mime"))
-            .otherwise(F.concat_ws(
-                " ", F.col("mime"),
-                F.concat_ws("x", F.col("width"), F.col("height"))))
-            .alias("_meta"))
-    else:
-        sel = sel.select("doc_id", F.lit("").alias("_meta"))
+    meta = image_header_meta(sel, bytes_col="payload", ref_col="doc_id")
+    sel = meta.select(
+        F.col("media_ref").alias("doc_id"),
+        F.when(F.col("mime").isNull(), F.lit(""))
+        .when(F.col("width").isNull(), F.col("mime"))
+        .otherwise(F.concat_ws(
+            " ", F.col("mime"),
+            F.concat_ws("x", F.col("width"), F.col("height"))))
+        .alias("_meta"))
     return sel.select(
         "doc_id",
         F.array(F.struct(
@@ -710,9 +642,7 @@ def _media_span_docs(media_recs: DataFrame,
 
 
 def dispatch_spans(recs: DataFrame, ok_only: bool = True,
-                   dedupe: bool = True,
-                   sniff_media: bool = True,
-                   dedupe_strategy: str = "shuffle") -> DataFrame:
+                   dedupe: bool = True) -> DataFrame:
     """Typed WARC record rows -> ONE unified contract span table
     ``(doc_id, spans array<struct<kind,text,media_ref,offset>>)``,
     routed by effective media type: ``text/html`` responses through
@@ -737,49 +667,19 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
     crawl semantics require (see its docstring) — after which the
     html/docx/pptx/xlsx/media branches are map-only; the pdf/epub
     branches pay their documented bounded per-doc reassembly
-    exchanges.  No joins with the default strategies (plan-asserted
-    in tests/test_warc.py; ``dedupe_strategy='broadcast'`` is the one
-    documented exception — it adds the loser broadcast left_anti
-    join).  Feed this from a LANDED records table
-    (``warc_dispatch_spans`` lands automatically) so the container
-    bytes are parsed once, not once per family branch."""
+    exchanges.  No joins (plan-asserted in tests/test_warc.py).
+
+    The input must be a landed, deduped records table passed with
+    ``dedupe=False``, or use ``warc_dispatch_spans``: over an
+    un-landed ``records_from_warc`` plan every family branch re-runs
+    the container parse, and an in-plan dedupe re-runs its exchange
+    once per branch."""
     from .docx import docx_to_spans
     from .html import html_to_spans
     from .pdffile import files_to_spans
 
-    try:
-        from pyspark import StorageLevel
-        persisted = recs.storageLevel != StorageLevel.NONE
-    except Exception:
-        persisted = False
-    try:
-        analyzed = ("" if persisted
-                    else recs._jdf.queryExecution().analyzed().toString())
-    except Exception:
-        analyzed = ""
-    unlanded = "warc_records_unlanded" in analyzed
-    if unlanded:
-        import warnings
-        warnings.warn(
-            "dispatch_spans fed an un-landed records_from_warc plan: "
-            "each family branch will re-run the container parse. Use "
-            "warc_dispatch_spans (lands by default) or persist the "
-            "records table first.", RuntimeWarning, stacklevel=2)
-    if dedupe and not unlanded:
-        # landed/persisted input + in-plan dedupe: the branches filter
-        # on warc_type (a dedupe grouping key), Catalyst pushes each
-        # branch's filter through the aggregate, and the dedupe
-        # exchange re-runs once per family.  The single-exchange shape
-        # is dedupe_captures -> land -> dispatch_spans(dedupe=False),
-        # which warc_dispatch_spans does automatically.
-        import warnings
-        warnings.warn(
-            "dispatch_spans dedupe=True runs the dedupe exchange once "
-            "per family branch. Prefer warc_dispatch_spans (dedupes "
-            "before landing), or dedupe_captures + persist the result "
-            "and pass dedupe=False.", RuntimeWarning, stacklevel=2)
     if dedupe:
-        recs = dedupe_captures(recs, strategy=dedupe_strategy)
+        recs = dedupe_captures(recs)
     resp = recs.where(F.col("warc_type") == "response")
     if ok_only:
         resp = resp.where(F.col("http_status") == 200)
@@ -812,8 +712,7 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
                     F.col("payload").alias("epub")))
     media = _media_span_docs(
         recs.where((F.col("warc_type") == "resource") &
-                   F.col("content_type").startswith("image/")),
-        sniff=sniff_media)
+                   F.col("content_type").startswith("image/")))
     return html.unionByName(pdf).unionByName(docx) \
         .unionByName(pptx).unionByName(xlsx).unionByName(epub) \
         .unionByName(media)
@@ -823,15 +722,10 @@ def warc_dispatch_spans(files: DataFrame,
                         stage_dir: str | None = None,
                         bytes_col: str = "warc",
                         id_col: str = "warc_id",
-                        ok_only: bool = True,
-                        land: bool = True,
-                        dedupe: bool = True,
-                        sniff_media: bool = True,
-                        dedupe_strategy: str = "shuffle") -> DataFrame:
+                        ok_only: bool = True) -> DataFrame:
     """WARC container files -> unified contract spans across ALL
     payload types.  The container bytes are parsed and the revisit
-    captures deduped ONCE by default, and the DEDUPED records are what
-    lands: with ``stage_dir`` as parquet (each family branch then
+    captures deduped ONCE, and the DEDUPED records are what lands: with ``stage_dir`` as parquet (each family branch then
     reads only its rows/columns from the landed table, min/max +
     dictionary pruning on ``content_type``), otherwise via an eager
     ``localCheckpoint``, so the seven family branches are pure map
@@ -846,22 +740,15 @@ def warc_dispatch_spans(files: DataFrame,
     table landed there is exactly ONE parse and ONE dedupe exchange
     in the whole job.
 
-    ``land=False`` restores the recompute-per-branch composition for
-    plan-shape tests only — semantically identical, wrong at 100 TB.
     For production runs prefer ``stage_dir`` (durable parquet,
     survives executor loss; localCheckpoint storage does not)."""
-    recs = records_from_warc(files, bytes_col, id_col)
-    if dedupe and (stage_dir is not None or land):
-        recs = dedupe_captures(recs, strategy=dedupe_strategy)
-        dedupe = False            # landed table is already deduped
+    recs = dedupe_captures(records_from_warc(files, bytes_col, id_col))
     if stage_dir is not None:
         recs.write.mode("overwrite").parquet(stage_dir)
         recs = files.sparkSession.read.parquet(stage_dir)
-    elif land:
+    else:
         recs = recs.localCheckpoint(eager=True)
-    return dispatch_spans(recs, ok_only=ok_only, dedupe=dedupe,
-                          sniff_media=sniff_media,
-                          dedupe_strategy=dedupe_strategy)
+    return dispatch_spans(recs, ok_only=ok_only, dedupe=False)
 
 
 def build_one_mixed_warc(doc: int, text: str, html: str) -> bytes:

@@ -1,16 +1,16 @@
-"""Adversarial parity fuzz: the hybrid Catalyst enrichment operators
-(enrich_columns via plans/enrichment_hybrid) must stay field-identical to
-the all-python enrich_document path on hostile issue corpora — unicode
-text, empty/giant descriptions, odd statuses, boilerplate titles,
-measurement soup. Complements test_enrich_hybrid.py's standard-corpus
-parity with the nasty tail."""
+"""Adversarial parity fuzz: the production enrichment plan
+(plans/enrichment.enrich_extracted, the mapInPandas pass the jobs run)
+must stay field-identical to the all-python enrich_document path on
+hostile issue corpora — unicode text, empty/giant descriptions, odd
+statuses, boilerplate titles, measurement soup — after the issues cross
+the Arrow<->pandas struct mapping both ways. Complements
+test_enrichment.py's standard-corpus parity with the nasty tail."""
 
 import math
 import random
 
 from pdf_extraction_spark import enrich_rules as er
-from pdf_extraction_spark.plans.enrichment_hybrid import (
-    enrich_extracted_hybrid)
+from pdf_extraction_spark.plans.enrichment import enrich_extracted
 
 DESCS = [
     "",
@@ -82,9 +82,7 @@ FLOATS = ("severity_confidence", "action_confidence", "category_confidence",
           "strategy_confidence")
 
 
-
-
-def test_hybrid_parity_on_adversarial_issues(spark):
+def test_enrich_parity_on_adversarial_issues(spark):
     docs = gen(50, seed=1)
     schema = (
         "doc_id string, issues array<struct<id string, section string, "
@@ -102,16 +100,15 @@ def test_hybrid_parity_on_adversarial_issues(spark):
 
     want = {d: er.enrich_document([dict(i) for i in issues])
             for d, issues in docs}
-    got = {}
-    for r in enrich_extracted_hybrid(sdf).collect():
-        got.setdefault(r["doc_id"], {})[r["issue_order"]] = \
-            r.asDict(recursive=True)
+    got = {r["doc_id"]: r.asDict(recursive=True)
+           for r in enrich_extracted(sdf).collect()}
 
     for doc_id, res in want.items():
-        rows = got.get(doc_id, {})
-        assert len(rows) == len(res["issues"]), doc_id
-        for order, issue in enumerate(res["issues"]):
-            row = rows[order]
+        out = got[doc_id]
+        assert len(out["issues"]) == len(res["issues"]), doc_id
+        assert out["n_excluded"] == res["n_excluded"], doc_id
+        for order, (row, issue) in enumerate(zip(out["issues"],
+                                                 res["issues"])):
             ctx = f"{doc_id}#{order}"
             for k in BOOLS:
                 assert row[k] == bool(issue.get(k, False)), f"{ctx}.{k}"
@@ -123,8 +120,8 @@ def test_hybrid_parity_on_adversarial_issues(spark):
                     f"{ctx}.{k}: {row[k]} != {issue.get(k)}"
             cls = issue.get("classification", {})
             for k in ("trade", "work_type", "complexity"):
-                assert row[k] == cls.get(k), f"{ctx}.{k}"
-            est = issue.get("rule_estimate")
-            if est:
-                assert row["estimated_low"] == est.get("estimated_low"), ctx
-                assert row["estimated_high"] == est.get("estimated_high"), ctx
+                assert row["classification"][k] == cls.get(k), f"{ctx}.{k}"
+        est = [(e["issue_id"], e["estimated_low"], e["estimated_high"])
+               for e in res["estimates"]]
+        assert [(e["issue_id"], e["estimated_low"], e["estimated_high"])
+                for e in out["estimates"]] == est, doc_id

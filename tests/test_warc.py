@@ -411,25 +411,17 @@ def test_dispatch_lands_records_once_by_default(spark, docs):
     """By default the container parse is materialized once
     (localCheckpoint) before the family branches fan out — the
     original files scan must not appear once per family in the
-    executed plan.  land=False restores the recompute shape (and
-    must stay value-identical)."""
+    executed plan."""
     from pdf_extraction_spark.operators.warc import warc_dispatch_spans
-    mixed = _mixed(spark, docs)
-    landed = warc_dispatch_spans(mixed)
+    landed = warc_dispatch_spans(_mixed(spark, docs))
     plan = landed._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan
-    direct = warc_dispatch_spans(mixed, land=False)
-    plan2 = direct._jdf.queryExecution().executedPlan().toString()
-    assert plan2.count("MapInArrow") > plan.count("MapInArrow")
-    key = lambda r: r["doc_id"]  # noqa: E731
-    assert sorted(landed.collect(), key=key) == \
-        sorted(direct.collect(), key=key)
 
 
-def test_dedupe_strategies_equivalent(spark):
-    """'broadcast' (loser anti-join, zero payload shuffle) must yield
-    exactly the rows 'shuffle' (max_by) keeps, and the anti-join plan
-    must broadcast the loser side."""
+def test_dedupe_latest_capture_wins_out_of_order(spark):
+    """Captures of one URI arriving out of date order: the latest
+    (by WARC-Date) wins wherever it sits in the segment, and a URI
+    with a single capture is kept as is."""
     from pdf_extraction_spark.operators.warc import (dedupe_captures,
                                                      records_from_warc,
                                                      warc_record)
@@ -453,44 +445,17 @@ def test_dedupe_strategies_equivalent(spark):
     ])
     files = spark.createDataFrame([("w1", bytearray(blob))],
                                   "warc_id string, warc binary")
-    recs = records_from_warc(files)
-    key = lambda r: (r["target_uri"], r["warc_type"],  # noqa: E731
-                     r["rec_idx"])
-    shuf = sorted(dedupe_captures(recs).collect(), key=key)
-    bcast_df = dedupe_captures(recs, strategy="broadcast")
-    bcast = sorted(bcast_df.collect(), key=key)
-    texts = {r["target_uri"]: r["text"] for r in shuf}
+    out = dedupe_captures(records_from_warc(files)).collect()
+    assert len(out) == 2
+    texts = {r["target_uri"]: r["text"] for r in out}
     assert "a-new" in texts["https://h.example/a"]
-    assert [tuple(sorted(r.asDict().items())) for r in shuf] == \
-        [tuple(sorted(r.asDict().items())) for r in bcast]
-    plan = bcast_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
-def test_dispatch_warns_on_unlanded_records(spark, docs):
-    """Feeding dispatch_spans the raw records_from_warc subtree (each
-    family branch re-runs the container parse) raises a loud
-    RuntimeWarning; the landed path stays silent."""
-    import warnings as _w
-    from pdf_extraction_spark.operators.warc import (dispatch_spans,
-                                                     records_from_warc)
-    mixed = _mixed(spark, docs)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        dispatch_spans(records_from_warc(mixed))
-    assert any("un-landed" in str(c.message) for c in caught)
-    recs = records_from_warc(mixed).localCheckpoint(eager=True)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        dispatch_spans(recs)
-    assert not any("un-landed" in str(c.message) for c in caught)
+    assert "b-only" in texts["https://h.example/b"]
 
 
 def test_dedupe_passes_through_null_uri_records(spark):
     """warcinfo/metadata records carry no WARC-Target-URI — they have
-    no capture identity, so both dedupe strategies must pass them
-    through untouched, not drop them or collapse them into one
-    NULL-key group."""
+    no capture identity, so dedupe must pass them through untouched,
+    not drop them or collapse them into one NULL-key group."""
     from pdf_extraction_spark.operators.warc import (dedupe_captures,
                                                      records_from_warc,
                                                      warc_record)
@@ -509,19 +474,15 @@ def test_dedupe_passes_through_null_uri_records(spark):
     files = spark.createDataFrame(
         [("w1", bytearray(info1 + info2 + rsp))],
         "warc_id string, warc binary")
-    recs = records_from_warc(files)
-    for strat in ("shuffle", "broadcast"):
-        out = dedupe_captures(recs, strategy=strat).collect()
-        types = sorted(r["warc_type"] for r in out)
-        assert types == ["response", "warcinfo", "warcinfo"], strat
+    out = dedupe_captures(records_from_warc(files)).collect()
+    types = sorted(r["warc_type"] for r in out)
+    assert types == ["response", "warcinfo", "warcinfo"]
 
 
-def test_dedupe_broadcast_survives_exact_duplicate_segments(spark):
+def test_dedupe_collapses_exact_duplicate_segments(spark):
     """The same segment fed twice (duplicate warc_id rows) gives two
-    record copies with IDENTICAL capture identity: the broadcast
-    anti-join must not delete the winning identity (which would drop
-    the document entirely).  Documented divergence: broadcast keeps
-    both physical copies; shuffle collapses to one."""
+    record copies with IDENTICAL capture identity: they collapse to
+    one row, and the document is kept."""
     from pdf_extraction_spark.operators.warc import (dedupe_captures,
                                                      records_from_warc,
                                                      warc_record)
@@ -537,31 +498,9 @@ def test_dedupe_broadcast_survives_exact_duplicate_segments(spark):
     files = spark.createDataFrame(
         [("w1", bytearray(blob)), ("w1", bytearray(blob))],
         "warc_id string, warc binary")
-    recs = records_from_warc(files)
-    assert len(dedupe_captures(recs).collect()) == 1
-    bc = dedupe_captures(recs, strategy="broadcast").collect()
-    assert len(bc) == 2          # copies survive; document NOT lost
-    assert all(r["target_uri"] == "https://h.example/dup" for r in bc)
-
-
-def test_dispatch_warns_on_landed_plus_in_plan_dedupe(spark, docs):
-    """dedupe=True over a landed table re-runs the dedupe exchange
-    once per family branch — warn; warc_dispatch_spans' pre-deduped
-    path stays silent."""
-    import warnings as _w
-    from pdf_extraction_spark.operators.warc import (dispatch_spans,
-                                                     records_from_warc)
-    recs = records_from_warc(_mixed(spark, docs)) \
-        .localCheckpoint(eager=True)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        dispatch_spans(recs)                      # dedupe=True default
-    assert any("once per family branch" in str(c.message)
-               for c in caught)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        dispatch_spans(recs, dedupe=False)
-    assert not caught
+    out = dedupe_captures(records_from_warc(files)).collect()
+    assert len(out) == 1
+    assert out[0]["target_uri"] == "https://h.example/dup"
 
 
 def test_dedupe_surrogate_key_immune_to_crafted_nul_uri(spark):
