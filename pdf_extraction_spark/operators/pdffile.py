@@ -618,9 +618,11 @@ def parse_object(data: bytes, i: int) -> tuple[Any, int]:
         if b"." not in tok:
             # ``N G R`` lookahead for an indirect reference (digit
             # guard skips the second regex when the next token can't
-            # be a generation number)
+            # be a generation number; a damaged signed one, ``5 -3 R``,
+            # is salvaged as a Ref too)
             k = _skip_ws(data, j)
-            if k < n and 0x30 <= data[k] <= 0x39:
+            d = k + 1 if k < n and data[k] in b"+-" else k
+            if d < n and 0x30 <= data[d] <= 0x39:
                 m2 = _NUM_RE.match(data, k)
                 if b"." not in m2.group(0):
                     k2 = _skip_ws(data, m2.end())

@@ -11,7 +11,14 @@ whole document when its hash was seen before. The distributed analog
 - a *metrics table* under ``<dir>/metrics`` with one row per output
   partition per run: (run_id, stage, partition_id, doc_count, span_count,
   issue_count, wall_ms) — the per-partition lineage the north-rule
-  requires for auditing a resumable 10^12-doc run.
+  requires for auditing a resumable 10^12-doc run. ``wall_ms`` is the
+  run's plan-and-count wall, repeated on every partition row of that
+  run; it is not a per-partition wall.
+
+The input is evaluated once per run: the docs with their content hash
+are cached for the run and feed both the anti-join and the
+processed-keys append, and every cache entry the run made is released
+when it returns, including when it raises.
 
 Storage goes through ``sources/catalog.py``'s TableStore protocol: plain
 parquet directories here (``ParquetStore``, the default), Iceberg catalog
@@ -48,7 +55,12 @@ def run_incremental(spark: SparkSession, docs: DataFrame, out_dir: str,
     ``store`` is a ``catalog.TableStore`` (idents ``data``/``processed``/
     ``metrics``); default is parquet dirs under ``out_dir``. Pass an
     ``IcebergStore`` on a cluster for atomic-snapshot appends and a
-    duplicate-free processed-keys table."""
+    duplicate-free processed-keys table.
+
+    ``docs`` is evaluated once: the hashed docs are persisted (default
+    level, so a large input spills to disk) for the run, read by every
+    branch of ``plan`` and by the processed-keys join, and unpersisted
+    on exit, including when ``plan``, the count or an append raises."""
     if plan is None:
         from ..plans.fused import assemble_fused
         plan = assemble_fused
@@ -58,45 +70,55 @@ def run_incremental(spark: SparkSession, docs: DataFrame, out_dir: str,
     data_dir = store.location("data")
     run_id = uuid.uuid4().hex[:12]
 
-    keyed = docs.withColumn("content_hash", content_hash_col())
-    if store.exists(spark, "processed"):
-        seen = store.read(spark, "processed")
-        todo = keyed.join(seen.select("doc_id", "content_hash"),
-                          ["doc_id", "content_hash"], "left_anti")
-    else:
-        todo = keyed
+    # the anti-join under each of the plan's branches and the
+    # processed-keys join all read ``keyed``: cached, its input (e.g. a
+    # WARC dispatch) is evaluated once per run instead of once per reader
+    keyed = docs.withColumn("content_hash", content_hash_col()).persist()
+    extracted = None
+    try:
+        if store.exists(spark, "processed"):
+            seen = store.read(spark, "processed")
+            todo = keyed.join(seen.select("doc_id", "content_hash"),
+                              ["doc_id", "content_hash"], "left_anti")
+        else:
+            todo = keyed
 
-    t0 = time.time()
-    extracted = plan(todo.drop("content_hash")).persist()
-    n_done = extracted.count()
-    wall_ms = int((time.time() - t0) * 1000)
+        t0 = time.time()
+        extracted = plan(todo.drop("content_hash")).persist()
+        n_done = extracted.count()
+        wall_ms = int((time.time() - t0) * 1000)
 
-    if n_done:
-        store.append(extracted, "data")
+        if n_done:
+            store.append(extracted, "data")
 
-        # metrics MUST be written before the processed-keys append: that
-        # append invalidates the cached plan (it reads the processed
-        # table via the anti-join), and a recompute would see its own
-        # output.
-        metrics = (extracted
-                   .groupBy(F.spark_partition_id().alias("partition_id"))
-                   .agg(F.count(F.lit(1)).alias("doc_count"),
-                        F.sum(F.size("spans")).alias("span_count"),
-                        F.sum(F.size("issues")).alias("issue_count"))
-                   .select(F.lit(run_id).alias("run_id"),
-                           F.lit(stage).alias("stage"),
-                           "partition_id", "doc_count", "span_count",
-                           "issue_count",
-                           F.lit(wall_ms).alias("wall_ms"),
-                           F.current_timestamp().alias("ts")))
-        store.append(metrics, "metrics")
+            # metrics MUST be written before the processed-keys append:
+            # that append invalidates the cached plan (it reads the
+            # processed table via the anti-join), and a recompute would
+            # see its own output. ``keyed`` does not read that table.
+            metrics = (extracted
+                       .groupBy(F.spark_partition_id().alias("partition_id"))
+                       .agg(F.count(F.lit(1)).alias("doc_count"),
+                            F.sum(F.size("spans")).alias("span_count"),
+                            F.sum(F.size("issues")).alias("issue_count"))
+                       .select(F.lit(run_id).alias("run_id"),
+                               F.lit(stage).alias("stage"),
+                               "partition_id", "doc_count", "span_count",
+                               "issue_count",
+                               F.lit(wall_ms).alias("wall_ms"),
+                               F.current_timestamp().alias("ts")))
+            store.append(metrics, "metrics")
 
-        store.upsert_keys(
-            extracted.select("doc_id")
-            .join(keyed.select("doc_id", "content_hash"), "doc_id")
-            .withColumn("run_id", F.lit(run_id)),
-            "processed", keys=["doc_id", "content_hash"])
-    extracted.unpersist()
+            store.upsert_keys(
+                extracted.select("doc_id")
+                .join(keyed.select("doc_id", "content_hash"), "doc_id")
+                .withColumn("run_id", F.lit(run_id)),
+                "processed", keys=["doc_id", "content_hash"])
+    finally:
+        # dependents first: uncaching ``keyed`` while ``extracted`` is
+        # still cached can make Spark re-plan ``extracted``
+        if extracted is not None:
+            extracted.unpersist()
+        keyed.unpersist()
 
     return {"run_id": run_id, "processed": n_done, "wall_ms": wall_ms,
             "data_dir": data_dir}

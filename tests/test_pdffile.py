@@ -49,6 +49,11 @@ def test_parse_ref_vs_int():
     assert _parse(b"[1 2 3]") == [1, 2, 3]
     # 'R' must be a standalone token: /R is a NAME, not a ref marker
     assert _parse(b"[1 0 /R]") == [1, 0, "R"]
+    # a signed generation is still a ref; a signed int before a non-R
+    # token stays an int
+    assert _parse(b"[5 -3 R]") == [Ref(5, -3)]
+    assert _parse(b"[5 +3 R]") == [Ref(5, 3)]
+    assert _parse(b"[5 -3 7]") == [5, -3, 7]
 
 
 def test_parse_dict_nested_and_comments():
