@@ -77,11 +77,6 @@ def boilerplate_col(col: Column) -> Column:
     return meta | (disclaimer & ~rescue)
 
 
-def contains_any_col(col_lower: Column, words: list[str]) -> Column:
-    """Public helper for keyword-containment cascades (C4, W2, etc.)."""
-    return _contains_any(col_lower, words)
-
-
 # --- C4: priority (src/data_structurer.py:110-144) -------------------------
 
 def priority_col(content_lower: Column, status: Column,

@@ -142,16 +142,6 @@ def sample_frames(media: DataFrame, every_ms: int = 80,
     return video.mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
-def media_refs_from_extraction(extracted: DataFrame) -> DataFrame:
-    """Pull the distinct media_ref universe out of the extraction output's
-    span sequences (kind='media_ref' spans)."""
-    return (extracted
-            .select(F.explode("spans").alias("s"))
-            .where(F.col("s.kind") == "media_ref")
-            .select(F.col("s.media_ref").alias("media_ref"))
-            .distinct())
-
-
 # -------------------------------------------- image header metadata
 #
 # Unlike pixel decode (codec-gated above), the HEADER of every major

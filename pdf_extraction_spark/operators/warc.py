@@ -574,10 +574,13 @@ def dedupe_captures(recs: DataFrame) -> DataFrame:
     the pdf/epub branches groupBy doc_id and would interleave pages from
     different captures into one corrupted span array, and the flat
     families would emit duplicate doc_id rows.  Winner = max
-    (WARC-Date, warc_id, rec_idx) lexicographically, so the newest
-    capture is kept with a total deterministic tie-break; exact
-    physical duplicates (the same segment fed twice) collapse to one
-    row.
+    (WARC-Date as an instant, raw WARC-Date, warc_id, rec_idx), so the
+    newest capture is kept with a total deterministic tie-break: dates
+    of mixed precision ('...:00Z' vs '...:00.500Z') compare as the
+    instants they name, an unparseable date (the header is
+    attacker-controlled bytes) is NULL and loses to any parseable one
+    instead of failing the task, and exact physical duplicates (the
+    same segment fed twice) collapse to one row.
 
     warc_type is part of the key because request records carry the
     same WARC-Target-URI as their response — deduping on URI alone
@@ -590,6 +593,7 @@ def dedupe_captures(recs: DataFrame) -> DataFrame:
     each map task before the exchange, but every surviving row's
     payload still crosses the wire once."""
     ordk = F.struct(
+        F.try_to_timestamp(F.col("warc_date")).alias("t"),
         F.coalesce(F.col("warc_date"), F.lit("")).alias("d"),
         F.col("warc_id").alias("w"), F.col("rec_idx").alias("i"))
     # NULL-URI rows get a per-record surrogate group key so each
@@ -610,6 +614,15 @@ def dedupe_captures(recs: DataFrame) -> DataFrame:
             .agg(F.max_by(F.struct(*cols), ordk).alias("_w"))
             .select("warc_type", "_w.*")
             .select(*recs.columns))
+
+
+def _status_ok() -> Column:
+    """Rows ``ok_only`` keeps: every non-response record, and responses
+    with HTTP status 200 (a missing status is not 200).  Applied BEFORE
+    the capture dedupe, so a non-200 capture never competes: a newer
+    404 of a URI cannot evict its older 200."""
+    return ((F.col("warc_type") != "response")
+            | (F.col("http_status") == 200))
 
 
 def _media_span_docs(media_recs: DataFrame) -> DataFrame:
@@ -678,11 +691,11 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
     from .html import html_to_spans
     from .pdffile import files_to_spans
 
+    if ok_only:
+        recs = recs.where(_status_ok())
     if dedupe:
         recs = dedupe_captures(recs)
     resp = recs.where(F.col("warc_type") == "response")
-    if ok_only:
-        resp = resp.where(F.col("http_status") == 200)
     html = html_to_spans(
         resp.where(F.col("content_type").isin(*HTML_MIMES))
             .select(F.col("target_uri").alias("doc_id"),
@@ -742,7 +755,10 @@ def warc_dispatch_spans(files: DataFrame,
 
     For production runs prefer ``stage_dir`` (durable parquet,
     survives executor loss; localCheckpoint storage does not)."""
-    recs = dedupe_captures(records_from_warc(files, bytes_col, id_col))
+    recs = records_from_warc(files, bytes_col, id_col)
+    if ok_only:
+        recs = recs.where(_status_ok())
+    recs = dedupe_captures(recs)
     if stage_dir is not None:
         recs.write.mode("overwrite").parquet(stage_dir)
         recs = files.sparkSession.read.parquet(stage_dir)

@@ -617,27 +617,6 @@ def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
         schema=PA_SCHEMA)
 
 
-def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pandas adapter (tests / driver-side use)."""
-    doc_ids = np.asarray(pdf["doc_id"].tolist(), dtype=object)
-    kinds, texts, refs, offs = [], [], [], []
-    lengths = []
-    for spans in pdf["spans"]:
-        spans = sorted(spans, key=lambda x: x["offset"])
-        lengths.append(len(spans))
-        for sp in spans:
-            kinds.append(sp["kind"])
-            texts.append(sp["text"])
-            refs.append(sp["media_ref"])
-            offs.append(sp["offset"])
-    bounds = np.concatenate(([0], np.cumsum(np.array(lengths, dtype=np.int64))))
-    cols = _extract_core(
-        doc_ids, bounds, np.array(kinds, dtype=object),
-        np.array(texts, dtype=object), np.array(refs, dtype=object),
-        np.array(offs, dtype=np.int64))
-    return pa.table(cols).to_pandas()
-
-
 def assemble_fused(docs: DataFrame, partitions: int | None = None) -> DataFrame:
     """docs(doc_id, spans) -> one structured row per doc; zero shuffles
     (the optional repartition is a round-robin exchange for skew-evenness,

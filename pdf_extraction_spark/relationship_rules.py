@@ -80,23 +80,6 @@ def _matches_text(text: str, pattern: str) -> bool:
     return words[0] in text
 
 
-def matches_pattern(issue: dict, pattern: str) -> bool:
-    """relationship_analyzer.py:415-436: multi-word patterns need >= 2
-    word hits across the searchable fields."""
-    return _matches_text(_searchable_text(issue), pattern)
-
-
-def _plausibly_related(a: dict, b: dict) -> bool:
-    """relationship_analyzer.py:438-462."""
-    a_txt = str(a.get("issue", "")).lower()
-    b_txt = str(b.get("issue", "")).lower()
-    if any(k in a_txt for k in _WATER_KEYWORDS) \
-            and any(k in b_txt for k in _WATER_KEYWORDS):
-        return True
-    return (any(k in a_txt for k in _STRUCTURAL_KEYWORDS)
-            and any(k in b_txt for k in _STRUCTURAL_KEYWORDS))
-
-
 def infer_contractor_type(issue: dict) -> str:
     """relationship_analyzer.py:521-547."""
     searchable = (f"{issue.get('category', '').lower()} "
@@ -219,15 +202,6 @@ def _caused_indices(ci: int, issues: list[dict], ctx: _Ctx) -> list[int]:
                         caused.append(oi)
                         caused_frozen.add(fz)
     return caused
-
-
-def find_caused_issues(cause: dict, all_issues: list[dict]) -> list[dict]:
-    """relationship_analyzer.py:260-320."""
-    ctx = _Ctx([cause] + [i for i in all_issues])
-    # context indexes: cause at 0, all_issues at 1..n (the cause may also
-    # appear inside all_issues; id-based skip handles it as the reference does)
-    idxs = _caused_indices(0, [cause] + list(all_issues), ctx)
-    return [([cause] + list(all_issues))[i] for i in idxs]
 
 
 def find_causal_chains(issues: list[dict]) -> list[dict]:

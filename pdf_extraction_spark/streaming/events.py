@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .extract import read_stream
+
 
 def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
     """Tumbling event-time window per event_type: count + value sum."""
@@ -35,7 +37,7 @@ def windowed_counts_stream(spark: SparkSession, source_dir: str,
     watermark are dropped deterministically; state is bounded by
     (watermark / window) * |event_type| rows per partition.
     """
-    stream = (spark.readStream.schema(schema).parquet(source_dir)
+    stream = (read_stream(spark, source_dir, schema)
               .withWatermark("ts", watermark))
     return (stream
             .groupBy(F.window("ts", window).alias("w"), "event_type")

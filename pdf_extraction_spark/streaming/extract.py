@@ -15,24 +15,27 @@ from sources/checkpoint.py).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.fused import assemble_fused
+from ..stages import DOCS_SCHEMA, HTML_SCHEMA, STAGES
 
-DOCS_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
-               "media_ref:string,offset:int>>")
+
+def read_stream(spark: SparkSession, source_dir: str, schema: str,
+                max_files_per_trigger: int | None = None) -> DataFrame:
+    """Parquet file-source stream of ``schema`` rows over ``source_dir``."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(source_dir)
 
 
 def extract_stream(spark: SparkSession, source_dir: str,
                    schema: str = DOCS_SCHEMA,
                    max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source document stream -> streaming extraction output."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return assemble_fused(reader.parquet(source_dir))
-
-
-HTML_SCHEMA = "doc_id string, html string"
+    return assemble_fused(
+        read_stream(spark, source_dir, schema, max_files_per_trigger))
 
 
 def web_extract_stream(spark: SparkSession, source_dir: str,
@@ -51,149 +54,39 @@ def web_extract_stream(spark: SparkSession, source_dir: str,
     no reimplementation."""
     from ..operators.html import html_to_spans
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return assemble_fused(html_to_spans(reader.parquet(source_dir)))
+    return assemble_fused(html_to_spans(
+        read_stream(spark, source_dir, schema, max_files_per_trigger)))
 
 
-PDF_SCHEMA = "doc_id string, stream string"
+def stream_through(spark: SparkSession, stage: str, source_dir: str,
+                   out_path: str, checkpoint_dir: str,
+                   max_files_per_trigger: int | None = None
+                   ) -> StreamingQuery:
+    """Continuous ingest of any job stage (``stages.STAGES``): files of
+    the stage's input schema landing in ``source_dir`` run through the
+    IDENTICAL batch plan per trigger via ``foreachBatch`` and append to
+    the parquet ``out_path``.
 
-
-def pdf_extract_stream(spark: SparkSession, source_dir: str,
-                       out_path: str, checkpoint_dir: str,
-                       schema: str = PDF_SCHEMA,
-                       max_files_per_trigger: int | None = None,
-                       available_now: bool = True,
-                       with_fonts: bool = False):
-    """Raw content-stream corpus -> continuous extraction, via
-    ``foreachBatch``.
-
-    Unlike the web path (html_to_spans is a stateless projection, so it
-    streams as ONE continuous query), the pdf bridge's layout stage is
-    per-doc window clustering — unsupported inside a streaming plan.
-    But every document arrives WHOLE in its row, so the computation is
-    micro-batch-local with no cross-batch state: ``foreachBatch`` runs
-    the IDENTICAL batch plan (tokenize -> layout -> assemble_fused) per
-    trigger, which is Spark's documented pattern for reusing
-    batch-complete logic.  ``checkpointLocation`` makes source offsets
-    exactly-once; the parquet append sink is at-least-once under a
+    ``foreachBatch`` because several bridges are batch-complete logic a
+    continuous plan cannot host — the pdf layout's per-doc window
+    clustering, the ruled-table detector's per-doc grid aggregation,
+    the WARC capture dedupe.  Every document (or container file)
+    arrives whole in its row, so each micro-batch is exact with no
+    cross-batch state; this is Spark's documented pattern for reusing
+    batch logic in a stream.  ``checkpointLocation`` makes source
+    offsets exactly-once; the parquet append is at-least-once under a
     mid-write crash — on a cluster, point the sink at an Iceberg table
     (sources/catalog.IcebergStore) whose atomic snapshot commit closes
-    that window.  Returns the started StreamingQuery."""
-    from ..operators.pdfstream import pdf_to_spans
+    that window.  Runs with the ``availableNow`` trigger: everything
+    present when it starts, then stop.  Returns the started query."""
+    spec = STAGES[stage]
 
     def _sink(batch_df: DataFrame, _epoch: int) -> None:
-        assemble_fused(pdf_to_spans(batch_df, with_fonts=with_fonts)) \
-            .write.mode("append").parquet(out_path)
+        spec.plan(batch_df).write.mode("append").parquet(out_path)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.parquet(source_dir)
-              .writeStream.foreachBatch(_sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-PDF_FILE_SCHEMA = "doc_id string, pdf binary"
-
-
-def pdf_file_extract_stream(spark: SparkSession, source_dir: str,
-                            out_path: str, checkpoint_dir: str,
-                            schema: str = PDF_FILE_SCHEMA,
-                            max_files_per_trigger: int | None = None,
-                            available_now: bool = True):
-    """Whole-PDF-FILE corpus (binary column) -> continuous extraction:
-    the same ``foreachBatch`` pattern as :func:`pdf_extract_stream`
-    (the per-doc layout windows are unsupported in a continuous plan,
-    but every file arrives whole in its row so the computation is
-    micro-batch-local), with the file layer
-    (`operators/pdffile.files_to_spans`: xref walk -> filter decode ->
-    page tree -> tokenize -> layout) prepended inside the identical
-    batch plan.  Offsets exactly-once via ``checkpointLocation``;
-    point the sink at an Iceberg table on a cluster for an atomic
-    append.  Returns the started StreamingQuery."""
-    from ..operators.pdffile import files_to_spans
-
-    def _sink(batch_df: DataFrame, _epoch: int) -> None:
-        assemble_fused(files_to_spans(batch_df)) \
-            .write.mode("append").parquet(out_path)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.parquet(source_dir)
-              .writeStream.foreachBatch(_sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def ruled_tables_stream(spark: SparkSession, source_dir: str,
-                        out_path: str, checkpoint_dir: str,
-                        schema: str = PDF_SCHEMA,
-                        max_files_per_trigger: int | None = None,
-                        available_now: bool = True):
-    """Continuous ruled-table extraction over a content-stream corpus:
-    the same ``foreachBatch`` pattern as :func:`pdf_extract_stream`
-    (the detector's per-doc grid aggregation is batch-complete logic —
-    every document arrives whole in its row, so micro-batch-local is
-    exact), running the IDENTICAL batch plan (`pdfstream.
-    ruled_table_rows`) per trigger.  Offsets exactly-once via
-    ``checkpointLocation``; parquet append at-least-once (Iceberg
-    closes that window on a cluster).  Returns the StreamingQuery."""
-    from ..operators.pdfstream import ruled_table_rows
-
-    def _sink(batch_df: DataFrame, _epoch: int) -> None:
-        ruled_table_rows(batch_df) \
-            .write.mode("append").parquet(out_path)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.parquet(source_dir)
-              .writeStream.foreachBatch(_sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-WARC_SCHEMA = "warc_id string, warc binary"
-
-
-def warc_extract_stream(spark: SparkSession, source_dir: str,
-                        out_path: str, checkpoint_dir: str,
-                        schema: str = WARC_SCHEMA,
-                        max_files_per_trigger: int | None = None,
-                        available_now: bool = True):
-    """Continuous crawl ingestion over landing WARC segments: the
-    same ``foreachBatch`` pattern as :func:`pdf_file_extract_stream`
-    (each container file arrives whole in its binary row, so the
-    computation is micro-batch-local), running the IDENTICAL batch
-    chain per trigger — `operators/warc.warc_to_spans` (record split
-    -> HTTP decode -> charset -> html bridge) -> fused extraction.
-    Offsets exactly-once via ``checkpointLocation``; parquet append
-    at-least-once (Iceberg closes that window on a cluster).  This is
-    the shape of a live Common-Crawl-style feed: new .warc.gz
-    segments land in ``source_dir``, extraction output accumulates
-    per trigger.  Returns the started StreamingQuery."""
-    from ..operators.warc import warc_to_spans
-
-    def _sink(batch_df: DataFrame, _epoch: int) -> None:
-        assemble_fused(warc_to_spans(batch_df)) \
-            .write.mode("append").parquet(out_path)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.parquet(source_dir)
-              .writeStream.foreachBatch(_sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (read_stream(spark, source_dir, spec.schema,
+                        max_files_per_trigger)
+            .writeStream.foreachBatch(_sink)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())

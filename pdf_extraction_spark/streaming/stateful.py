@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.checkpoint import content_hash_col
-from .extract import DOCS_SCHEMA
+from .extract import DOCS_SCHEMA, read_stream
 
 DEDUP_OUTPUT_SCHEMA = ("doc_id string, content_hash string, "
                        "decision string")
@@ -52,7 +52,7 @@ def dedup_decisions_stream(spark: SparkSession, source_dir: str,
     first sight, 'changed' on a content-hash change, nothing for exact
     repeats. Downstream extraction joins on (doc_id, content_hash) to
     process only these."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
+    stream = read_stream(spark, source_dir, schema)
     keyed = stream.withColumn("content_hash", content_hash_col()) \
         .select("doc_id", "content_hash")
     return keyed.groupBy("doc_id").applyInPandasWithState(

@@ -262,7 +262,7 @@ def test_streaming_pdf_extraction_matches_batch(spark, tmp_path):
     -> parquet sink, equal to the batch twin per doc."""
     from pdf_extraction_spark.operators.pdfstream import pdf_to_spans
     from pdf_extraction_spark.plans.fused import assemble_fused
-    from pdf_extraction_spark.streaming.extract import pdf_extract_stream
+    from pdf_extraction_spark.streaming.extract import stream_through
 
     tmpl = ("BT /F1 11 Tf 14 TL 72 720 Td "
             "(Comments: roof leak in doc {i}) Tj "
@@ -283,9 +283,8 @@ def test_streaming_pdf_extraction_matches_batch(spark, tmp_path):
         pdf_to_spans(spark.read.parquet(src))).collect()}
 
     out = str(tmp_path / "out")
-    q = pdf_extract_stream(spark, src, out,
-                           str(tmp_path / "ckpt"),
-                           max_files_per_trigger=1)
+    q = stream_through(spark, "pdf", src, out, str(tmp_path / "ckpt"),
+                       max_files_per_trigger=1)
     try:
         q.awaitTermination(120)
     finally:
@@ -304,8 +303,7 @@ def test_streaming_pdf_file_extraction_matches_batch(spark, tmp_path):
     from pdf_extraction_spark.operators.pdffile import (
         build_pdf, files_to_spans)
     from pdf_extraction_spark.plans.fused import assemble_fused
-    from pdf_extraction_spark.streaming.extract import (
-        pdf_file_extract_stream)
+    from pdf_extraction_spark.streaming.extract import stream_through
 
     text = ("Comments: roof leak near the attic vent, badly blocked "
             "gutter run and a (parenthetical) aside ") * 3
@@ -325,9 +323,8 @@ def test_streaming_pdf_file_extraction_matches_batch(spark, tmp_path):
         files_to_spans(spark.read.parquet(src))).collect()}
 
     out = str(tmp_path / "out")
-    q = pdf_file_extract_stream(spark, src, out,
-                                str(tmp_path / "ckpt"),
-                                max_files_per_trigger=1)
+    q = stream_through(spark, "pdffile", src, out, str(tmp_path / "ckpt"),
+                       max_files_per_trigger=1)
     try:
         q.awaitTermination(120)
     finally:
@@ -344,8 +341,7 @@ def test_streaming_ruled_tables_match_batch(spark, tmp_path):
     equal to the batch twin per doc across micro-batches."""
     from pdf_extraction_spark.operators.pdfstream import \
         ruled_table_rows
-    from pdf_extraction_spark.streaming.extract import \
-        ruled_tables_stream
+    from pdf_extraction_spark.streaming.extract import stream_through
 
     grid = ("72 628 420 72 re S 212 628 m 212 700 l S "
             "352 628 m 352 700 l S 72 652 m 492 652 l S "
@@ -362,8 +358,8 @@ def test_streaming_ruled_tables_match_batch(spark, tmp_path):
         for r in ruled_table_rows(spark.read.parquet(src)).collect())
 
     out = str(tmp_path / "out")
-    q = ruled_tables_stream(spark, src, out, str(tmp_path / "ckpt"),
-                            max_files_per_trigger=1)
+    q = stream_through(spark, "ruled", src, out, str(tmp_path / "ckpt"),
+                       max_files_per_trigger=1)
     try:
         q.awaitTermination(120)
     finally:
@@ -382,8 +378,7 @@ def test_streaming_warc_extraction_matches_batch(spark, tmp_path):
     from pdf_extraction_spark.operators.warc import (build_warc_files,
                                                      warc_to_spans)
     from pdf_extraction_spark.plans.fused import assemble_fused
-    from pdf_extraction_spark.streaming.extract import \
-        warc_extract_stream
+    from pdf_extraction_spark.streaming.extract import stream_through
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet") \
@@ -401,8 +396,8 @@ def test_streaming_warc_extraction_matches_batch(spark, tmp_path):
             warc_to_spans(spark.read.parquet(src))).collect())
 
     out = str(tmp_path / "out")
-    q = warc_extract_stream(spark, src, out, str(tmp_path / "ckpt"),
-                            max_files_per_trigger=1)
+    q = stream_through(spark, "warc", src, out, str(tmp_path / "ckpt"),
+                       max_files_per_trigger=1)
     try:
         q.awaitTermination(120)
     finally:

@@ -529,3 +529,55 @@ def test_dedupe_surrogate_key_immune_to_crafted_nul_uri(spark):
     # both records survive: the crafted URI dedupes in the URI space,
     # the true warcinfo passes through in the surrogate space
     assert len(out) == 2
+
+
+def _html_capture(uri: str, date: str, text: str,
+                  status: bytes = b"200 OK") -> bytes:
+    from pdf_extraction_spark.operators.warc import warc_record
+    body = f"<html><body><p>{text} {'x' * 60}</p></body></html>".encode()
+    msg = (b"HTTP/1.1 " + status + b"\r\n"
+           b"Content-Type: text/html; charset=utf-8\r\n"
+           b"Content-Length: %d\r\n\r\n" % len(body)) + body
+    return warc_record(
+        "response",
+        [("WARC-Target-URI", uri), ("WARC-Date", date),
+         ("Content-Type", "application/http;msgtype=response")], msg)
+
+
+def test_dispatch_newer_404_does_not_evict_older_200(spark):
+    """With ok_only (the default) a non-200 capture takes no part in
+    the dedupe: a URI whose newest capture is a 404 still dispatches
+    its older 200, through both dispatch entry points."""
+    from pdf_extraction_spark.operators.warc import (dispatch_spans,
+                                                     records_from_warc,
+                                                     warc_dispatch_spans)
+    uri = "https://h.example/gone"
+    blob = (_html_capture(uri, "2026-01-01T00:00:00Z", "ALIVE")
+            + _html_capture(uri, "2026-06-01T00:00:00Z", "MISSING",
+                            b"404 Not Found"))
+    files = spark.createDataFrame([("w1", bytearray(blob))],
+                                  "warc_id string, warc binary")
+    for rows in (warc_dispatch_spans(files).collect(),
+                 dispatch_spans(records_from_warc(files)).collect()):
+        assert [r["doc_id"] for r in rows] == [uri]
+        texts = " ".join(s["text"] for s in rows[0]["spans"])
+        assert "ALIVE" in texts and "MISSING" not in texts
+
+
+def test_dedupe_compares_dates_as_instants(spark):
+    """'...:00.500Z' is later than '...:00Z' although it sorts lower as
+    a string; a garbage WARC-Date parses to NULL instead of failing
+    the task, and loses to a parseable date of the same URI."""
+    from pdf_extraction_spark.operators.warc import (dedupe_captures,
+                                                     records_from_warc)
+    a, b = "https://h.example/a", "https://h.example/b"
+    blob = (_html_capture(a, "2026-01-01T00:00:00Z", "OLD")
+            + _html_capture(a, "2026-01-01T00:00:00.500Z", "NEW")
+            + _html_capture(b, "2026-01-01T00:00:00Z", "DATED")
+            + _html_capture(b, "not a date \x7f 99:99", "GARBAGE"))
+    files = spark.createDataFrame([("w1", bytearray(blob))],
+                                  "warc_id string, warc binary")
+    texts = {r["target_uri"]: r["text"]
+             for r in dedupe_captures(records_from_warc(files)).collect()}
+    assert "NEW" in texts[a] and "OLD" not in texts[a]
+    assert "DATED" in texts[b]

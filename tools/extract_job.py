@@ -19,6 +19,8 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.stages import STAGES
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -32,25 +34,9 @@ def main() -> None:
                     help="auto = fused with the giant-doc tail routed "
                          "through the salted plan in the same job "
                          "(span-count dispatch at 500k)")
-    ap.add_argument("--stage", default="extract",
-                    choices=["extract", "pipeline", "web", "pdf",
-                             "pdffile", "ruled", "warc", "docx",
-                             "dispatch"],
-                    help="extract = fused/salted extraction only; "
-                         "pipeline = extraction + full 6-phase enrichment "
-                         "(both map-only, the production chain); "
-                         "web = crawl HTML corpus (doc_id, html) -> "
-                         "html_to_spans bridge -> extraction (the whole "
-                         "web-ingest path, still map-only); "
-                         "pdf = raw content-stream corpus (doc_id, stream) "
-                         "-> pdf_to_spans bridge (tokenize + layout) -> "
-                         "extraction; "
-                         "pdffile = whole-file corpus (doc_id, pdf binary) "
-                         "-> files_to_spans (xref/filter/page-tree parse + "
-                         "tokenize + layout) -> extraction; "
-                         "ruled = content-stream corpus -> ruled_table_rows "
-                         "(path interpretation + grid recovery + cell "
-                         "assembly — the standalone S5 table job)")
+    ap.add_argument("--stage", default="extract", choices=list(STAGES),
+                    help="; ".join(f"{name} = {stage.about}"
+                                   for name, stage in STAGES.items()))
     ap.add_argument("--walls", type=int, default=6,
                     help="timed steady-state repetitions (best is scored); "
                          "lower for long-corpus scaling runs where one "
@@ -61,99 +47,24 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
 
-    from pdf_extraction_spark.plans.enrichment import enrich_extracted
     from pdf_extraction_spark.plans.fused import assemble_auto, assemble_fused
     from pdf_extraction_spark.plans.salted import assemble_salted
 
-    if args.plan == "auto":
-        def extract(d):
-            return assemble_auto(d)
-    elif args.plan == "fused":
-        def extract(d):
-            return assemble_fused(d)
-    else:
-        def extract(d):
-            return assemble_salted(d, chunk_spans=8192, partitions=cores * 3)
+    extract = {"auto": assemble_auto, "fused": assemble_fused,
+               "salted": lambda d: assemble_salted(
+                   d, chunk_spans=8192, partitions=cores * 3)}[args.plan]
 
-    if args.stage == "extract":
-        plan = extract
-    elif args.stage == "web":
-        from pdf_extraction_spark.operators.html import html_to_spans
+    stage = STAGES[args.stage]
 
-        def plan(d):
-            return extract(html_to_spans(d))
-    elif args.stage == "pdf":
-        from pdf_extraction_spark.operators.pdfstream import pdf_to_spans
-
-        def plan(d):
-            return extract(pdf_to_spans(d))
-    elif args.stage == "pdffile":
-        from pdf_extraction_spark.operators.pdffile import files_to_spans
-
-        def plan(d):
-            return extract(files_to_spans(d))
-    elif args.stage == "warc":
-        from pdf_extraction_spark.operators.warc import warc_to_spans
-
-        def plan(d):
-            return extract(warc_to_spans(d))
-    elif args.stage == "docx":
-        from pdf_extraction_spark.operators.docx import docx_to_spans
-
-        def plan(d):
-            return extract(docx_to_spans(d))
-    elif args.stage == "dispatch":
-        # the mixed-container capstone: mime-routed html/pdf/docx/pptx
-        # payloads -> unified contract spans -> fused extraction
-        from pdf_extraction_spark.operators.warc import \
-            warc_dispatch_spans
-
-        def plan(d):
-            return extract(warc_dispatch_spans(d))
-    elif args.stage == "ruled":
-        from pdf_extraction_spark.operators.pdfstream import \
-            ruled_table_rows
-
-        def plan(d):
-            return ruled_table_rows(d)
-    else:
-        def plan(d):
-            return enrich_extracted(extract(d))
+    def plan(d):
+        return stage.plan(d, extract)
 
     from pdf_extraction_spark.sources.catalog import load_docs
     docs = load_docs(spark, args.input)
     n_docs = docs.count()
-    if args.stage == "web":
-        from pdf_extraction_spark.operators.html import html_to_spans
-        n_spans = html_to_spans(docs) \
-            .select(F.sum(F.size("spans"))).first()[0]
-    elif args.stage == "pdf":
-        from pdf_extraction_spark.operators.pdfstream import pdf_to_spans
-        n_spans = pdf_to_spans(docs) \
-            .select(F.sum(F.size("spans"))).first()[0]
-    elif args.stage == "pdffile":
-        from pdf_extraction_spark.operators.pdffile import files_to_spans
-        n_spans = files_to_spans(docs) \
-            .select(F.sum(F.size("spans"))).first()[0]
-    elif args.stage == "warc":
-        from pdf_extraction_spark.operators.warc import warc_to_spans
-        n_spans = warc_to_spans(docs) \
-            .select(F.sum(F.size("spans"))).first()[0]
-    elif args.stage == "docx":
-        from pdf_extraction_spark.operators.docx import docx_to_spans
-        n_spans = docx_to_spans(docs) \
-            .select(F.sum(F.size("spans"))).first()[0]
-    elif args.stage == "dispatch":
-        from pdf_extraction_spark.operators.warc import \
-            warc_dispatch_spans
-        n_spans = warc_dispatch_spans(docs) \
-            .select(F.sum(F.size("spans"))).first()[0]
-    elif args.stage == "ruled":
-        from pdf_extraction_spark.operators.pdfstream import \
-            ruled_table_rows
-        n_spans = ruled_table_rows(docs).count()  # table rows
-    else:
-        n_spans = docs.select(F.sum(F.size("spans"))).first()[0]
+    bridged = stage.bridge(docs)
+    n_spans = (bridged.select(F.sum(F.size("spans"))).first()[0]
+               if stage.extracts else bridged.count())  # table rows
 
     # warm-up: spin up python workers + JIT outside the timed region
     plan(docs.limit(args.warmup)) \

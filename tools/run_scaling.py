@@ -18,6 +18,22 @@ import zipfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from pdf_extraction_spark.operators.docx import (  # noqa: E402
+    build_docx_files, docx_to_spans)
+from pdf_extraction_spark.operators.html import html_to_spans  # noqa: E402
+from pdf_extraction_spark.operators.pdffile import (  # noqa: E402
+    files_to_spans, wrap_stream_files)
+from pdf_extraction_spark.operators.pdfstream import (  # noqa: E402
+    pdf_to_spans, ruled_table_rows)
+from pdf_extraction_spark.operators.warc import (  # noqa: E402
+    build_mixed_warc_files, build_warc_files, warc_dispatch_spans,
+    warc_to_spans)
+from pdf_extraction_spark.queries_html import (  # noqa: E402
+    _html_expr, _media_page_expr)
+from pdf_extraction_spark.stages import STAGES  # noqa: E402
+
 
 def make_zip(tmp: str) -> str:
     zpath = os.path.join(tmp, "pdf_extraction_spark.zip")
@@ -31,17 +47,123 @@ def make_zip(tmp: str) -> str:
     return zpath
 
 
+def _text():
+    """Each doc's span texts joined by spaces."""
+    return F.array_join(F.transform(F.col("spans"), lambda sp: sp["text"]),
+                        " ")
+
+
+def _html_pages(docs):
+    # crawl-shaped input: rebuild each doc as an HTML page — the
+    # same deterministic chrome the html gates use, body text from
+    # the doc's spans, variant selectors from the numeric doc id
+    # (deterministic, partitioning-independent).
+    expr = _html_expr("doc_id").replace(
+        "doc_id %", "CAST(regexp_extract(doc_id, '([0-9]+)', 1) "
+                    "AS BIGINT) %")
+    return docs.select("doc_id", _text().alias("t")) \
+        .select("doc_id", F.expr(expr).alias("html"))
+
+
+def _warc_files(docs):
+    # crawl-container-shaped input: each doc's span text rebuilt
+    # as a complete WARC file (warcinfo + request + response,
+    # gzip-member/chunked/content-coding/charset variants by the
+    # numeric doc id) so the scaling run covers record framing +
+    # HTTP decode + charset resolution end to end
+    return build_warc_files(docs.select("doc_id",
+                                        _text().alias("text")))
+
+
+def _docx_files(docs):
+    # office-document-shaped input: each doc's span text rebuilt
+    # as a complete .docx (zip container + WordprocessingML with
+    # the writer's style/image/table variants)
+    return build_docx_files(docs.select("doc_id",
+                                        _text().alias("text")))
+
+
+def _mixed_warc_files(docs):
+    # mixed-container input: each doc one WARC whose response is
+    # the doc%4-selected html/pdf/docx/pptx payload (+ doc%5 png
+    # resources) — the corpus the mime-routed dispatch ingests
+    num = ("CAST(regexp_extract(doc_id, '([0-9]+)', 1) "
+           "AS BIGINT)")
+    expr = _media_page_expr(num).replace("doc_id %", f"{num} %")
+    flat = docs.select("doc_id", _text().alias("t"))
+    return build_mixed_warc_files(
+        flat.select("doc_id", F.col("t").alias("text"),
+                    F.expr(expr).alias("html")))
+
+
+def _content_streams(docs, grid: bool = False):
+    # raw-bytes-shaped input: render the WHOLE document as a PDF
+    # content stream — every text span one escaped literal line
+    # (Tj + T* at 14pt leading), every media span an XObject Do —
+    # so stream bytes track doc size and the giant-doc tail
+    # exercises the tokenizer's single-row skew contract.
+    esc = ("replace(replace(replace(coalesce(sp.text, ''), chr(92),"
+           " chr(92) || chr(92)), '(', chr(92) || '('), ')', "
+           "chr(92) || ')')")
+    line = ("CASE WHEN sp.kind = 'media' THEN '/' || "
+            "regexp_replace(coalesce(sp.media_ref, 'M'), "
+            "'[^A-Za-z0-9]+', '_') || ' Do ' "
+            f"ELSE '(' || {esc} || ') Tj ' || "
+            # every 6th line hops 30pt: a fresh layout block, so
+            # block segmentation sees realistic paragraph structure
+            "CASE WHEN i % 6 = 5 THEN '0 -30 Td ' ELSE 'T* ' END "
+            "END")
+    expr = ("'BT /F1 11 Tf 14 TL 72 720 Td ' || "
+            f"array_join(transform(spans, (sp, i) -> {line}), '') "
+            "|| 'ET'")
+    if grid:
+        # prepend a drawn grid (plus a doc-conditional stacked
+        # second grid and the decoy family) so the ruled-table
+        # path has real work per page; the text body doubles as
+        # in/out-of-table words
+        expr = ("'72 628 420 72 re S "
+                "212 628 m 212 700 l S 352 628 m 352 700 l S "
+                "72 652 m 492 652 l S 72 676 m 492 676 l S "
+                "72 580 m 212 580 l S 300 550 m 350 600 l S "
+                "500 550 50 20 re W n ' || "
+                # doc_id is the string 'doc_NNNNNNNNN'
+                "CASE WHEN CAST(substr(doc_id, 5) AS BIGINT) % 2 "
+                "= 0 THEN "
+                "'72 452 200 48 re S 172 452 m 172 500 l S "
+                "72 476 m 272 476 l S ' ELSE '' END || " + expr)
+    return docs.select("doc_id", F.expr(expr).alias("stream"))
+
+
+def _pdf_files(docs):
+    # whole-FILE corpus: each stream wrapped as a complete
+    # single-page PDF (xref/filter variants by doc id), so
+    # the scaling run covers the object/xref/filter layer too
+    return wrap_stream_files(_content_streams(docs))
+
+
+# Each stage's input corpus, built from the generated span docs and
+# keyed by the bridge that reads it; span-table stages read the docs
+# as they are.
+CORPORA = {
+    html_to_spans: _html_pages,
+    warc_to_spans: _warc_files,
+    docx_to_spans: _docx_files,
+    warc_dispatch_spans: _mixed_warc_files,
+    pdf_to_spans: _content_streams,
+    files_to_spans: _pdf_files,
+    ruled_table_rows: lambda docs: _content_streams(docs, grid=True),
+}
+
+
 def generate_corpus(path: str, n_docs: int, partitions: int = 128,
                     stage: str = "extract") -> None:
-    want = {"web": "html", "pdf": "stream", "ruled": "stream",
-            "pdffile": "pdf", "warc": "warc",
-            "docx": "docx", "dispatch": "warc"}.get(stage, "spans")
+    want = STAGES[stage].columns()
     if os.path.exists(path):
         # the cache is keyed by path only — make a stage mismatch a
         # clear error here instead of an AnalysisException mid-benchmark
         import pyarrow.dataset as ds
         have = ds.dataset(path).schema.names
-        if want not in have:
+        if not set(want) <= set(have):
             raise SystemExit(
                 f"corpus at {path} has columns {have} but stage "
                 f"{stage!r} needs {want!r}; pass a different --data "
@@ -54,124 +176,8 @@ def generate_corpus(path: str, n_docs: int, partitions: int = 128,
     spark.sparkContext.setLogLevel("ERROR")
     docs = corpus.generate_docs(spark, n_docs, giant_every=997,
                                 partitions=partitions)
-    if stage == "web":
-        # crawl-shaped input: rebuild each doc as an HTML page — the
-        # same deterministic chrome the html gates use, body text from
-        # the doc's spans, variant selectors from the numeric doc id
-        # (deterministic, partitioning-independent).
-        from pyspark.sql import functions as F
-
-        from pdf_extraction_spark.queries_html import _html_expr
-
-        expr = _html_expr("doc_id").replace(
-            "doc_id %", "CAST(regexp_extract(doc_id, '([0-9]+)', 1) "
-                        "AS BIGINT) %")
-        docs.select(
-            "doc_id",
-            F.array_join(F.transform(
-                F.col("spans"), lambda sp: sp["text"]), " ").alias("t")) \
-            .select("doc_id", F.expr(expr).alias("html")) \
-            .write.parquet(path)
-    elif stage == "warc":
-        # crawl-container-shaped input: each doc's span text rebuilt
-        # as a complete WARC file (warcinfo + request + response,
-        # gzip-member/chunked/content-coding/charset variants by the
-        # numeric doc id) so the scaling run covers record framing +
-        # HTTP decode + charset resolution end to end
-        from pyspark.sql import functions as F
-
-        from pdf_extraction_spark.operators.warc import build_warc_files
-
-        build_warc_files(
-            docs.select(
-                "doc_id",
-                F.array_join(F.transform(
-                    F.col("spans"), lambda sp: sp["text"]), " ")
-                .alias("text"))).write.parquet(path)
-    elif stage == "docx":
-        # office-document-shaped input: each doc's span text rebuilt
-        # as a complete .docx (zip container + WordprocessingML with
-        # the writer's style/image/table variants)
-        from pyspark.sql import functions as F
-
-        from pdf_extraction_spark.operators.docx import build_docx_files
-
-        build_docx_files(
-            docs.select(
-                "doc_id",
-                F.array_join(F.transform(
-                    F.col("spans"), lambda sp: sp["text"]), " ")
-                .alias("text"))).write.parquet(path)
-    elif stage == "dispatch":
-        # mixed-container input: each doc one WARC whose response is
-        # the doc%4-selected html/pdf/docx/pptx payload (+ doc%5 png
-        # resources) — the corpus the mime-routed dispatch ingests
-        from pyspark.sql import functions as F
-
-        from pdf_extraction_spark.operators.warc import \
-            build_mixed_warc_files
-        from pdf_extraction_spark.queries_html import _media_page_expr
-
-        num = ("CAST(regexp_extract(doc_id, '([0-9]+)', 1) "
-               "AS BIGINT)")
-        expr = _media_page_expr(num).replace("doc_id %", f"{num} %")
-        flat = docs.select(
-            "doc_id",
-            F.array_join(F.transform(
-                F.col("spans"), lambda sp: sp["text"]), " ")
-            .alias("t"))
-        build_mixed_warc_files(
-            flat.select("doc_id", F.col("t").alias("text"),
-                        F.expr(expr).alias("html"))
-        ).write.parquet(path)
-    elif stage in ("pdf", "pdffile", "ruled"):
-        # raw-bytes-shaped input: render the WHOLE document as a PDF
-        # content stream — every text span one escaped literal line
-        # (Tj + T* at 14pt leading), every media span an XObject Do —
-        # so stream bytes track doc size and the giant-doc tail
-        # exercises the tokenizer's single-row skew contract.
-        from pyspark.sql import functions as F
-
-        esc = ("replace(replace(replace(coalesce(sp.text, ''), chr(92),"
-               " chr(92) || chr(92)), '(', chr(92) || '('), ')', "
-               "chr(92) || ')')")
-        line = ("CASE WHEN sp.kind = 'media' THEN '/' || "
-                "regexp_replace(coalesce(sp.media_ref, 'M'), "
-                "'[^A-Za-z0-9]+', '_') || ' Do ' "
-                f"ELSE '(' || {esc} || ') Tj ' || "
-                # every 6th line hops 30pt: a fresh layout block, so
-                # block segmentation sees realistic paragraph structure
-                "CASE WHEN i % 6 = 5 THEN '0 -30 Td ' ELSE 'T* ' END "
-                "END")
-        expr = ("'BT /F1 11 Tf 14 TL 72 720 Td ' || "
-                f"array_join(transform(spans, (sp, i) -> {line}), '') "
-                "|| 'ET'")
-        if stage == "ruled":
-            # prepend a drawn grid (plus a doc-conditional stacked
-            # second grid and the decoy family) so the ruled-table
-            # path has real work per page; the text body doubles as
-            # in/out-of-table words
-            expr = ("'72 628 420 72 re S "
-                    "212 628 m 212 700 l S 352 628 m 352 700 l S "
-                    "72 652 m 492 652 l S 72 676 m 492 676 l S "
-                    "72 580 m 212 580 l S 300 550 m 350 600 l S "
-                    "500 550 50 20 re W n ' || "
-                    # doc_id is the string 'doc_NNNNNNNNN'
-                    "CASE WHEN CAST(substr(doc_id, 5) AS BIGINT) % 2 "
-                    "= 0 THEN "
-                    "'72 452 200 48 re S 172 452 m 172 500 l S "
-                    "72 476 m 272 476 l S ' ELSE '' END || " + expr)
-        streams = docs.select("doc_id", F.expr(expr).alias("stream"))
-        if stage == "pdffile":
-            # whole-FILE corpus: each stream wrapped as a complete
-            # single-page PDF (xref/filter variants by doc id), so
-            # the scaling run covers the object/xref/filter layer too
-            from pdf_extraction_spark.operators.pdffile import (
-                wrap_stream_files)
-            streams = wrap_stream_files(streams)
-        streams.write.parquet(path)
-    else:
-        docs.write.parquet(path)
+    build = CORPORA.get(STAGES[stage].bridge, lambda d: d)
+    build(docs).write.parquet(path)
     spark.stop()
 
 
@@ -229,9 +235,7 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=40000)
     ap.add_argument("--n", type=int, default=8, help="small cluster size N")
     ap.add_argument("--plan", default="fused")
-    ap.add_argument("--stage", default="extract",
-                    choices=["extract", "pipeline", "web", "pdf", "warc",
-                             "docx", "dispatch", "pdffile", "ruled"])
+    ap.add_argument("--stage", default="extract", choices=list(STAGES))
     ap.add_argument("--data", default="/tmp/scaling_corpus")
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH"))
     ap.add_argument("--runs", type=int, default=3,
