@@ -46,9 +46,21 @@ Determinism contract for the oracle gate: the window order is a TOTAL
 order over every input column (see ``_run_order`` — a partial key is
 not enough under Spark's two-pass window evaluation); geometry
 comparisons are exact rational comparisons on the input coordinates.
+
+Two shapes, one semantics: these DataFrame operators serve positioned-
+run TABLES, where one document's runs may sit in many partitions and
+the doc_id shuffle gathers them.  The PDF span bridges
+(`pdfstream.pdf_to_spans`, `pdffile.files_to_spans`) already hold each
+page whole in one task and call :func:`layout_page` instead — the
+in-process twin at the end of this module, checked against
+:func:`spans_from_runs` by ``tools/fuzz_layout.py --kernel``.
 """
 
 from __future__ import annotations
+
+import math
+from collections import Counter
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -602,3 +614,167 @@ def detect_ruled_tables(runs: DataFrame, *, snap_tol: float = 3.0,
         .select("doc_id", "tbl_idx",
                 F.col("row_idx").cast("int").alias("row_idx"),
                 "n_rows", "n_cols", "table_text")
+
+
+# --------------------------------------------- in-process page kernel
+#
+# ``spans_from_runs`` for ONE page's runs held in a Python list: each
+# comparison, sort and aggregate reproduces the Spark expression it
+# replaces, so the DataFrame chain above is the kernel's oracle.
+
+def _k(v: Any) -> tuple:
+    """Spark's ascending order for a double or string: NULLS FIRST,
+    NaN greatest, -0.0 == 0.0."""
+    return (0, 0) if v is None else (2, 0) if v != v else (1, v)
+
+
+def _exceeds(a: Any, b: Any, tol: float) -> bool:
+    """Spark ``a - b > tol`` as a WHEN condition: NULL is false, NaN
+    is the greatest double."""
+    if a is None or b is None:
+        return False
+    d = a - b
+    return tol == tol and (d != d or d > tol)
+
+
+def _greatest(a: Any, b: Any) -> Any:
+    """``greatest``: NULLs skipped, NaN greatest."""
+    return b if a is None else a if b is None or _k(a) >= _k(b) else b
+
+
+def _agg(vals: Iterable, pick) -> Any:
+    """``min``/``max`` aggregate: NULLs skipped, NaN greatest."""
+    vs = [v for v in vals if v is not None]
+    return pick(vs, key=_k) if vs else None
+
+
+def _bucket(x0: Any, col_tol: float) -> Any:
+    """``floor(x0 / col_tol)`` as Java casts it to bigint: NaN -> 0,
+    saturating at the long range."""
+    if x0 is None:
+        return None
+    v = x0 / col_tol
+    if v != v:
+        return 0
+    lim = 2 ** 63
+    return -lim if v == -math.inf else lim - 1 if v == math.inf \
+        else max(-lim, min(lim - 1, math.floor(v)))
+
+
+def _fold_cells(parts: list[tuple], space_frac: float | None,
+                col_gap: float | None) -> list[list]:
+    """Fold (x0, x1, sz, text) parts left to right carrying the running
+    max right edge: a gap over ``col_gap`` opens a new [x0, text]
+    cell, otherwise the run joins the last cell with a space (always
+    when ``space_frac`` is None, else when the gap exceeds
+    ``space_frac`` x the larger size); a NULL text NULLs its cell."""
+    x0, px, ps, t = parts[0]
+    cells = [[x0, t]]
+    for x0, x1, sz, text in parts[1:]:
+        if col_gap is not None and _exceeds(x0, px, col_gap):
+            cells.append([x0, text])
+        else:
+            sep = " " if space_frac is None or _exceeds(
+                x0, px, space_frac * _greatest(ps, sz)) else ""
+            c = cells[-1]
+            c[1] = None if c[1] is None or text is None \
+                else c[1] + sep + text
+        px, ps = _greatest(px, x1), sz
+    return cells
+
+
+def _dominant(pairs: Iterable[tuple]) -> str:
+    """``max(struct(coalesce(size, 0), coalesce(font, ''))).font``"""
+    return max(((0.0 if s is None else s, f or "") for s, f in pairs),
+               key=lambda p: (_k(p[0]), p[1]))[1]
+
+
+def layout_page(runs: list[tuple], *, y_tol: float = 3.0,
+                gap_tol: float = 10.0,
+                space_frac: float | None = None,
+                with_fonts: bool = False,
+                detect_tables: bool = False,
+                col_gap: float = 18.0,
+                col_tol: float = 6.0) -> list[tuple]:
+    """One page's runs -> its spans in reading order: the in-process
+    twin of :func:`spans_from_runs` over one ``doc_id``, same options.
+
+    ``runs`` are y-down ``(text, x0, y0, x1, y1, size, font,
+    media_ref)`` tuples; a run with a ``media_ref`` is a media span,
+    the rest cluster into lines, optional table lines and blocks.
+    Returns ``(kind, text, media_ref, font, size)`` per span; ``font``
+    and ``size`` are None unless ``with_fonts``."""
+    T, X0, Y0, X1, Y1, SZ, FN, MR = range(8)
+    groups: list[list[tuple]] = []
+    prev = None
+    for r in sorted((r for r in runs if r[MR] is None),
+                    key=lambda r: tuple(_k(v) for v in (
+                        r[Y0], r[X0], r[T], r[X1], r[Y1], r[SZ],
+                        r[FN]))):
+        if prev is None or _exceeds(r[Y0], prev, y_tol):
+            groups.append([])
+        groups[-1].append(r)
+        prev = r[Y0]
+
+    # line: [line_id, text, x0, y0, x1, y1, max_size, font, cells]
+    lines = []
+    for lid, g in enumerate(groups):
+        parts = sorted(((r[X0], r[X1], 0.0 if r[SZ] is None else r[SZ],
+                         r[T]) for r in g),
+                       key=lambda p: tuple(map(_k, p)))
+        if space_frac is None:
+            text = " ".join(t for _, t in sorted(
+                ((r[X0], r[T]) for r in g),
+                key=lambda p: tuple(map(_k, p))) if t is not None)
+        else:
+            text = _fold_cells(parts, float(space_frac), None)[0][1]
+        lines.append([
+            lid, text, _agg((r[X0] for r in g), min),
+            _agg((r[Y0] for r in g), min), _agg((r[X1] for r in g), max),
+            _agg((r[Y1] for r in g), max), _agg((r[SZ] for r in g), max),
+            _dominant((r[SZ], r[FN]) for r in g) if with_fonts else None,
+            _fold_cells(parts, space_frac, float(col_gap))
+            if detect_tables else None])
+
+    units = [(r[Y0], r[X0], "media", None, r[MR], None, None)
+             for r in runs if r[MR] is not None]
+    body = lines
+    if detect_tables:
+        # a table: >= 2 consecutive lines of >= 2 cells whose x0
+        # buckets agree
+        tbl, prev_sig, n = [], None, 0
+        for ln in lines:
+            sig = [_bucket(c[0], float(col_tol)) for c in ln[8]]
+            if len(sig) >= 2 and sig != prev_sig:
+                n += 1
+            tbl.append(n if len(sig) >= 2 else None)
+            prev_sig = sig if len(sig) >= 2 else None
+        run_len = Counter(tbl)
+        body = []
+        for ln, t in zip(lines, tbl):
+            if t is not None and run_len[t] >= 2:
+                units.append((ln[3], ln[2], "text", " | ".join(
+                    c[1] for c in ln[8] if c[1] is not None), None,
+                    ln[7], ln[6] if with_fonts else None))
+            else:
+                body.append(ln)
+
+    blocks: list[list] = []
+    bottom = None
+    for ln in sorted(body, key=lambda ln: (_k(ln[3]), _k(ln[2]), ln[0])):
+        if bottom is None or _exceeds(ln[3], bottom, gap_tol):
+            blocks.append([])
+        blocks[-1].append(ln)
+        bottom = _greatest(bottom, ln[5])
+    for b in blocks:
+        text = "\n".join(ln[1] for ln in sorted(
+            b, key=lambda ln: (_k(ln[3]), _k(ln[2]), _k(ln[1])))
+            if ln[1] is not None)
+        units.append((
+            _agg((ln[3] for ln in b), min), _agg((ln[2] for ln in b), min),
+            "text", text, None,
+            _dominant((ln[6], ln[7]) for ln in b) if with_fonts else None,
+            _agg((ln[6] for ln in b), max) if with_fonts else None))
+    units.sort(key=lambda u: (_k(u[0]), _k(u[1]), u[2], u[3] or "",
+                              u[4] or ""))
+    return [u[2:] for u in units]

@@ -1,5 +1,5 @@
 """Whole-PDF-file layer: raw ``%PDF-...%%EOF`` bytes -> decoded
-per-page content streams -> the existing tokenize/layout/span chain.
+per-page content streams -> the existing tokenize/layout/span kernels.
 
 The reference consumes whole PDF files through pdfplumber
 (`text_extractor.pyc:54-66` opens the file; pdfminer's pdfparser /
@@ -54,11 +54,12 @@ Scale shape (100 TB of PDFs): ``pages_from_files`` is ONE ``mapInArrow``
 pass — map-only, zero shuffle, linear in file bytes; each file is
 parsed independently so 1000 executors scale trivially.  A file is one
 row (same single-row-bounded contract as the HTML page scan — cap file
-bytes at ingest); page explosion happens INSIDE the kernel so the
-downstream layout shuffle keys on (doc_id, page) and the giant-PDF
-skew unit is a page, not a document.  Parsing is lazy per object —
-only the xref, catalog, page tree, and content streams are touched;
-fonts/images referenced but never loaded cost nothing.
+bytes at ingest).  ``files_to_spans`` keeps the whole bridge in that
+task: parse, per-page tokenize and layout (`layout.layout_page`, one
+page's runs at a time) and gapless offsets, with zero exchanges.
+Parsing is lazy per object — only the xref, catalog, page tree, and
+content streams are touched; fonts/images referenced but never loaded
+cost nothing.
 """
 
 from __future__ import annotations
@@ -2541,14 +2542,13 @@ def pages_from_files(files: DataFrame, bytes_col: str = "pdf",
     the job.  ``strict=True`` propagates, for pipelines that would
     rather fail loudly.
 
-    The ``fontmaps`` column carries each page's ToUnicode CMaps as
-    JSON (``{font: {"w": width, "m": {code: text}}}``, ``{}`` when the
-    page's fonts carry none) — `pdfstream.tokenize_streams(maps_col=
-    'fontmaps')` applies them so glyph-coded strings decode to
-    text."""
-    import json as _json
-
+    The ``fontmaps`` column carries each page's font maps and Form
+    XObjects as `pdfstream.fontmaps_json` (``{}`` when the page has
+    neither) — `pdfstream.tokenize_streams(maps_col='fontmaps')`
+    applies them so glyph-coded strings decode to text."""
     import pyarrow as pa
+
+    from .pdfstream import fontmaps_json
 
     schema = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
                         ("stream", pa.string()),
@@ -2560,29 +2560,6 @@ def pages_from_files(files: DataFrame, bytes_col: str = "pdf",
             ids = batch.column(0).to_pylist()
             blobs = batch.column(1).to_pylist()
             o_id, o_pg, o_st, o_fm = [], [], [], []
-            def enc_fonts(fm: dict) -> dict:
-                def one(e):
-                    if not e:
-                        return None
-                    d = {"w": e[1],
-                         "m": {str(k): v for k, v in e[0].items()}}
-                    if len(e) > 2 and e[2] is not None:
-                        d["gw"] = {str(k): v for k, v in e[2].items()}
-                        d["dw"] = e[3]
-                    return d
-                return {name: one(e) for name, e in fm.items()}
-
-            def enc_form(spec: dict) -> dict:
-                d: dict = {"t": spec["text"]}
-                if "mtx" in spec:
-                    d["x"] = spec["mtx"]
-                if "fonts" in spec:
-                    d["f"] = enc_fonts(spec["fonts"])
-                if "forms" in spec:
-                    d["s"] = {n: enc_form(s)
-                              for n, s in spec["forms"].items()}
-                return d
-
             for doc_id, blob in zip(ids, blobs):
                 try:
                     pf = PdfFile(blob or b"")
@@ -2597,14 +2574,9 @@ def pages_from_files(files: DataFrame, bytes_col: str = "pdf",
                     o_id.append(doc_id)
                     o_pg.append(pg)
                     o_st.append(txt)
-                    payload = enc_fonts(
-                        fmaps[pg] if pg < len(fmaps) else {})
-                    fo = forms[pg] if pg < len(forms) else {}
-                    if fo:  # reserved key the tokenizer splits off
-                        payload["__forms__"] = {
-                            n: enc_form(s) for n, s in fo.items()}
-                    o_fm.append(_json.dumps(payload, sort_keys=True)
-                                if payload else "{}")
+                    o_fm.append(fontmaps_json(
+                        fmaps[pg] if pg < len(fmaps) else {},
+                        forms[pg] if pg < len(forms) else {}))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(o_id, type=pa.string()),
                  pa.array(o_pg, type=pa.int32()),
@@ -2826,18 +2798,41 @@ def acroform_table(files: DataFrame, bytes_col: str = "pdf",
 
 def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
                    id_col: str = "doc_id", **kw) -> DataFrame:
-    """Whole PDF files -> contract span arrays: parse (map-only) ->
-    per-page tokenize/layout -> page-ordered gapless spans.  The
-    composition point for the BASELINE.json input_hint on raw-file
-    corpora; all downstream plans (`plans/fused.py`) run unchanged.
-    ToUnicode CMaps ride along by default (`maps_col='fontmaps'`), so
-    glyph-coded strings from embedded fonts decode to text."""
-    from .pdfstream import pdf_to_spans
+    """Whole PDF files -> contract span arrays in ONE map-only pass:
+    parse -> per-page tokenize -> `layout.layout_page` -> page-ordered
+    gapless spans, inside a single ``mapInArrow`` with zero exchanges
+    (plan-asserted) — each file already sits whole on one task, the
+    same shape as `docx.docx_to_spans`.  The composition point for the
+    BASELINE.json input_hint on raw-file corpora; all downstream plans
+    (`plans/fused.py`) run unchanged.  A file whose parse raises is
+    dropped, a file with no spans emits no row.
 
-    pages = pages_from_files(files, bytes_col, id_col)
-    kw.setdefault("maps_col", "fontmaps")
-    return pdf_to_spans(pages, stream_col="stream", id_col="doc_id",
-                        page_col="page", **kw)
+    ``kw`` takes the `pdfstream.pdf_to_spans` layout options
+    (page_height, y_tol, gap_tol, with_fonts, space_frac,
+    detect_tables, col_gap, col_tol, drop_artifacts).  ToUnicode
+    CMaps, /Encoding and /Widths metrics and Form XObjects apply by
+    default; ``maps_col=None`` tokenizes without them."""
+    from .pdfstream import spans_pass
+
+    use_maps = kw.pop("maps_col", "fontmaps") is not None
+
+    def pages_of(blob: bytes | None, memo: dict) -> list | None:
+        try:
+            pf = PdfFile(blob or b"")
+            texts = pf.page_texts()
+            fonts = pf.page_font_maps()
+            forms = pf.page_forms()
+        except Exception:
+            return None
+        if not use_maps:
+            return [[(txt, None, None)] for txt in texts]
+        return [[(txt, fonts[pg] if pg < len(fonts) else None,
+                  forms[pg] if pg < len(forms) else None)]
+                for pg, txt in enumerate(texts)]
+
+    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
+                       F.col(bytes_col).alias("pdf"))
+    return spans_pass(sel, pages_of, **kw)
 
 
 def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",

@@ -17,10 +17,13 @@ runs -> lines -> blocks -> spans chain as every other source
 Shape:
 
   streams(doc_id, stream)
-    --mapInArrow(_tokenize_batches)-->            # ONE map-only pass
+    --tokenize_streams (mapInArrow)-->            # ONE map-only pass
   runs(doc_id, run_idx, kind, text, media_ref, font, size, x, y, w, h)
-    --runs_for_layout-->  layout-schema runs (y-down, x0/y0/x1/y1)
-    --layout.spans_from_runs-->  contract spans (kind,text,media_ref,offset)
+
+  streams(doc_id, stream[, page])
+    --pdf_to_spans: groupBy(doc_id), then per document in-process:
+      tokenize -> y-down runs -> layout.layout_page per page -->
+  contract spans (doc_id, spans array<kind,text,media_ref,offset>)
 
 Supported operators (the text-positioning subset every real-world
 writer emits): ``BT ET Tf Td TD Tm T* TL Tc Tw Tz Tj TJ ' "`` plus
@@ -49,19 +52,22 @@ table can be plugged in via ``char_width``.
 Scale shape (100 TB / 10^12 docs): the kernel is ONE ``mapInArrow``
 pass — map-only, zero shuffle, linear in stream bytes; 1000 executors
 scale trivially.  A giant page is one row (same single-row-bounded
-contract as ``operators/html.py`` — cap page bytes at ingest); the
-downstream layout shuffle keys on doc_id and is the first exchange in
-the whole plan.  Lexing is a single compiled-regex scan (C speed) per
-stream; only the operator dispatch loop is per-token Python, bounded
-by token count, Arrow-batched on both edges.
+contract as ``operators/html.py`` — cap page bytes at ingest).  The
+span bridge adds one exchange, the doc_id grouping of stream rows;
+layout runs in the same task as tokenization, and whole-file input
+(`pdffile.files_to_spans`) needs no exchange at all.  Lexing is a
+single compiled-regex scan (C speed) per stream; only the operator
+dispatch loop is per-token Python, bounded by token count,
+Arrow-batched on both edges.
 """
 
 from __future__ import annotations
 
+import json
 import re
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # ---------------------------------------------------------------- lexer
 
@@ -655,6 +661,84 @@ RUNS_SCHEMA = (
     "x double, y double, w double, h double")
 
 
+def _fonts_to_json(fonts: dict) -> dict:
+    def one(e):
+        if not e:
+            return None
+        d = {"w": e[1], "m": {str(k): v for k, v in e[0].items()}}
+        if len(e) > 2 and e[2] is not None:
+            d["gw"] = {str(k): v for k, v in e[2].items()}
+            d["dw"] = e[3]
+        return d
+    return {name: one(e) for name, e in fonts.items()}
+
+
+def _form_to_json(spec: dict) -> dict:
+    d: dict = {"t": spec["text"]}
+    if "mtx" in spec:
+        d["x"] = spec["mtx"]
+    if "fonts" in spec:
+        d["f"] = _fonts_to_json(spec["fonts"])
+    if "forms" in spec:
+        d["s"] = {n: _form_to_json(s) for n, s in spec["forms"].items()}
+    return d
+
+
+def fontmaps_json(fonts: dict, forms: dict) -> str:
+    """One page's font maps and Form-XObject specs
+    (`pdffile.PdfFile.page_font_maps` / ``page_forms`` entries) as the
+    ``fontmaps`` column JSON :func:`tokenize_streams` reads:
+    ``{font: {"w": width, "m": {code: text}, "gw"?, "dw"?}}`` plus the
+    reserved key ``"__forms__"`` (``{name: {"t": content, "x": [6
+    matrix nums]?, "f": {fonts}?, "s": {nested forms}?}}``); ``{}``
+    when the page carries neither."""
+    payload = _fonts_to_json(fonts)
+    if forms:
+        payload["__forms__"] = {n: _form_to_json(s)
+                                for n, s in forms.items()}
+    return json.dumps(payload, sort_keys=True) if payload else "{}"
+
+
+def _fonts_from_json(d: dict) -> dict:
+    def one(spec):
+        if not spec:
+            return None
+        entry = ({int(k): v for k, v in spec["m"].items()},
+                 int(spec["w"]))
+        if "gw" in spec:
+            entry += ({int(k): float(v) for k, v in spec["gw"].items()},
+                      float(spec.get("dw", 0.0)))
+        return entry
+    return {name: one(spec) for name, spec in d.items()}
+
+
+def _form_from_json(spec: dict) -> dict:
+    out: dict = {"text": spec.get("t") or ""}
+    if spec.get("x"):
+        out["mtx"] = tuple(spec["x"])
+    if "f" in spec:
+        out["fonts"] = _fonts_from_json(spec["f"])
+    if "s" in spec:
+        out["forms"] = {n: _form_from_json(s) for n, s in spec["s"].items()}
+    return out
+
+
+def fontmaps_from_json(js: str | None, memo: dict) -> tuple:
+    """Inverse of :func:`fontmaps_json`: ``(font_maps, forms)`` for
+    :func:`extract_runs`, each None when absent.  Identical payloads
+    deserialize once per ``memo`` (documents sharing embedded fonts
+    are the common case)."""
+    if not js or js == "{}":
+        return (None, None)
+    if js not in memo:
+        d = json.loads(js)
+        fspecs = d.pop("__forms__", None)
+        memo[js] = (_fonts_from_json(d) if d else None,
+                    {n: _form_from_json(s) for n, s in fspecs.items()}
+                    if fspecs else None)
+    return memo[js]
+
+
 def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
                      id_col: str = "doc_id",
                      char_width: float = DEFAULT_CHAR_WIDTH,
@@ -666,16 +750,12 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
     both edges, no shuffle — the plan-shape test asserts zero
     Exchange).
 
-    ``maps_col`` names an optional JSON column of per-row ToUnicode
-    font maps (``{font: {"w": width, "m": {code: text}}}`` — the shape
-    `pdffile.pages_from_files` emits): shown strings of those fonts
-    decode glyph codes to text inside the same pass.  The reserved
-    key ``"__forms__"`` carries Form-XObject specs for the same page
-    (``{name: {"t": content, "x": [6 matrix nums]?, "f": {fonts}?,
-    "s": {nested forms}?}}``) — ``Do`` on those names executes the
-    form content in place instead of emitting a media run.  Identical
-    JSON payloads deserialize once per batch (documents sharing
-    embedded fonts are the common case).
+    ``maps_col`` names an optional JSON column of per-row font maps
+    and Form-XObject specs (the :func:`fontmaps_json` shape
+    `pdffile.pages_from_files` emits): shown strings of mapped fonts
+    decode glyph codes to text inside the same pass, and ``Do`` on a
+    listed form executes the form content in place instead of
+    emitting a media run.
 
     ``with_rules=True`` interleaves painted axis-aligned path
     segments as ``kind='rule'`` rows (see :func:`machine_runs`) for
@@ -685,8 +765,6 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
     (`layout.detect_ruled_tables`).  ``drop_artifacts=True``
     suppresses §14.8 /Artifact-tagged content (pagination chrome) —
     see :func:`machine_runs`."""
-    import json as _json
-
     import pyarrow as pa
 
     fields = [("doc_id", pa.string()), ("run_idx", pa.int32()),
@@ -696,41 +774,6 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
               ("y", pa.float64()), ("w", pa.float64()),
               ("h", pa.float64())]
     out_schema = pa.schema(fields)
-
-    def _decode_fonts(d: dict) -> dict:
-        def one(spec):
-            if not spec:
-                return None
-            entry = ({int(k): v for k, v in spec["m"].items()},
-                     int(spec["w"]))
-            if "gw" in spec:
-                entry += ({int(k): float(v)
-                           for k, v in spec["gw"].items()},
-                          float(spec.get("dw", 0.0)))
-            return entry
-        return {name: one(spec) for name, spec in d.items()}
-
-    def _decode_form(spec: dict) -> dict:
-        out: dict = {"text": spec.get("t") or ""}
-        if spec.get("x"):
-            out["mtx"] = tuple(spec["x"])
-        if "f" in spec:
-            out["fonts"] = _decode_fonts(spec["f"])
-        if "s" in spec:
-            out["forms"] = {n: _decode_form(s)
-                            for n, s in spec["s"].items()}
-        return out
-
-    def _decode_maps(js: str | None, memo: dict):
-        if not js or js == "{}":
-            return (None, None)
-        if js not in memo:
-            d = _json.loads(js)
-            fspecs = d.pop("__forms__", None)
-            memo[js] = (_decode_fonts(d) if d else None,
-                        {n: _decode_form(s) for n, s in fspecs.items()}
-                        if fspecs else None)
-        return memo[js]
 
     def _tokenize_batches(batches: Iterator["pa.RecordBatch"]
                           ) -> Iterator["pa.RecordBatch"]:
@@ -742,7 +785,7 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
                        else [None] * len(ids))
             cols: list[list] = [[] for _ in fields]
             for doc_id, stream, js in zip(ids, streams, maps_js):
-                fmaps, forms = _decode_maps(js, memo)
+                fmaps, forms = fontmaps_from_json(js, memo)
                 for idx, run in enumerate(
                         extract_runs(stream or "", char_width,
                                      fmaps, forms,
@@ -764,27 +807,88 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
     return sel.mapInArrow(_tokenize_batches, schema=RUNS_SCHEMA)
 
 
-def runs_for_layout(runs: DataFrame,
-                    page_height: float = 792.0) -> DataFrame:
-    """Convert device-space runs (y-up, PDF user space) to the layout
-    operators' y-down schema: top = page_height - y - h, bottom =
-    page_height - y (`operators/layout.py` input contract).  Media runs
-    keep their media_ref; their box is the CTM-placed unit square.
-    The font name passes through (the layout total-order key absorbs
-    it; `spans_from_runs(with_fonts=True)` forwards it as the C2
-    span attribute)."""
-    H = F.lit(page_height)
-    return runs.select(
-        "doc_id",
-        "text",
-        F.col("x").alias("x0"),
-        (H - F.col("y") - F.col("h")).alias("y0"),
-        (F.col("x") + F.col("w")).alias("x1"),
-        (H - F.col("y")).alias("y1"),
-        F.col("size"),
-        F.col("font"),
-        F.when(F.col("kind") == "media", F.col("media_ref"))
-        .alias("media_ref"))
+# ------------------------------------------------ span bridge kernel
+
+def doc_spans(pages: list[list[tuple]], *, page_height: float = 792.0,
+              y_tol: float = 3.0, gap_tol: float = 10.0,
+              with_fonts: bool = False,
+              space_frac: float | None = 0.3,
+              detect_tables: bool = False, col_gap: float = 18.0,
+              col_tol: float = 6.0,
+              drop_artifacts: bool = False) -> list[dict]:
+    """One document -> its contract spans (options and defaults as in
+    :func:`pdf_to_spans`): ``pages`` in page order, each a list of
+    ``(stream, font_maps, forms)`` content streams that share that
+    page's coordinate space.  Each page is tokenized
+    (:func:`extract_runs`), flipped to y-down (top = ``(page_height -
+    y) - h``, bottom = ``page_height - y``) and laid out by
+    `layout.layout_page`; offsets run gaplessly across the pages."""
+    from .layout import layout_page
+
+    H = float(page_height)
+    spans: list[dict] = []
+    for page in pages:
+        runs = [(text, x, (H - y) - h, x + w, H - y, size, font,
+                 mref if kind == "media" else None)
+                for stream, fonts, forms in page
+                for kind, text, mref, font, size, x, y, w, h
+                in extract_runs(stream or "", DEFAULT_CHAR_WIDTH, fonts,
+                                forms, drop_artifacts=drop_artifacts)]
+        for kind, text, mref, font, size in layout_page(
+                runs, y_tol=y_tol, gap_tol=gap_tol,
+                space_frac=space_frac, with_fonts=with_fonts,
+                detect_tables=detect_tables, col_gap=col_gap,
+                col_tol=col_tol):
+            span = {"kind": kind, "text": text or "",
+                    "media_ref": mref or "", "offset": len(spans)}
+            if with_fonts:
+                span["font"], span["size"] = font or "", size
+            spans.append(span)
+    return spans
+
+
+def spans_pass(rows: DataFrame, pages_of, *, with_fonts: bool = False,
+               **kw) -> DataFrame:
+    """(doc_id, payload) rows -> (doc_id, spans array<struct<kind,
+    text,media_ref,offset[,font,size]>>) in ONE map-only
+    ``mapInArrow``: ``pages_of(payload, memo)`` turns a row's payload
+    into the :func:`doc_spans` page list (None drops the row), and a
+    document with no spans emits no row.  ``kw`` forwards to
+    :func:`doc_spans`."""
+    import inspect
+
+    import pyarrow as pa
+
+    inspect.signature(doc_spans).bind(None, with_fonts=with_fonts, **kw)
+
+    fields = [("kind", pa.string()), ("text", pa.string()),
+              ("media_ref", pa.string()), ("offset", pa.int32())]
+    if with_fonts:
+        fields += [("font", pa.string()), ("size", pa.float64())]
+    span_t = pa.list_(pa.struct(fields))
+    schema = pa.schema([("doc_id", pa.string()), ("spans", span_t)])
+    ddl = ("doc_id string, spans array<struct<kind:string,text:string,"
+           "media_ref:string,offset:int"
+           + (",font:string,size:double" if with_fonts else "") + ">>")
+
+    def _lay_out(batches: Iterator["pa.RecordBatch"]
+                 ) -> Iterator["pa.RecordBatch"]:
+        memo: dict = {}
+        for batch in batches:
+            ids, out = [], []
+            for doc_id, payload in zip(batch.column(0).to_pylist(),
+                                       batch.column(1).to_pylist()):
+                pages = pages_of(payload, memo)
+                spans = doc_spans(pages, with_fonts=with_fonts, **kw) \
+                    if pages else None
+                if spans:
+                    ids.append(doc_id)
+                    out.append(spans)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids, type=pa.string()),
+                 pa.array(out, type=span_t)], schema=schema)
+
+    return rows.mapInArrow(_lay_out, schema=ddl)
 
 
 def pdf_to_spans(docs: DataFrame, stream_col: str = "stream",
@@ -836,78 +940,43 @@ def pdf_to_spans(docs: DataFrame, stream_col: str = "stream",
     blocks heuristically, tagged PDFs declare theirs, so the tagged
     path is exact.  Untagged corpora are unaffected (no BDC scopes).
 
-    ``page_col`` names an optional page-number column for corpora that
-    arrive one content stream per PAGE (real PDFs): each page is
-    layout-clustered in its OWN coordinate space (page 2's y=700 must
-    not interleave with page 1's), spans are ordered (page, reading
-    order) and re-offset gaplessly per document.  This is also the
-    documented giant-document skew mitigation made executable: the
-    layout shuffle keys on (doc_id, page), so the skew unit drops from
-    document to page — bounded by construction — and only the final
-    cheap span-row groupBy sees whole documents.
+    ``maps_col`` names an optional :func:`fontmaps_json` column
+    (font maps and Form XObjects per row).  ``page_col`` names an
+    optional page-number column for corpora that arrive one content
+    stream per PAGE (real PDFs): each page is laid out in its OWN
+    coordinate space (page 2's y=700 must not interleave with page
+    1's) and spans are ordered (page, reading order); without it all
+    of a document's rows share one coordinate space.
 
-    Plan (asserted in tests/test_plan_shapes.py): the tokenize pass is
-    exchange-free; end-to-end exactly 2 hash exchanges, both on doc_id
-    — the runs-sized layout shuffle, then a block-sized one where the
-    media union re-enters the offset window + final groupBy (blocks +
-    media rows only, orders of magnitude smaller than runs).  With
-    ``page_col`` the first two key on the composed (doc_id, page) and
-    a third block-sized exchange regroups per doc_id."""
-    from .layout import spans_from_runs
+    Plan (asserted in tests/test_plan_shapes.py): ONE hash exchange,
+    keyed on doc_id, that gathers each document's stream rows; the
+    tokenize -> per-page `layout.layout_page` -> offset kernel then
+    runs in-process on the grouped rows (:func:`spans_pass`).  Rows
+    that already hold a whole file need no exchange at all — see
+    `pdffile.files_to_spans`."""
+    page = (F.col(page_col).cast("long") if page_col
+            else F.lit(None).cast("long"))
+    maps = (F.col(maps_col).cast("string") if maps_col
+            else F.lit(None).cast("string"))
+    rows = docs.select(F.col(id_col).cast("string").alias("doc_id"),
+                       F.struct(page.alias("page"),
+                                F.col(stream_col).alias("stream"),
+                                maps.alias("maps")).alias("row")) \
+        .groupBy("doc_id").agg(F.collect_list("row").alias("rows"))
 
-    _SEP = "\x1f"
-    if page_col is not None:
-        keyed_cols = [
-            F.concat_ws(_SEP, F.col(id_col).cast("string"),
-                        F.col(page_col).cast("long").cast("string"))
-            .alias("__pkey"),
-            F.col(stream_col).alias(stream_col)]
-        if maps_col is not None:
-            keyed_cols.append(F.col(maps_col).alias(maps_col))
-        keyed = docs.select(*keyed_cols)
-        runs = runs_for_layout(
-            tokenize_streams(keyed, stream_col, "__pkey",
-                             maps_col=maps_col,
-                             drop_artifacts=drop_artifacts),
-            page_height)
-    else:
-        runs = runs_for_layout(
-            tokenize_streams(docs, stream_col, id_col,
-                             maps_col=maps_col,
-                             drop_artifacts=drop_artifacts),
-            page_height)
-    span_rows = spans_from_runs(runs, y_tol=y_tol, gap_tol=gap_tol,
-                                with_fonts=with_fonts,
-                                space_frac=space_frac,
-                                detect_tables=detect_tables,
-                                col_gap=col_gap, col_tol=col_tol)
-    if page_col is not None:
-        w = Window.partitionBy("real_doc").orderBy("page", "offset")
-        span_rows = span_rows.select(
-            F.substring_index("doc_id", _SEP, 1).alias("real_doc"),
-            F.substring_index("doc_id", _SEP, -1).cast("long")
-            .alias("page"),
-            *[c for c in span_rows.columns if c != "doc_id"]) \
-            .withColumn("offset",
-                        (F.row_number().over(w) - 1).cast("int")) \
-            .withColumnRenamed("real_doc", "doc_id").drop("page")
-    fields = ["offset", "kind", "text", "media_ref"] \
-        + (["font", "size"] if with_fonts else [])
-    spans = F.array_sort(F.collect_list(F.struct(*fields)))
+    def pages_of(rows: list[dict], memo: dict) -> list[list[tuple]]:
+        by_page: dict = {}
+        for r in rows:
+            by_page.setdefault(r["page"], []).append(
+                (r["stream"], *fontmaps_from_json(r["maps"], memo)))
+        return [by_page[p] for p in
+                sorted(by_page, key=lambda p: (p is not None, p or 0))]
 
-    def span_struct(s):
-        parts = [s["kind"].alias("kind"),
-                 F.coalesce(s["text"], F.lit("")).alias("text"),
-                 F.coalesce(s["media_ref"], F.lit(""))
-                 .alias("media_ref"),
-                 s["offset"].cast("int").alias("offset")]
-        if with_fonts:
-            parts += [F.coalesce(s["font"], F.lit("")).alias("font"),
-                      s["size"].alias("size")]
-        return F.struct(*parts)
-
-    return (span_rows.groupBy("doc_id")
-            .agg(F.transform(spans, span_struct).alias("spans")))
+    return spans_pass(rows, pages_of, page_height=page_height,
+                      y_tol=y_tol, gap_tol=gap_tol,
+                      with_fonts=with_fonts, space_frac=space_frac,
+                      detect_tables=detect_tables, col_gap=col_gap,
+                      col_tol=col_tol, drop_artifacts=drop_artifacts)
 
 
 def ruled_table_rows(docs: DataFrame, stream_col: str = "stream",

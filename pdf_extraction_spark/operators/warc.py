@@ -678,9 +678,10 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
     Shape: with ``dedupe`` (default) the record rows pay ONE shuffle —
     the latest-capture-per-URI ``dedupe_captures`` aggregation, which
     crawl semantics require (see its docstring) — after which the
-    html/docx/pptx/xlsx/media branches are map-only; the pdf/epub
-    branches pay their documented bounded per-doc reassembly
-    exchanges.  No joins (plan-asserted in tests/test_warc.py).
+    html/pdf/docx/pptx/xlsx/media branches are map-only; the epub
+    branch pays its documented bounded per-doc reassembly exchange.
+    No joins (plan-asserted in tests/test_warc.py; the one-stage pdf
+    branch in tests/test_plan_shapes.py).
 
     The input must be a landed, deduped records table passed with
     ``dedupe=False``, or use ``warc_dispatch_spans``: over an

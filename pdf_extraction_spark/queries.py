@@ -963,9 +963,9 @@ SELECT doc_id, 1 AS total_pages, 'inspection' AS report_type,
   -- (YEAR_PATTERNS[1] has an optional prefix, so it grabs the FIRST
   -- 4-digit run); a 4-digit report number hijacks the match and fails
   -- the 1800-2025 range check -> NULL (faithful operator behavior)
-  CASE WHEN TRY_CAST(regexp_extract(txt, '(\d{{4}})', 1) AS INT)
+  CASE WHEN TRY_CAST(regexp_extract(txt, '(\\d{{4}})', 1) AS INT)
             BETWEEN 1800 AND 2025
-       THEN TRY_CAST(regexp_extract(txt, '(\d{{4}})', 1) AS INT) END
+       THEN TRY_CAST(regexp_extract(txt, '(\\d{{4}})', 1) AS INT) END
     AS year_built,
   CAST(1 + CAST(doc_id AS INT) % 3 AS INT) AS stories,
   trim(nullif(regexp_extract(txt,

@@ -361,3 +361,15 @@ def test_ruled_fuzz_sample(spark):
              row.table_text))
     for s, (_, expected) in cases.items():
         assert sorted(got[s]) == sorted(expected), s
+
+
+def test_page_kernel_matches_sql_chain_fuzz_slice(spark):
+    """8 fixed seeds of the kernel-vs-SQL differential campaign
+    (tools/fuzz_layout.py --kernel), one per option set: layout_page
+    against spans_from_runs on positioned runs built on the y_tol /
+    gap_tol / space_frac / col_tol boundaries (duplicates, NULLs,
+    NaN, +-0.0, media), and pdf_to_spans against the SQL chain on
+    multi-page content streams with font maps."""
+    import tools.fuzz_layout as fz
+
+    assert fz.kernel_campaign(spark, 0, len(fz.OPTION_SETS)) == 0

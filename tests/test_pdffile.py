@@ -981,3 +981,29 @@ def test_parse_object_bare_sign_keeps_valueerror_contract():
     for bad in (b"<< /Foo - >>", b"[ . ]", b"+"):
         with pytest.raises(ValueError):
             parse_object(bad, 0)
+
+
+@pytest.mark.parametrize("opts", [
+    {}, {"with_fonts": True, "detect_tables": True, "space_frac": None}])
+def test_damaged_files_spans_match_sql_chain(spark, opts):
+    """A byte-flipped / truncated corpus from every PDF writer: the
+    one-pass bridge keeps exactly the documents and spans of the
+    page-table SQL chain (pages_from_files -> tokenize_streams ->
+    spans_from_runs per page -> page-ordered offsets) — parses that
+    raise drop the file in both, empty documents emit no row."""
+    import tools.fuzz_layout as fz
+    from pdf_extraction_spark.operators.pdffile import (files_to_spans,
+                                                        pages_from_files)
+
+    files = spark.createDataFrame(
+        [(k, bytearray(b)) for k, b in fz.damaged_pdf_files(3, 45)],
+        "doc_id string, pdf binary")
+
+    def spans(df):
+        return {r.doc_id: [tuple(s) for s in r.spans]
+                for r in df.collect()}
+    got = spans(files_to_spans(files, **opts))
+    want = spans(fz.sql_chain_spans(pages_from_files(files),
+                                    page_col="page", maps_col="fontmaps",
+                                    **opts))
+    assert got == want and 10 < len(got) < 45

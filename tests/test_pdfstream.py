@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.pdfstream import (
     DEFAULT_CHAR_WIDTH, extract_runs, lex_content, pdf_to_spans,
-    runs_for_layout, tokenize_streams)
+    tokenize_streams)
 
 # ------------------------------------------------------------- lexer
 
@@ -300,8 +300,9 @@ def test_tokenize_plan_is_map_only(stream_docs):
 
 def test_runs_feed_layout_blocks(spark, stream_docs):
     from pdf_extraction_spark.operators.layout import reconstruct_blocks
+    from tools.fuzz_layout import layout_runs
 
-    runs = runs_for_layout(tokenize_streams(stream_docs)) \
+    runs = layout_runs(tokenize_streams(stream_docs)) \
         .where(F.col("media_ref").isNull()).drop("media_ref")
     blocks = reconstruct_blocks(runs).orderBy("doc_id", "block_id") \
         .collect()

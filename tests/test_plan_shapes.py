@@ -267,33 +267,57 @@ def test_html_extraction_zero_shuffle(spark):
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
 
 
-def test_pdf_bridge_two_docid_exchanges(spark):
-    """pdf_to_spans end-to-end: the tokenize pass is exchange-free
-    (pinned separately in test_pdfstream), and the whole bridge plans
-    exactly 2 hash exchanges, both keyed on doc_id — the runs-sized
-    layout shuffle plus the block-sized media-union/offset/groupBy one.
-    A third exchange (or a non-doc_id key) is a 100x-scale regression."""
+def test_pdf_bridge_one_docid_exchange(spark):
+    """pdf_to_spans end-to-end: at most ONE hash exchange, keyed on
+    doc_id — it gathers each document's stream rows, and tokenize ->
+    layout -> offsets run in-process after it.  With ``page_col`` the
+    pages lay out separately inside the same per-doc task, so the
+    plan keeps the one exchange."""
+    import re
+
     from pdf_extraction_spark.operators.pdfstream import pdf_to_spans
     from pdf_extraction_spark.queries_pdf import _pdf_streams
 
-    plan = _plan(pdf_to_spans(_pdf_streams(spark, SF_DIR)))
-    assert plan.count("Exchange hashpartitioning") == 2
-    import re
-    for m in re.finditer(r"Exchange hashpartitioning\(([^,]+),", plan):
-        assert m.group(1).startswith("doc_id"), m.group(0)
+    streams = _pdf_streams(spark, SF_DIR)
+    for df in (pdf_to_spans(streams),
+               pdf_to_spans(streams.withColumn("page", F.lit(1)),
+                            page_col="page")):
+        plan = _plan(df)
+        assert plan.count("Exchange") <= 1
+        for m in re.finditer(r"Exchange hashpartitioning\(([^,]+),",
+                             plan):
+            assert m.group(1).startswith("doc_id"), m.group(0)
 
-    # page_col: layout keys on the composed (doc_id, page) key — the
-    # giant-doc skew unit drops to a page — plus one doc_id regroup
-    paged = _pdf_streams(spark, SF_DIR).withColumn(
-        "page", F.lit(1))
-    pplan = _plan(pdf_to_spans(paged, page_col="page"))
-    assert pplan.count("Exchange hashpartitioning") == 3
-    keys = [m.group(1) for m in re.finditer(
-        r"Exchange hashpartitioning\(([^,]+),", pplan)]
-    # physical names: __pkey (layout), real_doc (the per-doc offset
-    # window before its rename back to doc_id), doc_id (final groupBy)
-    assert sum(k.startswith(("__pkey", "real_doc", "doc_id#"))
-               for k in keys) == 3
+
+def test_pdf_file_bridge_is_one_stage(spark):
+    """files_to_spans is parse -> tokenize -> layout -> offsets in one
+    mapInArrow: no Exchange, in its own plan or as dispatch_spans'
+    PDF branch (the Union child that filters on application/pdf)."""
+    from pdf_extraction_spark.operators.pdffile import (build_pdf_files,
+                                                        files_to_spans)
+    from pdf_extraction_spark.operators.warc import (
+        PDF_MIME, build_mixed_warc_files, dispatch_spans,
+        records_from_warc)
+    from pdf_extraction_spark.queries_html import _media_page_expr
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .where(F.col("doc_id") < 8).select("doc_id", "text")
+    assert "Exchange" not in _plan(files_to_spans(build_pdf_files(docs)))
+
+    pages = docs.select(
+        "doc_id", F.coalesce("text", F.lit("")).alias("t")).select(
+        "doc_id", F.col("t").alias("text"),
+        F.expr(_media_page_expr("CAST(doc_id AS STRING)")).alias("html"))
+    recs = records_from_warc(build_mixed_warc_files(pages))
+    root = dispatch_spans(recs, dedupe=False)._jdf.queryExecution() \
+        .executedPlan().executedPlan()
+    union = root
+    while union.getClass().getSimpleName() != "UnionExec":
+        union = union.children().apply(0)
+    branches = [union.children().apply(i).toString()
+                for i in range(union.children().size())]
+    pdf = [b for b in branches if PDF_MIME in b]
+    assert len(pdf) == 1 and "Exchange" not in pdf[0]
 
 
 def test_ruled_tables_single_scan_single_exchange(spark):

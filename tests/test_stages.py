@@ -91,3 +91,28 @@ def test_driver_order_puts_least_recently_proven_first(tmp_path):
 def test_queries_and_oracles_share_one_order():
     import __spark_entry__ as e
     assert list(e.queries()) == list(e.oracle_sql())
+
+
+def test_run_scaling_generates_corpus_from_any_cwd(tmp_path):
+    """tools/run_scaling.generate_corpus from outside the repo: the
+    Python workers of its own Spark session must import the package
+    (sys.path reaches only the driver).  A fresh interpreter, because
+    generate_corpus stops the session it made."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "corpus"
+    code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+            "import run_scaling; "
+            "run_scaling.generate_corpus(sys.argv[2], 6, partitions=1)")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "1"
+    proc = subprocess.run(
+        [sys.executable, "-c", code, os.path.join(repo, "tools"),
+         str(out)], cwd=tmp_path, env=env, capture_output=True,
+        text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    import pyarrow.dataset as ds
+    assert ds.dataset(str(out)).count_rows() == 6

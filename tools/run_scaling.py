@@ -17,6 +17,10 @@ import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# Spark's Python workers import the package too, and they inherit the
+# environment, not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 from pyspark.sql import functions as F  # noqa: E402
 
