@@ -223,24 +223,13 @@ def main() -> None:
     pdfs.unpersist()
     # the form-XObject path: per-file form-graph resolution + machine
     # re-entry on every Do (two invocations + a nested form per doc)
-    import pyarrow as pa
-    from pdf_extraction_spark.operators.pdffile import \
-        build_pdf_xobject
-
-    def _xobj(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_xobject(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    xpdfs = dtab.select("doc_id", "text").mapInArrow(
-        _xobj, schema="doc_id string, pdf binary").persist()
+    from pdf_extraction_spark.operators.filepass import file_pass
+    from pdf_extraction_spark.operators.pdffile import (FILES_SCHEMA,
+                                                        build_pdf_xobject)
+    xpdfs = file_pass(
+        dtab, "doc_id", ["text"], FILES_SCHEMA,
+        lambda key, text: [(build_pdf_xobject(int(key), text or ""),)]
+    ).persist()
     xpdfs.count()
     timed("k_pdf_forms", lambda: noop(files_to_spans(xpdfs)))
     xpdfs.unpersist()

@@ -10,7 +10,7 @@ heading styles, tables, inline images resolved through the
 relationships part — and lands it on the same two surfaces as the
 PDF/HTML/WARC families: a typed element table
 (``docx_rows_from_files``) and the BASELINE.json contract span schema
-(``docx_to_spans``), both as ONE map-only ``mapInArrow`` pass.
+(``docx_to_spans``), both as ONE map-only `filepass.file_pass`.
 
 Reference anchor: the reference ingests PDFs only
 (``/root/reference/src/pipeline.py``); this is part of the
@@ -34,10 +34,12 @@ from __future__ import annotations
 import io
 import re
 import zipfile
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .filepass import element_spans, file_pass, id_number
 
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
              ("&apos;", "'"), ("&amp;", "&")]   # amp LAST
@@ -144,39 +146,14 @@ ROWS_SCHEMA = ("doc_id string, el_idx int, kind string, style string, "
 def docx_rows_from_files(files: DataFrame, bytes_col: str = "docx",
                          id_col: str = "doc_id") -> DataFrame:
     """(doc_id, docx binary) -> typed element rows in document order.
-    ONE map-only ``mapInArrow`` pass — zip open + XML scan happen
-    inside the scan stage; only the rows flow downstream."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("el_idx", pa.int32()),
-              ("kind", pa.string()), ("style", pa.string()),
-              ("text", pa.string()), ("media_ref", pa.string()),
-              ("n_cells", pa.int32())]
-    schema = pa.schema(fields)
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            rows: list[tuple] = []
-            for did, blob in zip(ids, blobs):
-                for i, r in enumerate(parse_docx(blob or b"")):
-                    rows.append((did, i, r["kind"], r["style"],
-                                 r["text"], r["media_ref"],
-                                 r["n_cells"]))
-            cols = list(zip(*rows)) if rows else [[]] * len(fields)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(c), type=t)
-                 for c, (_, t) in zip(cols, fields)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("docx"))
-    return sel.mapInArrow(_parse, schema=ROWS_SCHEMA)
-
-
-SPANS_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
-                "text:string,media_ref:string,offset:int>>")
+    ONE map-only ``file_pass`` — zip open + XML scan happen inside
+    the scan stage; only the rows flow downstream."""
+    return file_pass(
+        files, id_col, [bytes_col], ROWS_SCHEMA,
+        lambda _key, blob: [
+            (i, r["kind"], r["style"], r["text"], r["media_ref"],
+             r["n_cells"])
+            for i, r in enumerate(parse_docx(blob or b""))])
 
 
 def docx_to_spans(files: DataFrame, bytes_col: str = "docx",
@@ -188,41 +165,11 @@ def docx_to_spans(files: DataFrame, bytes_col: str = "docx",
     fused extraction plan runs unchanged on office documents.  Each
     file arrives whole in its row, so the bridge is the same single
     map-only pass as the parse (zero shuffle, plan-asserted)."""
-    import pyarrow as pa
+    from ..corpus import SPAN_SCHEMA  # local: corpus loads pandas
 
-    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                        ("media_ref", pa.string()),
-                        ("offset", pa.int32())])
-    schema = pa.schema([("doc_id", pa.string()),
-                        ("spans", pa.list_(span_t))])
-
-    def _bridge(batches: Iterator["pa.RecordBatch"]
-                ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            out = []
-            for blob in blobs:
-                spans = []
-                for r in parse_docx(blob or b""):
-                    if r["kind"] == "image":
-                        spans.append({"kind": "media", "text": "",
-                                      "media_ref": r["media_ref"],
-                                      "offset": len(spans)})
-                    else:
-                        spans.append({"kind": "text",
-                                      "text": r["text"],
-                                      "media_ref": "",
-                                      "offset": len(spans)})
-                out.append(spans)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(out, type=pa.list_(span_t))],
-                schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("docx"))
-    return sel.mapInArrow(_bridge, schema=SPANS_SCHEMA)
+    return file_pass(
+        files, id_col, [bytes_col], SPAN_SCHEMA,
+        lambda _key, blob: [(element_spans(parse_docx(blob or b"")),)])
 
 
 # ------------------------------------------------ deterministic writer
@@ -310,29 +257,22 @@ def build_docx_files(docs: DataFrame, text_col: str = "text",
     """(doc_id, text) -> (doc_id, docx binary) via the deterministic
     writer; one map-only Arrow pass (gate/scaling-corpus
     synthesizer)."""
-    import pyarrow as pa
-
-    def _build(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            blobs = [build_one_docx(
-                int(re.sub(r"\D", "", i) or 0), t or "")
-                for i, t in zip(ids, texts)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(blobs, type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("docx", pa.binary())]))
-
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.coalesce(F.col(text_col), F.lit(""))
-                       .alias("text"))
-    return sel.mapInArrow(_build, schema="doc_id string, docx binary")
+    return file_pass(
+        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        "doc_id string, docx binary",
+        lambda key, text: [(build_one_docx(id_number(key), text),)])
 
 
 MEDIA_SCHEMA = "doc_id string, part string, content binary"
+
+
+def _media_parts(_key: str, blob: bytes | None) -> list[tuple[str, bytes]]:
+    try:
+        zf = zipfile.ZipFile(io.BytesIO(blob or b""))
+    except (zipfile.BadZipFile, ValueError):
+        return []
+    return [(name, zf.read(name)) for name in zf.namelist()
+            if name.startswith("word/media/")]
 
 
 def docx_media_from_files(files: DataFrame, bytes_col: str = "docx",
@@ -343,33 +283,5 @@ def docx_media_from_files(files: DataFrame, bytes_col: str = "docx",
     interleaved text+media contract closes end-to-end: span order
     from ``docx_to_spans``, media bytes + header metadata from here.
     Map-only, zero shuffle."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.string()),
-                        ("part", pa.string()),
-                        ("content", pa.binary())])
-
-    def _media(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            rows: list[tuple] = []
-            for did, blob in zip(ids, blobs):
-                try:
-                    zf = zipfile.ZipFile(io.BytesIO(blob or b""))
-                except (zipfile.BadZipFile, ValueError):
-                    continue
-                for name in zf.namelist():
-                    if name.startswith("word/media/"):
-                        rows.append((did, name, zf.read(name)))
-            cols = list(zip(*rows)) if rows else [[], [], []]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(cols[0]), type=pa.string()),
-                 pa.array(list(cols[1]), type=pa.string()),
-                 pa.array(list(cols[2]), type=pa.binary())],
-                schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("docx"))
-    return sel.mapInArrow(_media, schema=MEDIA_SCHEMA)
+    return file_pass(files, id_col, [bytes_col], MEDIA_SCHEMA,
+                     _media_parts)

@@ -42,10 +42,12 @@ import io
 import posixpath
 import re
 import zipfile
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .filepass import file_pass, id_number
 
 _ROOTFILE = re.compile(r'<rootfile [^>]*full-path="([^"]+)"')
 _ITEM = re.compile(r'<item (?=[^>]*id="([^"]+)")(?=[^>]*href="'
@@ -116,43 +118,22 @@ CHAPTERS_SCHEMA = ("doc_id string, chapter int, path string, "
                    "html string")
 
 
+def _chapter_rows(_key: str, blob: bytes | None) -> list[tuple]:
+    # a damaged/empty book yields the sentinel chapter 0 so it
+    # surfaces as an empty-span document downstream instead of
+    # vanishing (same contract as the docx/pptx/xlsx bridges, which
+    # keep the row with an empty spans array)
+    return [(r["chapter"], r["path"], r["html"])
+            for r in parse_epub(blob or b"")] or [(0, None, "")]
+
+
 def epub_chapters_from_files(files: DataFrame,
                              bytes_col: str = "epub",
                              id_col: str = "doc_id") -> DataFrame:
     """(doc_id, epub binary) -> one row per chapter in spine order.
-    ONE map-only mapInArrow pass (zero shuffle, zero joins)."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("chapter", pa.int32()),
-              ("path", pa.string()), ("html", pa.string())]
-    schema = pa.schema(fields)
-    types = [t for _, t in fields]
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            rows: list[tuple] = []
-            for did, blob in zip(ids, blobs):
-                chapters = parse_epub(blob or b"")
-                if not chapters:
-                    # sentinel: a damaged/empty book must surface as
-                    # an empty-span document downstream, not vanish
-                    # (same contract as the docx/pptx/xlsx bridges,
-                    # which keep the row with an empty spans array)
-                    rows.append((did, 0, None, ""))
-                for r in chapters:
-                    rows.append((did, r["chapter"], r["path"],
-                                 r["html"]))
-            cols = list(zip(*rows)) if rows else [[]] * len(fields)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(c), type=t)
-                 for c, t in zip(cols, types)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("epub"))
-    return sel.mapInArrow(_parse, schema=CHAPTERS_SCHEMA)
+    ONE map-only ``file_pass`` (zero shuffle, zero joins)."""
+    return file_pass(files, id_col, [bytes_col], CHAPTERS_SCHEMA,
+                     _chapter_rows)
 
 
 def epub_to_spans(files: DataFrame, bytes_col: str = "epub",
@@ -164,17 +145,16 @@ def epub_to_spans(files: DataFrame, bytes_col: str = "epub",
     order with globally gapless offsets.
 
     Plan: container parse + per-chapter block classification fuse
-    into the scan stage (the composite doc||chapter key keeps each
+    into the scan stage (the composite chapter||doc_id key keeps each
     chapter one row — the same giant-doc skew story as the PDF page
-    layer); ONE exchange reassembles books.  Requires doc ids free
-    of the 0x1F unit separator (asserted nowhere — crawl ids are
-    URIs/paths; same documented contract as pdffile's page keys)."""
+    layer); ONE exchange reassembles books.  The key splits at its
+    first separator, so every doc_id string comes back whole."""
     from .html import html_to_spans
 
     ch = epub_chapters_from_files(files, bytes_col, id_col)
     keyed = ch.select(
-        F.concat_ws(_SEP, "doc_id",
-                    F.col("chapter").cast("string")).alias("doc_id"),
+        F.concat_ws(_SEP, F.col("chapter").cast("string"),
+                    "doc_id").alias("doc_id"),
         "html")
     sp = html_to_spans(keyed)
     # explode_outer keeps zero-span chapters (including the damaged-
@@ -183,8 +163,8 @@ def epub_to_spans(files: DataFrame, bytes_col: str = "epub",
     # family-wide contract; the null entries are filtered out of the
     # collected array below.  Still join-free.
     rows = sp.select(
-        F.substring_index("doc_id", _SEP, 1).alias("doc_id"),
-        F.substring_index("doc_id", _SEP, -1).cast("int")
+        F.substr("doc_id", F.instr("doc_id", _SEP) + 1).alias("doc_id"),
+        F.substring_index("doc_id", _SEP, 1).cast("int")
         .alias("chapter"),
         F.explode_outer("spans").alias("s"))
     # lexicographic struct sort: (chapter, in-chapter offset) first
@@ -273,23 +253,7 @@ def build_epub_files(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """(doc_id, text) -> (doc_id, epub binary) via the deterministic
     writer; one map-only Arrow pass."""
-    import pyarrow as pa
-
-    def _build(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            blobs = [build_one_epub(
-                int(re.sub(r"\D", "", i) or 0), t or "")
-                for i, t in zip(ids, texts)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(blobs, type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("epub", pa.binary())]))
-
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.coalesce(F.col(text_col), F.lit(""))
-                       .alias("text"))
-    return sel.mapInArrow(_build, schema="doc_id string, epub binary")
+    return file_pass(
+        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        "doc_id string, epub binary",
+        lambda key, text: [(build_one_epub(id_number(key), text),)])

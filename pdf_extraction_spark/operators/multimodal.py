@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .filepass import file_pass, id_number
+
 MEDIA_SCHEMA = ("media_ref string, content binary, "
                 "meta struct<mime:string,width:int,height:int,"
                 "n_frames:int,duration_ms:int>")
@@ -236,31 +238,11 @@ def sniff_image(content: bytes) -> tuple:
 def image_header_meta(media: DataFrame, bytes_col: str = "content",
                       ref_col: str = "media_ref") -> DataFrame:
     """(media_ref, content binary) -> typed header metadata as ONE
-    map-only ``mapInArrow`` pass (zero shuffle, plan-asserted) — at
+    map-only ``file_pass`` (zero shuffle, plan-asserted) — at
     media-corpus scale only the ~30 header bytes per blob are touched
     CPU-side and only the metadata rows flow downstream."""
-    import pyarrow as pa
-
-    fields = [("media_ref", pa.string()), ("mime", pa.string()),
-              ("width", pa.int32()), ("height", pa.int32()),
-              ("depth", pa.int32())]
-    schema = pa.schema(fields)
-
-    def _sniff(batches):
-        for batch in batches:
-            refs = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            rows = [(r, *sniff_image(c))
-                    for r, c in zip(refs, blobs)]
-            cols = list(zip(*rows)) if rows else [[]] * 5
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(c), type=t)
-                 for c, (_, t) in zip(cols, fields)], schema=schema)
-
-    sel = media.select(F.col(ref_col).cast("string")
-                       .alias("media_ref"),
-                       F.col(bytes_col).alias("content"))
-    return sel.mapInArrow(_sniff, schema=IMAGE_META_SCHEMA)
+    return file_pass(media, ref_col, [bytes_col], IMAGE_META_SCHEMA,
+                     lambda _ref, content: [sniff_image(content)])
 
 
 def build_image_blobs(docs: DataFrame, id_col: str = "doc_id"
@@ -270,8 +252,6 @@ def build_image_blobs(docs: DataFrame, id_col: str = "doc_id"
     png/jpeg/gif/bmp/webp-lossless by doc_id % 5, dimensions are
     closed-form in doc_id, and the JPEG variant buries its SOF0 behind
     APP0 + COM segments whose bodies contain marker bait."""
-    import pyarrow as pa
-
     def _build_one(doc: int) -> bytes:
         w = 64 + doc % 1200
         h = 48 + doc % 900
@@ -308,18 +288,5 @@ def build_image_blobs(docs: DataFrame, id_col: str = "doc_id"
                 struct.pack("<I", 10) + b"\x2f" +
                 struct.pack("<I", bits) + b"\x00")
 
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            import re as _re
-            blobs = [_build_one(int(_re.sub(r"\D", "", i) or 0))
-                     for i in ids]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(blobs, type=pa.binary())],
-                schema=pa.schema([("media_ref", pa.string()),
-                                  ("content", pa.binary())]))
-
-    sel = docs.select(F.col(id_col).cast("string").alias("media_ref"))
-    return sel.mapInArrow(_build,
-                          schema="media_ref string, content binary")
+    return file_pass(docs, id_col, [], "media_ref string, content binary",
+                     lambda key: [(_build_one(id_number(key)),)])

@@ -50,11 +50,13 @@ mis-decrypted), DCT/JBIG2/JPX/CCITT filters (media streams stay
 opaque binary per the multimodal contract) and linearization hints
 (ignored — they are an optimization layer over the same xref).
 
-Scale shape (100 TB of PDFs): ``pages_from_files`` is ONE ``mapInArrow``
-pass — map-only, zero shuffle, linear in file bytes; each file is
-parsed independently so 1000 executors scale trivially.  A file is one
-row (same single-row-bounded contract as the HTML page scan — cap file
-bytes at ingest).  ``files_to_spans`` keeps the whole bridge in that
+Scale shape (100 TB of PDFs): every reader and writer here is ONE
+`filepass.file_pass` — map-only, zero shuffle, linear in file bytes;
+each file is parsed independently so 1000 executors scale trivially.
+A file is one row (same single-row-bounded contract as the HTML page
+scan — cap file bytes at ingest).  Every reader parses through one
+guard, ``_parsed``: a file whose parse raises yields no rows instead
+of failing the task.  ``files_to_spans`` keeps the whole bridge in that
 task: parse, per-page tokenize and layout (`layout.layout_page`, one
 page's runs at a time) and gapless offsets, with zero exchanges.
 Parsing is lazy per object — only the xref, catalog, page tree, and
@@ -66,9 +68,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Any, Iterator, NamedTuple
+from typing import Any, Callable, Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
+
+from .filepass import file_pass, id_number
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -2474,34 +2478,54 @@ def wrap_stream_files(docs: DataFrame, stream_col: str = "stream",
     from the digits of doc_id — deterministic, partition-invariant).
     One map-only Arrow pass; the scaling-corpus synthesizer for the
     ``pdffile`` stage."""
-    import pyarrow as pa
-
-    def _wrap(batches: Iterator["pa.RecordBatch"]
-              ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            streams = batch.column(1).to_pylist()
-            digits = [int(re.sub(r"\D", "", i) or 0) for i in ids]
-            pdfs = [wrap_content_stream(d, (s or "").encode("utf-8"))
-                    for d, s in zip(digits, streams)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(pdfs, type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.col(stream_col).alias("stream"))
-    return sel.mapInArrow(_wrap, schema="doc_id string, pdf binary")
+    return file_pass(
+        docs, id_col, [stream_col], FILES_SCHEMA,
+        lambda key, stream: [(wrap_content_stream(
+            id_number(key), (stream or "").encode("utf-8")),)])
 
 
 # -------------------------------------------------------- Spark kernels
 
+FILES_SCHEMA = "doc_id string, pdf binary"
 PAGES_SCHEMA = ("doc_id string, page int, stream string, "
                 "fontmaps string")
 META_SCHEMA = ("doc_id string, n_pages int, n_objects int, "
                "xref_kind string, n_revisions int, title string, "
                "page1_filter string")
+OUTLINE_SCHEMA = ("doc_id string, ord int, depth int, title string, "
+                  "page int")
+LINKS_SCHEMA = "doc_id string, page int, uri string"
+ANNOTS_SCHEMA = ("doc_id string, page int, subtype string, "
+                 "contents string")
+ACROFORM_SCHEMA = ("doc_id string, ord int, name string, ftype string, "
+                   "value string")
+
+
+def _parsed(blob: bytes | None, read: Callable[["PdfFile"], Any]
+            ) -> Iterator[Any]:
+    """The one parse guard of the file readers: yields
+    ``read(PdfFile(blob))`` once, or nothing when the parse raises
+    (e.g. an unsupported content filter).  At 10^9-file scale one
+    damaged file costs its own rows, never the task or the job."""
+    try:
+        out = read(PdfFile(blob or b""))
+    except Exception:
+        return
+    yield out
+
+
+def _page_payloads(pf: "PdfFile") -> tuple[list, list, list]:
+    """Per-page content streams, font maps and Form XObjects."""
+    return pf.page_texts(), pf.page_font_maps(), pf.page_forms()
+
+
+def _meta(pf: "PdfFile") -> tuple:
+    streams = pf.page_streams()
+    f1 = streams[0][0] if streams else []
+    return (len(streams), int(pf.get(pf.trailer.get("Size")) or 0),
+            pf.xref_kind, pf.n_revisions,
+            text_string(pf.info().get("Title", "")),
+            f1[0] if f1 else "none")
 
 
 def build_pdf_files(docs: DataFrame, id_col: str = "doc_id",
@@ -2509,291 +2533,89 @@ def build_pdf_files(docs: DataFrame, id_col: str = "doc_id",
     """(doc_id, text) -> (doc_id, pdf binary) via the deterministic
     writer — ONE map-only Arrow pass (test-corpus synthesis; at
     production scale the binary column arrives from the lake)."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.string()), ("pdf", pa.binary())])
-
-    def _build(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            pdfs = [build_pdf(int(i), t or "")
-                    for i, t in zip(ids, texts)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array(pdfs, type=pa.binary())], schema=schema)
-
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.col(text_col).alias("text"))
-    return sel.mapInArrow(_build, schema="doc_id string, pdf binary")
+    return file_pass(docs, id_col, [text_col], FILES_SCHEMA,
+                     lambda key, text: [(build_pdf(int(key), text or ""),)])
 
 
 def pages_from_files(files: DataFrame, bytes_col: str = "pdf",
-                     id_col: str = "doc_id",
-                     strict: bool = False) -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Whole-file parse: (doc_id, pdf bytes) -> (doc_id, page, stream)
     — xref walk, filter decode, page-tree DFS, one map-only
-    ``mapInArrow`` pass (zero shuffle, plan-asserted).
-
-    ``strict=False`` (the corpus default) drops files whose parse
-    raises (e.g. an unsupported content filter) instead of failing the
-    task: at 10^9-file scale one poisoned blob must cost one row, not
-    the job.  ``strict=True`` propagates, for pipelines that would
-    rather fail loudly.
+    ``file_pass`` (zero shuffle, plan-asserted).  A file whose parse
+    raises yields no rows (the shared ``_parsed`` guard).
 
     The ``fontmaps`` column carries each page's font maps and Form
     XObjects as `pdfstream.fontmaps_json` (``{}`` when the page has
     neither) — `pdfstream.tokenize_streams(maps_col='fontmaps')`
     applies them so glyph-coded strings decode to text."""
-    import pyarrow as pa
-
     from .pdfstream import fontmaps_json
 
-    schema = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                        ("stream", pa.string()),
-                        ("fontmaps", pa.string())])
+    def rows_of(_key: str, blob: bytes | None) -> Iterator[tuple]:
+        for texts, fmaps, forms in _parsed(blob, _page_payloads):
+            for pg, txt in enumerate(texts):
+                yield pg, txt, fontmaps_json(
+                    fmaps[pg] if pg < len(fmaps) else {},
+                    forms[pg] if pg < len(forms) else {})
 
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            o_id, o_pg, o_st, o_fm = [], [], [], []
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    pf = PdfFile(blob or b"")
-                    texts = pf.page_texts()
-                    fmaps = pf.page_font_maps()
-                    forms = pf.page_forms()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for pg, txt in enumerate(texts):
-                    o_id.append(doc_id)
-                    o_pg.append(pg)
-                    o_st.append(txt)
-                    o_fm.append(fontmaps_json(
-                        fmaps[pg] if pg < len(fmaps) else {},
-                        forms[pg] if pg < len(forms) else {}))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, type=pa.string()),
-                 pa.array(o_pg, type=pa.int32()),
-                 pa.array(o_st, type=pa.string()),
-                 pa.array(o_fm, type=pa.string())], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(_parse, schema=PAGES_SCHEMA)
+    return file_pass(files, id_col, [bytes_col], PAGES_SCHEMA, rows_of)
 
 
 def file_meta(files: DataFrame, bytes_col: str = "pdf",
               id_col: str = "doc_id") -> DataFrame:
     """Structural metadata per file: page/object/revision counts, xref
-    flavor, /Info title (post-update), page-1 content filter."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("n_pages", pa.int32()),
-              ("n_objects", pa.int32()), ("xref_kind", pa.string()),
-              ("n_revisions", pa.int32()), ("title", pa.string()),
-              ("page1_filter", pa.string())]
-    schema = pa.schema(fields)
-
-    def _meta(batches: Iterator["pa.RecordBatch"]
-              ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            cols: list[list] = [[] for _ in fields]
-            for doc_id, blob in zip(ids, blobs):
-                pf = PdfFile(blob or b"")
-                streams = pf.page_streams()
-                f1 = streams[0][0] if streams else []
-                cols[0].append(doc_id)
-                cols[1].append(len(streams))
-                cols[2].append(int(pf.get(pf.trailer.get("Size")) or 0))
-                cols[3].append(pf.xref_kind)
-                cols[4].append(pf.n_revisions)
-                cols[5].append(text_string(
-                    pf.info().get("Title", "")))
-                cols[6].append(f1[0] if f1 else "none")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t) for c, (_, t) in zip(cols, fields)],
-                schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(_meta, schema=META_SCHEMA)
+    flavor, /Info title (post-update), page-1 content filter.  A file
+    whose parse raises yields no row."""
+    return file_pass(files, id_col, [bytes_col], META_SCHEMA,
+                     lambda _key, blob: _parsed(blob, _meta))
 
 
 def outline_table(files: DataFrame, bytes_col: str = "pdf",
-                  id_col: str = "doc_id",
-                  strict: bool = False) -> DataFrame:
+                  id_col: str = "doc_id") -> DataFrame:
     """(doc_id, pdf) -> flattened bookmark rows (doc_id, ord, depth,
     title, page) in display order — map-only; the document-structure
     side channel sectioning can join against the layout blocks."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("ord", pa.int32()),
-              ("depth", pa.int32()), ("title", pa.string()),
-              ("page", pa.int32())]
-    schema = pa.schema(fields)
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            cols: list[list] = [[] for _ in fields]
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    rows = PdfFile(blob or b"").outlines()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for k, (depth, title, page) in enumerate(rows):
-                    cols[0].append(doc_id)
-                    cols[1].append(k)
-                    cols[2].append(depth)
-                    cols[3].append(title)
-                    cols[4].append(page)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t)
-                 for c, (_, t) in zip(cols, fields)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(
-        _parse, schema="doc_id string, ord int, depth int, "
-                       "title string, page int")
+    return file_pass(
+        files, id_col, [bytes_col], OUTLINE_SCHEMA,
+        lambda _key, blob: [(k, *r)
+                            for rows in _parsed(blob, PdfFile.outlines)
+                            for k, r in enumerate(rows)])
 
 
 def pdf_link_table(files: DataFrame, bytes_col: str = "pdf",
-                   id_col: str = "doc_id",
-                   strict: bool = False) -> DataFrame:
+                   id_col: str = "doc_id") -> DataFrame:
     """(doc_id, pdf) -> (doc_id, page, uri) for /Link//URI annotations
     — map-only; feeds the crawl-curation link chain
     (`operators/links.py` url_parts / host_stats) unchanged."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                        ("uri", pa.string())])
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            o_id, o_pg, o_uri = [], [], []
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    rows = PdfFile(blob or b"").link_annotations()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for page, uri in rows:
-                    o_id.append(doc_id)
-                    o_pg.append(page)
-                    o_uri.append(uri)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, type=pa.string()),
-                 pa.array(o_pg, type=pa.int32()),
-                 pa.array(o_uri, type=pa.string())], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(_parse,
-                          schema="doc_id string, page int, uri string")
+    return file_pass(
+        files, id_col, [bytes_col], LINKS_SCHEMA,
+        lambda _key, blob: [
+            r for rows in _parsed(blob, PdfFile.link_annotations)
+            for r in rows])
 
 
 def annot_table(files: DataFrame, bytes_col: str = "pdf",
-                id_col: str = "doc_id",
-                strict: bool = False) -> DataFrame:
+                id_col: str = "doc_id") -> DataFrame:
     """(doc_id, pdf) -> (doc_id, page, subtype, contents) for every
     text-carrying annotation — map-only; reviewer markup becomes
     corpus rows alongside the extracted spans."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.string()), ("page", pa.int32()),
-                        ("subtype", pa.string()),
-                        ("contents", pa.string())])
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            o_id, o_pg, o_sub, o_txt = [], [], [], []
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    rows = PdfFile(blob or b"").annotation_texts()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for page, sub, txt in rows:
-                    o_id.append(doc_id)
-                    o_pg.append(page)
-                    o_sub.append(sub)
-                    o_txt.append(txt)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, type=pa.string()),
-                 pa.array(o_pg, type=pa.int32()),
-                 pa.array(o_sub, type=pa.string()),
-                 pa.array(o_txt, type=pa.string())], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(
-        _parse, schema="doc_id string, page int, subtype string, "
-                       "contents string")
+    return file_pass(
+        files, id_col, [bytes_col], ANNOTS_SCHEMA,
+        lambda _key, blob: [
+            r for rows in _parsed(blob, PdfFile.annotation_texts)
+            for r in rows])
 
 
 def acroform_table(files: DataFrame, bytes_col: str = "pdf",
-                   id_col: str = "doc_id",
-                   strict: bool = False) -> DataFrame:
+                   id_col: str = "doc_id") -> DataFrame:
     """(doc_id, pdf) -> (doc_id, ord, name, ftype, value) for every
     terminal /AcroForm field — map-only; filled form values become
     queryable corpus rows the enrichment plans can consume like any
     other extracted attribute."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("ord", pa.int32()),
-              ("name", pa.string()), ("ftype", pa.string()),
-              ("value", pa.string())]
-    schema = pa.schema(fields)
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            cols: list[list] = [[] for _ in fields]
-            for doc_id, blob in zip(ids, blobs):
-                try:
-                    rows = PdfFile(blob or b"").form_fields()
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for k, (name, ftype, value) in enumerate(rows):
-                    cols[0].append(doc_id)
-                    cols[1].append(k)
-                    cols[2].append(name)
-                    cols[3].append(ftype)
-                    cols[4].append(value)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t)
-                 for c, (_, t) in zip(cols, fields)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return sel.mapInArrow(
-        _parse, schema="doc_id string, ord int, name string, "
-                       "ftype string, value string")
+    return file_pass(
+        files, id_col, [bytes_col], ACROFORM_SCHEMA,
+        lambda _key, blob: [(k, *r)
+                            for rows in _parsed(blob, PdfFile.form_fields)
+                            for k, r in enumerate(rows)])
 
 
 def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
@@ -2805,7 +2627,8 @@ def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
     same shape as `docx.docx_to_spans`.  The composition point for the
     BASELINE.json input_hint on raw-file corpora; all downstream plans
     (`plans/fused.py`) run unchanged.  A file whose parse raises is
-    dropped, a file with no spans emits no row.
+    dropped (the shared ``_parsed`` guard), a file with no spans emits
+    no row.
 
     ``kw`` takes the `pdfstream.pdf_to_spans` layout options
     (page_height, y_tol, gap_tol, with_fonts, space_frac,
@@ -2817,18 +2640,13 @@ def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
     use_maps = kw.pop("maps_col", "fontmaps") is not None
 
     def pages_of(blob: bytes | None, memo: dict) -> list | None:
-        try:
-            pf = PdfFile(blob or b"")
-            texts = pf.page_texts()
-            fonts = pf.page_font_maps()
-            forms = pf.page_forms()
-        except Exception:
-            return None
-        if not use_maps:
-            return [[(txt, None, None)] for txt in texts]
-        return [[(txt, fonts[pg] if pg < len(fonts) else None,
-                  forms[pg] if pg < len(forms) else None)]
-                for pg, txt in enumerate(texts)]
+        for texts, fonts, forms in _parsed(blob, _page_payloads):
+            if not use_maps:
+                return [[(txt, None, None)] for txt in texts]
+            return [[(txt, fonts[pg] if pg < len(fonts) else None,
+                      forms[pg] if pg < len(forms) else None)]
+                    for pg, txt in enumerate(texts)]
+        return None
 
     sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
                        F.col(bytes_col).alias("pdf"))
@@ -2843,9 +2661,10 @@ def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",
     detect_ruled_tables` — the pdfplumber-default 'lines' table
     strategy (the reference's ``page.extract_tables()``,
     `src/table_extractor.py:9-56`) over raw file corpora.  Each page
-    detects in its OWN coordinate space (the composed doc||page key,
-    same skew story as `files_to_spans`); the output re-splits the
-    key, so tables number top-down per page.  Embedded-font CMaps
+    detects in its OWN coordinate space (the composed page||doc_id
+    key, same skew story as `files_to_spans`); the output re-splits
+    the key at its first separator, so every doc_id string comes back
+    whole and tables number top-down per page.  Embedded-font CMaps
     ride along, so glyph-coded cell text decodes before it lands in
     cells.  ``kw`` forwards to the detector.
 
@@ -2859,12 +2678,11 @@ def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",
     _SEP = "\x1f"
     pages = pages_from_files(files, bytes_col, id_col)
     keyed = pages.select(
-        F.concat_ws(_SEP, F.col("doc_id"),
-                    F.col("page").cast("string")).alias("doc_id"),
+        F.concat_ws(_SEP, F.col("page").cast("string"),
+                    F.col("doc_id")).alias("doc_id"),
         "stream", "fontmaps")
     rows = ruled_table_rows(keyed, maps_col="fontmaps", **kw)
     return rows.select(
-        F.substring_index("doc_id", _SEP, 1).alias("doc_id"),
-        F.substring_index("doc_id", _SEP, -1).cast("int")
-        .alias("page"),
+        F.substr("doc_id", F.instr("doc_id", _SEP) + 1).alias("doc_id"),
+        F.substring_index("doc_id", _SEP, 1).cast("int").alias("page"),
         "tbl_idx", "row_idx", "n_rows", "n_cols", "table_text")

@@ -17,7 +17,7 @@ resolved through each slide's own rels part.
 Surfaces match the rest of the family: a typed element table
 (``pptx_rows_from_files``: doc_id, slide, el_idx, kind, text,
 media_ref) and the BASELINE.json contract span schema
-(``pptx_to_spans``), both ONE map-only ``mapInArrow`` pass.
+(``pptx_to_spans``), both ONE map-only `filepass.file_pass`.
 
 Reference anchor: the reference ingests PDFs only
 (``/root/reference/src/pipeline.py``); office formats are part of
@@ -40,12 +40,13 @@ import io
 import posixpath
 import re
 import zipfile
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .docx import _REL, _unescape, _zinfo, xml_escape
+from .filepass import element_spans, file_pass, id_number
 
 _SLD_ID = re.compile(r'<p:sldId [^>]*r:id="([^"]+)"')
 _SHAPE = re.compile(r"(?s)<p:sp>.*?</p:sp>|<p:pic>.*?</p:pic>")
@@ -143,41 +144,16 @@ def parse_pptx(data: bytes) -> list[dict[str, Any]]:
 ROWS_SCHEMA = ("doc_id string, slide int, el_idx int, kind string, "
                "text string, media_ref string")
 
-SPANS_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
-                "text:string,media_ref:string,offset:int>>")
-
-
 def pptx_rows_from_files(files: DataFrame, bytes_col: str = "pptx",
                          id_col: str = "doc_id") -> DataFrame:
     """(doc_id, pptx binary) -> typed element rows in deck order.
-    ONE map-only mapInArrow pass (zero shuffle, zero joins): each
-    deck arrives whole in its row and parses inside the scan stage."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("slide", pa.int32()),
-              ("el_idx", pa.int32()), ("kind", pa.string()),
-              ("text", pa.string()), ("media_ref", pa.string())]
-    schema = pa.schema(fields)
-    types = [t for _, t in fields]
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            rows: list[tuple] = []
-            for did, blob in zip(ids, blobs):
-                for i, r in enumerate(parse_pptx(blob or b"")):
-                    rows.append((did, r["slide"], i, r["kind"],
-                                 r["text"], r["media_ref"]))
-            cols = list(zip(*rows)) if rows else [[]] * len(fields)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(c), type=t)
-                 for c, t in zip(cols, types)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pptx"))
-    return sel.mapInArrow(_parse, schema=ROWS_SCHEMA)
+    ONE map-only ``file_pass`` (zero shuffle, zero joins): each deck
+    arrives whole in its row and parses inside the scan stage."""
+    return file_pass(
+        files, id_col, [bytes_col], ROWS_SCHEMA,
+        lambda _key, blob: [
+            (r["slide"], i, r["kind"], r["text"], r["media_ref"])
+            for i, r in enumerate(parse_pptx(blob or b""))])
 
 
 def pptx_to_spans(files: DataFrame, bytes_col: str = "pptx",
@@ -188,41 +164,11 @@ def pptx_to_spans(files: DataFrame, bytes_col: str = "pptx",
     ``media_ref``, deck order, gapless offsets — so the fused
     extraction plan runs unchanged on slide decks.  Same single
     map-only pass as the parse."""
-    import pyarrow as pa
+    from ..corpus import SPAN_SCHEMA  # local: corpus loads pandas
 
-    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                        ("media_ref", pa.string()),
-                        ("offset", pa.int32())])
-    schema = pa.schema([("doc_id", pa.string()),
-                        ("spans", pa.list_(span_t))])
-
-    def _bridge(batches: Iterator["pa.RecordBatch"]
-                ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            out = []
-            for blob in blobs:
-                spans = []
-                for r in parse_pptx(blob or b""):
-                    if r["kind"] == "image":
-                        spans.append({"kind": "media", "text": "",
-                                      "media_ref": r["media_ref"],
-                                      "offset": len(spans)})
-                    else:
-                        spans.append({"kind": "text",
-                                      "text": r["text"],
-                                      "media_ref": "",
-                                      "offset": len(spans)})
-                out.append(spans)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(out, type=pa.list_(span_t))],
-                schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pptx"))
-    return sel.mapInArrow(_bridge, schema=SPANS_SCHEMA)
+    return file_pass(
+        files, id_col, [bytes_col], SPAN_SCHEMA,
+        lambda _key, blob: [(element_spans(parse_pptx(blob or b"")),)])
 
 
 # ------------------------------------------------ deterministic writer
@@ -326,23 +272,7 @@ def build_pptx_files(docs: DataFrame, text_col: str = "text",
     """(doc_id, text) -> (doc_id, pptx binary) via the deterministic
     writer; one map-only Arrow pass (test-corpus synthesis — at
     production scale the binary column arrives from the lake)."""
-    import pyarrow as pa
-
-    def _build(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            blobs = [build_one_pptx(
-                int(re.sub(r"\D", "", i) or 0), t or "")
-                for i, t in zip(ids, texts)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(blobs, type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pptx", pa.binary())]))
-
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.coalesce(F.col(text_col), F.lit(""))
-                       .alias("text"))
-    return sel.mapInArrow(_build, schema="doc_id string, pptx binary")
+    return file_pass(
+        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        "doc_id string, pptx binary",
+        lambda key, text: [(build_one_pptx(id_number(key), text),)])

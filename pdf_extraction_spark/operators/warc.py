@@ -3,7 +3,7 @@ point for a crawl corpus shipped as Common-Crawl-style ``.warc`` /
 ``.warc.gz`` files.
 
 From-scratch record layer, HTTP payload layer, and charset resolution,
-exposed as ONE map-only ``mapInArrow`` pass (``records_from_warc``) —
+exposed as ONE map-only `filepass.file_pass` (``records_from_warc``) —
 the same scale shape as the whole-PDF-file layer (operators/pdffile.py
 ``pages_from_files``): zero shuffle, zero joins, each file parsed once
 inside the scan stage, so 100 TB of crawl data costs exactly one pass
@@ -57,10 +57,12 @@ from __future__ import annotations
 import re
 import struct
 import zlib
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .filepass import file_pass, id_number
 
 # ------------------------------------------------------------ gzip
 
@@ -341,40 +343,15 @@ RECORDS_SCHEMA = ("warc_id string, rec_idx int, warc_type string, "
 def records_from_warc(files: DataFrame, bytes_col: str = "warc",
                       id_col: str = "warc_id") -> DataFrame:
     """(warc_id, warc binary) -> one row per WARC record.  ONE
-    map-only ``mapInArrow`` pass: zero shuffle, zero joins
+    map-only ``file_pass``: zero shuffle, zero joins
     (plan-asserted in tests/test_plan_shapes.py) — at crawl scale each
     ~1 GiB .warc.gz segment is one input split parsed once inside the
     scan stage, and only the rows (not the container bytes) flow
     downstream."""
-    import pyarrow as pa
-
-    fields = [("warc_id", pa.string()), ("rec_idx", pa.int32()),
-              ("warc_type", pa.string()), ("target_uri", pa.string()),
-              ("warc_date", pa.string()),
-              ("content_type", pa.string()),
-              ("http_status", pa.int32()), ("charset", pa.string()),
-              ("charset_src", pa.string()),
-              ("payload_len", pa.int64()), ("text", pa.string()),
-              ("payload", pa.binary())]
-    schema = pa.schema(fields)
-    types = [t for _, t in fields]
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            rows: list[tuple] = []
-            for wid, blob in zip(ids, blobs):
-                rows.extend(flatten_records(wid, blob or b""))
-            cols = list(zip(*rows)) if rows else [[]] * len(fields)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(c), type=t)
-                 for c, t in zip(cols, types)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("warc_id"),
-                       F.col(bytes_col).alias("warc"))
-    return sel.mapInArrow(_parse, schema=RECORDS_SCHEMA)
+    return file_pass(
+        files, id_col, [bytes_col], RECORDS_SCHEMA,
+        lambda key, blob: [r[1:] for r in
+                           flatten_records(key, blob or b"")])
 
 
 def warc_to_pages(files: DataFrame, bytes_col: str = "warc",
@@ -528,26 +505,10 @@ def build_warc_files(docs: DataFrame, text_col: str = "text",
     """(doc_id, text) -> (warc_id, warc binary) via the deterministic
     writer above; one map-only Arrow pass (the gate/scaling-corpus
     synthesizer, same role as pdffile.build_pdf_files)."""
-    import pyarrow as pa
-
-    def _build(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            blobs = [build_one_warc(
-                int(re.sub(r"\D", "", i) or 0), t or "")
-                for i, t in zip(ids, texts)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(blobs, type=pa.binary())],
-                schema=pa.schema([("warc_id", pa.string()),
-                                  ("warc", pa.binary())]))
-
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.coalesce(F.col(text_col), F.lit(""))
-                       .alias("text"))
-    return sel.mapInArrow(_build, schema="warc_id string, warc binary")
+    return file_pass(
+        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        "warc_id string, warc binary",
+        lambda key, text: [(build_one_warc(id_number(key), text),)])
 
 
 # ------------------------------------------- mime-routed dispatch
@@ -823,26 +784,9 @@ def build_mixed_warc_files(docs: DataFrame, text_col: str = "text",
     writer; the html page column is caller-supplied so the gate keeps
     ONE source of truth for the synthetic page (the same expression
     DuckDB evaluates).  One map-only Arrow pass."""
-    import pyarrow as pa
-
-    def _build(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            htmls = batch.column(2).to_pylist()
-            blobs = [build_one_mixed_warc(
-                int(re.sub(r"\D", "", i) or 0), t or "", h or "")
-                for i, t, h in zip(ids, texts, htmls)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(blobs, type=pa.binary())],
-                schema=pa.schema([("warc_id", pa.string()),
-                                  ("warc", pa.binary())]))
-
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.coalesce(F.col(text_col), F.lit(""))
-                       .alias("text"),
-                      F.coalesce(F.col(html_col), F.lit(""))
-                       .alias("html"))
-    return sel.mapInArrow(_build, schema="warc_id string, warc binary")
+    return file_pass(
+        docs, id_col, [F.coalesce(F.col(c), F.lit(""))
+                       for c in (text_col, html_col)],
+        "warc_id string, warc binary",
+        lambda key, text, html: [
+            (build_one_mixed_warc(id_number(key), text, html),)])

@@ -19,7 +19,7 @@ Surfaces match the family: typed element rows
 spreadsheet row, cells joined with ``' | '`` — the same TABLE-ROW
 text convention the reference's table extractor and this repo's
 S5/C6/T6 chain consume) and the BASELINE.json contract span schema
-(``xlsx_to_spans``), both ONE map-only ``mapInArrow`` pass.
+(``xlsx_to_spans``), both ONE map-only `filepass.file_pass`.
 
 Reference anchor: the reference ingests PDFs only
 (``/root/reference/src/pipeline.py``) and mines cost tables out of
@@ -40,12 +40,13 @@ from __future__ import annotations
 import io
 import re
 import zipfile
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .docx import _REL, _unescape, _zinfo, xml_escape
+from .filepass import element_spans, file_pass, id_number
 
 _SHEET = re.compile(r'<sheet [^>]*name="([^"]+)"[^>]*r:id="([^"]+)"')
 _SI = re.compile(r"(?s)<si>(.*?)</si>")
@@ -145,40 +146,15 @@ def parse_xlsx(data: bytes) -> list[dict[str, Any]]:
 ROWS_SCHEMA = ("doc_id string, sheet int, el_idx int, kind string, "
                "text string, n_cells int")
 
-SPANS_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
-                "text:string,media_ref:string,offset:int>>")
-
-
 def xlsx_rows_from_files(files: DataFrame, bytes_col: str = "xlsx",
                          id_col: str = "doc_id") -> DataFrame:
     """(doc_id, xlsx binary) -> typed element rows in workbook order.
-    ONE map-only mapInArrow pass (zero shuffle, zero joins)."""
-    import pyarrow as pa
-
-    fields = [("doc_id", pa.string()), ("sheet", pa.int32()),
-              ("el_idx", pa.int32()), ("kind", pa.string()),
-              ("text", pa.string()), ("n_cells", pa.int32())]
-    schema = pa.schema(fields)
-    types = [t for _, t in fields]
-
-    def _parse(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            rows: list[tuple] = []
-            for did, blob in zip(ids, blobs):
-                for i, r in enumerate(parse_xlsx(blob or b"")):
-                    rows.append((did, r["sheet"], i, r["kind"],
-                                 r["text"], r["n_cells"]))
-            cols = list(zip(*rows)) if rows else [[]] * len(fields)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(c), type=t)
-                 for c, t in zip(cols, types)], schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("xlsx"))
-    return sel.mapInArrow(_parse, schema=ROWS_SCHEMA)
+    ONE map-only ``file_pass`` (zero shuffle, zero joins)."""
+    return file_pass(
+        files, id_col, [bytes_col], ROWS_SCHEMA,
+        lambda _key, blob: [
+            (r["sheet"], i, r["kind"], r["text"], r["n_cells"])
+            for i, r in enumerate(parse_xlsx(blob or b""))])
 
 
 def xlsx_to_spans(files: DataFrame, bytes_col: str = "xlsx",
@@ -188,35 +164,11 @@ def xlsx_to_spans(files: DataFrame, bytes_col: str = "xlsx",
     offsets — so the fused extraction plan (whose table machinery
     keys on the ``' | '`` row convention) runs unchanged on
     spreadsheets.  Same single map-only pass as the parse."""
-    import pyarrow as pa
+    from ..corpus import SPAN_SCHEMA  # local: corpus loads pandas
 
-    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                        ("media_ref", pa.string()),
-                        ("offset", pa.int32())])
-    schema = pa.schema([("doc_id", pa.string()),
-                        ("spans", pa.list_(span_t))])
-
-    def _bridge(batches: Iterator["pa.RecordBatch"]
-                ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            out = []
-            for blob in blobs:
-                spans = []
-                for r in parse_xlsx(blob or b""):
-                    spans.append({"kind": "text", "text": r["text"],
-                                  "media_ref": "",
-                                  "offset": len(spans)})
-                out.append(spans)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(out, type=pa.list_(span_t))],
-                schema=schema)
-
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("xlsx"))
-    return sel.mapInArrow(_bridge, schema=SPANS_SCHEMA)
+    return file_pass(
+        files, id_col, [bytes_col], SPAN_SCHEMA,
+        lambda _key, blob: [(element_spans(parse_xlsx(blob or b"")),)])
 
 
 # ------------------------------------------------ deterministic writer
@@ -292,23 +244,7 @@ def build_xlsx_files(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """(doc_id, text) -> (doc_id, xlsx binary) via the deterministic
     writer; one map-only Arrow pass."""
-    import pyarrow as pa
-
-    def _build(batches: Iterator["pa.RecordBatch"]
-               ) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            blobs = [build_one_xlsx(
-                int(re.sub(r"\D", "", i) or 0), t or "")
-                for i, t in zip(ids, texts)]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.string()),
-                 pa.array(blobs, type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("xlsx", pa.binary())]))
-
-    sel = docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                      F.coalesce(F.col(text_col), F.lit(""))
-                       .alias("text"))
-    return sel.mapInArrow(_build, schema="doc_id string, xlsx binary")
+    return file_pass(
+        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        "doc_id string, xlsx binary",
+        lambda key, text: [(build_one_xlsx(id_number(key), text),)])

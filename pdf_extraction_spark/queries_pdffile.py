@@ -32,10 +32,10 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.pdffile import (CMAP_SLICES, SLICES, PAD,
-                                WIDTH_SLICES, build_pdf_files,
-                                file_meta, files_to_spans,
-                                pages_from_files)
+from .operators.filepass import file_pass
+from .operators.pdffile import (CMAP_SLICES, FILES_SCHEMA, SLICES, PAD,
+                                WIDTH_SLICES, build_pdf, file_meta,
+                                files_to_spans, pages_from_files)
 from .queries_pdf import _esc
 
 # slice expressions over the padded text, shared by all three oracles
@@ -48,15 +48,30 @@ b AS (SELECT doc_id, COALESCE(text, '') || '{PAD}' AS p
 """.strip()
 
 
-def _pdf_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _built_files(spark: SparkSession, sf_dir: str,
+                 build: Callable[[int, str], bytes]) -> DataFrame:
+    """The documents table as (doc_id, pdf) files written by one of
+    the deterministic ``build_pdf*`` writers."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return build_pdf_files(d)
+    return file_pass(d, "doc_id", ["text"], FILES_SCHEMA,
+                     lambda key, text: [(build(int(key), text or ""),)])
+
+
+def _span_rows(spans: DataFrame, with_media: bool = False) -> DataFrame:
+    """Span arrays -> one row per span in (doc_id, offset) order."""
+    cols = ["kind", "text"] + (["media_ref"] if with_media else [])
+    e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
+                     F.explode("spans").alias("s"))
+    return e.select(
+        "doc_id", F.col("s.offset").cast("long").alias("offset"),
+        *[F.col(f"s.{c}").alias(c) for c in cols]) \
+        .orderBy("doc_id", "offset")
 
 
 def q_pdf_file_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-file parse to decoded page content streams (xref walk +
     filters + page tree as one map-only Arrow pass)."""
-    pages = pages_from_files(_pdf_files(spark, sf_dir))
+    pages = pages_from_files(_built_files(spark, sf_dir, build_pdf))
     return pages.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "page", "stream").orderBy("doc_id", "page")
@@ -84,7 +99,7 @@ FROM u ORDER BY doc_id, page
 def q_pdf_file_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structural metadata: xref flavor, object/revision counts, the
     incrementally-updated /Info title, page-1 filter."""
-    return file_meta(_pdf_files(spark, sf_dir)).select(
+    return file_meta(_built_files(spark, sf_dir, build_pdf)).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "n_pages", "n_objects", "xref_kind", "n_revisions",
         "title", "page1_filter").orderBy("doc_id")
@@ -109,15 +124,8 @@ FROM documents ORDER BY doc_id
 def q_pdf_file_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw PDF files -> contract span arrays end-to-end (parse ->
     per-page tokenize/layout -> page-ordered gapless spans)."""
-    spans = files_to_spans(_pdf_files(spark, sf_dir))
-    e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
-                     F.explode("spans").alias("s"))
-    return e.select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"), F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref")) \
-        .orderBy("doc_id", "offset")
+    files = _built_files(spark, sf_dir, build_pdf)
+    return _span_rows(files_to_spans(files), with_media=True)
 
 
 # analytic block structure (page height 792, y-down tops: page-1
@@ -144,36 +152,10 @@ def q_pdf_file_cmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/pdffile.build_pdf_cmap) parse back to the original
     text — fontmaps ride the pages kernel as JSON and decode inside
     the tokenize pass (pdfstream.tokenize_streams maps_col)."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_cmap
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_cmap(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
-    spans = files_to_spans(files)
-    e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
-                     F.explode("spans").alias("s"))
-    return e.select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text")) \
-        .orderBy("doc_id", "offset")
+    files = _built_files(spark, sf_dir, build_pdf_cmap)
+    return _span_rows(files_to_spans(files))
 
 
 # analytic blocks (H=792): plain line top 64; glyph-coded lines top
@@ -198,36 +180,10 @@ def q_pdf_file_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to the decorated text — page_font_maps composes the
     glyphlist tables when no /ToUnicode is present and the width-1
     maps decode inside the tokenize pass."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_encoding
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_encoding(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
-    spans = files_to_spans(files)
-    e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
-                     F.explode("spans").alias("s"))
-    return e.select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text")) \
-        .orderBy("doc_id", "offset")
+    files = _built_files(spark, sf_dir, build_pdf_encoding)
+    return _span_rows(files_to_spans(files))
 
 
 # same slices/geometry as the cmap gate; the decorations are the
@@ -253,37 +209,10 @@ def q_pdf_file_xobject(spark: SparkSession, sf_dir: str) -> DataFrame:
     the page scope — operators/pdffile.build_pdf_xobject) parse to
     each invocation's spans at its translated position; the forms
     scope rides the pages kernel JSON and replays inside tokenize."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_xobject
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_xobject(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
-    spans = files_to_spans(files)
-    e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
-                     F.explode("spans").alias("s"))
-    return e.select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref")) \
-        .orderBy("doc_id", "offset")
+    files = _built_files(spark, sf_dir, build_pdf_xobject)
+    return _span_rows(files_to_spans(files), with_media=True)
 
 
 # closed-form spans of the double form invocation (H=792, tops:
@@ -313,60 +242,16 @@ def q_pdf_file_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     RC4 files (40-bit V1/R2 even docs, 128-bit V2/R3 odd) parse to
     the original text — file key from Algorithm 2 with the empty user
     password, /U verified, per-object keys on strings and streams."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_encrypted
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_encrypted(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
-    spans = files_to_spans(files)
-    e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
-                     F.explode("spans").alias("s"))
-    return e.select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text")) \
-        .orderBy("doc_id", "offset")
+    files = _built_files(spark, sf_dir, build_pdf_encrypted)
+    return _span_rows(files_to_spans(files))
 
 
 def _nav_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_nav
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_nav(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    return d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                    "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    return _built_files(spark, sf_dir, build_pdf_nav)
 
 
 def q_pdf_file_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,27 +309,9 @@ def q_pdf_file_acroform(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested fields, /FT and /V inheritance, a choice kid, a button
     whose /T-less widget kids collapse to one row) parse to
     (name, ftype, value) rows the oracle states in closed form."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import acroform_table, build_pdf_acroform
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_acroform(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = _built_files(spark, sf_dir, build_pdf_acroform)
     t = acroform_table(files)
     return t.select(F.col("doc_id").cast("long").alias("doc_id"),
                     F.col("ord").cast("long").alias("ord"),
@@ -473,27 +340,9 @@ def q_pdf_file_annots(spark: SparkSession, sf_dir: str) -> DataFrame:
     /Text, /Highlight, parity-conditional /Square rows with /Link and
     /Popup excluded (operators/pdffile.build_pdf_annots) — reviewer
     commentary that lives outside the content streams."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import annot_table, build_pdf_annots
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_annots(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
+    files = _built_files(spark, sf_dir, build_pdf_annots)
     t = annot_table(files)
     return t.select(F.col("doc_id").cast("long").alias("doc_id"),
                     "page", "subtype", "contents") \
@@ -518,31 +367,13 @@ def q_pdf_file_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedded-file extraction (§7.11.4): /Names -> /EmbeddedFiles
     name tree (-> /Kids intermediates -> /Names leaves) -> filespec
     /EF stream, filters applied — attachments as corpus rows."""
-    import pyarrow as pa
     from .operators.pdffile import PdfFile
 
-    files = _nav_files(spark, sf_dir)
-
-    def _parse(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            o_id, o_nm, o_tx = [], [], []
-            for doc_id, blob in zip(ids, blobs):
-                for name, data in PdfFile(blob).embedded_files():
-                    o_id.append(doc_id)
-                    o_nm.append(name)
-                    o_tx.append(data.decode("utf-8"))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, type=pa.string()),
-                 pa.array(o_nm, type=pa.string()),
-                 pa.array(o_tx, type=pa.string())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("name", pa.string()),
-                                  ("content", pa.string())]))
-
-    t = files.mapInArrow(
-        _parse, schema="doc_id string, name string, content string")
+    t = file_pass(_nav_files(spark, sf_dir), "doc_id", ["pdf"],
+                  "doc_id string, name string, content string",
+                  lambda _key, blob: [
+                      (name, data.decode("utf-8"))
+                      for name, data in PdfFile(blob).embedded_files()])
     return t.select(F.col("doc_id").cast("long").alias("doc_id"),
                     "name", "content").orderBy("doc_id", "name")
 
@@ -563,36 +394,10 @@ def q_pdf_file_widths(spark: SparkSession, sf_dir: str) -> DataFrame:
     /MissingWidth drive the advance instead of the uniform 0.5-em
     fallback; the Type0 line repeats the pattern through 2-byte CIDs
     and the descendant's §9.7.4.3 /W+/DW."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F2
     from .operators.pdffile import build_pdf_widths
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _build(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([str(i) for i in ids], type=pa.string()),
-                 pa.array([build_pdf_widths(int(i), t or "")
-                           for i, t in zip(ids, texts)],
-                          type=pa.binary())],
-                schema=pa.schema([("doc_id", pa.string()),
-                                  ("pdf", pa.binary())]))
-
-    files = d.select(F2.col("doc_id").cast("string").alias("doc_id"),
-                     "text").mapInArrow(
-        _build, schema="doc_id string, pdf binary")
-    spans = files_to_spans(files)
-    e = spans.select(F.col("doc_id").cast("long").alias("doc_id"),
-                     F.explode("spans").alias("s"))
-    return e.select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text")) \
-        .orderBy("doc_id", "offset")
+    files = _built_files(spark, sf_dir, build_pdf_widths)
+    return _span_rows(files_to_spans(files))
 
 
 # analytic blocks (H=792): plain top 64/bottom 78, FV line top 92

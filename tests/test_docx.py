@@ -461,6 +461,21 @@ def test_epub_damaged_book_surfaces_as_empty_spans(spark):
     assert len(rows["good"]) > 0
 
 
+def test_epub_spans_keep_whole_doc_id(spark):
+    """The per-chapter key splits back at its first separator, so a
+    doc_id holding U+001F comes back whole with every chapter's
+    spans, the same as a plain id."""
+    from pdf_extraction_spark.operators.epub import (build_one_epub,
+                                                     epub_to_spans)
+    book = bytearray(build_one_epub(6, "hello " * 40))
+    files = spark.createDataFrame([("site/a\x1fb", book), ("plain", book)],
+                                  "doc_id string, epub binary")
+    rows = {r["doc_id"]: r["spans"] for r in
+            epub_to_spans(files).collect()}
+    assert set(rows) == {"site/a\x1fb", "plain"}
+    assert rows["site/a\x1fb"] == rows["plain"] and len(rows["plain"]) > 4
+
+
 def test_pptx_root_level_slide_part_with_rels():
     """A rels-resolved deck whose slide part lives at package root
     (no '/' in the part name) must parse, not crash on the rels-part

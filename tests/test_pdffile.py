@@ -256,22 +256,64 @@ def test_page_tree_cycle_terminates():
     assert pf.page_texts() == ["(x) Tj \n"]
 
 
-def test_poisoned_file_skipped_unless_strict(spark):
-    from pdf_extraction_spark.operators.pdffile import (
-        pages_from_files, wrap_content_stream)
+_RULED = (b"72 628 420 72 re S "
+          b"212 628 m 212 700 l S 352 628 m 352 700 l S "
+          b"72 652 m 492 652 l S 72 676 m 492 676 l S "
+          b"BT /F1 10 Tf 76 688 Td (Item) Tj "
+          b"1 0 0 1 216 688 Tm (Qty) Tj "
+          b"1 0 0 1 76 660 Tm (pipe) Tj "
+          b"1 0 0 1 356 636 Tm (75) Tj ET")
 
-    good = wrap_content_stream(1, b"BT (ok) Tj ET")
+
+@pytest.mark.parametrize("reader", [
+    "pages_from_files", "file_meta", "outline_table", "pdf_link_table",
+    "annot_table", "acroform_table", "files_to_spans",
+    "files_to_ruled_tables"])
+def test_poisoned_file_skipped(spark, reader):
+    """Every file reader parses through the one guard: a file whose
+    parse raises contributes no rows, the good file's rows stay."""
+    from pdf_extraction_spark.operators import pdffile as P
+
+    page = P.wrap_content_stream(1, b"BT (ok) Tj ET")
+    good = {"outline_table": P.build_pdf_nav(3, TEXT),
+            "pdf_link_table": P.build_pdf_nav(3, TEXT),
+            "annot_table": P.build_pdf_annots(3, TEXT),
+            "acroform_table": P.build_pdf_acroform(3, TEXT),
+            "files_to_ruled_tables": P.wrap_content_stream(1, _RULED),
+            }.get(reader, page)
     # same-length filter-name swap keeps every xref offset valid but
     # makes the content stream undecodable (unsupported media filter)
-    bad = good.replace(b"/FlateDecode", b"/DCTDecodeAB")
-    df = spark.createDataFrame(
-        [("g", bytearray(good)), ("b", bytearray(bad))],
-        "doc_id string, pdf binary")
-    rows = pages_from_files(df).collect()
-    assert [r.doc_id for r in rows] == ["g"]
-    assert rows[0].stream == "BT (ok) Tj ET"
-    with pytest.raises(Exception):
-        pages_from_files(df, strict=True).collect()
+    poisoned = page.replace(b"/FlateDecode", b"/DCTDecodeAB")
+    # a non-standard security handler refuses at open, so this file
+    # raises in every reader, not only in the ones that decode pages
+    locked = re.sub(rb"/Root (\d+) 0 R",
+                    rb"/Root \1 0 R /Encrypt << /Filter /Bogus >>", good)
+    read = getattr(P, reader)
+    schema = "doc_id string, pdf binary"
+    want = sorted(read(spark.createDataFrame(
+        [("g", bytearray(good))], schema)).collect())
+    got = sorted(read(spark.createDataFrame(
+        [("g", bytearray(good)), ("b", bytearray(poisoned)),
+         ("x", bytearray(locked))], schema)).collect())
+    assert want and {r.doc_id for r in want} == {"g"}
+    assert got == want
+
+
+def test_ruled_tables_keep_whole_doc_id(spark):
+    """The per-page key splits back at its first separator, so a
+    doc_id holding U+001F keeps its name and all its table rows."""
+    from pdf_extraction_spark.operators.pdffile import (
+        files_to_ruled_tables, wrap_content_stream)
+
+    pdf = bytearray(wrap_content_stream(1, _RULED))
+    df = spark.createDataFrame([("site/a\x1fb", pdf), ("plain", pdf)],
+                               "doc_id string, pdf binary")
+    got = files_to_ruled_tables(df).orderBy("doc_id", "row_idx")
+    assert [(r.doc_id, r.page, r.row_idx, r.table_text)
+            for r in got.collect()] == [
+        (d, 0, k, t) for d in ("plain", "site/a\x1fb")
+        for k, t in enumerate(["Item | Qty | ", "pipe |  | ",
+                               " |  | 75"])]
 
 
 def test_hybrid_xrefstm():
