@@ -34,6 +34,7 @@ from __future__ import annotations
 import io
 import re
 import zipfile
+import zlib
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -271,8 +272,15 @@ def _media_parts(_key: str, blob: bytes | None) -> list[tuple[str, bytes]]:
         zf = zipfile.ZipFile(io.BytesIO(blob or b""))
     except (zipfile.BadZipFile, ValueError):
         return []
-    return [(name, zf.read(name)) for name in zf.namelist()
-            if name.startswith("word/media/")]
+    parts = []
+    for name in zf.namelist():
+        if name.startswith("word/media/"):
+            try:
+                parts.append((name, zf.read(name)))
+            except (zipfile.BadZipFile, zlib.error, EOFError,
+                    NotImplementedError):
+                continue  # CRC mismatch, bad deflate data, truncation
+    return parts
 
 
 def docx_media_from_files(files: DataFrame, bytes_col: str = "docx",
@@ -282,6 +290,7 @@ def docx_media_from_files(files: DataFrame, bytes_col: str = "docx",
     reference, ready for ``multimodal.image_header_meta`` — so the
     interleaved text+media contract closes end-to-end: span order
     from ``docx_to_spans``, media bytes + header metadata from here.
-    Map-only, zero shuffle."""
+    A member that does not decompress is skipped; the file's other
+    parts stay. Map-only, zero shuffle."""
     return file_pass(files, id_col, [bytes_col], MEDIA_SCHEMA,
                      _media_parts)

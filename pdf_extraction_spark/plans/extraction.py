@@ -12,6 +12,10 @@ Everything except W2 is pure ``pyspark.sql.functions`` (JVM/codegen).
 
 from __future__ import annotations
 
+import sys
+import unicodedata
+from functools import cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -146,6 +150,22 @@ def _pystrip(col: Column) -> Column:
     return F.regexp_replace(col, rules.jre(r"^\s+|\s+$"), "")
 
 
+@cache
+def _decimal_digits() -> tuple[str, str]:
+    """Every Unicode decimal digit (category Nd) and its ASCII digit."""
+    nd = [chr(c) for c in range(sys.maxunicode + 1)
+          if unicodedata.category(chr(c)) == "Nd"]
+    return "".join(nd), "".join(str(unicodedata.decimal(c)) for c in nd)
+
+
+def _ascii_digits(col: Column) -> Column:
+    """Captured \\d runs with ASCII digits: (?U)\\d captures every Nd
+    digit and the reference's int()/float() read them ('2١٠٠' is
+    2100), while a Spark cast rejects them, under ANSI by failing
+    the job."""
+    return F.translate(col, *_decimal_digits())
+
+
 def _first_match(text: Column, patterns: list[str], flags: str = "") -> Column:
     return F.coalesce(
         *[_ne(F.regexp_extract(text, rules.jre(flags + p), 1)) for p in patterns],
@@ -174,13 +194,14 @@ def doc_metadata(spans: DataFrame) -> DataFrame:
     t1, t2 = F.col("_p1"), F.col("_p2")
 
     sqft = _first_match(t2, rules.SQFT_PATTERNS, "(?i)")
-    years = [_ne(F.regexp_extract(t2, rules.jre("(?i)" + p), 1)).cast("int")
+    years = [_ascii_digits(_ne(F.regexp_extract(
+        t2, rules.jre("(?i)" + p), 1))).cast("int")
              for p in rules.YEAR_PATTERNS]
     year = F.coalesce(*[
         F.when(y.between(rules.YEAR_MIN, rules.YEAR_MAX), y) for y in years])
-    stories_raw = F.coalesce(*[
+    stories_raw = _ascii_digits(F.coalesce(*[
         _ne(F.lower(F.regexp_extract(t2, rules.jre("(?i)" + p), 1)))
-        for p in rules.STORIES_PATTERNS])
+        for p in rules.STORIES_PATTERNS]))
     stories = F.when(stories_raw.rlike(r"^\d$"), stories_raw.cast("int"))
     for word, n in rules.STORY_WORDS.items():
         stories = stories.when(stories_raw == word, F.lit(n))
@@ -201,13 +222,16 @@ def doc_metadata(spans: DataFrame) -> DataFrame:
                 _ne(F.regexp_extract(t1, rules.jre(rules.ADDRESS_TX_RE), 1)),
                 _ne(F.regexp_extract(t1, rules.jre(rules.ADDRESS_ANY_RE), 1)),
                 F.lit(None).cast("string")).alias("property_address"),
-            F.regexp_replace(sqft, ",", "").cast("int").alias("square_footage"),
+            _ascii_digits(F.regexp_replace(sqft, ",", "")).cast("int")
+            .alias("square_footage"),
             year.alias("year_built"),
             stories.alias("stories"),
             _pystrip(_first_match(t2, rules.HOME_TYPE_PATTERNS, "(?i)")).alias("home_type"),
             _first_match(t2, rules.LOT_PATTERNS, "(?i)").alias("lot_size"),
-            _first_match(t2, rules.BED_PATTERNS, "(?i)").cast("int").alias("bedrooms"),
-            _first_match(t2, rules.BATH_PATTERNS, "(?i)").cast("double").alias("bathrooms"),
+            _ascii_digits(_first_match(t2, rules.BED_PATTERNS, "(?i)"))
+            .cast("int").alias("bedrooms"),
+            _ascii_digits(_first_match(t2, rules.BATH_PATTERNS, "(?i)"))
+            .cast("double").alias("bathrooms"),
             _pystrip(F.regexp_replace(loc, rules.jre(r"\s+"), " ")).alias("location"),
         ).alias("metadata"))
 

@@ -114,11 +114,13 @@ PA_SCHEMA = pa.schema([
 _DIRTY_RE = re.compile(r"[^\x01-\x7f]")
 _ALTERNATION_CACHE: dict[int, str] = {}
 
-# python-re twins for the RE2 batch scans: RE2's \s/\b are ASCII-only and
-# it treats U+2028/U+2029 as line terminators, so rows containing any
-# non-ASCII char re-run under python re — the engine the reference (and
-# the golden oracle) uses. Same two-tier design as _normalize_series;
-# non-ASCII survivors of T1 are rare at scale, so the slow tier is cold.
+# Python re twins for the classification scans. rules.re2 gives RE2 the
+# Python meaning of \s, but the bare-status scan's \b stays RE2's ASCII
+# word boundary, so spans holding any non-ASCII char after T1 re-run all
+# three scans under Python re, the engine the reference and the golden
+# oracle use (5,720 of 129,151 spans on the reports bench input, 0.02 s).
+# The metadata cascades reroute far fewer rows: only those holding a
+# rules.RE2_DIVERGENT code point (_cascades).
 _SEC_PY = re.compile(rules.SECTION_RE)
 _SUB_PY = re.compile(rules.SUBSECTION_RE)
 _BARE_PY = re.compile(rules.BARE_STATUS_RE)
@@ -170,106 +172,87 @@ def _contains_any_pa(low: "pa.Array", words: list[str]) -> np.ndarray:
         .to_numpy(zero_copy_only=False)
 
 
-def _contains_any(low: pd.Series, words: list[str]) -> pd.Series:
-    """Pandas-side variant for small inputs."""
-    return low.str.contains(re.compile(_alt_pattern(words)))
+def _year(v: str) -> int | None:
+    year = int(v)
+    return year if rules.YEAR_MIN <= year <= rules.YEAR_MAX else None
 
 
-def _first_extract(s: pd.Series, patterns: list[str],
-                   flags: int = 0) -> pd.Series:
-    """First-match-wins pattern cascade, vectorized (T7 semantics)."""
-    out = pd.Series([None] * len(s), index=s.index, dtype=object)
-    for p in patterns:
-        need = out.isna()
-        if not need.any():
-            break
-        ext = s[need].str.extract(re.compile(p, flags))[0].astype(object)
-        got = ext[ext.notna()]
-        out[got.index] = got
+def _stories(v: str) -> int | None:
+    v = v.lower()
+    return int(v) if v.isdigit() else rules.STORY_WORDS.get(v)
+
+
+_WS_PY = re.compile(r"\s+")
+
+# S1 (src/metadata_extractor.py:22-35) over page-1 text and T7
+# (text_extractor.pyc:273-409, case-insensitive) over page-<=2 text, as
+# (field, patterns, convert). A field takes the first pattern whose
+# capture converts to something other than None; the conversions are the
+# oracle's own (int()/float() read every Unicode decimal digit).
+_S1 = [
+    ("report_number", [rules.REPORT_NUMBER_RE], str),
+    ("inspection_date", [rules.INSPECTION_DATE_RE, rules.DATE_FALLBACK_RE],
+     str.strip),
+    ("property_address", [rules.ADDRESS_TX_RE, rules.ADDRESS_ANY_RE], str),
+]
+_T7 = [
+    ("square_footage", rules.SQFT_PATTERNS,
+     lambda v: int(v.replace(",", ""))),
+    ("year_built", rules.YEAR_PATTERNS, _year),
+    ("stories", rules.STORIES_PATTERNS, _stories),
+    ("home_type", rules.HOME_TYPE_PATTERNS, str.strip),
+    ("lot_size", rules.LOT_PATTERNS, str),
+    ("bedrooms", rules.BED_PATTERNS, int),
+    ("bathrooms", rules.BATH_PATTERNS, float),
+    ("location", rules.LOCATION_PATTERNS,
+     lambda v: _WS_PY.sub(" ", v).strip()),
+]
+
+
+def _cascades(texts: pa.Array, table: list, flags: str) -> dict[str, list]:
+    """One value list per field of ``table``. Every pattern is one RE2
+    ``extract_regex`` pass over the whole column; the few rows holding a
+    rules.RE2_DIVERGENT code point take their captures from Python re."""
+    odd = np.flatnonzero(
+        pc.match_substring_regex(texts, rules.RE2_DIVERGENT)
+        .to_numpy(zero_copy_only=False))
+    odd_texts = texts.take(odd).to_pylist()
+    out = {}
+    for name, patterns, convert in table:
+        caps = []
+        for p in patterns:
+            cap = pc.struct_field(
+                pc.extract_regex(texts, rules.re2(flags + p, group="v")),
+                [0]).to_pylist()
+            py = re.compile(flags + p)
+            for j, t in zip(odd, odd_texts):
+                m = py.search(t) if t is not None else None
+                cap[j] = m.group(1) if m else None
+            caps.append(cap)
+        col = []
+        for row in zip(*caps):
+            v = None
+            for c in row:
+                if c is not None and (v := convert(c)) is not None:
+                    break
+            col.append(v)
+        out[name] = col
     return out
 
 
-def _to_obj(s: pd.Series) -> pd.Series:
-    return s.astype(object).where(s.notna(), None)
-
-
-def _metadata_records(page1: list[str], first2: list[str],
-                      total_pages: list[int]) -> list[dict]:
+def _metadata_records(page1: pa.Array, first2: pa.Array,
+                      total_pages: np.ndarray) -> pa.StructArray:
     """S1 (metadata_extractor.py:10-49) + T7 (text_extractor.pyc:273-409),
     vectorized across the batch's documents."""
-    p1 = pd.Series(page1, dtype=object)
-    p2 = pd.Series(first2, dtype=object)
-    I = re.IGNORECASE  # noqa: E741
-
-    def _sx(series: pd.Series, pattern: str, flags: int = 0) -> pd.Series:
-        return series.str.extract(re.compile(pattern, flags))[0].astype(object)
-
-    rn = _sx(p1, rules.REPORT_NUMBER_RE)
-    date = _sx(p1, rules.INSPECTION_DATE_RE)
-    date = date.where(date.notna(), _sx(p1, rules.DATE_FALLBACK_RE))
-    date = date.str.strip()
-    addr = _sx(p1, rules.ADDRESS_TX_RE)
-    addr = addr.where(addr.notna(), _sx(p1, rules.ADDRESS_ANY_RE))
-
-    sqft = _first_extract(p2, rules.SQFT_PATTERNS, I).str.replace(",", "")
-
-    year = pd.Series([None] * len(p2), dtype=object)
-    for p in rules.YEAR_PATTERNS:
-        need = year.isna()
-        if not need.any():
-            break
-        ext = pd.to_numeric(
-            p2[need].str.extract(re.compile(p, I))[0], errors="coerce")
-        ok = ext[(ext >= rules.YEAR_MIN) & (ext <= rules.YEAR_MAX)]
-        year[ok.index] = ok.astype(int)
-
-    stories = pd.Series([None] * len(p2), dtype=object)
-    for p in rules.STORIES_PATTERNS:
-        need = stories.isna()
-        if not need.any():
-            break
-        ext = p2[need].str.extract(re.compile(p, I))[0].astype(object).str.lower()
-        digit = ext[ext.str.fullmatch(r"\d", na=False)]
-        stories[digit.index] = digit.astype(int)
-        words = ext[ext.notna() & ~ext.str.fullmatch(r"\d", na=False)]
-        mapped = words.map(rules.STORY_WORDS)
-        mapped = mapped[mapped.notna()]
-        stories[mapped.index] = mapped.astype(int)
-
-    home = _first_extract(p2, rules.HOME_TYPE_PATTERNS, I).str.strip()
-    lot = _first_extract(p2, rules.LOT_PATTERNS, I)
-    beds = pd.to_numeric(_first_extract(p2, rules.BED_PATTERNS, I),
-                         errors="coerce")
-    baths = pd.to_numeric(_first_extract(p2, rules.BATH_PATTERNS, I),
-                          errors="coerce")
-    loc = _first_extract(p2, rules.LOCATION_PATTERNS, I)
-    loc = loc.str.replace(r"\s+", " ", regex=True).str.strip()
-
-    frame = pd.DataFrame({
-        "total_pages": pd.Series(total_pages, dtype=object),
-        "report_type": p1.str.contains(
-            rules.REPORT_TYPE_ESTIMATE_MARKER, regex=False)
-            .map({True: "estimate", False: "inspection"}),
-        "report_number": _to_obj(rn),
-        "inspection_date": _to_obj(date),
-        "property_address": _to_obj(addr),
-        "square_footage": _to_obj(pd.to_numeric(sqft, errors="coerce")),
-        "year_built": _to_obj(year),
-        "stories": _to_obj(stories),
-        "home_type": _to_obj(home),
-        "lot_size": _to_obj(lot),
-        "bedrooms": _to_obj(beds),
-        "bathrooms": _to_obj(baths),
-        "location": _to_obj(loc),
-    })
-    recs = frame.to_dict("records")
-    for r in recs:
-        for k in ("square_footage", "year_built", "stories", "bedrooms"):
-            if r[k] is not None:
-                r[k] = int(r[k])
-        if r["bathrooms"] is not None:
-            r["bathrooms"] = float(r["bathrooms"])
-    return recs
+    estimate = pc.match_substring(
+        page1, rules.REPORT_TYPE_ESTIMATE_MARKER).to_numpy(
+            zero_copy_only=False)
+    cols = {"total_pages": total_pages,
+            "report_type": np.where(estimate, "estimate", "inspection"),
+            **_cascades(page1, _S1, ""), **_cascades(first2, _T7, "(?i)")}
+    return pa.StructArray.from_arrays(
+        [pa.array(cols[f.name], type=f.type) for f in _META_T],
+        fields=list(_META_T))
 
 
 def _classify_arrays(raw_kinds: np.ndarray,
@@ -288,15 +271,15 @@ def _classify_arrays(raw_kinds: np.ndarray,
     low_pa = pc.utf8_lower(norm_pa)
 
     def _m(pattern: str) -> np.ndarray:
-        # rules.re2: python-\s semantics for the ASCII rows RE2 scans
-        # (\x0b and \x1c-\x1f are ASCII, so the dirty reroute below
-        # never catches them)
+        # rules.re2: Python's \s, including the ASCII \x0b and
+        # \x1c-\x1f that the dirty reroute below never catches
         return pc.match_substring_regex(norm_pa, rules.re2(pattern)) \
             .to_numpy(zero_copy_only=False)
 
     is_sec = _m(rules.SECTION_RE) & ~is_media
     is_sub = _m(rules.SUBSECTION_RE) & ~is_sec & ~is_media
-    dirty = norm.str.contains(_DIRTY_RE).values
+    dirty = pc.match_substring_regex(norm_pa, _DIRTY_RE.pattern) \
+        .to_numpy(zero_copy_only=False)
     if dirty.any():
         d = norm[dirty]
         is_sec[dirty] = d.str.contains(_SEC_PY).values & ~is_media[dirty]
@@ -376,10 +359,7 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
     is_media = cls["is_media"]
     is_sec = cls["is_sec"]
     is_table = cls["is_table"]
-    is_block = cls["is_block"]
-    status = cls["status"]
     kind = cls["kind"]
-    is_kw, is_high, is_med = cls["is_kw"], cls["is_high"], cls["is_med"]
     page = (offs.astype(np.int64) // LINES_PER_PAGE + 1)
 
     # ---- vectorized output span sequence (no per-span python) ----
@@ -394,17 +374,36 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
              pa.array(offs.astype(np.int32), type=pa.int32())],
             names=["kind", "text", "media_ref", "order"]))
 
-    sec_arr = section.values
-    sub_arr = subsection.values
-    norm_arr = norm.values
+    # ---- S1/T7 metadata inputs: each doc's raw non-media text up to a
+    # page, joined by newlines (a masked flat array under rebuilt list
+    # offsets, then one binary_join); a NULL text is skipped, as the
+    # exploded plan's array_join skips it ----
+    text_pa = pa.array(texts, type=pa.string())
+    has_text = text_pa.is_valid().to_numpy(zero_copy_only=False)
+
+    def _page_texts(max_page: int) -> pa.Array:
+        keep = (page <= max_page) & ~is_media & has_text
+        offsets = np.concatenate(([0], np.cumsum(keep)))[bounds]
+        return pc.binary_join(pa.ListArray.from_arrays(
+            pa.array(offsets, type=pa.int32()),
+            text_pa.filter(pa.array(keep))), "\n")
+
+    lengths = np.diff(bounds)
+    total_pages = np.zeros(n_docs, dtype=np.int64)
+    total_pages[lengths > 0] = page[bounds[1:][lengths > 0] - 1]
+
+    # the per-span fold below reads one element at a time, which Python
+    # lists answer several times faster than numpy arrays
+    is_block, is_kw, is_high, is_med, status, sec_arr, sub_arr, norm_arr, \
+        page_l = (np.asarray(a).tolist() for a in (
+            cls["is_block"], cls["is_kw"], cls["is_high"], cls["is_med"],
+            cls["status"], section.values, subsection.values, norm.values,
+            page))
 
     all_issues: list[list[dict]] = []
     all_tables: list[list[dict]] = []
     all_rawsec: list[list[tuple[str, str]]] = []
     all_summary: list[dict] = []
-    meta_p1: list[str] = []
-    meta_f2: list[str] = []
-    meta_tp: list[int] = []
 
     for d in range(n_docs):
         lo, hi = int(bounds[d]), int(bounds[d + 1])
@@ -459,7 +458,7 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
                     "status": st or "I", "priority": priority,
                     "title": rules.extract_title(content),
                     "description": None,
-                    "page_numbers": [int(page[i])],
+                    "page_numbers": [page_l[i]],
                     "estimated_cost": None,
                 }
                 cur_parts = [content]
@@ -467,7 +466,7 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
             elif cur is not None:
                 cur_parts.append(content)
                 cur_len += 1 + len(content)
-                pg = int(page[i])
+                pg = page_l[i]
                 if cur["page_numbers"][-1] != pg:
                     cur["page_numbers"].append(pg)
         if cur is not None:
@@ -488,7 +487,7 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
             if (len(data) > rules.TABLE_MAX_ROWS
                     or len(headers) > rules.TABLE_MAX_COLS):
                 return
-            pg = int(page[run[0]])
+            pg = page_l[run[0]]
             tables.append({
                 "page_num": pg,
                 "section": page_section.get(pg, f"PAGE_{pg}"),
@@ -496,9 +495,8 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
                 "table_type": _classify_table(headers, data)})
 
         if is_table[lo:hi].any() or is_sec[lo:hi].any():
-            for i in rng:
-                if is_sec[i]:
-                    page_section.setdefault(int(page[i]), norm_arr[i])
+            for i in np.flatnonzero(is_sec[lo:hi]) + lo:
+                page_section.setdefault(page_l[i], norm_arr[i])
             for i in np.nonzero(is_table[lo:hi])[0] + lo:
                 if run and offs[i] != offs[run[-1]] + 1:
                     _close_run(run)
@@ -507,27 +505,25 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
             if run:
                 _close_run(run)
 
-        # ---- J1/T6 cost link (src/data_structurer.py:160-224) ----
+        # ---- J1/T6 cost link (src/data_structurer.py:160-224): a cost
+        # table goes to the first issue of its section that has its page
+        # (a later table overwrites), through a (section, page) -> first
+        # issue index built once per doc ----
+        first_issue: dict[tuple[str, int], int] | None = None
         for t in tables:
             if t["table_type"] != "cost_estimate":
                 continue
             cost = _cost_from_table(t)
             if not cost:
                 continue
-            for issue in issues:
-                if (issue["section"] == t["section"]
-                        and t["page_num"] in issue["page_numbers"]):
-                    issue["estimated_cost"] = cost
-                    break
-
-        # ---- S1/T7 metadata inputs (raw text; vectorized after loop) ----
-        meta_p1.append("\n".join(
-            texts[i] for i in rng
-            if page[i] <= 1 and not is_media[i]))
-        meta_f2.append("\n".join(
-            texts[i] for i in rng
-            if page[i] <= 2 and not is_media[i]))
-        meta_tp.append(int(page[hi - 1]) if hi > lo else 0)
+            if first_issue is None:
+                first_issue = {}
+                for j, issue in enumerate(issues):
+                    for pg in issue["page_numbers"]:
+                        first_issue.setdefault((issue["section"], pg), j)
+            j = first_issue.get((t["section"], t["page_num"]))
+            if j is not None:
+                issues[j]["estimated_cost"] = cost
 
         all_issues.append(issues)
         all_tables.append(tables)
@@ -553,8 +549,8 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
         "tables": pa.array(all_tables, type=pa.list_(_TABLE_T)),
         "raw_sections": pa.array(all_rawsec,
                                  type=pa.map_(pa.string(), pa.string())),
-        "metadata": pa.array(_metadata_records(meta_p1, meta_f2, meta_tp),
-                             type=_META_T),
+        "metadata": _metadata_records(_page_texts(1), _page_texts(2),
+                                      total_pages),
         "summary": pa.array(all_summary, type=_SUMMARY_T),
     }
 

@@ -107,41 +107,58 @@ def jre(pattern: str) -> str:
     return out
 
 
-# RE2's \s is [\t\n\f\r ] — it excludes \x0b (vertical tab) and the
-# U+001C-1F separators, ALL of which python's \s matches and all of which
-# are ASCII, so they sail past the fused kernels' non-ASCII python-re
-# reroute. Found by the extended differential fuzz (an 'A. \x0b...'
-# subsection heading classified text by the RE2 tier only). The RE2 tier
-# only ever sees ASCII rows, so parity needs exactly the ASCII members of
-# python's \s.
-_RE2_S_MEMBERS = r" \t\n\r\f\x0b\x1c-\x1f"
-_RE2_CACHE: dict[str, str] = {}
+# Python re's \s, \d and \w as RE2 class members. RE2's own \s/\d/\w are
+# ASCII-only ([\t\n\f\r ], [0-9], [0-9A-Za-z_]); these Unicode forms
+# match exactly what Python 3.11 re matches on every BMP code point
+# outside RE2_DIVERGENT (tests/test_jre.py scans all of them).
+_RE2_MEMBERS = {
+    "s": r"\t\n\x{0b}\f\r\x{1c}-\x{1f}\x{85}\p{Z}",
+    "d": r"\p{Nd}",
+    "w": r"\p{L}\p{N}_",
+}
+# The code points where an re2() pattern and Python re can disagree:
+# U+10000 and above (RE2's Unicode tables are newer than Python 3.11's),
+# U+0130/U+0131 (Python's (?i) folds both onto i, RE2 neither), U+0345
+# (RE2's (?i) folds it into \p{L} through iota, Python's \w excludes
+# it), and U+2028/U+2029 (line ends to Java's regex; RE2 and Python
+# agree on them in every test here, and the set keeps them as a guard).
+# Callers find rows holding any of them with one RE2 mask and re-run
+# just those rows under Python re.
+RE2_DIVERGENT = (r"[\x{0130}\x{0131}\x{0345}\x{2028}\x{2029}"
+                 r"\x{10000}-\x{10ffff}]")
+_RE2_CACHE: dict[tuple[str, str | None], str] = {}
 
 
-def re2(pattern: str) -> str:
-    """Compile a shared pattern to RE2 form with python-re semantics on
-    ASCII input (for pyarrow.compute regex scans in the fused kernels;
-    non-ASCII rows are re-run under python re by the callers, so only
-    ASCII-range divergences matter here). \\s/\\S are rewritten into
-    explicit classes (emitted as bare members inside an existing [...]
-    class); \\w/\\b/\\d are ASCII-identical between the engines."""
-    out = _RE2_CACHE.get(pattern)
+def re2(pattern: str, group: str | None = None) -> str:
+    """Compile a shared pattern to RE2 form with Python re semantics
+    (for the pyarrow.compute regex scans of the fused kernels).
+
+    \\s, \\d and \\w become explicit Unicode classes (bare members inside
+    an existing [...]) and \\S, \\D, \\W their negations; a negated class
+    inside [...] has no member form and raises. The result agrees with
+    Python re on every string free of RE2_DIVERGENT code points. \\b is
+    left as RE2's ASCII word boundary, so callers using it re-run
+    non-ASCII rows under Python re. ``group`` names the pattern's single
+    capture group, as ``pyarrow.compute.extract_regex`` requires."""
+    key = (pattern, group)
+    out = _RE2_CACHE.get(key)
     if out is None:
         parts: list[str] = []
         in_class = False
+        groups = 0
         i = 0
         while i < len(pattern):
             c = pattern[i]
-            if c == "\\" and i + 1 < len(pattern) and pattern[i + 1] in "sS":
-                if pattern[i + 1] == "s":
-                    parts.append(_RE2_S_MEMBERS if in_class
-                                 else f"[{_RE2_S_MEMBERS}]")
+            nxt = pattern[i + 1] if i + 1 < len(pattern) else ""
+            if c == "\\" and nxt.lower() in _RE2_MEMBERS:
+                members = _RE2_MEMBERS[nxt.lower()]
+                if nxt.islower():
+                    parts.append(members if in_class else f"[{members}]")
+                elif in_class:
+                    raise ValueError(f"\\{nxt} inside a character class has "
+                                     "no RE2 member-list rewrite")
                 else:
-                    if in_class:
-                        raise ValueError(
-                            r"\S inside a character class has no RE2 "
-                            "member-list rewrite")
-                    parts.append(f"[^{_RE2_S_MEMBERS}]")
+                    parts.append(f"[^{members}]")
                 i += 2
             elif c == "\\":
                 parts.append(pattern[i:i + 2])
@@ -151,10 +168,17 @@ def re2(pattern: str) -> str:
                     in_class = True
                 elif c == "]" and in_class:
                     in_class = False
+                elif c == "(" and not in_class and nxt != "?":
+                    groups += 1
+                    if group is not None:
+                        c = f"(?P<{group}>"
                 parts.append(c)
                 i += 1
+        if group is not None and groups != 1:
+            raise ValueError(f"{pattern!r} has {groups} capture groups, "
+                             "not one")
         out = "".join(parts)
-        _RE2_CACHE[pattern] = out
+        _RE2_CACHE[key] = out
     return out
 
 

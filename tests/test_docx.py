@@ -4,6 +4,7 @@ parse, spans bridge, media parts, plan shape.  Exact-value gates:
 
 import io
 import zipfile
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -105,6 +106,37 @@ def test_docx_media_parts_parse_as_images(spark, docs):
         assert d % 3 == 0
         assert (r["mime"], r["width"], r["height"]) == \
             ("image/png", 32 + d % 16, 24 + d % 8)
+
+
+def _damaged_media_docx(flip: int) -> bytes:
+    """build_one_docx(6) plus a good copy of its image as image2.png,
+    with byte ``flip`` of image1.png's stored data inverted."""
+    src = zipfile.ZipFile(io.BytesIO(build_one_docx(6, "body 6")))
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for name in src.namelist():
+            zf.writestr(name, src.read(name))
+        zf.writestr("word/media/image2.png",
+                    src.read("word/media/image1.png"))
+    blob = bytearray(buf.getvalue())
+    info = zipfile.ZipFile(io.BytesIO(bytes(blob))).getinfo(
+        "word/media/image1.png")
+    blob[info.header_offset + 30 + len(info.filename)
+         + len(info.extra) + flip] ^= 0xFF
+    return bytes(blob)
+
+
+@pytest.mark.parametrize("flip", [0, 1])  # bad deflate data, bad CRC
+def test_damaged_media_part_skipped(spark, flip):
+    blob = _damaged_media_docx(flip)
+    with pytest.raises((zipfile.BadZipFile, zlib.error)):
+        zipfile.ZipFile(io.BytesIO(blob)).read("word/media/image1.png")
+    files = spark.createDataFrame([("6", blob)], "doc_id string, docx binary")
+    rows = docx_media_from_files(files).collect()
+    good = zipfile.ZipFile(io.BytesIO(blob)).read("word/media/image2.png")
+    assert [(r["doc_id"], r["part"], bytes(r["content"])) for r in rows] \
+        == [("6", "word/media/image2.png", good)]
+    assert len(parse_docx(blob)) == 4
 
 
 def test_docx_plans_are_map_only(spark, docs):

@@ -83,6 +83,12 @@ NASTY = [
     "A. \x0b\t\n\r\r\x0b\n\n\x0c\x0b\t\r176585748  Deficient item marked D today",
     "IV. \x0bVertical tab section",
     "A. \x1c\x1d\x1e\x1fseparator heading observed",
+    # Unicode decimal digits in metadata numerics: the oracle's int()/
+    # float() read them, the casts of the other plans did not
+    "Year built: \u0661\u0669\u0668\u0665",
+    "2,\u0661\u0660\u0660 sq ft",
+    "\u0663 bedrooms",
+    "\u0662.\u0665 baths",
 ]
 
 
@@ -162,3 +168,107 @@ def test_adversarial_corpus_matches_oracle(spark, plan_name, seed):
                     f"{doc_id}: metadata {k}"
             else:
                 assert gv == wv, f"{doc_id}: metadata {k}: {gv!r} != {wv!r}"
+
+
+def test_null_text_span_is_skipped_by_every_plan(spark):
+    """A NULL span text is left out of the metadata page texts, as the
+    exploded plan's array_join leaves it out (the fused kernel's Python
+    join raised on it)."""
+    sdf = spark.createDataFrame(
+        [("n", [("text", "Report Number: R-1", "", 0), ("text", None, "", 1),
+                ("text", "3 bedrooms", "", 2)])],
+        "doc_id string, spans array<struct<kind string, text string, "
+        "media_ref string, offset int>>")
+    for plan in PLANS.values():
+        (row,) = plan(sdf).collect()
+        meta = row["metadata"].asDict()
+        assert (meta["report_number"], meta["bedrooms"]) == ("R-1", 3)
+        assert [s["text"] for s in row["spans"]] == \
+            ["Report Number: R-1", "", "3 bedrooms"]
+
+
+# The metadata cascades' hostile pool: every code point class where RE2
+# and Python re could part ways (NBSP, Arabic-Indic digits, the dotted
+# and dotless i, long s, the Kelvin sign, U+1D7D8 and U+11F50 digits
+# beyond the BMP, the ideographic space, \x0b, \x1c, \x85, U+2028, a
+# trailing newline), spliced between the patterns' own keywords.
+META_POOL = [" ", "١", "٢", "٩", "٠", "İ",
+             "ı", "ſ", "K", "\U0001d7d8", "\U00011f50",
+             "　", "\x0b", "\x1c", "\x85", " ", "\n", " ", ",",
+             ".", ":", ";", "a", "k", "s", "T", "X"]
+META_WORDS = [
+    "Report Number:", "Inspection Date:", "Date:", "square feet", "sq ft",
+    "SF", "living area", "approx.", "year built", "built in",
+    "construction date", "circa", "ca.", "story", "level", "stories:",
+    "one", "Two", "single", "property type:", "home type", "style:",
+    "single family", "townhome", "condo", "ranch", "lot size:", "lot:",
+    "acres", "bedrooms", "bed", "baths", "bathroom", "location:",
+    "address:", "Houston, TX", "Texas", "TX", "KS",
+]
+# whole field phrases; {s} is drawn from the pool, {d} is 1-5 digits and
+# {z} 5 digits
+META_PHRASES = [
+    "{d}{s}Main St,{s}Houston,{s}TX{s}{z}", "{d}{s}Oak{s}Ave,{s}Austin,KS{z}",
+    "lot size:{s}{d},{d}{s}sq ft", "lot:{s}{d}.{d}{s}acres",
+    "Year built:{s}{d}", "{d}{s}bedrooms", "{d}.{d}{s}baths",
+    "{d}{s}story", "stories:{s}{d}", "{d},{d}{s}sq{s}ft",
+]
+META_DIGITS = "0123456789٠١٢٣٥٨٩"
+
+
+def _meta_text(rng: random.Random) -> str:
+    def digits(n: int) -> str:
+        return "".join(rng.choice(META_DIGITS) for _ in range(n))
+
+    parts = []
+    for _ in range(rng.randint(1, 14)):
+        r = rng.random()
+        if r < 0.2:
+            phrase = rng.choice(META_PHRASES)
+            while "{" in phrase:
+                phrase = phrase.replace("{s}", rng.choice(META_POOL), 1) \
+                    .replace("{d}", digits(rng.randint(1, 5)), 1) \
+                    .replace("{z}", digits(5), 1)
+            parts.append(phrase)
+        elif r < 0.5:
+            parts.append(rng.choice(META_WORDS))
+        elif r < 0.75:
+            parts.append(digits(rng.randint(1, 5)))
+        else:
+            parts.append("".join(rng.choice(META_POOL)
+                                 for _ in range(rng.randint(1, 4))))
+        # never "": digit runs stay short enough for the int32 fields
+        parts.append(rng.choice([" ", "\n", "\u00a0", ": ", ", "]))
+    if rng.random() < 0.2:
+        parts.append("\n")
+    return "".join(parts)
+
+
+def test_metadata_cascades_match_oracle_on_unicode():
+    """fused._metadata_records (RE2 with the narrow Python-re reroute)
+    against the oracle's Python re, on 3,000 seeded documents of two
+    pages each."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from pdf_extraction_spark import rules
+    from pdf_extraction_spark.corpus import LINES_PER_PAGE
+    from pdf_extraction_spark.plans.fused import _metadata_records
+
+    rng = random.Random(9)
+    pages = [(_meta_text(rng), _meta_text(rng)) for _ in range(3000)]
+    want = [oracle._extract_metadata(
+        [{"kind": "text", "text": a, "media_ref": "", "offset": 0},
+         {"kind": "text", "text": b, "media_ref": "",
+          "offset": LINES_PER_PAGE}]) for a, b in pages]
+    first2 = pa.array([f"{a}\n{b}" for a, b in pages])
+    got = _metadata_records(pa.array([a for a, _ in pages]), first2,
+                            np.full(len(pages), 2)).to_pylist()
+    assert got == want
+    # the pool reaches both engines and every field
+    rerouted = pc.match_substring_regex(first2, rules.RE2_DIVERGENT) \
+        .to_numpy(zero_copy_only=False).sum()
+    assert 100 < rerouted < len(pages) - 100
+    for k in want[0]:
+        assert sum(w[k] is not None for w in want) >= 30, k

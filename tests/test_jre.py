@@ -40,7 +40,49 @@ def test_re2_s_rewrite_matches_python_on_ascii():
 
 
 def test_re2_class_member_form_and_cache():
-    assert rules.re2(r"[\s,]") == "[ \\t\\n\\r\\f\\x0b\\x1c-\\x1f,]"
-    assert rules.re2(r"\S") == "[^ \\t\\n\\r\\f\\x0b\\x1c-\\x1f]"
-    assert rules.re2(r"\.\d[]]") == r"\.\d[]]"  # non-\s escapes untouched
+    ws = r"\t\n\x{0b}\f\r\x{1c}-\x{1f}\x{85}\p{Z}"
+    assert rules.re2(r"[\s,]") == f"[{ws},]"
+    assert rules.re2(r"\S") == f"[^{ws}]"
+    assert rules.re2(r"\.\d[]]") == r"\.[\p{Nd}][]]"
     assert rules.re2("abc") is rules.re2("abc")
+
+
+def test_re2_names_the_single_capture_group():
+    import pytest
+
+    assert rules.re2(r"(?:a|b)[(](\w)", group="v") == \
+        r"(?:a|b)[(](?P<v>[\p{L}\p{N}_])"
+    for bad in (r"(?:x)", r"(a)(b)"):
+        with pytest.raises(ValueError):
+            rules.re2(bad, group="v")
+    with pytest.raises(ValueError):
+        rules.re2(r"[\S,]")
+
+
+def test_re2_classes_match_python_on_the_bmp():
+    r"""Every BMP code point outside RE2_DIVERGENT: re2()'s \s, \d, \w,
+    their negations and class members, with and without (?i), match
+    exactly what Python re matches. Surrogates are not text (no UTF-8
+    form) and are left out."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    chars = [chr(c) for c in range(1, 0x10000) if not 0xD800 <= c <= 0xDFFF]
+    odd = pc.match_substring_regex(pa.array(chars), rules.RE2_DIVERGENT) \
+        .to_numpy(zero_copy_only=False)
+    assert [hex(ord(c)) for c, o in zip(chars, odd) if o] == \
+        ["0x130", "0x131", "0x345", "0x2028", "0x2029"]
+    chars = [c for c, o in zip(chars, odd) if not o]
+    arr = pa.array(chars)
+    for cls in (r"\s", r"\S", r"\d", r"\D", r"\w", r"\W",
+                r"[\s]", r"[\d]", r"[\w]", r"[\w\s,]", r"[^\d.]", r"[a-z]"):
+        for flags in ("", "(?i)"):
+            pat = f"{flags}^(?:{cls})$"
+            got = pc.match_substring_regex(arr, rules.re2(pat)) \
+                .to_numpy(zero_copy_only=False)
+            py = re.compile(pat)
+            bad = [hex(ord(c)) for c, g in zip(chars, got)
+                   if g != (py.match(c) is not None)]
+            assert bad == [], (pat, bad[:10])

@@ -7,7 +7,9 @@ tables, metadata struct, summary.
 
 This campaign found the 4th tri-engine regex divergence (RE2's ``\\s``
 missing ``\\x0b``/``\\x1c-\\x1f``); divergent strings get promoted into
-tests/test_extraction_fuzz.py's committed NASTY corpus.
+tests/test_extraction_fuzz.py's committed NASTY corpus. Its pools hold
+non-ASCII decimal digits (metadata numerics) and the code points where
+RE2 and Python re part ways (``rules.RE2_DIVERGENT``).
 """
 
 from __future__ import annotations
@@ -31,6 +33,8 @@ UNI_POOLS = [
     "éëþ́̈",          # latin + combining marks
     "🙂🚰✓¨þ",
     "–—“”‘’",
+    "٠١٢٣٤٥٦٧٨٩०৩๕",          # non-ASCII decimal digits (Nd)
+    "İıͅ\u2028\u2029𝟘𑽐",  # rules.RE2_DIVERGENT code points
 ]
 KEYWORDS = [
     "I. STRUCTURAL SYSTEMS", "IV. ELECTRICAL", "A. Foundations",
@@ -42,6 +46,7 @@ KEYWORDS = [
     "no issues observed - functional", "within normal limits",
     "It is recommended that professionals review this report",
     "NP", "NI", "D", "I", "P",
+    "Year built:", "sq ft", "bedrooms", "baths", "stories:",
 ]
 
 
