@@ -143,43 +143,6 @@ def _bucketed_pairs(banded: DataFrame, keys: list[str],
     return cold_pairs.union(hot_pairs).distinct()
 
 
-def minhash_signatures_agg(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", k: int = 64,
-                           n: int = 3) -> DataFrame:
-    """(id, sig) via explode + K min-aggregations — value-identical to
-    minhash_signature (same seeded permutations over the same md5 shingle
-    hashes) but whole-stage-codegen throughout instead of an interpreted
-    nested higher-order function.
-
-    Why: the HOF form evaluates k x n_shingles interpreted expression
-    nodes PER ROW (~0.1s/row on multi-KB docs — measured 60-190s for 500
-    sf0.01 docs), and Catalyst's CollapseProject additionally inlines the
-    whole expression into each of lsh_bands' ~3 references per band. Here
-    the shingle hash is computed once per shingle in a codegen'd
-    projection, and each permutation is a partial-aggregable MIN — one
-    map-side-combined shuffle on the doc id, no recomputation possible.
-    Docs too short to shingle vanish at the explode (same contract as the
-    HOF form's null signature).
-
-    Kept as the pure-Catalyst reference twin; minhash_signatures_arrow
-    below is the default production path (measured faster — shingle
-    construction itself is still an interpreted transform here).
-    """
-    rng = np.random.default_rng(42)
-    a = rng.integers(1, MERSENNE_P, size=k, dtype=np.int64)
-    b = rng.integers(0, MERSENNE_P, size=k, dtype=np.int64)
-    exploded = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingle_hashes(F.col(text_col), n)).alias("sh"))
-    x = F.pmod(F.col("sh"), F.lit(_HASH_SPACE))
-    mins = [F.min(F.pmod(int(a[i]) * x + int(b[i]),
-                         F.lit(MERSENNE_P))).alias(f"_s{i}")
-            for i in range(k)]
-    agg = exploded.groupBy("id").agg(*mins)
-    return agg.select(
-        "id", F.array(*[F.col(f"_s{i}") for i in range(k)]).alias("sig"))
-
-
 def _doc_shingle_hashes(text: str, n: int) -> list[int]:
     """Python twin of shingle_hashes: distinct word n-gram shingles of
     lower(text) -> 60-bit ints from the first 15 md5 hex digits. hashlib
@@ -204,8 +167,8 @@ def minhash_signatures_arrow(docs: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id", k: int = 64,
                              n: int = 3) -> DataFrame:
     """(id, sig) computed per doc in one mapInArrow pass — zero shuffle,
-    value-identical to minhash_signature/minhash_signatures_agg (same
-    seeded permutations over the same md5 shingle hashes; asserted by
+    value-identical to minhash_signature (same seeded permutations over
+    the same md5 shingle hashes; asserted by
     tests/test_training_data_ops.py).
 
     Why a python kernel wins here: the shingle construction is

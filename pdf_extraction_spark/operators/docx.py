@@ -34,13 +34,12 @@ from __future__ import annotations
 import io
 import re
 import zipfile
-import zlib
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .filepass import element_spans, file_pass, id_number
+from .filepass import element_spans, file_pass, id_number, zip_member
 
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
              ("&apos;", "'"), ("&amp;", "&")]   # amp LAST
@@ -98,18 +97,13 @@ def parse_docx(data: bytes) -> list[dict[str, Any]]:
     n_cells}``.  Damaged zip or a missing main part yields []."""
     try:
         zf = zipfile.ZipFile(io.BytesIO(data))
-        xml = zf.read("word/document.xml").decode("utf-8", "replace")
-    except (zipfile.BadZipFile, KeyError, ValueError):
+    except (zipfile.BadZipFile, ValueError):
         return []
-    rels: dict[str, str] = {}
-    try:
-        rx = zf.read("word/_rels/document.xml.rels") \
-            .decode("utf-8", "replace")
-        for rid, target in _REL.findall(rx):
-            rels[rid] = "word/" + target.lstrip("/")
-    except KeyError:
-        pass
-    m = _BODY.search(xml)
+    rx = zip_member(zf, "word/_rels/document.xml.rels") or b""
+    rels = {rid: "word/" + target.lstrip("/")
+            for rid, target in _REL.findall(rx.decode("utf-8", "replace"))}
+    xml = zip_member(zf, "word/document.xml") or b""
+    m = _BODY.search(xml.decode("utf-8", "replace"))
     if not m:
         return []
     rows: list[dict[str, Any]] = []
@@ -272,15 +266,9 @@ def _media_parts(_key: str, blob: bytes | None) -> list[tuple[str, bytes]]:
         zf = zipfile.ZipFile(io.BytesIO(blob or b""))
     except (zipfile.BadZipFile, ValueError):
         return []
-    parts = []
-    for name in zf.namelist():
-        if name.startswith("word/media/"):
-            try:
-                parts.append((name, zf.read(name)))
-            except (zipfile.BadZipFile, zlib.error, EOFError,
-                    NotImplementedError):
-                continue  # CRC mismatch, bad deflate data, truncation
-    return parts
+    return [(name, data) for name in zf.namelist()
+            if name.startswith("word/media/")
+            and (data := zip_member(zf, name)) is not None]
 
 
 def docx_media_from_files(files: DataFrame, bytes_col: str = "docx",

@@ -47,7 +47,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .filepass import file_pass, id_number
+from .filepass import (file_pass, id_number, part_key, split_part_key,
+                       zip_member)
 
 _ROOTFILE = re.compile(r'<rootfile [^>]*full-path="([^"]+)"')
 _ITEM = re.compile(r'<item (?=[^>]*id="([^"]+)")(?=[^>]*href="'
@@ -55,43 +56,38 @@ _ITEM = re.compile(r'<item (?=[^>]*id="([^"]+)")(?=[^>]*href="'
 _ITEMREF = re.compile(r'<itemref [^>]*idref="([^"]+)"')
 _XHTML_TYPES = ("application/xhtml+xml", "text/html")
 
-_SEP = "\x1f"
-
 
 def chapter_paths(zf: "zipfile.ZipFile") -> list[str]:
     """Chapter part names in SPINE order (container.xml -> OPF ->
     manifest/spine resolution); zip-order xhtml fallback."""
-    try:
-        cx = zf.read("META-INF/container.xml").decode("utf-8",
-                                                      "replace")
-        m = _ROOTFILE.search(cx)
-        if m:
-            opf_path = m.group(1)
-            opf = zf.read(opf_path).decode("utf-8", "replace")
-            base = opf_path.rsplit("/", 1)[0] + "/" \
-                if "/" in opf_path else ""
+    cx = zip_member(zf, "META-INF/container.xml") or b""
+    m = _ROOTFILE.search(cx.decode("utf-8", "replace"))
+    opf = zip_member(zf, m.group(1)) if m else None
+    if opf is not None:
+        opf_path = m.group(1)
+        opf = opf.decode("utf-8", "replace")
+        base = opf_path.rsplit("/", 1)[0] + "/" \
+            if "/" in opf_path else ""
 
-            def resolve(href: str) -> str:
-                # manifest hrefs are OPF-relative (a '../text/ch1'
-                # href is routine when the OPF lives in a subdir);
-                # a leading '/' means container root.  normpath
-                # collapses '../' segments, which plain prefixing
-                # did not.
-                if href.startswith("/"):
-                    return posixpath.normpath(href.lstrip("/"))
-                return posixpath.normpath(base + href)
+        def resolve(href: str) -> str:
+            # manifest hrefs are OPF-relative (a '../text/ch1'
+            # href is routine when the OPF lives in a subdir);
+            # a leading '/' means container root.  normpath
+            # collapses '../' segments, which plain prefixing
+            # did not.
+            if href.startswith("/"):
+                return posixpath.normpath(href.lstrip("/"))
+            return posixpath.normpath(base + href)
 
-            items = {i: (resolve(href), mt)
-                     for i, href, mt in _ITEM.findall(opf)}
-            order = [items[idref][0]
-                     for idref in _ITEMREF.findall(opf)
-                     if idref in items
-                     and items[idref][1].split(";")[0].strip()
-                     in _XHTML_TYPES]
-            if order:
-                return order
-    except KeyError:
-        pass
+        items = {i: (resolve(href), mt)
+                 for i, href, mt in _ITEM.findall(opf)}
+        order = [items[idref][0]
+                 for idref in _ITEMREF.findall(opf)
+                 if idref in items
+                 and items[idref][1].split(";")[0].strip()
+                 in _XHTML_TYPES]
+        if order:
+            return order
     return [n for n in zf.namelist()
             if n.lower().endswith((".xhtml", ".html"))]
 
@@ -106,11 +102,11 @@ def parse_epub(data: bytes) -> list[dict[str, Any]]:
         return []
     rows: list[dict[str, Any]] = []
     for no, path in enumerate(order, start=1):
-        try:
-            html = zf.read(path).decode("utf-8", "replace")
-        except KeyError:
+        html = zip_member(zf, path)
+        if html is None:
             continue
-        rows.append({"chapter": no, "path": path, "html": html})
+        rows.append({"chapter": no, "path": path,
+                     "html": html.decode("utf-8", "replace")})
     return rows
 
 
@@ -147,26 +143,22 @@ def epub_to_spans(files: DataFrame, bytes_col: str = "epub",
     Plan: container parse + per-chapter block classification fuse
     into the scan stage (the composite chapter||doc_id key keeps each
     chapter one row — the same giant-doc skew story as the PDF page
-    layer); ONE exchange reassembles books.  The key splits at its
-    first separator, so every doc_id string comes back whole."""
+    layer); ONE exchange reassembles books.  ``filepass.part_key``
+    gives every doc_id back whole, a NULL one included."""
     from .html import html_to_spans
 
     ch = epub_chapters_from_files(files, bytes_col, id_col)
     keyed = ch.select(
-        F.concat_ws(_SEP, F.col("chapter").cast("string"),
-                    "doc_id").alias("doc_id"),
-        "html")
+        part_key(F.col("chapter"), F.col("doc_id")).alias("doc_id"), "html")
     sp = html_to_spans(keyed)
     # explode_outer keeps zero-span chapters (including the damaged-
     # book sentinel row) as a null-span row, so every input doc_id
     # survives the groupBy as at least an empty spans array — the
     # family-wide contract; the null entries are filtered out of the
     # collected array below.  Still join-free.
-    rows = sp.select(
-        F.substr("doc_id", F.instr("doc_id", _SEP) + 1).alias("doc_id"),
-        F.substring_index("doc_id", _SEP, 1).cast("int")
-        .alias("chapter"),
-        F.explode_outer("spans").alias("s"))
+    chapter, doc_id = split_part_key(F.col("doc_id"))
+    rows = sp.select(doc_id.alias("doc_id"), chapter.alias("chapter"),
+                     F.explode_outer("spans").alias("s"))
     # lexicographic struct sort: (chapter, in-chapter offset) first
     arr = F.filter(
         F.array_sort(F.collect_list(F.struct(

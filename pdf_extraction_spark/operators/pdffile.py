@@ -72,7 +72,7 @@ from typing import Any, Callable, Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from .filepass import file_pass, id_number
+from .filepass import file_pass, id_number, part_key, split_part_key
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -2662,9 +2662,9 @@ def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",
     strategy (the reference's ``page.extract_tables()``,
     `src/table_extractor.py:9-56`) over raw file corpora.  Each page
     detects in its OWN coordinate space (the composed page||doc_id
-    key, same skew story as `files_to_spans`); the output re-splits
-    the key at its first separator, so every doc_id string comes back
-    whole and tables number top-down per page.  Embedded-font CMaps
+    key, same skew story as `files_to_spans`); ``filepass.part_key``
+    gives every doc_id back whole, a NULL one included, and tables
+    number top-down per page.  Embedded-font CMaps
     ride along, so glyph-coded cell text decodes before it lands in
     cells.  ``kw`` forwards to the detector.
 
@@ -2675,14 +2675,12 @@ def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",
     table numbering matters)."""
     from .pdfstream import ruled_table_rows
 
-    _SEP = "\x1f"
     pages = pages_from_files(files, bytes_col, id_col)
     keyed = pages.select(
-        F.concat_ws(_SEP, F.col("page").cast("string"),
-                    F.col("doc_id")).alias("doc_id"),
+        part_key(F.col("page"), F.col("doc_id")).alias("doc_id"),
         "stream", "fontmaps")
     rows = ruled_table_rows(keyed, maps_col="fontmaps", **kw)
+    page, doc_id = split_part_key(F.col("doc_id"))
     return rows.select(
-        F.substr("doc_id", F.instr("doc_id", _SEP) + 1).alias("doc_id"),
-        F.substring_index("doc_id", _SEP, 1).cast("int").alias("page"),
+        doc_id.alias("doc_id"), page.alias("page"),
         "tbl_idx", "row_idx", "n_rows", "n_cols", "table_text")

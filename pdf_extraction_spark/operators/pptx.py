@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .docx import _REL, _unescape, _zinfo, xml_escape
-from .filepass import element_spans, file_pass, id_number
+from .filepass import element_spans, file_pass, id_number, zip_member
 
 _SLD_ID = re.compile(r'<p:sldId [^>]*r:id="([^"]+)"')
 _SHAPE = re.compile(r"(?s)<p:sp>.*?</p:sp>|<p:pic>.*?</p:pic>")
@@ -59,23 +59,21 @@ _BLIP = re.compile(r'<a:blip [^>]*r:embed="([^"]+)"')
 def _slide_order(zf: "zipfile.ZipFile") -> list[str]:
     """Deck order from presentation.xml sldIdLst resolved through the
     presentation rels; numeric slide-name fallback when absent."""
-    try:
-        pres = zf.read("ppt/presentation.xml").decode("utf-8",
-                                                      "replace")
-        rx = zf.read("ppt/_rels/presentation.xml.rels") \
-            .decode("utf-8", "replace")
+    pres = zip_member(zf, "ppt/presentation.xml")
+    rx = zip_member(zf, "ppt/_rels/presentation.xml.rels")
+    if pres is not None and rx is not None:
         # presentation rels targets resolve against ppt/ (the part's
         # directory); leading '/' means package root
         rels = {rid: posixpath.normpath(
                     target.lstrip("/") if target.startswith("/")
                     else "ppt/" + target)
-                for rid, target in _REL.findall(rx)}
-        order = [rels[rid] for rid in _SLD_ID.findall(pres)
+                for rid, target in _REL.findall(rx.decode("utf-8",
+                                                          "replace"))}
+        order = [rels[rid]
+                 for rid in _SLD_ID.findall(pres.decode("utf-8", "replace"))
                  if rid in rels]
         if order:
             return order
-    except KeyError:
-        pass
     names = [n for n in zf.namelist()
              if re.fullmatch(r"ppt/slides/slide\d+\.xml", n)]
     return sorted(names,
@@ -93,10 +91,10 @@ def parse_pptx(data: bytes) -> list[dict[str, Any]]:
         return []
     rows: list[dict[str, Any]] = []
     for slide_no, part in enumerate(order, start=1):
-        try:
-            xml = zf.read(part).decode("utf-8", "replace")
-        except KeyError:
+        xml = zip_member(zf, part)
+        if xml is None:
             continue
+        xml = xml.decode("utf-8", "replace")
         rels: dict[str, str] = {}
         # rpartition tolerates a root-level part name (no '/'): the
         # rels part is then '_rels/<name>.rels' and targets resolve
@@ -104,23 +102,20 @@ def parse_pptx(data: bytes) -> list[dict[str, Any]]:
         base_dir, _, base_name = part.rpartition("/")
         rels_part = (f"{base_dir}/_rels/{base_name}.rels"
                      if base_dir else f"_rels/{base_name}.rels")
-        try:
-            rx = zf.read(rels_part).decode("utf-8", "replace")
-            for rid, target in _REL.findall(rx):
-                # rels targets resolve against the slide part's own
-                # directory (ECMA-376 part-relative); a leading '/'
-                # means package root.  posixpath join+normpath handles
-                # the usual '../media/x' as well as plain-relative
-                # 'media/x' (-> ppt/slides/media/x) and absolute
-                # '/ppt/media/x' correctly, where string stripping
-                # did not.
-                if target.startswith("/"):
-                    rels[rid] = posixpath.normpath(target.lstrip("/"))
-                else:
-                    rels[rid] = posixpath.normpath(
-                        posixpath.join(base_dir, target))
-        except KeyError:
-            pass
+        rx = zip_member(zf, rels_part) or b""
+        for rid, target in _REL.findall(rx.decode("utf-8", "replace")):
+            # rels targets resolve against the slide part's own
+            # directory (ECMA-376 part-relative); a leading '/'
+            # means package root.  posixpath join+normpath handles
+            # the usual '../media/x' as well as plain-relative
+            # 'media/x' (-> ppt/slides/media/x) and absolute
+            # '/ppt/media/x' correctly, where string stripping
+            # did not.
+            if target.startswith("/"):
+                rels[rid] = posixpath.normpath(target.lstrip("/"))
+            else:
+                rels[rid] = posixpath.normpath(
+                    posixpath.join(base_dir, target))
         for shape in _SHAPE.finditer(xml):
             block = shape.group(0)
             if block.startswith("<p:pic>"):

@@ -44,21 +44,6 @@ def bpe_tokens_col(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(BPE_TOKEN_PATTERN), 0)
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token counting: whitespace totals, uniques, chars, BPE-ish
-    pre-tokenizer count (the budget signal shard packing uses when a
-    corpus is priced in model tokens rather than words)."""
-    toks = tokens_col(F.col(text_col))
-    return docs.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_unique"),
-        F.length(F.regexp_replace(F.col(text_col), r"\s+", ""))
-        .cast("long").alias("n_chars_nospace"),
-        F.size(bpe_tokens_col(F.col(text_col))).cast("long")
-        .alias("n_bpe_tokens"))
-
-
 def quality_columns(text: Column) -> list[Column]:
     """Quality-scoring signal columns (length / stopword-density)."""
     toks = tokens_col(F.lower(text))

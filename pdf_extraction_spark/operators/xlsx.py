@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .docx import _REL, _unescape, _zinfo, xml_escape
-from .filepass import element_spans, file_pass, id_number
+from .filepass import element_spans, file_pass, id_number, zip_member
 
 _SHEET = re.compile(r'<sheet [^>]*name="([^"]+)"[^>]*r:id="([^"]+)"')
 _SI = re.compile(r"(?s)<si>(.*?)</si>")
@@ -63,11 +63,8 @@ _IS = re.compile(r"(?s)<is>(.*?)</is>")
 
 
 def _shared_strings(zf: "zipfile.ZipFile") -> list[str]:
-    try:
-        xml = zf.read("xl/sharedStrings.xml").decode("utf-8",
-                                                     "replace")
-    except KeyError:
-        return []
+    xml = (zip_member(zf, "xl/sharedStrings.xml") or b"").decode(
+        "utf-8", "replace")
     # rich-text <si> entries hold multiple <r><t> runs: concatenate
     return ["".join(_unescape(t) for t in _T.findall(si))
             for si in _SI.findall(xml)]
@@ -76,18 +73,18 @@ def _shared_strings(zf: "zipfile.ZipFile") -> list[str]:
 def _sheet_order(zf: "zipfile.ZipFile") -> list[tuple[str, str]]:
     """[(sheet_name, part_path)] in WORKBOOK order (sheet list
     resolved through the workbook rels); numeric-name fallback."""
-    try:
-        wb = zf.read("xl/workbook.xml").decode("utf-8", "replace")
-        rx = zf.read("xl/_rels/workbook.xml.rels") \
-            .decode("utf-8", "replace")
+    wb = zip_member(zf, "xl/workbook.xml")
+    rx = zip_member(zf, "xl/_rels/workbook.xml.rels")
+    if wb is not None and rx is not None:
         rels = {rid: "xl/" + target.lstrip("/")
-                for rid, target in _REL.findall(rx)}
+                for rid, target in _REL.findall(rx.decode("utf-8",
+                                                          "replace"))}
         order = [(_unescape(name), rels[rid])
-                 for name, rid in _SHEET.findall(wb) if rid in rels]
+                 for name, rid in _SHEET.findall(wb.decode("utf-8",
+                                                           "replace"))
+                 if rid in rels]
         if order:
             return order
-    except KeyError:
-        pass
     names = [n for n in zf.namelist()
              if re.fullmatch(r"xl/worksheets/sheet\d+\.xml", n)]
     return [(f"Sheet{i + 1}", n) for i, n in enumerate(
@@ -127,10 +124,10 @@ def parse_xlsx(data: bytes) -> list[dict[str, Any]]:
     shared = _shared_strings(zf)
     rows: list[dict[str, Any]] = []
     for sheet_no, (name, part) in enumerate(order, start=1):
-        try:
-            xml = zf.read(part).decode("utf-8", "replace")
-        except KeyError:
+        xml = zip_member(zf, part)
+        if xml is None:
             continue
+        xml = xml.decode("utf-8", "replace")
         rows.append({"sheet": sheet_no, "kind": "sheet",
                      "text": name, "n_cells": 0})
         for row in _ROW.finditer(xml):

@@ -10,7 +10,7 @@ doc_id (plans/extraction.py) pays ~5 shuffles for work that needs none.
 
 This plan runs the whole extraction as ONE ``mapInArrow`` pass:
 
-  docs --(round-robin repartition for skew)--> mapInArrow(extract)
+  docs --> mapInArrow(extract)
 
 Arrow-native on both edges: the span struct arrays are consumed directly
 from the RecordBatch (ListArray.flatten → columnar numpy views; no
@@ -28,9 +28,10 @@ loops over *blocks*:
 
 Scale notes (100 TB / 10^12 docs):
   - No shuffle: the job is map-only; 1000 executors scale linearly.
-  - Skew: a giant doc (500k spans) is one row; round-robin repartition
-    spreads docs evenly, and per-doc cost is bounded by the max doc size.
-    For adversarial giant-doc tails the exploded+salted plan is the fallback.
+  - Skew: a giant doc (500k spans) is one row, so per-task cost is
+    bounded by the largest doc. ``assemble_auto`` routes the docs above
+    its giant threshold to plans/salted.py, which classifies a doc's span
+    chunks in parallel and merges them with this module's own fold.
   - Arrow batches are capped (session.py maxRecordsPerBatch) so a batch of
     doc rows with large span arrays stays within executor memory.
 
@@ -348,6 +349,15 @@ def _sections_fill(norm: pd.Series, is_sec: np.ndarray, is_sub: np.ndarray,
     return section, subsection
 
 
+# S1 reads page 1 and T7 pages 1-2: the only raw text the fold reads
+META_PAGES = 2
+
+
+def pages(offs: np.ndarray) -> np.ndarray:
+    """The 1-based page of each span offset."""
+    return offs.astype(np.int64) // LINES_PER_PAGE + 1
+
+
 def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
                    cls: dict[str, Any], section: pd.Series,
                    subsection: pd.Series, texts: np.ndarray,
@@ -360,7 +370,7 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
     is_sec = cls["is_sec"]
     is_table = cls["is_table"]
     kind = cls["kind"]
-    page = (offs.astype(np.int64) // LINES_PER_PAGE + 1)
+    page = pages(offs)
 
     # ---- vectorized output span sequence (no per-span python) ----
     text_out = np.where(is_media, "", norm.values)
@@ -549,29 +559,26 @@ def _build_outputs(doc_ids: np.ndarray, bounds: np.ndarray,
         "tables": pa.array(all_tables, type=pa.list_(_TABLE_T)),
         "raw_sections": pa.array(all_rawsec,
                                  type=pa.map_(pa.string(), pa.string())),
-        "metadata": _metadata_records(_page_texts(1), _page_texts(2),
-                                      total_pages),
+        "metadata": _metadata_records(
+            _page_texts(1), _page_texts(META_PAGES), total_pages),
         "summary": pa.array(all_summary, type=_SUMMARY_T),
     }
 
 
-def _extract_core(doc_ids: np.ndarray, bounds: np.ndarray,
-                  raw_kinds: np.ndarray, texts: np.ndarray,
-                  refs: np.ndarray, offs: np.ndarray) -> dict[str, Any]:
-    """Vectorized extraction over flat span arrays.
-
-    ``bounds``: int64 array of len(docs)+1 — doc d owns flat rows
-    [bounds[d], bounds[d+1]).  Spans must be offset-ascending within a doc
-    (callers sort when needed).  Returns columnar outputs:
-    spans as a pyarrow ListArray; the small per-doc structures as py lists.
-    """
-    cls = _classify_arrays(raw_kinds, texts)
-    lengths = np.diff(bounds)
-    doc_idx = np.repeat(np.arange(len(doc_ids), dtype=np.int64), lengths)
+def output_batch(doc_ids: np.ndarray, bounds: np.ndarray, doc_idx: np.ndarray,
+                 cls: dict[str, Any], texts: np.ndarray, refs: np.ndarray,
+                 offs: np.ndarray) -> pa.RecordBatch:
+    """W1 fill and the per-doc fold over flat, per-doc offset-ascending
+    spans; ``cls`` is their _classify_arrays output and ``doc_idx`` the
+    doc of each span."""
     section, subsection = _sections_fill(cls["norm"], cls["is_sec"],
                                          cls["is_sub"], doc_idx)
-    return _build_outputs(doc_ids, bounds, cls, section, subsection,
+    cols = _build_outputs(doc_ids, bounds, cls, section, subsection,
                           texts, refs, offs)
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name].cast(f.type) if cols[f.name].type != f.type else cols[f.name]
+         for f in PA_SCHEMA],
+        schema=PA_SCHEMA)
 
 
 def _sort_flat(doc_idx: np.ndarray, offs: np.ndarray,
@@ -585,8 +592,10 @@ def _sort_flat(doc_idx: np.ndarray, offs: np.ndarray,
     return offs[order], [a[order] for a in arrays]
 
 
-def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-    """Arrow-native adapter: RecordBatch(doc_id, spans) -> output batch."""
+def flat_spans(rb: pa.RecordBatch) -> tuple[np.ndarray, ...]:
+    """RecordBatch(doc_id, spans) -> (doc_ids, bounds, kinds, texts, refs,
+    offsets): the span structs as flat columns in stored order; row d owns
+    flat rows [bounds[d], bounds[d+1])."""
     names = rb.schema.names
     spans_col = rb.column(names.index("spans"))
     if isinstance(spans_col, pa.ChunkedArray):
@@ -595,30 +604,25 @@ def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     lengths = pc.list_value_length(spans_col).to_numpy(zero_copy_only=False)
     lengths = np.nan_to_num(lengths).astype(np.int64)
     bounds = np.concatenate(([0], np.cumsum(lengths)))
-    doc_ids = rb.column(names.index("doc_id")).to_numpy(zero_copy_only=False)
+    return (rb.column(names.index("doc_id")).to_numpy(zero_copy_only=False),
+            bounds,
+            *(flat.field(f).to_numpy(zero_copy_only=False)
+              for f in ("kind", "text", "media_ref", "offset")))
 
-    raw_kinds = flat.field("kind").to_numpy(zero_copy_only=False)
-    texts = flat.field("text").to_numpy(zero_copy_only=False)
-    refs = flat.field("media_ref").to_numpy(zero_copy_only=False)
-    offs = flat.field("offset").to_numpy(zero_copy_only=False)
 
-    doc_idx = np.repeat(np.arange(len(doc_ids), dtype=np.int64), lengths)
+def extract_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+    """Arrow-native adapter: RecordBatch(doc_id, spans) -> output batch."""
+    doc_ids, bounds, raw_kinds, texts, refs, offs = flat_spans(rb)
+    doc_idx = np.repeat(np.arange(len(doc_ids), dtype=np.int64),
+                        np.diff(bounds))
     offs, (raw_kinds, texts, refs) = _sort_flat(
         doc_idx, offs, [raw_kinds, texts, refs])
-
-    cols = _extract_core(doc_ids, bounds, raw_kinds, texts, refs, offs)
-    return pa.RecordBatch.from_arrays(
-        [cols[f.name].cast(f.type) if cols[f.name].type != f.type else cols[f.name]
-         for f in PA_SCHEMA],
-        schema=PA_SCHEMA)
+    return output_batch(doc_ids, bounds, doc_idx,
+                        _classify_arrays(raw_kinds, texts), texts, refs, offs)
 
 
-def assemble_fused(docs: DataFrame, partitions: int | None = None) -> DataFrame:
-    """docs(doc_id, spans) -> one structured row per doc; zero shuffles
-    (the optional repartition is a round-robin exchange for skew-evenness,
-    not a key shuffle)."""
-    if partitions is not None:
-        docs = docs.repartition(partitions)
+def assemble_fused(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, spans) -> one structured row per doc; zero shuffles."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # one Spark task == one core: stop pyarrow from spinning up its own
@@ -633,33 +637,30 @@ def assemble_fused(docs: DataFrame, partitions: int | None = None) -> DataFrame:
 
 
 def assemble_auto(docs: DataFrame, giant_spans: int | None = 500_000,
-                  chunk_spans: int = 16_384,
-                  partitions: int | None = None) -> DataFrame:
+                  chunk_spans: int = 16_384) -> DataFrame:
     """Skew-adaptive extraction: ONE entry point for mixed corpora.
 
     Docs with ``size(spans) <= giant_spans`` run the zero-shuffle fused
-    plan; the giant tail is routed through the chunked+salted plan
-    (plans/salted.py) IN THE SAME JOB and unioned back, so an extreme
-    doc parallelizes its classification stage across ~n/chunk_spans
-    tasks instead of pinning one task while its stage idles (round-3
-    verdict item 3; both plans are output-identical, golden seam-carry
-    tests). The salt + merge exchanges are paid ONLY by the giant tail
-    (BENCH/BASELINE.md §6: corpus-wide salting loses on uniform docs).
+    plan; the giant tail runs through plans/salted.py IN THE SAME JOB and
+    is unioned back, so a giant doc classifies its span chunks on all
+    cores instead of pinning one task. Both branches give the same rows
+    (golden seam-carry tests); only the giant tail pays the salt and
+    merge exchanges.
 
-    Threshold (measured, local[16], BENCH/BASELINE.md §22): after the
-    round-4 de-quadratic fold fix the fused kernel runs ~100k spans/s
-    per core, so 400k-span docs are ~4s single-task — giants-only
-    fused 9.7s vs salted 9.6s (break-even); at 1.5M spans salted wins
-    27.9s vs 34.7s, and the gap widens on a wide cluster where one
-    pinned task idles a whole stage. 500k spans ≈ a 40 MB document —
-    tasks above ~5s route to the salted path.
+    Threshold (4-core host, local[4], giants-only input with one parquet
+    file per doc, best of 2 walls into a noop sink, 16k-span chunks): a
+    lone giant of 50k spans takes 0.90 s fused vs 1.61 s salted, 200k
+    2.39 vs 2.84 s, 500k 5.83 vs 5.75 s (break-even), 1M 12.59 vs
+    11.35 s. With one giant per core fused wins (500k: 7.79 vs 9.13 s):
+    the merge's fold is one task per doc and costs about what the
+    classification does. 500k spans is about a 40 MB document.
 
     ``giant_spans=None`` — or a streaming input, where the salted
     branch's groupBy is unavailable and micro-batches already bound
     per-task work — degrades to the pure fused plan.
     """
     if giant_spans is None or docs.isStreaming:
-        return assemble_fused(docs, partitions)
+        return assemble_fused(docs)
     from pyspark.sql import functions as F
 
     from .salted import assemble_salted
@@ -667,6 +668,6 @@ def assemble_auto(docs: DataFrame, giant_spans: int | None = 500_000,
     # BOTH branch predicates and silently drop the doc — assemble_fused
     # emits a row for a NULL spans column, so the dispatch must too
     n = F.coalesce(F.size("spans"), F.lit(0))
-    normal = assemble_fused(docs.where(n <= giant_spans), partitions)
+    normal = assemble_fused(docs.where(n <= giant_spans))
     giants = assemble_salted(docs.where(n > giant_spans), chunk_spans)
     return normal.unionByName(giants)

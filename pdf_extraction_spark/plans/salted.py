@@ -1,26 +1,27 @@
 """Salted extraction plan for giant-document skew.
 
-The fused plan (plans/fused.py) is zero-shuffle but a document is one row:
-a 500k-span doc pins one task while its neighbours finish — the classic
-long-tail straggler. This plan defuses it by *salting the document into
-span chunks*:
+The fused plan (plans/fused.py) extracts a document in one task, so a
+500k-span document pins one core while the others finish. This plan
+splits every document into span chunks and spreads the chunks over the
+cores:
 
-  docs --explode chunks--> (doc_id, chunk_idx, spans[chunk])
+  docs --posexplode--> (doc_id, chunk_idx, spans[chunk])
        --round-robin repartition-->            (the salt shuffle)
-       mapInArrow: per-chunk vectorized classification (stage A)
+       mapInArrow: per-chunk classification   (stage A)
        --groupBy(doc_id).applyInArrow-->       (merge shuffle)
-       per-doc W1 carry + sequential fold (stage B)
+       per-doc W1 carry + sequential fold      (stage B)
 
-Stage A carries ~95% of the CPU (T1 normalization, every RE2 scan, C1
-status) and is chunk-local because per-span classification has no
-cross-span state (fused._classify_arrays). Stage B re-joins a doc's
-chunks in chunk order, forward-fills W1 section state across chunk seams,
-and runs the cheap linear fold (W2 segmentation + tables + metadata) —
-exactly the boundary-state merge SURVEY.md §4.1 calls for.
+Stage A is chunk-local because per-span classification
+(fused._classify_arrays: T1 normalization, the RE2 scans, C1 status) has
+no cross-span state. Stage B puts a document's chunks back in stored
+order, sorts the spans by offset, forward-fills W1 section state across
+the chunk seams and runs the fused fold (W2 segmentation, tables, J1,
+S1/T7 metadata): the boundary-state merge of SURVEY.md §4.1. Both stages
+are the fused kernel's own code, so the output equals
+fused.extract_record_batch's.
 
-Cost: two shuffles of the classified arrays. Use it when the corpus has a
-giant-doc tail (FIXTURES.md bench tier); for uniform docs the fused plan
-wins. Output is row-identical to both other plans (same golden tests).
+Cost: two shuffles of the classified chunks, which is why
+fused.assemble_auto routes only documents above its giant threshold here.
 """
 
 from __future__ import annotations
@@ -30,23 +31,23 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from .fused import (OUTPUT_SCHEMA, PA_SCHEMA, _build_outputs,
-                    _classify_arrays, _sections_fill)
+from .fused import (META_PAGES, OUTPUT_SCHEMA, _classify_arrays, _sort_flat,
+                    flat_spans, output_batch, pages)
 
-META_TEXT_MAX_OFFSET = 100  # pages 1-2 (metadata scan input)
-
-# flag bit positions
-_F_MEDIA, _F_SEC, _F_SUB, _F_TABLE, _F_BLOCK, _F_KW, _F_HIGH, _F_MED = (
-    1, 2, 4, 8, 16, 32, 64, 128)
-
-CHUNK_SCHEMA = (
-    "doc_id string, chunk_idx int, offs array<int>, norm array<string>, "
-    "kind array<string>, status array<string>, refs array<string>, "
-    "flags array<int>, meta array<struct<o:int,t:string>>"
-)
+_FLAGS = ("is_media", "is_sec", "is_sub", "is_table", "is_block", "is_kw",
+          "is_high", "is_med")
+# stage A's per-span columns, one list per chunk; offs comes first
+_COLS = {"offs": pa.int32(),
+         **dict.fromkeys(("norm", "kind", "status", "texts", "refs"),
+                         pa.string()),
+         **dict.fromkeys(_FLAGS, pa.bool_())}
+_CHUNK_PA = pa.schema([("doc_id", pa.string()), ("chunk_idx", pa.int32())]
+                      + [(c, pa.list_(t)) for c, t in _COLS.items()])
 
 
 def split_docs(docs: DataFrame, chunk_spans: int = 4096) -> DataFrame:
@@ -62,142 +63,44 @@ def split_docs(docs: DataFrame, chunk_spans: int = 4096) -> DataFrame:
 
 
 def _classify_chunks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Stage A: vectorized per-span classification of chunk rows."""
+    """Stage A: classify each chunk's spans; raw text is kept only on the
+    pages the metadata fold reads."""
     if pa.cpu_count() != 1:
         pa.set_cpu_count(1)
     for rb in batches:
-        names = rb.schema.names
-        spans_col = rb.column(names.index("spans"))
-        flat = spans_col.flatten()
-        lengths = pa.compute.list_value_length(spans_col) \
-            .to_numpy(zero_copy_only=False)
-        lengths = np.nan_to_num(lengths).astype(np.int64)
-        bounds = np.concatenate(([0], np.cumsum(lengths)))
-
-        raw_kinds = flat.field("kind").to_numpy(zero_copy_only=False)
-        texts = flat.field("text").to_numpy(zero_copy_only=False)
-        refs = flat.field("media_ref").to_numpy(zero_copy_only=False)
-        offs = flat.field("offset").to_numpy(zero_copy_only=False) \
-            .astype(np.int32)
-
-        cls = _classify_arrays(raw_kinds, texts)
-        flags = (cls["is_media"].astype(np.int32) * _F_MEDIA
-                 + cls["is_sec"].astype(np.int32) * _F_SEC
-                 + cls["is_sub"].astype(np.int32) * _F_SUB
-                 + cls["is_table"].astype(np.int32) * _F_TABLE
-                 + cls["is_block"].astype(np.int32) * _F_BLOCK
-                 + cls["is_kw"].astype(np.int32) * _F_KW
-                 + cls["is_high"].astype(np.int32) * _F_HIGH
-                 + cls["is_med"].astype(np.int32) * _F_MED)
-
-        off32 = pa.array(bounds, type=pa.int32())
-
-        def lst(values: pa.Array) -> pa.ListArray:
-            return pa.ListArray.from_arrays(off32, values)
-
-        meta_mask = (offs < META_TEXT_MAX_OFFSET) & ~cls["is_media"]
-        meta_offsets = np.concatenate(
-            ([0], np.cumsum([meta_mask[bounds[i]:bounds[i + 1]].sum()
-                             for i in range(len(lengths))])))
-        meta_struct = pa.StructArray.from_arrays(
-            [pa.array(offs[meta_mask], type=pa.int32()),
-             pa.array(texts[meta_mask], type=pa.string())],
-            names=["o", "t"])
-        meta_col = pa.ListArray.from_arrays(
-            pa.array(meta_offsets, type=pa.int32()), meta_struct)
-
+        _, bounds, raw_kinds, texts, refs, offs = flat_spans(rb)
+        cols = _classify_arrays(raw_kinds, texts)
+        cols.update(norm=cols["norm"].values, offs=offs, refs=refs,
+                    texts=np.where(pages(offs) <= META_PAGES, texts, None))
+        lists = pa.array(bounds, type=pa.int32())
         yield pa.RecordBatch.from_arrays(
-            [rb.column(names.index("doc_id")),
-             rb.column(names.index("chunk_idx")),
-             lst(pa.array(offs, type=pa.int32())),
-             lst(pa.array(cls["norm"].values, type=pa.string())),
-             lst(pa.array(cls["kind"], type=pa.string())),
-             lst(pa.array(cls["status"], type=pa.string())),
-             lst(pa.array(refs, type=pa.string())),
-             lst(pa.array(flags, type=pa.int32())),
-             meta_col],
-            names=["doc_id", "chunk_idx", "offs", "norm", "kind", "status",
-                   "refs", "flags", "meta"])
+            [rb.column("doc_id"), rb.column("chunk_idx")]
+            + [pa.ListArray.from_arrays(lists, pa.array(cols[c], type=t))
+               for c, t in _COLS.items()],
+            schema=_CHUNK_PA)
 
 
 def _merge_doc(table: pa.Table) -> pa.Table:
-    """Stage B: re-join a doc's chunks in order, carry W1 state across
-    seams, run the sequential fold."""
-    df = table.to_pandas()
-    df = df.sort_values("chunk_idx")
-    doc_id = df["doc_id"].iloc[0]
-
-    offs = np.concatenate([np.asarray(x, dtype=np.int64)
-                           for x in df["offs"]]) \
-        if len(df) else np.array([], dtype=np.int64)
-    norm_a = np.concatenate(
-        [np.asarray(x, dtype=object) for x in df["norm"]]) \
-        if len(df) else np.array([], dtype=object)
-    kind = np.concatenate([np.asarray(x, dtype=object)
-                           for x in df["kind"]]) \
-        if len(df) else np.array([], dtype=object)
-    status = np.concatenate([np.asarray(x, dtype=object)
-                             for x in df["status"]]) \
-        if len(df) else np.array([], dtype=object)
-    refs = np.concatenate([np.asarray(x, dtype=object)
-                           for x in df["refs"]]) \
-        if len(df) else np.array([], dtype=object)
-    flags = np.concatenate([np.asarray(x, dtype=np.int32)
-                            for x in df["flags"]]) \
-        if len(df) else np.array([], dtype=np.int32)
-    n = len(offs)
-
-    # Sort by span offset: chunk order only restores the *stored* array
-    # order, so unsorted span input would silently diverge from the fused
-    # plan (which sorts in _sort_flat); the searchsorted-based metadata
-    # text reconstruction below also requires ascending offs.
-    order = np.argsort(offs, kind="stable")
-    if n and not np.array_equal(order, np.arange(n)):
-        offs, kind, status, refs, flags = (
-            offs[order], kind[order], status[order], refs[order],
-            flags[order])
-        norm_a = norm_a[order]
-    norm = pd.Series(norm_a, dtype=object)
-
-    cls = {
-        "norm": norm,
-        "kind": kind,
-        "status": status,
-        "is_media": (flags & _F_MEDIA) > 0,
-        "is_sec": (flags & _F_SEC) > 0,
-        "is_sub": (flags & _F_SUB) > 0,
-        "is_table": (flags & _F_TABLE) > 0,
-        "is_block": (flags & _F_BLOCK) > 0,
-        "is_kw": (flags & _F_KW) > 0,
-        "is_high": (flags & _F_HIGH) > 0,
-        "is_med": (flags & _F_MED) > 0,
-    }
-
-    # raw text, reconstructed at metadata offsets only (page 1-2)
-    texts = np.full(n, "", dtype=object)
-    for metas in df["meta"]:
-        for m in metas:
-            idx = int(np.searchsorted(offs, m["o"]))
-            if idx < n and offs[idx] == m["o"]:
-                texts[idx] = m["t"]
-
-    doc_idx = np.zeros(n, dtype=np.int64)
-    section, subsection = _sections_fill(norm, cls["is_sec"], cls["is_sub"],
-                                         doc_idx)
-    bounds = np.array([0, n], dtype=np.int64)
-    cols = _build_outputs(np.array([doc_id], dtype=object), bounds, cls,
-                          section, subsection, texts, refs, offs)
-    return pa.Table.from_arrays([cols[f.name] for f in PA_SCHEMA],
-                                schema=PA_SCHEMA)
+    """Stage B: a doc's chunks in stored order, sorted by offset, then the
+    fused fold, which carries W1 state across the chunk seams."""
+    table = table.sort_by("chunk_idx")
+    flat = [pc.list_flatten(table[c]).to_numpy(zero_copy_only=False)
+            for c in _COLS]
+    doc_idx = np.zeros(len(flat[0]), dtype=np.int64)
+    offs, rest = _sort_flat(doc_idx, flat[0], flat[1:])
+    cls = dict(zip(list(_COLS)[1:], rest))
+    cls["norm"] = pd.Series(cls["norm"], dtype=object)
+    return pa.Table.from_batches([output_batch(
+        table["doc_id"].to_numpy()[:1], np.array([0, len(offs)]), doc_idx,
+        cls, cls["texts"], cls["refs"], offs)])
 
 
-def assemble_salted(docs: DataFrame, chunk_spans: int = 4096,
-                    partitions: int | None = None) -> DataFrame:
-    """docs(doc_id, spans) -> one structured row per doc, with giant docs
-    split across tasks for the heavy classification stage."""
-    chunks = split_docs(docs, chunk_spans)
-    if partitions is not None:
-        chunks = chunks.repartition(partitions)
-    classified = chunks.mapInArrow(_classify_chunks, schema=CHUNK_SCHEMA)
-    return classified.groupBy("doc_id").applyInArrow(
-        lambda t: _merge_doc(t), schema=OUTPUT_SCHEMA)
+def assemble_salted(docs: DataFrame, chunk_spans: int = 4096) -> DataFrame:
+    """docs(doc_id, spans) -> one structured row per doc. The chunks go
+    round-robin over the session's default parallelism, an explicit count
+    that AQE does not coalesce, so one doc's chunks classify in parallel."""
+    chunks = split_docs(docs, chunk_spans).repartition(
+        docs.sparkSession.sparkContext.defaultParallelism)
+    return (chunks.mapInArrow(_classify_chunks,
+                               schema=from_arrow_schema(_CHUNK_PA))
+            .groupBy("doc_id").applyInArrow(_merge_doc, schema=OUTPUT_SCHEMA))

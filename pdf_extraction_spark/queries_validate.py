@@ -6,7 +6,7 @@ ranges, component-sum mismatch, extreme cost, high-cost review, zero
 cost, low/out-of-range/missing confidence, range-ratio violations,
 labor-heavy and materials-light ratios, timeline violations, Houston
 rate check, missing cost / missing total), runs the REAL Catalyst
-validator (validation_rules.validation_columns) on the Spark side, and
+validator (validation_rules.with_validation) on the Spark side, and
 an independent SQL transcription of the same decision cascade on the
 DuckDB side.
 

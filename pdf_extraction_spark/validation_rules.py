@@ -18,7 +18,7 @@ Two forms:
   (exact reference semantics, both auto_correct modes, including the
   top-level estimated_low/high "simple estimate" path) — used by unit
   tests and anywhere a per-batch driver needs the full result object.
-- ``validation_columns``: the scale path — the same decision cascade as
+- ``with_validation``: the scale path — the same decision cascade as
   pure ``pyspark.sql.functions`` column expressions over a flat
   estimates DataFrame (one row per estimate, nullable min/max per
   component). Whole-stage codegen, no Python in the hot path, and an
@@ -396,9 +396,8 @@ def _cascade_parts(
     intermediate columns every output re-reads (range-error count,
     component-sum verdict, post-correction totals, warning tally,
     widening factor, outcome flags), ``finish(refs)`` builds the eight
-    output columns from any mapping with those keys — the raw Columns
-    themselves (one-shot inlined form) or ``F.col`` references to a
-    projection that materialized them (staged form).
+    output columns from a mapping with those keys (``with_validation``
+    passes ``F.col`` references to a projection that materialized them).
 
     The split exists because Column reuse in pyspark is TREE reuse:
     inlining ``mid`` into all eight outputs multiplies the shared
@@ -621,47 +620,18 @@ def _cascade_parts(
     return mid, finish
 
 
-def validation_columns(
-    labor_min: Column, labor_max: Column,
-    materials_min: Column, materials_max: Column,
-    permits_min: Column, permits_max: Column,
-    total_min: Column, total_max: Column,
-    confidence: Column, confidence_reasoning: Column,
-    timeline_min_days: Column, timeline_max_days: Column,
-    contractor_type: Column, urgency: Column,
-    category: Column, description: Column,
-) -> list[Column]:
-    """The full decision cascade as ONE-SHOT column expressions (one row
-    per estimate; a NULL component bound pair means the component is
-    absent).
-
-    Outputs: valid boolean, action string, n_errors int, n_warnings int,
-    auto_corrected boolean, total_min_final / total_max_final double
-    (post swap -> component-sum correction -> confidence widening; NULL
-    for reject/recalculate/regenerate outcomes), adj_factor double.
-
-    NOTE (scale path): inlining the shared intermediates into all eight
-    outputs makes the single generated projection method exceed janino's
-    64 KB limit, so Spark evaluates this form INTERPRETED (correct, ~6×
-    slower, one scary `CodeGenerator: Failed to compile` per plan). Use
-    ``with_validation`` for the hot path — it stages the same cascade
-    across two projections that stay inside whole-stage codegen.
-    """
-    mid, finish = _cascade_parts(
-        labor_min, labor_max, materials_min, materials_max,
-        permits_min, permits_max, total_min, total_max,
-        confidence, confidence_reasoning,
-        timeline_min_days, timeline_max_days,
-        contractor_type, urgency, category, description)
-    return finish(mid)
-
-
 def with_validation(df, *cols: Column):
     """Append the eight validation output columns to ``df`` (the C22
     scale path; reference src/validation/estimation_validator.py).
 
-    ``cols`` are the sixteen input columns in ``validation_columns``
-    order. The cascade runs as two stacked projections: the first
+    ``cols`` are the sixteen input columns in ``_cascade_parts`` order (a
+    NULL component bound pair means the component is absent). Outputs:
+    valid, action, n_errors, n_warnings, auto_corrected,
+    total_min_final / total_max_final (post swap -> component-sum
+    correction -> confidence widening; NULL for reject/recalculate/
+    regenerate outcomes) and adj_factor.
+
+    The cascade runs as two stacked projections: the first
     materializes the eleven shared intermediates under ``__val_*``
     names, the second computes the outputs from those references and
     drops the scratch columns. Catalyst keeps the stages separate

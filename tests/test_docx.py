@@ -496,16 +496,19 @@ def test_epub_damaged_book_surfaces_as_empty_spans(spark):
 def test_epub_spans_keep_whole_doc_id(spark):
     """The per-chapter key splits back at its first separator, so a
     doc_id holding U+001F comes back whole with every chapter's
-    spans, the same as a plain id."""
+    spans, the same as a plain id; a NULL doc_id comes back as one
+    NULL-id book, not one fake document per chapter."""
     from pdf_extraction_spark.operators.epub import (build_one_epub,
                                                      epub_to_spans)
     book = bytearray(build_one_epub(6, "hello " * 40))
-    files = spark.createDataFrame([("site/a\x1fb", book), ("plain", book)],
-                                  "doc_id string, epub binary")
-    rows = {r["doc_id"]: r["spans"] for r in
-            epub_to_spans(files).collect()}
-    assert set(rows) == {"site/a\x1fb", "plain"}
+    files = spark.createDataFrame(
+        [("site/a\x1fb", book), ("plain", book), (None, book)],
+        "doc_id string, epub binary")
+    got = epub_to_spans(files).collect()
+    rows = {r["doc_id"]: r["spans"] for r in got}
+    assert len(got) == 3 and set(rows) == {"site/a\x1fb", "plain", None}
     assert rows["site/a\x1fb"] == rows["plain"] and len(rows["plain"]) > 4
+    assert rows[None] == rows["plain"]
 
 
 def test_pptx_root_level_slide_part_with_rels():

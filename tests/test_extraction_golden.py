@@ -41,8 +41,7 @@ def test_salted_matches_fused_on_giants(spark):
     a = {r["doc_id"]: r.asDict(recursive=True)
          for r in assemble_fused(docs).collect()}
     b = {r["doc_id"]: r.asDict(recursive=True)
-         for r in assemble_salted(docs, chunk_spans=512,
-                                  partitions=8).collect()}
+         for r in assemble_salted(docs, chunk_spans=512).collect()}
     assert set(a) == set(b)
     for doc_id in a:
         for key in ("spans", "issues", "tables", "raw_sections",
@@ -119,20 +118,24 @@ def test_summary_equality(results):
 
 
 def test_salted_handles_unsorted_spans(spark):
-    """Span arrays stored out of offset order must still produce output
-    identical to the fused plan (which sorts in _sort_flat): the salted
-    merge sorts the concatenated chunk arrays by offset."""
+    """Span arrays stored out of offset order, with page-1 spans that
+    share an offset, must still produce output identical to the fused
+    plan (which sorts in _sort_flat): the salted merge sorts the
+    concatenated chunk arrays by offset and keeps every tied span."""
     import pyspark.sql.functions as F
 
     docs = corpus.generate_docs(spark, 6, partitions=2)
-    shuffled = docs.select(
-        "doc_id",
-        F.reverse("spans").alias("spans"))  # deterministic disorder
+    tied = F.array(*[F.struct(F.lit("text").alias("kind"),
+                              F.lit(t).alias("text"),
+                              F.lit(None).cast("string").alias("media_ref"),
+                              F.lit(0).alias("offset"))
+                     for t in ("Year built: 1985", "3 bedrooms")])
+    shuffled = docs.select(  # deterministic disorder
+        "doc_id", F.reverse(F.concat("spans", tied)).alias("spans"))
     a = {r["doc_id"]: r.asDict(recursive=True)
          for r in assemble_fused(shuffled).collect()}
     b = {r["doc_id"]: r.asDict(recursive=True)
-         for r in assemble_salted(shuffled, chunk_spans=32,
-                                  partitions=4).collect()}
+         for r in assemble_salted(shuffled, chunk_spans=32).collect()}
     assert set(a) == set(b)
     for doc_id in a:
         for key in ("spans", "issues", "tables", "raw_sections",

@@ -4,19 +4,24 @@ Two checks keep it that way: an AST scan that finds no other
 ``.mapInArrow(`` call in the whole-file families, and a plan check
 that every reader and writer routed through ``file_pass`` plans as
 ONE map-only pass with the schema it declares, on a one-row input and
-on an empty one."""
+on an empty one.  A third check holds the container parsers to
+``filepass.zip_member``: a member whose stored bytes do not decode reads
+like a missing one."""
 
 from __future__ import annotations
 
 import ast
+import io
+import zipfile
 from pathlib import Path
 
 import pytest
 from pyspark.sql.types import StructType
 
 from pdf_extraction_spark.corpus import SPAN_SCHEMA
-from pdf_extraction_spark.operators import (docx, epub, multimodal,
-                                            pdffile, pptx, warc, xlsx)
+from pdf_extraction_spark.operators import (docx, epub, filepass,
+                                            multimodal, pdffile, pptx,
+                                            warc, xlsx)
 
 REPO = Path(__file__).resolve().parents[1]
 SCANNED = [f"pdf_extraction_spark/operators/{m}.py" for m in
@@ -150,3 +155,28 @@ def test_reader_is_one_file_pass(spark, name):
     _check(fn,
            spark.createDataFrame([("6", bytearray(blob()))], schema),
            spark.createDataFrame([], schema), ddl)
+
+
+@pytest.mark.parametrize("parse, build, member", [
+    (pptx.parse_pptx, pptx.build_one_pptx, "ppt/presentation.xml"),
+    (xlsx.parse_xlsx, xlsx.build_one_xlsx, "xl/worksheets/sheet1.xml"),
+    (epub.parse_epub, epub.build_one_epub, "META-INF/container.xml"),
+    (epub.parse_epub, epub.build_one_epub, "OEBPS/ch2.xhtml"),
+    (docx.parse_docx, docx.build_one_docx, "word/document.xml"),
+])
+def test_undecodable_member_parses_as_missing(parse, build, member):
+    blob = build(6, TEXT)
+    src = zipfile.ZipFile(io.BytesIO(blob))
+    info = src.getinfo(member)
+    damaged = bytearray(blob)   # first stored byte inverted
+    damaged[info.header_offset + 30 + len(info.filename)
+            + len(info.extra)] ^= 0xFF
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for i in src.infolist():
+            if i.filename != member:
+                zf.writestr(i, src.read(i.filename))
+    damaged = bytes(damaged)
+    assert filepass.zip_member(
+        zipfile.ZipFile(io.BytesIO(damaged)), member) is None
+    assert parse(damaged) == parse(buf.getvalue())

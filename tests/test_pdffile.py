@@ -301,17 +301,19 @@ def test_poisoned_file_skipped(spark, reader):
 
 def test_ruled_tables_keep_whole_doc_id(spark):
     """The per-page key splits back at its first separator, so a
-    doc_id holding U+001F keeps its name and all its table rows."""
+    doc_id holding U+001F keeps its name and all its table rows, and
+    a NULL doc_id keeps its rows under a NULL id."""
     from pdf_extraction_spark.operators.pdffile import (
         files_to_ruled_tables, wrap_content_stream)
 
     pdf = bytearray(wrap_content_stream(1, _RULED))
-    df = spark.createDataFrame([("site/a\x1fb", pdf), ("plain", pdf)],
-                               "doc_id string, pdf binary")
+    df = spark.createDataFrame(
+        [("site/a\x1fb", pdf), ("plain", pdf), (None, pdf)],
+        "doc_id string, pdf binary")
     got = files_to_ruled_tables(df).orderBy("doc_id", "row_idx")
     assert [(r.doc_id, r.page, r.row_idx, r.table_text)
             for r in got.collect()] == [
-        (d, 0, k, t) for d in ("plain", "site/a\x1fb")
+        (d, 0, k, t) for d in (None, "plain", "site/a\x1fb")
         for k, t in enumerate(["Item | Qty | ", "pipe |  | ",
                                " |  | 75"])]
 

@@ -59,6 +59,34 @@ def test_fused_extraction_zero_shuffle(spark):
     assert "Exchange" not in _plan(df)
 
 
+def test_salted_branch_salts_chunks(spark):
+    """assemble_auto's giant branch round-robins the chunk rows between
+    the chunk Generate and the stage-A classification, so one giant
+    doc's chunks classify in more than one task."""
+    from pdf_extraction_spark import corpus
+    from pdf_extraction_spark.plans.fused import assemble_auto
+
+    docs = corpus.generate_docs(spark, 3, giant_every=3, partitions=1)
+    plan = _plan(assemble_auto(docs, giant_spans=1000, chunk_spans=256))
+    at = [plan.index(s) for s in ("MapInArrow _classify_chunks",
+                                  "Exchange RoundRobinPartitioning(",
+                                  "Generate posexplode")]
+    assert at == sorted(at)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("salted-tasks", "salted stage A task count")
+    try:
+        assemble_auto(docs.where(F.size("spans") > 1000), giant_spans=1000,
+                      chunk_spans=256).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    tasks = [st.getStageInfo(s).numCompletedTasks
+             for j in st.getJobIdsForGroup("salted-tasks")
+             for s in st.getJobInfo(j).stageIds if st.getStageInfo(s)]
+    assert max(tasks) > 1
+
+
 def test_parquet_scan_prunes_and_pushes(spark):
     """Column pruning + predicate pushdown must reach the parquet scan:
     a 2-column projection that reads all columns is wrong at any scale."""

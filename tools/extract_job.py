@@ -52,7 +52,7 @@ def main() -> None:
 
     extract = {"auto": assemble_auto, "fused": assemble_fused,
                "salted": lambda d: assemble_salted(
-                   d, chunk_spans=8192, partitions=cores * 3)}[args.plan]
+                   d, chunk_spans=8192)}[args.plan]
 
     stage = STAGES[args.stage]
 
