@@ -1,7 +1,7 @@
 """J8 — calibration feedback loop: historical estimate-vs-actual variance
 -> calibration factors -> adjusted estimates.
 
-Faithful transcription of src/learning/feedback_loop.py:86-341 and
+Faithful transcription of src/learning/feedback_loop.py:198-293 and
 calibration_database.py:242-290 semantics. The Spark shape: the
 calibration store is a tiny table of (category, complexity, strategy,
 variance_pct) records built from historical actuals; the adjustment is a
@@ -144,20 +144,6 @@ def calibration_factor(store: CalibrationStore,
     }
 
 
-def best_calibration_factor(store: CalibrationStore, category: str,
-                            complexity: str, strategy: str) -> dict | None:
-    """feedback_loop.py:154-197: specificity ladder
-    (cat+cx+strategy -> cat+cx -> cat -> cx)."""
-    for args in ((category, complexity, strategy),
-                 (category, complexity, None),
-                 (category, None, None),
-                 (None, complexity, None)):
-        factor = calibration_factor(store, *args)
-        if factor:
-            return factor
-    return None
-
-
 def should_apply(calibration: dict,
                  confidence_threshold: float = CONFIDENCE_THRESHOLD) -> bool:
     """feedback_loop.py:279-293: gate on confidence, extreme factors, and
@@ -169,42 +155,6 @@ def should_apply(calibration: dict,
     if 0.98 <= calibration["factor"] <= 1.02:
         return False
     return True
-
-
-def apply_calibration(base_estimate: dict, factor: float) -> dict:
-    """feedback_loop.py:298-320: scale labor/materials/total, NOT permits."""
-    adjusted = dict(base_estimate)
-    cost = dict(adjusted.get("cost", {}))
-    for component in ("labor", "materials", "total"):
-        if component in cost and isinstance(cost[component], dict):
-            comp = dict(cost[component])
-            comp["min"] = round(comp.get("min", 0) * factor, 2)
-            comp["max"] = round(comp.get("max", 0) * factor, 2)
-            cost[component] = comp
-    adjusted["cost"] = cost
-    return adjusted
-
-
-def adjust_estimate(store: CalibrationStore, base_estimate: dict,
-                    category: str, complexity: str, strategy: str) -> dict:
-    """feedback_loop.py:86-152: lookup ladder -> gate -> apply; always
-    attaches calibration metadata."""
-    calibration = best_calibration_factor(store, category, complexity,
-                                          strategy)
-    if calibration is None:
-        status, out = "insufficient_data", dict(base_estimate)
-    elif not should_apply(calibration):
-        status, out = "low_confidence", dict(base_estimate)
-    else:
-        status = "applied"
-        out = apply_calibration(base_estimate, calibration["factor"])
-    out["calibration"] = {
-        "status": status,
-        "factor": calibration["factor"] if calibration else 1.0,
-        "confidence": calibration["confidence"] if calibration else 0.0,
-        "sample_count": calibration["sample_count"] if calibration else 0,
-    }
-    return out
 
 
 def apply_calibration_df(estimates, store: CalibrationStore,

@@ -212,11 +212,6 @@ LABOR_RATES = {
     "plumber": 100, "roofer": 85, "foundation_specialist": 150,
     "handyman": 65, "structural_engineer": 175, "pest_control": 75,
 }
-PERMIT_COSTS_DB = {
-    "electrical_major": 250, "electrical_minor": 150, "plumbing_major": 200,
-    "plumbing_minor": 100, "hvac": 150, "roofing": 175, "structural": 300,
-    "general_repair": 75,
-}
 
 # flat-materials subset of the component database (cost_database.py:174-467);
 # per-square / per-pier entries keep their reference keys

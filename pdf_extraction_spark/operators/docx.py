@@ -256,29 +256,3 @@ def build_docx_files(docs: DataFrame, text_col: str = "text",
         docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
         "doc_id string, docx binary",
         lambda key, text: [(build_one_docx(id_number(key), text),)])
-
-
-MEDIA_SCHEMA = "doc_id string, part string, content binary"
-
-
-def _media_parts(_key: str, blob: bytes | None) -> list[tuple[str, bytes]]:
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(blob or b""))
-    except (zipfile.BadZipFile, ValueError):
-        return []
-    return [(name, data) for name in zf.namelist()
-            if name.startswith("word/media/")
-            and (data := zip_member(zf, name)) is not None]
-
-
-def docx_media_from_files(files: DataFrame, bytes_col: str = "docx",
-                          id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, docx binary) -> one row per embedded media part
-    (``word/media/*``): the binary payloads the ``media`` spans
-    reference, ready for ``multimodal.image_header_meta`` — so the
-    interleaved text+media contract closes end-to-end: span order
-    from ``docx_to_spans``, media bytes + header metadata from here.
-    A member that does not decompress is skipped; the file's other
-    parts stay. Map-only, zero shuffle."""
-    return file_pass(files, id_col, [bytes_col], MEDIA_SCHEMA,
-                     _media_parts)

@@ -32,7 +32,7 @@ which windows express exactly):
 
 Scale shape: every step keys on ``doc_id`` — one hash shuffle of the
 run table into per-doc partitions (zero if the table is already
-bucketed by doc_id, `sources/bucketed.py`), then window functions and
+bucketed by doc_id), then window functions and
 one groupBy per level; no self-joins, no collect. Runs of one document
 never cross partitions, so a 10^12-doc corpus parallelizes per-doc with
 bounded task state (a doc's runs).  Giant-document skew (a single doc

@@ -28,10 +28,6 @@ from pyspark.sql import functions as F
 
 from .filepass import file_pass, id_number
 
-MEDIA_SCHEMA = ("media_ref string, content binary, "
-                "meta struct<mime:string,width:int,height:int,"
-                "n_frames:int,duration_ms:int>")
-
 FEATURE_DIM = 16
 
 FEATURES_SCHEMA = (f"media_ref string, mime string, "

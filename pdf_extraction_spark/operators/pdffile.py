@@ -72,7 +72,7 @@ from typing import Any, Callable, Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from .filepass import file_pass, id_number, part_key, split_part_key
+from .filepass import file_pass, id_number
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -1554,9 +1554,6 @@ def extract_pages(pdf_bytes: bytes) -> list[str]:
 
 # ---------------------------------------------------------- PDF writer
 
-_LIT_ESC = {0x5C: "\\\\", 0x28: "\\(", 0x29: "\\)"}
-
-
 def escape_literal(s: str) -> str:
     """Escape text for a PDF literal string (backslash first)."""
     return s.replace("\\", "\\\\").replace("(", "\\(") \
@@ -1574,10 +1571,6 @@ PAGE2_TMPL = "BT /F2 10 Tf 72 700 Td ({c}) Tj 12 TL T* ({d}) Tj ET"
 SLICES = {"t": (1, 20), "a": (21, 28), "b": (49, 28),
           "c": (77, 28), "d": (105, 28)}
 PAD = " the quick brown fox jumps over the lazy dog" * 4
-
-PAGE1_FILTERS = ["none", "FlateDecode", "ASCIIHexDecode",
-                 "ASCII85Decode"]  # by doc_id % 4
-
 
 def _ascii85_encode(data: bytes) -> bytes:
     out = bytearray()
@@ -2651,36 +2644,3 @@ def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
     sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
                        F.col(bytes_col).alias("pdf"))
     return spans_pass(sel, pages_of, **kw)
-
-
-def files_to_ruled_tables(files: DataFrame, bytes_col: str = "pdf",
-                          id_col: str = "doc_id",
-                          **kw) -> DataFrame:
-    """Whole PDF files -> ruled-table rows: parse (map-only) ->
-    per-page ``with_rules`` tokenization -> `layout.
-    detect_ruled_tables` — the pdfplumber-default 'lines' table
-    strategy (the reference's ``page.extract_tables()``,
-    `src/table_extractor.py:9-56`) over raw file corpora.  Each page
-    detects in its OWN coordinate space (the composed page||doc_id
-    key, same skew story as `files_to_spans`); ``filepass.part_key``
-    gives every doc_id back whole, a NULL one included, and tables
-    number top-down per page.  Embedded-font CMaps
-    ride along, so glyph-coded cell text decodes before it lands in
-    cells.  ``kw`` forwards to the detector.
-
-    Returns (doc_id, page, tbl_idx, row_idx, n_rows, n_cols,
-    table_text); feed through `tables.ruled_rows_as_spans` ->
-    `tables.extract_tables` for S5/C6/T6 classification and costs
-    (compose the table key from (page, tbl_idx) first when per-doc
-    table numbering matters)."""
-    from .pdfstream import ruled_table_rows
-
-    pages = pages_from_files(files, bytes_col, id_col)
-    keyed = pages.select(
-        part_key(F.col("page"), F.col("doc_id")).alias("doc_id"),
-        "stream", "fontmaps")
-    rows = ruled_table_rows(keyed, maps_col="fontmaps", **kw)
-    page, doc_id = split_part_key(F.col("doc_id"))
-    return rows.select(
-        doc_id.alias("doc_id"), page.alias("page"),
-        "tbl_idx", "row_idx", "n_rows", "n_cols", "table_text")

@@ -43,9 +43,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-ROBOTS_DIRECTIVES = ("user-agent", "allow", "disallow",
-                     "crawl-delay", "sitemap")
-
 _DIRECTIVE_RE = r"(?i)^[ \t]*(user-agent|allow|disallow|crawl-delay|sitemap)[ \t]*:[ \t]*(.*?)[ \t]*$"
 
 
@@ -178,31 +175,6 @@ def robots_allowed(urls: DataFrame, rules: DataFrame,
         .withColumn("allowed", F.coalesce("allowed", F.lit(True)))
 
 
-def crawl_delays(rules: DataFrame, agent: str = "sparkbot"
-                 ) -> DataFrame:
-    """Per-host effective crawl-delay seconds for the agent (same
-    group-resolution as robots_allowed; smallest wins if repeated)."""
-    ua = rules.where(F.col("directive") == "user-agent").select(
-        "host", "group_id", F.lower(F.col("value")).alias("ua_token"))
-    tok = F.lit(agent.lower())
-    grp = ua.select(
-        "host", "group_id",
-        F.when(F.col("ua_token") == tok, F.lit(0))
-         .when(F.col("ua_token") == "*", F.lit(1)).alias("rank")) \
-        .where(F.col("rank").isNotNull()) \
-        .groupBy("host", "group_id").agg(F.min("rank").alias("rank"))
-    best = grp.groupBy("host").agg(F.min("rank").alias("best_rank"))
-    applicable = grp.join(best, "host") \
-        .where(F.col("rank") == F.col("best_rank")) \
-        .select("host", "group_id")
-    return rules.where(F.col("directive") == "crawl-delay") \
-        .join(applicable, ["host", "group_id"]) \
-        .select("host", F.col("value").cast("double")
-                .alias("delay_sec")) \
-        .where(F.col("delay_sec").isNotNull()) \
-        .groupBy("host").agg(F.min("delay_sec").alias("delay_sec"))
-
-
 # ------------------------------------------------------------ sitemap
 
 def sitemap_urls(docs: DataFrame, xml_col: str = "xml",
@@ -277,40 +249,3 @@ def feed_entries(docs: DataFrame, xml_col: str = "xml",
         F.when(is_rss, rss_link).otherwise(atom_link).alias("link"),
         published.alias("published")) \
         .where(F.col("link") != "")
-
-
-def frontier_candidates(pages: DataFrame, robots: DataFrame,
-                        denylist=None, agent: str = "sparkbot",
-                        html_col: str = "html",
-                        id_col: str = "doc_id") -> DataFrame:
-    """The composed crawl-frontier stage: crawled pages -> outlinks ->
-    normalized absolute http(s) URLs -> domain deny-list filter ->
-    robots.txt admission -> distinct (host, path, url_norm) candidate
-    rows with their admission verdict.
-
-    Composition of the individually-gated pieces (links.link_table /
-    links.url_parts gates ``html_links``/``url_normalize``,
-    curation.filter_hosts gate ``host_denylist``, parse_robots /
-    robots_allowed gates ``robots_rules``/``robots_check``) — wired
-    with the scale-sane defaults ON: the deny filter is broadcast
-    anti-joins, the robots rules are broadcast, so the only exchange
-    in the whole stage is the final ``distinct`` on the candidate
-    set (which a frontier needs anyway for visited-set merging).
-
-    ``robots`` is the raw (host, robots) table — parsed here so
-    callers hand over exactly what a robots fetch produces."""
-    from .curation import filter_hosts
-    from .links import link_table
-
-    links = link_table(pages, html_col=html_col, id_col=id_col)
-    cand = links.where(F.col("scheme").isin("http", "https") &
-                       (F.col("host") != "")) \
-        .select("host", F.when(F.col("path") == "", F.lit("/"))
-                .otherwise(F.col("path")).alias("path"),
-                "url_norm")
-    if denylist is not None:
-        cand = filter_hosts(cand.withColumnRenamed("url_norm", "url"),
-                            denylist).withColumnRenamed("url", "url_norm")
-    cand = cand.distinct()
-    rules = parse_robots(robots)
-    return robots_allowed(cand, rules, agent=agent)

@@ -14,8 +14,6 @@ so a salted two-pass variant (operators/salting.py) can split giant docs.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 

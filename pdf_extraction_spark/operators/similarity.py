@@ -511,36 +511,3 @@ def ivf_topk(embeddings: DataFrame, query_vec: list[float], dim: int,
     return (cosine_scores_arrow(cand, query_vec, emb_col)
             .select(id_col, "cosine")
             .orderBy(F.desc("cosine"), id_col).limit(k))
-
-
-def ivf_write_partitioned(embeddings: DataFrame, path: str, dim: int,
-                          n_list: int = 8, id_col: str = "vec_id",
-                          emb_col: str = "embedding") -> np.ndarray:
-    """Physical IVF layout: assign every vector its cell and write the
-    table PARTITIONED BY cell, so an nprobe query prunes whole
-    partitions at the scan (PartitionFilters) instead of filtering rows
-    after reading them. Returns the centroid matrix for
-    ivf_topk_partitioned. At 10^12 vectors this is the difference
-    between reading ~nprobe/n_list of the table and scanning all of it
-    — the table-layout step §14 of BENCH/BASELINE.md describes."""
-    cents = ivf_centroids(embeddings, n_list, id_col, emb_col)
-    assigned = ivf_assign_arrow(embeddings.select(id_col, emb_col),
-                                cents, dim, emb_col)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    return cents
-
-
-def ivf_topk_partitioned(spark: "SparkSession", path: str,
-                         query_vec: list[float], centroids: np.ndarray,
-                         k: int = 10, nprobe: int = 2,
-                         id_col: str = "vec_id",
-                         emb_col: str = "embedding") -> DataFrame:
-    """IVF top-k over an ivf_write_partitioned layout: the cell
-    predicate is a partition filter (directory prune), then exact
-    cosine re-rank inside the probed cells only. Result-identical to
-    ivf_topk on the same vectors/centroids."""
-    probe = [int(c) for c in _query_cell_order(query_vec, centroids)[:nprobe]]
-    cand = spark.read.parquet(path).where(F.col("cell").isin(probe))
-    return (cosine_scores_arrow(cand, query_vec, emb_col)
-            .select(id_col, "cosine")
-            .orderBy(F.desc("cosine"), id_col).limit(k))

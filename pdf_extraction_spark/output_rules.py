@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any
 
 MIN_COST = 0.0
 MAX_COST = 50000.0
@@ -248,18 +247,4 @@ def validate_estimate(estimate: dict, strict: bool = True) -> dict:
         "needs_review": needs_review,
         "quality_score": quality_score,
         "cleaned_estimate": clean_estimate(estimate),
-    }
-
-
-def validate_batch(estimates: list[dict], strict: bool = True) -> dict:
-    """output_validator.py:170-201."""
-    results = [validate_estimate(e, strict) for e in estimates]
-    valid_count = sum(1 for r in results if r["valid"])
-    return {
-        "total": len(estimates),
-        "valid": valid_count,
-        "invalid": len(estimates) - valid_count,
-        "needs_review": sum(1 for r in results if r["needs_review"]),
-        "results": results,
-        "success_rate": valid_count / len(estimates) if estimates else 0,
     }

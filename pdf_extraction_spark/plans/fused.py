@@ -643,9 +643,10 @@ def assemble_auto(docs: DataFrame, giant_spans: int | None = 500_000,
     Docs with ``size(spans) <= giant_spans`` run the zero-shuffle fused
     plan; the giant tail runs through plans/salted.py IN THE SAME JOB and
     is unioned back, so a giant doc classifies its span chunks on all
-    cores instead of pinning one task. Both branches give the same rows
-    (golden seam-carry tests); only the giant tail pays the salt and
-    merge exchanges.
+    cores instead of pinning one task. Both branches give the same rows,
+    one per input row even where rows share a doc_id (golden seam-carry
+    and duplicate-id tests); only the giant tail pays the salt and merge
+    exchanges.
 
     Threshold (4-core host, local[4], giants-only input with one parquet
     file per doc, best of 2 walls into a noop sink, 16k-span chunks): a
@@ -655,9 +656,11 @@ def assemble_auto(docs: DataFrame, giant_spans: int | None = 500_000,
     the merge's fold is one task per doc and costs about what the
     classification does. 500k spans is about a 40 MB document.
 
-    ``giant_spans=None`` — or a streaming input, where the salted
-    branch's groupBy is unavailable and micro-batches already bound
-    per-task work — degrades to the pure fused plan.
+    ``giant_spans=None``, or a streaming input, degrades to the pure
+    fused plan: the salted branch's grouped merge does not run on a
+    stream, and micro-batches already bound per-task work.  The one
+    stream entry point, ``streaming/extract.extract_stream``, calls
+    ``assemble_fused`` directly.
     """
     if giant_spans is None or docs.isStreaming:
         return assemble_fused(docs)

@@ -5,11 +5,15 @@ The fused plan (plans/fused.py) extracts a document in one task, so a
 splits every document into span chunks and spreads the chunks over the
 cores:
 
-  docs --posexplode--> (doc_id, chunk_idx, spans[chunk])
+  docs --posexplode--> (row_id, doc_id, chunk_idx, spans[chunk])
        --round-robin repartition-->            (the salt shuffle)
        mapInArrow: per-chunk classification   (stage A)
-       --groupBy(doc_id).applyInArrow-->       (merge shuffle)
+       --groupBy(row_id).applyInArrow-->       (merge shuffle)
        per-doc W1 carry + sequential fold      (stage B)
+
+``row_id`` names the input row, so two rows that share a doc_id (or
+both have a NULL one) stay two documents, as they are in the fused
+plan.
 
 Stage A is chunk-local because per-span classification
 (fused._classify_arrays: T1 normalization, the RE2 scans, C1 status) has
@@ -46,20 +50,24 @@ _COLS = {"offs": pa.int32(),
          **dict.fromkeys(("norm", "kind", "status", "texts", "refs"),
                          pa.string()),
          **dict.fromkeys(_FLAGS, pa.bool_())}
-_CHUNK_PA = pa.schema([("doc_id", pa.string()), ("chunk_idx", pa.int32())]
+_KEYS = (("row_id", pa.int64()), ("doc_id", pa.string()),
+         ("chunk_idx", pa.int32()))
+_CHUNK_PA = pa.schema(list(_KEYS)
                       + [(c, pa.list_(t)) for c, t in _COLS.items()])
 
 
 def split_docs(docs: DataFrame, chunk_spans: int = 4096) -> DataFrame:
-    """One row per (doc, chunk): contiguous span slices of <= chunk_spans."""
+    """One row per (input row, chunk): contiguous span slices of <=
+    chunk_spans, keyed by a ``row_id`` unique to the input row."""
     n = F.size("spans")
     n_chunks = F.greatest(F.ceil(n / chunk_spans).cast("int"), F.lit(1))
     chunk_arrays = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.slice(F.col("spans"), i * chunk_spans + 1,
                           F.lit(chunk_spans)))
-    return docs.select(
-        "doc_id", F.posexplode(chunk_arrays).alias("chunk_idx", "spans"))
+    return docs.withColumn("row_id", F.monotonically_increasing_id()).select(
+        "row_id", "doc_id",
+        F.posexplode(chunk_arrays).alias("chunk_idx", "spans"))
 
 
 def _classify_chunks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -74,7 +82,7 @@ def _classify_chunks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
                     texts=np.where(pages(offs) <= META_PAGES, texts, None))
         lists = pa.array(bounds, type=pa.int32())
         yield pa.RecordBatch.from_arrays(
-            [rb.column("doc_id"), rb.column("chunk_idx")]
+            [rb.column(k) for k, _ in _KEYS]
             + [pa.ListArray.from_arrays(lists, pa.array(cols[c], type=t))
                for c, t in _COLS.items()],
             schema=_CHUNK_PA)
@@ -103,4 +111,4 @@ def assemble_salted(docs: DataFrame, chunk_spans: int = 4096) -> DataFrame:
         docs.sparkSession.sparkContext.defaultParallelism)
     return (chunks.mapInArrow(_classify_chunks,
                                schema=from_arrow_schema(_CHUNK_PA))
-            .groupBy("doc_id").applyInArrow(_merge_doc, schema=OUTPUT_SCHEMA))
+            .groupBy("row_id").applyInArrow(_merge_doc, schema=OUTPUT_SCHEMA))

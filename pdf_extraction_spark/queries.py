@@ -1346,8 +1346,7 @@ ORDER BY sim_milli DESC, vec_id LIMIT 10
 
 
 def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling-window aggregation (streaming/events.py — the
-    batch twin of the Structured Streaming query)."""
+    """Event-time tumbling-window aggregation (streaming/events.py)."""
     from .streaming.events import windowed_counts
 
     e = spark.read.parquet(f"{sf_dir}/events.parquet")

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from . import enrich_rules as er
 from . import rules
 from .queries import _pick, _sql_list
-from .queries_enrich import ITEMS, PHRASES
+from .queries_enrich import ITEMS, PHRASES, _like_any, _pick_sql
 
 # ---------------------------------------------------------------------------
 # Derived rich-text issues (attribute/classification inputs)
@@ -62,10 +62,6 @@ def derived_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(item, F.lit(" condition")).alias("title"))
 
 
-def _pick_sql(arr: list[str], div: int, mod: int) -> str:
-    return f"{_sql_list(arr)}[CAST(1 + (o_orderkey // {div}) % {mod} AS INT)]"
-
-
 SQL_RICH_CTE = f"""
 rich AS (
   SELECT o_orderkey % {N_DOCS} AS doc_id, o_orderkey AS k,
@@ -77,11 +73,6 @@ rich AS (
     {_pick_sql(ITEMS, 7, 5)} || ' condition' AS title
   FROM orders)
 """
-
-
-def _like_any(expr: str, words: list[str]) -> str:
-    return "(" + " OR ".join(
-        f"{expr} LIKE '%" + w.replace("'", "''") + "%'" for w in words) + ")"
 
 
 # ---------------------------------------------------------------------------
@@ -591,7 +582,6 @@ Q_TITLES = ["Item condition", "ROOF COVERING AREA", "general note",
             "Item condition summary"]
 Q_STATUSES = ["D", "I", "XX", ""]
 Q_SECTIONS = ["I. STRUCTURAL", "HEADER"]
-Q_PRIORITIES = [None, "high", "low"]
 
 
 def _q_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:

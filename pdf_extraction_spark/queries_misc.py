@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from . import enrich_rules as er
 from .queries import _pick, _sql_list
-from .queries_enrich2 import N_DOCS, _like_any, _pick_sql
+from .queries_enrich import _pick_sql
+from .queries_enrich2 import N_DOCS
 
 # ---------------------------------------------------------------------------
 # A2 + A5 — enrichment summary + estimate summary

@@ -18,7 +18,7 @@ Reference citations:
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession

@@ -13,7 +13,6 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .operators.sampling import (SAMPLE_MOD, _threshold, pack_shards,
                                  sample_corpus, stratified_sample)

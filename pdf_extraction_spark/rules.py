@@ -336,34 +336,6 @@ LOCATION_PATTERNS = [
 ]
 
 # ---------------------------------------------------------------------------
-# T8 — quantity details (text_extractor.pyc:412-486)
-# ---------------------------------------------------------------------------
-
-MEASUREMENT_UNIT_PATTERNS = [
-    r"(\d+)\s*(square\s*feet|sq\.?\s*ft\.?|sf)",
-    r"(\d+)\s*(linear\s*feet|lf|ft\.?|feet)",
-    r"(\d+)\s*(inches?|in\.?)",
-    r"(\d+)\s*(yards?|yd\.?)",
-    r"(\d+)\s*(meters?|m\.?)",
-    r"(\d+)\s*x\s*(\d+)",
-]
-QUANTITY_WORDS = {
-    "one": 1, "single": 1, "two": 2, "double": 2, "couple": 2, "three": 3,
-    "triple": 3, "four": 4, "five": 5, "several": 3, "multiple": 3,
-    "numerous": 5, "many": 10,
-}
-SCOPE_INDICATORS = {
-    "multiple": "Multiple locations/items",
-    "throughout": "Throughout property",
-    "entire": "Entire system/area",
-    "all": "All instances",
-    "extensive": "Extensive work",
-    "widespread": "Widespread issue",
-    "localized": "Localized issue",
-    "isolated": "Isolated occurrence",
-}
-
-# ---------------------------------------------------------------------------
 # F4/F5/F6/F7/F8 — data quality validation
 # (src/validation/data_quality_validator.py)
 # ---------------------------------------------------------------------------
@@ -454,7 +426,6 @@ MEASUREMENT_RE = r"\d+\s*(inch|ft|year|degree|percent|%|\")"  # :590
 VALID_STATUSES = {
     "D", "I", "NI", "NP", "Deficient", "Inspected", "Not Inspected", "Not Present",
 }  # data_quality_validator.py:107
-VALID_PRIORITIES = {"critical", "high", "medium", "low", "info", "unknown"}
 
 MIN_DESCRIPTION_LENGTH = 5      # data_quality_validator.py:111
 MIN_QUALITY_SCORE = 0.3         # :112
@@ -521,7 +492,6 @@ SEVERITY_BOOSTERS = {
                  "structural", "foundation", "safety"],
     "high": ["roof", "hvac", "plumbing", "major system", "significant damage"],
 }  # severity_normalizer.py:54-57
-SEVERITY_SCORES = {"critical": 4, "high": 3, "medium": 2, "low": 1, "unknown": 0}
 
 # ---------------------------------------------------------------------------
 # C8 — action normalization (src/normalization/action_normalizer.py:17-113)

@@ -6,10 +6,9 @@ step that turns rows of that schema into the contract span table
 and, for ``pipeline``, enrichment after it.  ``ruled`` is the one
 stage whose bridge output is final: ruled-table rows, no extraction.
 
-The batch job (``tools/extract_job.py``), the scaling harness
-(``tools/run_scaling.py``) and continuous ingest
-(``streaming/extract.py``) all read :data:`STAGES`, so one stage
-definition serves both the table and the stream.
+The batch job (``tools/extract_job.py``) and the scaling harness
+(``tools/run_scaling.py``) both read :data:`STAGES`, so one stage
+definition serves both.
 """
 
 from __future__ import annotations

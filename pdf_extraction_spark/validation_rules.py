@@ -14,10 +14,10 @@ tests/test_phase1_improvements.py:277.
 
 Two forms:
 
-- ``validate_estimate`` / ``validate_batch``: the pure-python rule core
-  (exact reference semantics, both auto_correct modes, including the
-  top-level estimated_low/high "simple estimate" path) — used by unit
-  tests and anywhere a per-batch driver needs the full result object.
+- ``validate_estimate``: the pure-python rule core (exact reference
+  semantics, both auto_correct modes, including the top-level
+  estimated_low/high "simple estimate" path) — used by unit tests as
+  the reference for the column form.
 - ``with_validation``: the scale path — the same decision cascade as
   pure ``pyspark.sql.functions`` column expressions over a flat
   estimates DataFrame (one row per estimate, nullable min/max per
@@ -27,7 +27,7 @@ Two forms:
 
 from __future__ import annotations
 
-from typing import Any, Optional
+from typing import Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -338,42 +338,6 @@ def validate_estimate(estimate: dict, issue: Optional[dict] = None,
             "action": FLAG_FOR_REVIEW if should_review else ACCEPT,
             "errors": [], "warnings": warnings,
             "corrected_estimate": final}
-
-
-def validate_batch(estimates: list[dict],
-                   issues: Optional[list[dict]] = None) -> dict:
-    """Batch validation + summary stats (estimation_validator.py:722-783)."""
-    results, valid_out, flagged, failed = [], [], [], []
-    n_corrected = 0
-    for i, est in enumerate(estimates):
-        issue = issues[i] if issues and i < len(issues) else None
-        r = validate_estimate(est, issue)
-        results.append(r)
-        if r["corrected_estimate"] is not None:
-            n_corrected += 1
-        final = r["corrected_estimate"] or est
-        if r["valid"]:
-            valid_out.append(final)
-            if r["action"] == FLAG_FOR_REVIEW:
-                flagged.append(final)
-        else:
-            failed.append({"estimate": final, "reason": r["reason"],
-                           "errors": r["errors"]})
-    total = len(estimates)
-    return {
-        "valid_estimates": valid_out,
-        "flagged_estimates": flagged,
-        "failed_estimates": failed,
-        "results": results,
-        "summary": {
-            "total_validated": total,
-            "passed": len(valid_out),
-            "failed": len(failed),
-            "auto_corrected": n_corrected,
-            "flagged_for_review": len(flagged),
-            "pass_rate": (len(valid_out) / total * 100) if total else 0,
-        },
-    }
 
 
 # ---------------------------------------------------------------------------

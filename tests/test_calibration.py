@@ -20,54 +20,25 @@ def _store(n: int, variance_pct: float, category: str = "roofing",
 def test_factor_and_gating():
     # consistent +15% underestimates -> factor 1.15, applied
     store = _store(10, 15.0)
-    f = cal.best_calibration_factor(store, "roofing", "medium", "rule_based")
+    f = cal.calibration_factor(store, "roofing", "medium", "rule_based")
     assert f is not None
     assert abs(f["factor"] - 1.15) < 1e-9
     assert f["sample_count"] == 10
     assert cal.should_apply(f)
 
     # under the sample minimum -> no factor
-    assert cal.best_calibration_factor(
+    assert cal.calibration_factor(
         _store(3, 15.0), "roofing", "medium", "rule_based") is None
 
     # negligible adjustment (+1%) -> gated off
-    f2 = cal.best_calibration_factor(
+    f2 = cal.calibration_factor(
         _store(10, 1.0), "roofing", "medium", "rule_based")
     assert f2 is not None and not cal.should_apply(f2)
 
     # extreme adjustment (+60%) capped at 1.5 but gated (>1.35)
-    f3 = cal.best_calibration_factor(
+    f3 = cal.calibration_factor(
         _store(10, 60.0), "roofing", "medium", "rule_based")
     assert f3["factor"] == 1.5 and not cal.should_apply(f3)
-
-
-def test_specificity_ladder():
-    store = _store(10, 12.0, category="plumbing", complexity="simple",
-                   strategy="lookup_table")
-    # exact strategy missing -> falls back to category+complexity rung
-    f = cal.best_calibration_factor(store, "plumbing", "simple", "other")
-    assert f is not None and f["strategy"] == "any"
-    # unknown category -> complexity-only rung
-    f2 = cal.best_calibration_factor(store, "hvac", "simple", "other")
-    assert f2 is not None and f2["category"] == "any"
-
-
-def test_adjust_estimate():
-    store = _store(20, 15.0)
-    base = {"cost": {"labor": {"min": 100, "max": 200},
-                     "materials": {"min": 50, "max": 100},
-                     "permits": {"min": 150, "max": 150},
-                     "total": {"min": 300, "max": 450}}}
-    out = cal.adjust_estimate(store, base, "roofing", "medium", "rule_based")
-    assert out["calibration"]["status"] == "applied"
-    assert out["cost"]["labor"]["min"] == round(100 * 1.15, 2)
-    assert out["cost"]["total"]["max"] == round(450 * 1.15, 2)
-    # permits stay fixed (feedback_loop.py:316)
-    assert out["cost"]["permits"] == {"min": 150, "max": 150}
-
-    missing = cal.adjust_estimate(store, base, "unknown_cat", "complex", "x")
-    assert missing["calibration"]["status"] == "insufficient_data"
-    assert missing["cost"]["labor"]["min"] == 100
 
 
 def test_apply_calibration_df(spark):
@@ -99,8 +70,7 @@ def test_durable_store_roundtrip(spark, tmp_path):
 
     loaded = cal.CalibrationStore.load(spark, path)
     assert len(loaded.records) == 12
-    f = cal.best_calibration_factor(loaded, "roofing", "medium",
-                                    "rule_based")
+    f = cal.calibration_factor(loaded, "roofing", "medium", "rule_based")
     assert f is not None and f["sample_count"] == 12
     assert abs(f["factor"] - 1.15) < 1e-9  # mean of 20% and 10%
     assert cal.should_apply(f)

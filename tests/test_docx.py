@@ -1,5 +1,5 @@
 """DOCX ingestion (operators/docx.py): container + WordprocessingML
-parse, spans bridge, media parts, plan shape.  Exact-value gates:
+parse, spans bridge, damaged parts, plan shape.  Exact-value gates:
 ``docx_text``/``docx_spans`` (queries_docx.py, closed-form oracles)."""
 
 import io
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.docx import (build_docx_files,
                                                  build_one_docx,
-                                                 docx_media_from_files,
                                                  docx_rows_from_files,
                                                  docx_to_spans,
                                                  parse_docx)
@@ -90,24 +89,6 @@ def test_docx_spans_feed_fused_extraction(spark, docs):
     assert orders == sorted(orders)
 
 
-def test_docx_media_parts_parse_as_images(spark, docs):
-    """Cross-module: embedded media parts -> image_header_meta reads
-    the writer's planted dimensions (container -> bytes -> header
-    metadata, no codec)."""
-    from pdf_extraction_spark.operators.multimodal import \
-        image_header_meta
-    media = docx_media_from_files(build_docx_files(docs))
-    meta = image_header_meta(media.select(
-        F.col("doc_id").alias("media_ref"), "content"))
-    rows = meta.collect()
-    assert rows
-    for r in rows:
-        d = int(r["media_ref"])
-        assert d % 3 == 0
-        assert (r["mime"], r["width"], r["height"]) == \
-            ("image/png", 32 + d % 16, 24 + d % 8)
-
-
 def _damaged_media_docx(flip: int) -> bytes:
     """build_one_docx(6) plus a good copy of its image as image2.png,
     with byte ``flip`` of image1.png's stored data inverted."""
@@ -127,22 +108,16 @@ def _damaged_media_docx(flip: int) -> bytes:
 
 
 @pytest.mark.parametrize("flip", [0, 1])  # bad deflate data, bad CRC
-def test_damaged_media_part_skipped(spark, flip):
+def test_damaged_media_part_skipped(flip):
     blob = _damaged_media_docx(flip)
     with pytest.raises((zipfile.BadZipFile, zlib.error)):
         zipfile.ZipFile(io.BytesIO(blob)).read("word/media/image1.png")
-    files = spark.createDataFrame([("6", blob)], "doc_id string, docx binary")
-    rows = docx_media_from_files(files).collect()
-    good = zipfile.ZipFile(io.BytesIO(blob)).read("word/media/image2.png")
-    assert [(r["doc_id"], r["part"], bytes(r["content"])) for r in rows] \
-        == [("6", "word/media/image2.png", good)]
     assert len(parse_docx(blob)) == 4
 
 
 def test_docx_plans_are_map_only(spark, docs):
     files = build_docx_files(docs)
-    for df in (docx_rows_from_files(files), docx_to_spans(files),
-               docx_media_from_files(files)):
+    for df in (docx_rows_from_files(files), docx_to_spans(files)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
 

@@ -143,6 +143,28 @@ def test_salted_handles_unsorted_spans(spark):
             assert a[doc_id][key] == b[doc_id][key], f"{doc_id}.{key}"
 
 
+def test_salted_keeps_rows_that_share_a_doc_id(spark):
+    """Two input rows with the same doc_id, or both with a NULL one,
+    are two documents: the salted plan returns one row per input row,
+    the same multiset of rows as the fused plan."""
+    import json
+    from collections import Counter
+
+    base = corpus.generate_docs(spark, 4, partitions=1)
+    rows = base.orderBy("doc_id").collect()
+    docs = spark.createDataFrame(
+        [(d, r["spans"]) for d, r in zip(("dup", "dup", None, None), rows)],
+        base.schema)
+
+    def rows_of(df):
+        return Counter(json.dumps(r.asDict(recursive=True), sort_keys=True)
+                       for r in df.collect())
+
+    want = rows_of(assemble_fused(docs))
+    assert sum(want.values()) == 4
+    assert rows_of(assemble_salted(docs, chunk_spans=32)) == want
+
+
 def test_font_attributes_drive_priority(spark):
     """C2 (text_extractor.pyc:178-227, data_structurer.py:110-144): when
     the span/block schema carries the optional bold/underlined attrs,

@@ -102,9 +102,6 @@ _READERS = {
     "docx.docx_to_spans": (
         docx.docx_to_spans, "doc_id string, docx binary",
         lambda: docx.build_one_docx(6, TEXT), SPAN_SCHEMA),
-    "docx.docx_media_from_files": (
-        docx.docx_media_from_files, "doc_id string, docx binary",
-        lambda: docx.build_one_docx(6, TEXT), docx.MEDIA_SCHEMA),
     "pptx.pptx_rows_from_files": (
         pptx.pptx_rows_from_files, "doc_id string, pptx binary",
         lambda: pptx.build_one_pptx(6, TEXT), pptx.ROWS_SCHEMA),

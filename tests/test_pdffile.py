@@ -256,19 +256,9 @@ def test_page_tree_cycle_terminates():
     assert pf.page_texts() == ["(x) Tj \n"]
 
 
-_RULED = (b"72 628 420 72 re S "
-          b"212 628 m 212 700 l S 352 628 m 352 700 l S "
-          b"72 652 m 492 652 l S 72 676 m 492 676 l S "
-          b"BT /F1 10 Tf 76 688 Td (Item) Tj "
-          b"1 0 0 1 216 688 Tm (Qty) Tj "
-          b"1 0 0 1 76 660 Tm (pipe) Tj "
-          b"1 0 0 1 356 636 Tm (75) Tj ET")
-
-
 @pytest.mark.parametrize("reader", [
     "pages_from_files", "file_meta", "outline_table", "pdf_link_table",
-    "annot_table", "acroform_table", "files_to_spans",
-    "files_to_ruled_tables"])
+    "annot_table", "acroform_table", "files_to_spans"])
 def test_poisoned_file_skipped(spark, reader):
     """Every file reader parses through the one guard: a file whose
     parse raises contributes no rows, the good file's rows stay."""
@@ -279,7 +269,6 @@ def test_poisoned_file_skipped(spark, reader):
             "pdf_link_table": P.build_pdf_nav(3, TEXT),
             "annot_table": P.build_pdf_annots(3, TEXT),
             "acroform_table": P.build_pdf_acroform(3, TEXT),
-            "files_to_ruled_tables": P.wrap_content_stream(1, _RULED),
             }.get(reader, page)
     # same-length filter-name swap keeps every xref offset valid but
     # makes the content stream undecodable (unsupported media filter)
@@ -297,25 +286,6 @@ def test_poisoned_file_skipped(spark, reader):
          ("x", bytearray(locked))], schema)).collect())
     assert want and {r.doc_id for r in want} == {"g"}
     assert got == want
-
-
-def test_ruled_tables_keep_whole_doc_id(spark):
-    """The per-page key splits back at its first separator, so a
-    doc_id holding U+001F keeps its name and all its table rows, and
-    a NULL doc_id keeps its rows under a NULL id."""
-    from pdf_extraction_spark.operators.pdffile import (
-        files_to_ruled_tables, wrap_content_stream)
-
-    pdf = bytearray(wrap_content_stream(1, _RULED))
-    df = spark.createDataFrame(
-        [("site/a\x1fb", pdf), ("plain", pdf), (None, pdf)],
-        "doc_id string, pdf binary")
-    got = files_to_ruled_tables(df).orderBy("doc_id", "row_idx")
-    assert [(r.doc_id, r.page, r.row_idx, r.table_text)
-            for r in got.collect()] == [
-        (d, 0, k, t) for d in (None, "plain", "site/a\x1fb")
-        for k, t in enumerate(["Item | Qty | ", "pipe |  | ",
-                               " |  | 75"])]
 
 
 def test_hybrid_xrefstm():
@@ -969,33 +939,6 @@ def test_meta_kernel(spark, file_docs):
         assert r.n_pages == 2 and r.n_revisions == 2
         assert r.xref_kind == ("table" if i % 2 == 0 else "stream")
         assert r.title == f"Doc {i} rev2"
-
-
-def test_files_to_ruled_tables_end_to_end(spark):
-    """A drawn grid inside a real (wrapped) PDF file extracts as
-    ruled-table rows through the whole file layer, per page."""
-    from pdf_extraction_spark.operators.pdffile import (
-        files_to_ruled_tables, wrap_content_stream)
-    content = (b"72 628 420 72 re S "
-               b"212 628 m 212 700 l S 352 628 m 352 700 l S "
-               b"72 652 m 492 652 l S 72 676 m 492 676 l S "
-               b"BT /F1 10 Tf 76 688 Td (Item) Tj "
-               b"1 0 0 1 216 688 Tm (Qty) Tj "
-               b"1 0 0 1 76 660 Tm (pipe) Tj "
-               b"1 0 0 1 356 636 Tm (75) Tj ET")
-    rows = []
-    for variant in (0, 1):  # classic and stream xref
-        pdf = wrap_content_stream(variant, content)
-        df = spark.createDataFrame([(f"d{variant}", bytearray(pdf))],
-                                   "doc_id string, pdf binary")
-        got = files_to_ruled_tables(df) \
-            .orderBy("row_idx").collect()
-        rows.append([(r.page, r.tbl_idx, r.row_idx, r.table_text)
-                     for r in got])
-    assert rows[0] == rows[1] == [
-        (0, 0, 0, "Item | Qty | "),
-        (0, 0, 1, "pipe |  | "),
-        (0, 0, 2, " |  | 75")]
 
 
 def test_artifact_strip_through_whole_file_layer(spark):

@@ -129,66 +129,6 @@ def test_arrow_kernels_keep_plan_small(emb):
     assert len(_plan(similarity.cosine_topk(emb, q, k=10))) < 20_000
 
 
-def test_bucketed_stage_join_is_shuffle_free(spark, tmp_path):
-    """Stage outputs written bucketed by doc_id join and aggregate with
-    ZERO Exchange nodes — the 100 TB stage-handoff property
-    (sources/bucketed.py). The same join over plain parquet shuffles
-    both sides."""
-    from pdf_extraction_spark.sources.bucketed import (read_bucketed,
-                                                       write_bucketed)
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text")
-    stats = docs.select("doc_id", F.length("text").alias("n_chars"))
-
-    write_bucketed(docs, "bt_docs", buckets=4,
-                   path=str(tmp_path / "bt_docs"))
-    write_bucketed(stats, "bt_stats", buckets=4,
-                   path=str(tmp_path / "bt_stats"))
-    try:
-        a, b = read_bucketed(spark, "bt_docs"), read_bucketed(spark, "bt_stats")
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = a.join(b, "doc_id")
-            assert "Exchange" not in _plan(joined)
-
-            agg = a.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-            assert "Exchange" not in _plan(agg)
-
-            plain = docs.join(stats, "doc_id")
-            assert "Exchange" in _plan(plain)  # the shuffle bucketing removes
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bt_docs")
-        spark.sql("DROP TABLE IF EXISTS bt_stats")
-
-
-def test_ivf_partitioned_probe_prunes_partitions(spark, tmp_path, emb):
-    """The IVF cell-partitioned layout turns the nprobe predicate into a
-    partition prune (PartitionFilters at the scan, only probed cell
-    directories read) and returns exactly what the scan-filter ivf_topk
-    returns on the same vectors."""
-    from pdf_extraction_spark.operators.similarity import (
-        ivf_topk, ivf_topk_partitioned, ivf_write_partitioned)
-
-    path = str(tmp_path / "ivf")
-    q = [float(x) for x in emb.select("embedding").head()[0]]
-    cents = ivf_write_partitioned(emb, path, dim=64, n_list=8)
-
-    got = ivf_topk_partitioned(spark, path, q, cents, k=10, nprobe=2)
-    plan = _plan(got)
-    scan = plan[plan.index("FileScan"):].splitlines()[0]
-    assert "PartitionFilters: [" in scan and "cell" in scan.split(
-        "PartitionFilters:")[1]
-
-    want = [(r["vec_id"], r["cosine"])
-            for r in ivf_topk(emb, q, dim=64, k=10, n_list=8,
-                              nprobe=2).collect()]
-    assert [(r["vec_id"], r["cosine"]) for r in got.collect()] == want
-
-
 def _walk_jvm_plan(node):
     """Yield every node of a JVM SparkPlan tree (py4j)."""
     yield node

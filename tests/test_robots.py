@@ -8,8 +8,7 @@ spec edges the arithmetic writer doesn't reach."""
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.operators.robots import (crawl_delays,
-                                                   parse_robots,
+from pdf_extraction_spark.operators.robots import (parse_robots,
                                                    robots_allowed,
                                                    sitemap_urls)
 
@@ -96,14 +95,6 @@ def test_no_robots_host_allowed(spark):
     assert got == {("h1", "/x"): False, ("h2", "/x"): True}
 
 
-def test_crawl_delay_group_resolution(spark):
-    body = ("User-agent: me\nCrawl-delay: 1\n"
-            "User-agent: *\nCrawl-delay: 9\n")
-    rules = _rules(spark, body)
-    assert crawl_delays(rules, "me").collect()[0]["delay_sec"] == 1.0
-    assert crawl_delays(rules, "other").collect()[0]["delay_sec"] == 9.0
-
-
 def test_sitemap_urlset_and_index(spark):
     xml = ("<urlset><url><loc> https://e/a </loc>"
            "<lastmod>2026-01-02</lastmod></url>"
@@ -154,26 +145,3 @@ def test_feed_entries_rss_and_atom(spark):
         "https://e/a": ("rss", "A", "Tue, 01 Jul 2026 10:00:00 GMT"),
         "https://e/c": ("atom", "C", "2026-07-01T10:00:00Z"),
         "https://e/d": ("atom", "D", "2026-07-03T00:00:00Z")}
-
-
-def test_frontier_candidates_composition(spark):
-    """Composed frontier stage: outlinks -> normalize -> deny-list ->
-    robots admission -> distinct, guards wired by default."""
-    from pdf_extraction_spark.operators.robots import \
-        frontier_candidates
-    pages = spark.createDataFrame([
-        ("p1", '<html><body><a href="https://good.example/page1">x'
-               '</a><a href="https://good.example/private/x">y</a>'
-               '<a href="https://ads.bad.example/z">z</a>'
-               '<a href="/rel">rel</a>'
-               '<a href="https://good.example/page1">dup</a>'
-               '</body></html>')], "doc_id string, html string")
-    robots = spark.createDataFrame(
-        [("good.example", "User-agent: *\nDisallow: /private\n")],
-        "host string, robots string")
-    out = frontier_candidates(pages, robots,
-                              denylist=["bad.example"])
-    rows = sorted((r["url_norm"], r["allowed"]) for r in out.collect())
-    # relative link (no host) and denylisted host dropped; dup folded
-    assert rows == [("https://good.example/page1", True),
-                    ("https://good.example/private/x", False)]

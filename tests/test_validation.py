@@ -137,17 +137,6 @@ def test_houston_rate_warning():
     assert any("plumbing" in w for w in r["warnings"])
 
 
-def test_validate_batch_summary():
-    ests = [_estimate(_cost()),
-            _estimate(_cost(l=(100, 500), m=(50, 250), t=(150, 750))),
-            _estimate(_cost(t=(300, 600)))]
-    out = vr.validate_batch(ests)
-    s = out["summary"]
-    assert s["total_validated"] == 3
-    assert s["passed"] == 2 and s["failed"] == 1
-    assert s["auto_corrected"] >= 1
-
-
 # -- columnar form vs python core on the gate's 18 case families --
 
 def _flat_to_estimate(row):

@@ -27,8 +27,7 @@ from pyspark.sql import Window, functions as F
 
 sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
 
-from pdf_extraction_spark.operators.layout import (block_text,
-                                                   layout_page,
+from pdf_extraction_spark.operators.layout import (layout_page,
                                                    reconstruct_blocks,
                                                    spans_from_runs)
 from pdf_extraction_spark.operators.pdfstream import (fontmaps_json,
