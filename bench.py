@@ -274,7 +274,7 @@ def main() -> None:
     timed("k_xlsx", lambda: noop(xlsx_to_spans(xlsxs)))
     xlsxs.unpersist()
     # EPUB ingestion: zip + container/OPF/spine resolution + the gated
-    # html block classifier per chapter + per-book reassembly
+    # html block classifier over each book's chapters, map-only
     from pdf_extraction_spark.operators.epub import (build_epub_files,
                                                      epub_to_spans)
     epubs = build_epub_files(dtab).persist()

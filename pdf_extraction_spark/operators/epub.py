@@ -14,12 +14,10 @@ block classification, ``<img>`` media spans — one implementation of
 HTML semantics for crawl pages, WARC payloads and book chapters
 alike.
 
-Shape: container parse + per-chapter classification fuse into ONE
-map-only scan stage; the only exchange is the per-book chapter
-reassembly (collect chapters in spine order and re-offset globally),
-the same bounded per-doc shuffle the PDF page layer pays — at
-10^9-book scale both sides of that exchange are embarrassingly
-parallel.
+Shape: ONE map-only scan stage and no exchange.  A book's file holds
+all its chapters, so the task that parses the container also
+classifies every chapter and numbers the book's spans; each input row
+stays its own output row, ids shared or NULL included.
 
 Reference anchor: the reference ingests PDFs only
 (``/root/reference/src/pipeline.py``); the office/ebook families are
@@ -47,8 +45,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .filepass import (file_pass, id_number, part_key, split_part_key,
-                       zip_member)
+from .filepass import file_pass, id_number, zip_member
 
 _ROOTFILE = re.compile(r'<rootfile [^>]*full-path="([^"]+)"')
 _ITEM = re.compile(r'<item (?=[^>]*id="([^"]+)")(?=[^>]*href="'
@@ -110,70 +107,27 @@ def parse_epub(data: bytes) -> list[dict[str, Any]]:
     return rows
 
 
-CHAPTERS_SCHEMA = ("doc_id string, chapter int, path string, "
-                   "html string")
-
-
-def _chapter_rows(_key: str, blob: bytes | None) -> list[tuple]:
-    # a damaged/empty book yields the sentinel chapter 0 so it
-    # surfaces as an empty-span document downstream instead of
-    # vanishing (same contract as the docx/pptx/xlsx bridges, which
-    # keep the row with an empty spans array)
-    return [(r["chapter"], r["path"], r["html"])
-            for r in parse_epub(blob or b"")] or [(0, None, "")]
-
-
-def epub_chapters_from_files(files: DataFrame,
-                             bytes_col: str = "epub",
-                             id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, epub binary) -> one row per chapter in spine order.
-    ONE map-only ``file_pass`` (zero shuffle, zero joins)."""
-    return file_pass(files, id_col, [bytes_col], CHAPTERS_SCHEMA,
-                     _chapter_rows)
-
-
 def epub_to_spans(files: DataFrame, bytes_col: str = "epub",
                   id_col: str = "doc_id") -> DataFrame:
     """EPUB files -> BASELINE.json contract span arrays: every
     chapter through the gated html block classifier
-    (``html.html_to_spans`` — content blocks as text spans,
-    ``<img src>`` as media spans), chapters concatenated in spine
-    order with globally gapless offsets.
+    (``html.html_blocks_col`` -> ``html.block_spans`` — content blocks
+    as text spans, ``<img src>`` as media spans), chapters
+    concatenated in spine order with globally gapless offsets.
 
-    Plan: container parse + per-chapter block classification fuse
-    into the scan stage (the composite chapter||doc_id key keeps each
-    chapter one row — the same giant-doc skew story as the PDF page
-    layer); ONE exchange reassembles books.  ``filepass.part_key``
-    gives every doc_id back whole, a NULL one included."""
-    from .html import html_to_spans
+    Plan: ONE map-only ``file_pass`` reads each book's chapter html in
+    spine order, and the classification runs over the flattened
+    per-book block array in the same scan stage — zero exchanges, one
+    output row per input row.  A damaged book has no chapters and
+    surfaces as an empty spans array, like the docx/pptx/xlsx
+    bridges."""
+    from .html import block_spans, html_blocks_col
 
-    ch = epub_chapters_from_files(files, bytes_col, id_col)
-    keyed = ch.select(
-        part_key(F.col("chapter"), F.col("doc_id")).alias("doc_id"), "html")
-    sp = html_to_spans(keyed)
-    # explode_outer keeps zero-span chapters (including the damaged-
-    # book sentinel row) as a null-span row, so every input doc_id
-    # survives the groupBy as at least an empty spans array — the
-    # family-wide contract; the null entries are filtered out of the
-    # collected array below.  Still join-free.
-    chapter, doc_id = split_part_key(F.col("doc_id"))
-    rows = sp.select(doc_id.alias("doc_id"), chapter.alias("chapter"),
-                     F.explode_outer("spans").alias("s"))
-    # lexicographic struct sort: (chapter, in-chapter offset) first
-    arr = F.filter(
-        F.array_sort(F.collect_list(F.struct(
-            F.col("chapter"), F.col("s.offset").alias("o"),
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref")))),
-        lambda x: x["kind"].isNotNull())
-    spans = F.transform(
-        arr,
-        lambda x, i: F.struct(
-            x["kind"].alias("kind"), x["text"].alias("text"),
-            x["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset")))
-    return rows.groupBy("doc_id").agg(spans.alias("spans"))
+    books = file_pass(
+        files, id_col, [bytes_col], "doc_id string, chapters array<string>",
+        lambda _key, blob: [([r["html"] for r in parse_epub(blob or b"")],)])
+    blocks = F.flatten(F.transform("chapters", html_blocks_col))
+    return books.select("doc_id", block_spans(blocks).alias("spans"))
 
 
 # ------------------------------------------------ deterministic writer

@@ -21,7 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _NON_DIGIT = re.compile(r"\D")
-_SEP = "\x1f"
 
 
 def file_pass(df: DataFrame, id_col: str,
@@ -63,23 +62,6 @@ def id_number(key: str) -> int:
     the digits of the id string, 0 when it has none (``'doc-17'`` ->
     17), so string ids from any source pick a stable variant."""
     return int(_NON_DIGIT.sub("", key) or 0)
-
-
-def part_key(part: Column, doc_id: Column) -> Column:
-    """One string key per (part number, doc_id), so a document's pages
-    or chapters are separate rows for a per-part stage: the part's
-    digits, then the separator and the doc_id when it is not NULL."""
-    return F.concat(part.cast("string"),
-                    F.coalesce(F.concat(F.lit(_SEP), doc_id), F.lit("")))
-
-
-def split_part_key(key: Column) -> tuple[Column, Column]:
-    """``part_key``'s (part, doc_id): the key splits at its first
-    separator, so every doc_id string comes back whole, and a key
-    without one gives back the NULL doc_id it was made from."""
-    at = F.instr(key, _SEP)
-    return (F.substring_index(key, _SEP, 1).cast("int"),
-            F.when(at > 0, F.substr(key, at + 1)))
 
 
 def zip_member(zf: zipfile.ZipFile, name: str) -> bytes | None:

@@ -267,9 +267,18 @@ def html_to_spans(docs: DataFrame, html_col: str = "html",
     plus a filter/transform over the per-doc block array, so at crawl
     scale it fuses into the scan stage of the extraction job it feeds.
     """
-    bl = html_blocks_col(F.col(html_col))
-    keep = F.filter(bl, lambda b: b["cls"].isin("content", "media"))
-    spans = F.transform(
+    return docs.select(F.col(id_col).cast("string").alias("doc_id"),
+                       block_spans(html_blocks_col(F.col(html_col)))
+                       .alias("spans"))
+
+
+def block_spans(blocks: Column) -> Column:
+    """Classified blocks (``html_blocks_col``) -> contract spans: the
+    content blocks as ``text`` spans, the media blocks as ``media``
+    spans with the src as ``media_ref``, in block order with gapless
+    0-based offsets."""
+    keep = F.filter(blocks, lambda b: b["cls"].isin("content", "media"))
+    return F.transform(
         keep,
         lambda b, i: F.struct(
             F.when(b["cls"] == "media", F.lit("media"))
@@ -279,8 +288,6 @@ def html_to_spans(docs: DataFrame, html_col: str = "html",
             F.when(b["cls"] == "media", b["text"])
              .otherwise(F.lit("")).alias("media_ref"),
             i.cast("int").alias("offset")))
-    return docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                       spans.alias("spans"))
 
 
 # ---------------------------------------------------------- tables

@@ -2631,16 +2631,21 @@ def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
     from .pdfstream import spans_pass
 
     use_maps = kw.pop("maps_col", "fontmaps") is not None
-
-    def pages_of(blob: bytes | None, memo: dict) -> list | None:
-        for texts, fonts, forms in _parsed(blob, _page_payloads):
-            if not use_maps:
-                return [[(txt, None, None)] for txt in texts]
-            return [[(txt, fonts[pg] if pg < len(fonts) else None,
-                      forms[pg] if pg < len(forms) else None)]
-                    for pg, txt in enumerate(texts)]
-        return None
-
     sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
                        F.col(bytes_col).alias("pdf"))
-    return spans_pass(sel, pages_of, **kw)
+    return spans_pass(sel, lambda blob, _memo: file_pages(blob, use_maps),
+                      **kw)
+
+
+def file_pages(blob: bytes | None, use_maps: bool = True) -> list | None:
+    """One PDF file -> its `pdfstream.doc_spans` page list, each page
+    one ``(stream, font_maps, forms)`` content stream, or None when the
+    parse raises (the shared ``_parsed`` guard).  ``use_maps=False``
+    leaves out the font maps and Form XObjects."""
+    for texts, fonts, forms in _parsed(blob, _page_payloads):
+        if not use_maps:
+            return [[(txt, None, None)] for txt in texts]
+        return [[(txt, fonts[pg] if pg < len(fonts) else None,
+                  forms[pg] if pg < len(forms) else None)]
+                for pg, txt in enumerate(texts)]
+    return None

@@ -62,7 +62,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .filepass import file_pass, id_number
+from .filepass import element_spans, file_pass, id_number
 
 # ------------------------------------------------------------ gzip
 
@@ -525,6 +525,8 @@ PPTX_MIME = ("application/vnd.openxmlformats-officedocument."
 XLSX_MIME = ("application/vnd.openxmlformats-officedocument."
              "spreadsheetml.sheet")
 EPUB_MIME = "application/epub+zip"
+# the response types `_binary_spans` parses in-process
+_BINARY_MIMES = (PDF_MIME, DOCX_MIME, PPTX_MIME, XLSX_MIME)
 
 
 def dedupe_captures(recs: DataFrame) -> DataFrame:
@@ -532,9 +534,8 @@ def dedupe_captures(recs: DataFrame) -> DataFrame:
     re-crawls are routine in crawl segments — a segment can carry two
     response records for one URI — and since dispatch keys documents by
     target URI, distinct captures of one URI would otherwise collide:
-    the pdf/epub branches groupBy doc_id and would interleave pages from
-    different captures into one corrupted span array, and the flat
-    families would emit duplicate doc_id rows.  Winner = max
+    every family would emit one row per capture under the same doc_id.
+    Winner = max
     (WARC-Date as an instant, raw WARC-Date, warc_id, rec_idx), so the
     newest capture is kept with a total deterministic tie-break: dates
     of mixed precision ('...:00Z' vs '...:00.500Z') compare as the
@@ -586,45 +587,17 @@ def _status_ok() -> Column:
             | (F.col("http_status") == 200))
 
 
-def _media_span_docs(media_recs: DataFrame) -> DataFrame:
-    """Standalone image ``resource`` records -> single-media-span
-    documents.  The span's ``text`` carries the typed
-    header metadata ('<mime> <width>x<height>', e.g. 'image/png
-    16x9') sniffed from the container bytes by
-    ``multimodal.sniff_image`` — PNG/JPEG/GIF/BMP/WebP, header bytes
-    only, one map-only Arrow pass, no codec library — so dispatch
-    output preserves image dimensions without a decode stage."""
-    from .multimodal import image_header_meta
-    sel = media_recs.select(F.col("target_uri").alias("doc_id"),
-                            F.col("payload"))
-    meta = image_header_meta(sel, bytes_col="payload", ref_col="doc_id")
-    sel = meta.select(
-        F.col("media_ref").alias("doc_id"),
-        F.when(F.col("mime").isNull(), F.lit(""))
-        .when(F.col("width").isNull(), F.col("mime"))
-        .otherwise(F.concat_ws(
-            " ", F.col("mime"),
-            F.concat_ws("x", F.col("width"), F.col("height"))))
-        .alias("_meta"))
-    return sel.select(
-        "doc_id",
-        F.array(F.struct(
-            F.lit("media").alias("kind"),
-            F.col("_meta").alias("text"),
-            F.col("doc_id").alias("media_ref"),
-            F.lit(0).cast("int").alias("offset"))).alias("spans"))
-
-
 def dispatch_spans(recs: DataFrame, ok_only: bool = True,
                    dedupe: bool = True) -> DataFrame:
     """Typed WARC record rows -> ONE unified contract span table
     ``(doc_id, spans array<struct<kind,text,media_ref,offset>>)``,
     routed by effective media type: ``text/html`` responses through
-    the ``html_to_spans`` bridge, ``application/pdf`` through the
-    whole-file parser chain (``pdffile.files_to_spans``),
-    WordprocessingML / PresentationML through the office parsers,
-    and standalone image ``resource`` records as single-media-span
-    documents.  doc_id =
+    the ``html_to_spans`` bridge, EPUB responses through
+    ``epub.epub_to_spans``, and the binary families through one routed
+    pass (``_binary_spans``): ``application/pdf`` through the
+    whole-file parser chain, WordprocessingML / PresentationML /
+    SpreadsheetML through the office parsers, and standalone image
+    ``resource`` records as single-media-span documents.  doc_id =
     WARC-Target-URI throughout (the crawl-native identity).
 
     This is the 'one segment, any payload' move a crawl-shaped corpus
@@ -638,20 +611,21 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
 
     Shape: with ``dedupe`` (default) the record rows pay ONE shuffle —
     the latest-capture-per-URI ``dedupe_captures`` aggregation, which
-    crawl semantics require (see its docstring) — after which the
-    html/pdf/docx/pptx/xlsx/media branches are map-only; the epub
-    branch pays its documented bounded per-doc reassembly exchange.
-    No joins (plan-asserted in tests/test_warc.py; the one-stage pdf
-    branch in tests/test_plan_shapes.py).
+    crawl semantics require (see its docstring).  After it the plan is
+    a union of three map-only branches (html, epub, the binary pass)
+    with no exchange and no join (plan-asserted in
+    tests/test_plan_shapes.py and tests/test_warc.py): every family
+    kernel takes milliseconds per file, so the cost to save is the
+    planning and the per-branch Python round trip, not the kernels.
 
     The input must be a landed, deduped records table passed with
     ``dedupe=False``, or use ``warc_dispatch_spans``: over an
-    un-landed ``records_from_warc`` plan every family branch re-runs
-    the container parse, and an in-plan dedupe re-runs its exchange
-    once per branch."""
-    from .docx import docx_to_spans
+    un-landed ``records_from_warc`` plan every branch re-runs the
+    container parse, and an in-plan dedupe re-runs its exchange once
+    per branch."""
+    from ..corpus import SPAN_SCHEMA  # local: corpus loads pandas
+    from .epub import epub_to_spans
     from .html import html_to_spans
-    from .pdffile import files_to_spans
 
     if ok_only:
         recs = recs.where(_status_ok())
@@ -662,35 +636,58 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
         resp.where(F.col("content_type").isin(*HTML_MIMES))
             .select(F.col("target_uri").alias("doc_id"),
                     F.col("text").alias("html")))
-    pdf = files_to_spans(
-        resp.where(F.col("content_type") == PDF_MIME)
-            .select(F.col("target_uri").alias("doc_id"),
-                    F.col("payload").alias("pdf")))
-    docx = docx_to_spans(
-        resp.where(F.col("content_type") == DOCX_MIME)
-            .select(F.col("target_uri").alias("doc_id"),
-                    F.col("payload").alias("docx")))
-    from .pptx import pptx_to_spans
-    pptx = pptx_to_spans(
-        resp.where(F.col("content_type") == PPTX_MIME)
-            .select(F.col("target_uri").alias("doc_id"),
-                    F.col("payload").alias("pptx")))
-    from .xlsx import xlsx_to_spans
-    xlsx = xlsx_to_spans(
-        resp.where(F.col("content_type") == XLSX_MIME)
-            .select(F.col("target_uri").alias("doc_id"),
-                    F.col("payload").alias("xlsx")))
-    from .epub import epub_to_spans
     epub = epub_to_spans(
         resp.where(F.col("content_type") == EPUB_MIME)
             .select(F.col("target_uri").alias("doc_id"),
                     F.col("payload").alias("epub")))
-    media = _media_span_docs(
-        recs.where((F.col("warc_type") == "resource") &
-                   F.col("content_type").startswith("image/")))
-    return html.unionByName(pdf).unionByName(docx) \
-        .unionByName(pptx).unionByName(xlsx).unionByName(epub) \
-        .unionByName(media)
+    binary = file_pass(
+        recs.where(((F.col("warc_type") == "response")
+                    & F.col("content_type").isin(*_BINARY_MIMES))
+                   | ((F.col("warc_type") == "resource")
+                      & F.col("content_type").startswith("image/"))),
+        "target_uri", ["content_type", "payload"], SPAN_SCHEMA,
+        _binary_spans)
+    return html.unionByName(binary).unionByName(epub)
+
+
+def _binary_spans(uri: str | None, ctype: str, blob: bytes | None
+                  ) -> list[tuple]:
+    """One binary payload -> its ``(spans,)`` dispatch row, by media
+    type, through the same in-process kernels as the family bridges:
+
+    - a PDF takes ``pdffile.file_pages`` -> ``pdfstream.doc_spans``
+      (`pdffile.files_to_spans`); a file whose parse raises or that
+      yields no spans emits no row;
+    - a docx, pptx or xlsx file is ``filepass.element_spans`` over its
+      parser and always emits a row, empty for a damaged container;
+    - an image ``resource`` is one media span whose ``media_ref`` is
+      the URI and whose ``text`` is the header metadata
+      ``multimodal.sniff_image`` reads from the container bytes (no
+      codec, no decode): '<mime> <width>x<height>' (e.g. 'image/png
+      16x9'), the mime alone when the header gives no size, '' for an
+      unknown signature."""
+    from .docx import parse_docx
+    from .multimodal import sniff_image
+    from .pdffile import file_pages
+    from .pdfstream import doc_spans
+    from .pptx import parse_pptx
+    from .xlsx import parse_xlsx
+
+    blob = blob or b""
+    if ctype == PDF_MIME:
+        pages = file_pages(blob)
+        spans = doc_spans(pages) if pages else None
+        return [(spans,)] if spans else []
+    office = {DOCX_MIME: parse_docx, PPTX_MIME: parse_pptx,
+              XLSX_MIME: parse_xlsx}.get(ctype)
+    if office is not None:
+        return [(element_spans(office(blob)),)]
+    mime, width, height, _depth = sniff_image(blob)
+    text = "" if mime is None else mime if width is None else \
+        mime + " " + "x".join(str(v) for v in (width, height)
+                              if v is not None)
+    return [([{"kind": "media", "text": text, "media_ref": uri,
+               "offset": 0}],)]
 
 
 def warc_dispatch_spans(files: DataFrame,
@@ -703,17 +700,16 @@ def warc_dispatch_spans(files: DataFrame,
     captures deduped ONCE, and the DEDUPED records are what lands: with ``stage_dir`` as parquet (each family branch then
     reads only its rows/columns from the landed table, min/max +
     dictionary pruning on ``content_type``), otherwise via an eager
-    ``localCheckpoint``, so the seven family branches are pure map
-    stages over storage.
+    ``localCheckpoint``, so the three dispatch branches (html, epub,
+    the routed binary pass) are pure map stages over storage.
 
-    Landing AFTER the dedupe matters: the family branches filter on
+    Landing AFTER the dedupe matters: the branches filter on
     ``warc_type``, which is a dedupe GROUPING key, so Catalyst legally
     pushes each branch's filter through the aggregate — the branches'
     dedupe subplans stop being identical, exchange reuse never fires,
     and an un-landed composition re-runs the dedupe shuffle once per
-    family (measured: 7 exchanges in the plan).  With the deduped
-    table landed there is exactly ONE parse and ONE dedupe exchange
-    in the whole job.
+    branch.  With the deduped table landed there is exactly ONE parse
+    and ONE dedupe exchange in the whole job.
 
     For production runs prefer ``stage_dir`` (durable parquet,
     survives executor loss; localCheckpoint storage does not)."""

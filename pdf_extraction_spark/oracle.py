@@ -367,4 +367,6 @@ def _property_metadata(text: str) -> dict:
         if m:
             out["location"] = re.sub(r"\s+", " ", m.group(1)).strip()
             break
+    for k in rules.INT32_FIELDS:
+        out[k] = rules.int32_or_none(out[k])
     return out

@@ -195,7 +195,7 @@ def doc_metadata(spans: DataFrame) -> DataFrame:
 
     sqft = _first_match(t2, rules.SQFT_PATTERNS, "(?i)")
     years = [_ascii_digits(_ne(F.regexp_extract(
-        t2, rules.jre("(?i)" + p), 1))).cast("int")
+        t2, rules.jre("(?i)" + p), 1))).try_cast("int")
              for p in rules.YEAR_PATTERNS]
     year = F.coalesce(*[
         F.when(y.between(rules.YEAR_MIN, rules.YEAR_MAX), y) for y in years])
@@ -222,14 +222,14 @@ def doc_metadata(spans: DataFrame) -> DataFrame:
                 _ne(F.regexp_extract(t1, rules.jre(rules.ADDRESS_TX_RE), 1)),
                 _ne(F.regexp_extract(t1, rules.jre(rules.ADDRESS_ANY_RE), 1)),
                 F.lit(None).cast("string")).alias("property_address"),
-            _ascii_digits(F.regexp_replace(sqft, ",", "")).cast("int")
+            _ascii_digits(F.regexp_replace(sqft, ",", "")).try_cast("int")
             .alias("square_footage"),
             year.alias("year_built"),
             stories.alias("stories"),
             _pystrip(_first_match(t2, rules.HOME_TYPE_PATTERNS, "(?i)")).alias("home_type"),
             _first_match(t2, rules.LOT_PATTERNS, "(?i)").alias("lot_size"),
             _ascii_digits(_first_match(t2, rules.BED_PATTERNS, "(?i)"))
-            .cast("int").alias("bedrooms"),
+            .try_cast("int").alias("bedrooms"),
             _ascii_digits(_first_match(t2, rules.BATH_PATTERNS, "(?i)"))
             .cast("double").alias("bathrooms"),
             _pystrip(F.regexp_replace(loc, rules.jre(r"\s+"), " ")).alias("location"),

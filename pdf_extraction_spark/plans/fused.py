@@ -251,6 +251,8 @@ def _metadata_records(page1: pa.Array, first2: pa.Array,
     cols = {"total_pages": total_pages,
             "report_type": np.where(estimate, "estimate", "inspection"),
             **_cascades(page1, _S1, ""), **_cascades(first2, _T7, "(?i)")}
+    for name in rules.INT32_FIELDS:
+        cols[name] = [rules.int32_or_none(v) for v in cols[name]]
     return pa.StructArray.from_arrays(
         [pa.array(cols[f.name], type=f.type) for f in _META_T],
         fields=list(_META_T))
@@ -656,13 +658,9 @@ def assemble_auto(docs: DataFrame, giant_spans: int | None = 500_000,
     the merge's fold is one task per doc and costs about what the
     classification does. 500k spans is about a 40 MB document.
 
-    ``giant_spans=None``, or a streaming input, degrades to the pure
-    fused plan: the salted branch's grouped merge does not run on a
-    stream, and micro-batches already bound per-task work.  The one
-    stream entry point, ``streaming/extract.extract_stream``, calls
-    ``assemble_fused`` directly.
+    ``giant_spans=None`` degrades to the pure fused plan.
     """
-    if giant_spans is None or docs.isStreaming:
+    if giant_spans is None:
         return assemble_fused(docs)
     from pyspark.sql import functions as F
 

@@ -21,13 +21,11 @@ from pyspark.sql import functions as F
 from . import enrich_rules as er
 from . import rules
 from .queries import _pick, _sql_list
-from .queries_enrich import ITEMS, PHRASES, _like_any, _pick_sql
+from .queries_enrich import ITEMS, N_DOCS, PHRASES, _like_any, _pick_sql
 
 # ---------------------------------------------------------------------------
 # Derived rich-text issues (attribute/classification inputs)
 # ---------------------------------------------------------------------------
-
-N_DOCS = 50
 
 LOC_SFX = ["", " in the kitchen area", " at the master bedroom",
            " near the attic entry", " on the second floor front exterior"]

@@ -334,6 +334,15 @@ LOCATION_PATTERNS = [
     r"(?:location|address|property\s*address)[:\s]*([^\n]+)",
     r"(Houston,?\s*(?:TX|Texas))",
 ]
+# the int32 metadata fields: a value outside int32 (a page can say
+# "50583683820 bedrooms") is NULL in every plan, not a failed task
+INT32_FIELDS = ("square_footage", "year_built", "stories", "bedrooms")
+
+
+def int32_or_none(v: int | None) -> int | None:
+    """``v`` when it fits a signed 32-bit int, else None."""
+    return v if v is None or -2**31 <= v < 2**31 else None
+
 
 # ---------------------------------------------------------------------------
 # F4/F5/F6/F7/F8 — data quality validation

@@ -469,8 +469,7 @@ def test_epub_damaged_book_surfaces_as_empty_spans(spark):
 
 
 def test_epub_spans_keep_whole_doc_id(spark):
-    """The per-chapter key splits back at its first separator, so a
-    doc_id holding U+001F comes back whole with every chapter's
+    """A doc_id holding U+001F comes back whole with every chapter's
     spans, the same as a plain id; a NULL doc_id comes back as one
     NULL-id book, not one fake document per chapter."""
     from pdf_extraction_spark.operators.epub import (build_one_epub,
@@ -484,6 +483,32 @@ def test_epub_spans_keep_whole_doc_id(spark):
     assert len(got) == 3 and set(rows) == {"site/a\x1fb", "plain", None}
     assert rows["site/a\x1fb"] == rows["plain"] and len(rows["plain"]) > 4
     assert rows[None] == rows["plain"]
+
+
+def test_epub_rows_that_share_an_id_stay_apart(spark):
+    """Two books under one doc_id, or both under a NULL one, are two
+    documents: each comes back as its own row with its own spans, as
+    docx_to_spans does, never merged into one interleaved book."""
+    from collections import Counter
+
+    from pdf_extraction_spark.operators.docx import (build_one_docx,
+                                                     docx_to_spans)
+    from pdf_extraction_spark.operators.epub import (build_one_epub,
+                                                     epub_to_spans)
+
+    def rows(fn, build, col):
+        files = spark.createDataFrame(
+            [(d, bytearray(build(n, "hello " * 40)))
+             for d, n in (("dup", 1), ("dup", 2), (None, 1), (None, 2))],
+            f"doc_id string, {col} binary")
+        return Counter((r["doc_id"], len(r["spans"]))
+                       for r in fn(files).collect())
+
+    # book 1 has one chapter (4 spans), book 2 two chapters (8 spans)
+    assert rows(epub_to_spans, build_one_epub, "epub") == Counter(
+        [("dup", 4), ("dup", 8), (None, 4), (None, 8)])
+    docx = rows(docx_to_spans, build_one_docx, "docx")
+    assert Counter(d for d, _ in docx.elements()) == {"dup": 2, None: 2}
 
 
 def test_pptx_root_level_slide_part_with_rels():

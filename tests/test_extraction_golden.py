@@ -117,6 +117,23 @@ def test_summary_equality(results):
             assert g[k] == wv, f"{doc_id}: summary {k}: {g[k]} != {wv}"
 
 
+def test_int_metadata_outside_int32_is_null(spark):
+    """A metadata number past int32 ("50583683820 bedrooms" on a
+    hostile page) is NULL in every plan and in the oracle, instead of
+    failing the task; the other fields still extract."""
+    texts = ["Report Number: R-17", "50583683820 bedrooms",
+             "Living area: 2,150 sq ft", "Year built: 1985"]
+    spans = [{"kind": "text", "text": t, "media_ref": "", "offset": k}
+             for k, t in enumerate(texts)]
+    want = oracle.extract_doc("d1", spans)["metadata"]
+    assert want["bedrooms"] is None
+    assert (want["square_footage"], want["year_built"]) == (2150, 1985)
+    docs = spark.createDataFrame([("d1", spans)], corpus.SPAN_SCHEMA)
+    for name, plan in PLANS.items():
+        got = plan(docs).collect()[0]["metadata"].asDict()
+        assert {k: got[k] for k in want} == want, name
+
+
 def test_salted_handles_unsorted_spans(spark):
     """Span arrays stored out of offset order, with page-1 spans that
     share an offset, must still produce output identical to the fused

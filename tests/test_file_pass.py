@@ -114,9 +114,6 @@ _READERS = {
     "xlsx.xlsx_to_spans": (
         xlsx.xlsx_to_spans, "doc_id string, xlsx binary",
         lambda: xlsx.build_one_xlsx(6, TEXT), SPAN_SCHEMA),
-    "epub.epub_chapters_from_files": (
-        epub.epub_chapters_from_files, "doc_id string, epub binary",
-        lambda: epub.build_one_epub(6, TEXT), epub.CHAPTERS_SCHEMA),
     "warc.records_from_warc": (
         warc.records_from_warc, "warc_id string, warc binary",
         lambda: warc.build_one_warc(6, TEXT), warc.RECORDS_SCHEMA),

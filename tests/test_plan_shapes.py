@@ -259,33 +259,39 @@ def test_pdf_bridge_one_docid_exchange(spark):
 
 def test_pdf_file_bridge_is_one_stage(spark):
     """files_to_spans is parse -> tokenize -> layout -> offsets in one
-    mapInArrow: no Exchange, in its own plan or as dispatch_spans'
-    PDF branch (the Union child that filters on application/pdf)."""
+    mapInArrow with no Exchange.  Over landed records dispatch_spans
+    has no Exchange at all: the pdf, docx, pptx, xlsx and image rows
+    take ONE routed mapInArrow, and epub_to_spans is map-only too."""
+    import re
+
+    from pdf_extraction_spark.operators.epub import (build_epub_files,
+                                                     epub_to_spans)
     from pdf_extraction_spark.operators.pdffile import (build_pdf_files,
                                                         files_to_spans)
     from pdf_extraction_spark.operators.warc import (
-        PDF_MIME, build_mixed_warc_files, dispatch_spans,
+        _BINARY_MIMES, build_mixed_warc_files, dispatch_spans,
         records_from_warc)
     from pdf_extraction_spark.queries_html import _media_page_expr
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .where(F.col("doc_id") < 8).select("doc_id", "text")
     assert "Exchange" not in _plan(files_to_spans(build_pdf_files(docs)))
+    assert "Exchange" not in _plan(epub_to_spans(build_epub_files(docs)))
 
     pages = docs.select(
         "doc_id", F.coalesce("text", F.lit("")).alias("t")).select(
         "doc_id", F.col("t").alias("text"),
         F.expr(_media_page_expr("CAST(doc_id AS STRING)")).alias("html"))
-    recs = records_from_warc(build_mixed_warc_files(pages))
-    root = dispatch_spans(recs, dedupe=False)._jdf.queryExecution() \
-        .executedPlan().executedPlan()
-    union = root
-    while union.getClass().getSimpleName() != "UnionExec":
-        union = union.children().apply(0)
-    branches = [union.children().apply(i).toString()
-                for i in range(union.children().size())]
-    pdf = [b for b in branches if PDF_MIME in b]
-    assert len(pdf) == 1 and "Exchange" not in pdf[0]
+    plan = _plan(dispatch_spans(records_from_warc(
+        build_mixed_warc_files(pages)), dedupe=False))
+    assert "Exchange" not in plan
+    # the records parse and the epub reader are file passes too; the
+    # routed pass is the one that emits spans, over the filter below it
+    routed = re.findall(r"MapInArrow _file_pass\(.*spans#.*\n"
+                        r"(?:.*\n)*?.*Filter (.*)", plan)
+    assert len(routed) == 1, plan
+    assert all(m in routed[0] for m in _BINARY_MIMES), routed
+    assert "StartsWith(content_type#" in routed[0], routed
 
 
 def test_ruled_tables_single_scan_single_exchange(spark):

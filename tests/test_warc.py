@@ -407,6 +407,27 @@ def test_dispatch_media_spans_carry_sniffed_meta(spark, docs):
     assert logo[0]["text"] == "image/png 21x9"
 
 
+def test_dispatch_media_meta_past_int32(spark):
+    """A header can claim a width past int32 (a PNG's IHDR holds 32
+    unsigned bits): the media span's text carries the number as the
+    header gives it, and no other record of the segment is lost."""
+    from pdf_extraction_spark.operators.warc import dispatch_spans
+
+    def png(uri: str, w: int) -> bytes:
+        return warc_record("resource", [("WARC-Target-URI", uri),
+                                        ("Content-Type", "image/png")],
+                           synth_png(w, 9))
+
+    blob = png("https://h.example/big.png", 2**32 - 1) + \
+        png("https://h.example/ok.png", 16)
+    files = spark.createDataFrame([("w1", bytearray(blob))],
+                                  "warc_id string, warc binary")
+    rows = {r["doc_id"]: r["spans"][0]["text"] for r in
+            dispatch_spans(records_from_warc(files)).collect()}
+    assert rows == {"https://h.example/big.png": "image/png 4294967295x9",
+                    "https://h.example/ok.png": "image/png 16x9"}
+
+
 def test_dispatch_lands_records_once_by_default(spark, docs):
     """By default the container parse is materialized once
     (localCheckpoint) before the family branches fan out — the
