@@ -153,18 +153,16 @@ def main() -> None:
     growth_batch.unpersist()
     timed("k_jaccard_pairs", lambda: noop(dd.jaccard_pairs(dtab)))
     sigs = dd.simhash(dtab)
-    timed("k_simhash_pairs", lambda: noop(dd.simhash_pairs(sigs,
-                                                           max_hamming=3)))
+    timed("k_simhash_pairs", lambda: noop(dd.simhash_pairs(sigs)))
     timed("k_textstats", lambda: noop(
         dtab.select("doc_id",
                     *ts.quality_columns(F.col("text")),
                     *ts.lang_id_columns(F.col("text")),
                     ts.fingerprint_col(F.col("text")).alias("fp"))))
-    timed("k_cosine_topk", lambda: noop(sim.cosine_topk(etab, qvec, k=10)))
-    timed("k_ann_topk", lambda: noop(sim.ann_topk(etab, qvec, dim, k=10)))
-    timed("k_ivf_topk", lambda: noop(sim.ivf_topk(etab, qvec, dim, k=10)))
-    timed("k_all_pairs_topk", lambda: noop(sim.all_pairs_topk(etab, dim,
-                                                              k=5)))
+    timed("k_cosine_topk", lambda: noop(sim.cosine_topk(etab, qvec)))
+    timed("k_ann_topk", lambda: noop(sim.ann_topk(etab, qvec, dim)))
+    timed("k_ivf_topk", lambda: noop(sim.ivf_topk(etab, qvec, dim)))
+    timed("k_all_pairs_topk", lambda: noop(sim.all_pairs_topk(etab, dim)))
     timed("k_embedding_dedup",
           lambda: noop(dd.embedding_near_dup(etab, dim)
                        .select("vec_id", "keeper_id", "is_near_duplicate")))

@@ -56,9 +56,9 @@ class CalibrationStore:
     def add(self, record: CalibrationRecord) -> None:
         self.records.append(record)
 
-    def save(self, spark, path: str, mode: str = "append") -> int:
-        """Persist the in-memory records (one row each). Returns the
-        number of rows written."""
+    def save(self, spark, path: str) -> int:
+        """Append the in-memory records (one row each) to the history.
+        Returns the number of rows written."""
         if not self.records:
             return 0
         rows = [
@@ -70,7 +70,7 @@ class CalibrationStore:
             rows, "category string, complexity string, strategy string, "
                   "estimated_low double, estimated_high double, "
                   "actual_cost double")
-        df.write.mode(mode).parquet(path)
+        df.write.mode("append").parquet(path)
         return len(rows)
 
     @classmethod
@@ -87,17 +87,12 @@ class CalibrationStore:
                 actual_cost=r["actual_cost"]))
         return store
 
-    def variance_stats(self, category: str | None = None,
-                       complexity: str | None = None,
-                       strategy: str | None = None) -> dict:
-        """calibration_database.py:242-290."""
+    def variance_stats(self, category: str | None = None) -> dict:
+        """calibration_database.py:242-290, filtered by category only."""
         filtered = [
             r for r in self.records
             if r.actual_cost is not None
             and (category is None or r.category.lower() == category.lower())
-            and (complexity is None
-                 or r.complexity.lower() == complexity.lower())
-            and (strategy is None or r.strategy == strategy)
         ]
         variances = [r.variance_pct for r in filtered
                      if r.variance_pct is not None]
@@ -121,21 +116,17 @@ def _confidence(sample_count: int, std_dev: float) -> float:
 
 
 def calibration_factor(store: CalibrationStore,
-                       category: str | None = None,
-                       complexity: str | None = None,
-                       strategy: str | None = None,
-                       min_samples: int = MIN_SAMPLES) -> dict | None:
-    """feedback_loop.py:198-250: factor = 1 + avg_variance/100, capped to
-    [0.7, 1.5], with sample/consistency confidence."""
-    stats = store.variance_stats(category, complexity, strategy)
-    if stats["count"] < min_samples:
+                       category: str | None = None) -> dict | None:
+    """feedback_loop.py:198-250 on the category rung: factor = 1 +
+    avg_variance/100, capped to [0.7, 1.5], with sample/consistency
+    confidence; None under ``MIN_SAMPLES`` records."""
+    stats = store.variance_stats(category)
+    if stats["count"] < MIN_SAMPLES:
         return None
     factor = 1.0 + (stats["avg_variance_pct"] / 100)
     factor = max(0.7, min(1.5, factor))
     return {
         "category": category or "any",
-        "complexity": complexity or "any",
-        "strategy": strategy or "any",
         "factor": factor,
         "sample_count": stats["count"],
         "confidence": _confidence(stats["count"],
@@ -144,11 +135,10 @@ def calibration_factor(store: CalibrationStore,
     }
 
 
-def should_apply(calibration: dict,
-                 confidence_threshold: float = CONFIDENCE_THRESHOLD) -> bool:
+def should_apply(calibration: dict) -> bool:
     """feedback_loop.py:279-293: gate on confidence, extreme factors, and
     negligible adjustments."""
-    if calibration["confidence"] < confidence_threshold:
+    if calibration["confidence"] < CONFIDENCE_THRESHOLD:
         return False
     if calibration["factor"] < 0.75 or calibration["factor"] > 1.35:
         return False
@@ -157,10 +147,7 @@ def should_apply(calibration: dict,
     return True
 
 
-def apply_calibration_df(estimates, store: CalibrationStore,
-                         category_col: str = "category",
-                         low_col: str = "estimated_low",
-                         high_col: str = "estimated_high"):
+def apply_calibration_df(estimates, store: CalibrationStore):
     """Spark form of J8: per-category factors as a broadcast map applied
     to an estimates DataFrame (the category-only rung of the ladder —
     the narrowest rung available without per-row complexity/strategy)."""
@@ -174,15 +161,17 @@ def apply_calibration_df(estimates, store: CalibrationStore,
             factors[cat] = calibration["factor"]
     if not factors:
         return (estimates
-                .withColumn("calibrated_low", F.col(low_col).cast("double"))
-                .withColumn("calibrated_high", F.col(high_col).cast("double"))
+                .withColumn("calibrated_low",
+                            F.col("estimated_low").cast("double"))
+                .withColumn("calibrated_high",
+                            F.col("estimated_high").cast("double"))
                 .withColumn("calibration_factor", F.lit(1.0)))
     mapping = F.create_map(
         *[F.lit(x) for pair in factors.items() for x in pair])
-    factor = F.coalesce(mapping[F.col(category_col)], F.lit(1.0))
+    factor = F.coalesce(mapping[F.col("category")], F.lit(1.0))
     return (estimates
             .withColumn("calibration_factor", factor)
             .withColumn("calibrated_low",
-                        F.round(F.col(low_col) * factor, 2))
+                        F.round(F.col("estimated_low") * factor, 2))
             .withColumn("calibrated_high",
-                        F.round(F.col(high_col) * factor, 2)))
+                        F.round(F.col("estimated_high") * factor, 2)))

@@ -248,7 +248,7 @@ def _build_docs(indices: np.ndarray, seed: int, giant_every: int) -> pd.DataFram
     return pd.DataFrame(rows, columns=["doc_id", "spans"])
 
 
-def generate_docs(spark, n_docs: int, seed: int = 42, giant_every: int = 0,
+def generate_docs(spark, n_docs: int, giant_every: int = 0,
                   partitions: int | None = None):
     """Distributed deterministic generation of the span corpus.
 
@@ -262,7 +262,7 @@ def generate_docs(spark, n_docs: int, seed: int = 42, giant_every: int = 0,
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
-                yield _build_docs(pdf["id"].values, seed, giant_every)
+                yield _build_docs(pdf["id"].values, 42, giant_every)
 
     return base.mapInPandas(gen, schema=SPAN_SCHEMA)
 

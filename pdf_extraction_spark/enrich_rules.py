@@ -235,8 +235,8 @@ class DuplicateTracker:
                                SequenceMatcher]] = []
         self.seen_set: set[str] = set()
 
-    def is_duplicate(self, text: str,
-                     threshold: float = rules.DUPLICATE_SIMILARITY_THRESHOLD) -> bool:
+    def is_duplicate(self, text: str) -> bool:
+        threshold = rules.DUPLICATE_SIMILARITY_THRESHOLD
         if not text:
             return False
         cached = _DUP_NORM_CACHE.get(text)
@@ -256,18 +256,13 @@ class DuplicateTracker:
         # b2j cache while preserving that argument order. The char-counter
         # bound below IS difflib's quick_ratio (2*multiset-overlap/total),
         # computed from cached counters instead of per-pair rebuilds.
-        # verdict memo only applies at the default threshold (the verdict
-        # folds the threshold-dependent gates in); custom thresholds take
-        # the uncached path below
-        memo_ok = threshold == rules.DUPLICATE_SIMILARITY_THRESHOLD
         for seen, ls, cs, sm in self.seen:
             pair = (normalized, seen)
-            if memo_ok:
-                v = _PAIR_VERDICT_CACHE.get(pair)
-                if v is not None:
-                    if v:
-                        return True
-                    continue
+            v = _PAIR_VERDICT_CACHE.get(pair)
+            if v is not None:
+                if v:
+                    return True
+                continue
             verdict = False
             mn, mx = (ls, ln) if ls < ln else (ln, ls)
             if 2 * mn >= threshold * (mn + mx):
@@ -282,7 +277,7 @@ class DuplicateTracker:
                                 <= 2 * _MEMO_MAX_LEN:
                             _PAIR_RATIO_CACHE[pair] = r
                     verdict = r >= threshold
-            if memo_ok and len(_PAIR_VERDICT_CACHE) < _DUP_CACHE_MAX \
+            if len(_PAIR_VERDICT_CACHE) < _DUP_CACHE_MAX \
                     and len(normalized) + len(seen) <= 2 * _MEMO_MAX_LEN:
                 _PAIR_VERDICT_CACHE[pair] = verdict
             if verdict:
@@ -1067,8 +1062,9 @@ def group_summary(groups: list[dict]) -> dict:
     }
 
 
-def group_cost_adjustment(group_size: int, base_cost: float = 1000.0) -> dict:
-    """A7 (issue_grouper.py:122-166)."""
+def group_cost_adjustment(group_size: int) -> dict:
+    """A7 (issue_grouper.py:122-166) at a $1000 base cost per item."""
+    base_cost = 1000.0
     if group_size <= 1:
         return {"base_cost": base_cost, "total_cost": base_cost,
                 "adjustment_factor": 1.0, "savings": 0.0}

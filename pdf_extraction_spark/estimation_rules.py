@@ -789,7 +789,7 @@ def _minimal_estimate(issue: dict) -> dict:
     }
 
 
-def hybrid_estimate(issue: dict, apply_houston: bool = True) -> dict:
+def hybrid_estimate(issue: dict) -> dict:
     """Deterministic hybrid-estimator chain
     (hybrid_cost_estimator.py:86-180 with ai_estimator_func=None — the
     only configuration with no LLM in the loop):
@@ -830,15 +830,8 @@ def hybrid_estimate(issue: dict, apply_houston: bool = True) -> dict:
         estimator_used, fallback_depth = "fallback_heuristic", 1
         est_conf = base["confidence_score"]
 
-    if apply_houston:
-        adj = houston_adjust(base, issue)
-        cost = adj["cost"]
-        houston = {"houston_adjusted": True, "trade": adj["trade"],
-                   "permit_type": adj["permit_type"]}
-    else:
-        cost = base["cost"]
-        houston = {"houston_adjusted": False, "trade": None,
-                   "permit_type": None}
+    adj = houston_adjust(base, issue)
+    cost = adj["cost"]
 
     return {
         "strategy": strategy,
@@ -850,5 +843,7 @@ def hybrid_estimate(issue: dict, apply_houston: bool = True) -> dict:
         "urgency": urgency,
         "total_min": float(cost["total"]["min"]),
         "total_max": float(cost["total"]["max"]),
-        **houston,
+        "houston_adjusted": True,
+        "trade": adj["trade"],
+        "permit_type": adj["permit_type"],
     }

@@ -147,10 +147,9 @@ def ecb_encrypt_block(key: bytes, block: bytes) -> bytes:
     return _encrypt_block(expand_key(key), block)
 
 
-def cbc_decrypt(key: bytes, data: bytes,
-                unpad: bool = True) -> bytes:
+def cbc_decrypt(key: bytes, data: bytes) -> bytes:
     """PDF layout: ``data`` = 16-byte IV || ciphertext; PKCS#7 pad
-    stripped when ``unpad`` (§7.6.2: AESV2/AESV3 use CBC + PKCS#7)."""
+    stripped (§7.6.2: AESV2/AESV3 use CBC + PKCS#7)."""
     if len(data) < 32 or len(data) % 16:
         return b""  # malformed payload: empty, not a crash
     rks = expand_key(key)
@@ -161,7 +160,7 @@ def cbc_decrypt(key: bytes, data: bytes,
         out += bytes(x ^ p for x, p in
                      zip(_decrypt_block(rks, block), prev))
         prev = block
-    if unpad and out:
+    if out:
         n = out[-1]
         if 1 <= n <= 16:
             out = out[:-n]

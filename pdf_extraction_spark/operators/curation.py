@@ -68,13 +68,13 @@ def curate_corpus(docs: DataFrame, text_col: str = "text", *,
         keeper.alias("keeper_id"), verdict.alias("verdict"))
 
 
-def curate_web_corpus(docs: DataFrame, html_col: str = "html", *,
-                      min_tokens: int = 5, max_tokens: int = 100_000,
-                      allowed_langs: Sequence[str] = ("en",),
+def curate_web_corpus(docs: DataFrame, *, min_tokens: int = 5,
+                      max_tokens: int = 100_000,
                       min_stop_ppm: int = 0) -> DataFrame:
     """The web-ingest composition the north rule describes: HTML
-    boilerplate strip (operators.html) feeding the standard curation
-    chain over the EXTRACTED main content, as one declarative plan.
+    boilerplate strip (operators.html) of (doc_id, html) pages feeding
+    the standard curation chain over the EXTRACTED main content, as
+    one declarative plan; English is the one language kept.
 
     Same cost shape as :func:`curate_corpus` — the HTML strip and every
     filter are scan-stage projections, the exact-dedup keeper window is
@@ -89,7 +89,7 @@ def curate_web_corpus(docs: DataFrame, html_col: str = "html", *,
     """
     from .html import extract_main_content
 
-    main = extract_main_content(docs, html_col=html_col)
+    main = extract_main_content(docs)
     text = F.col("main_text")
     base = main.select(
         "doc_id", "n_content", "main_chars", "anchor_chars",
@@ -102,7 +102,7 @@ def curate_web_corpus(docs: DataFrame, html_col: str = "html", *,
     passes = (
         ~no_content
         & (n_tok >= min_tokens) & (n_tok <= max_tokens)
-        & F.col("pred_lang").isin(*allowed_langs)
+        & (F.col("pred_lang") == "en")
         & (F.col("stop_ratio_ppm") >= min_stop_ppm))
     keeper = F.min(F.when(passes, F.col("doc_id"))).over(
         Window.partitionBy("content_hash"))
@@ -111,7 +111,7 @@ def curate_web_corpus(docs: DataFrame, html_col: str = "html", *,
         F.when(no_content, F.lit("no_content"))
          .when(n_tok < min_tokens, F.lit("too_short"))
          .when(n_tok > max_tokens, F.lit("too_long"))
-         .when(~F.col("pred_lang").isin(*allowed_langs), F.lit("language"))
+         .when(F.col("pred_lang") != "en", F.lit("language"))
          .when(F.col("stop_ratio_ppm") < min_stop_ppm, F.lit("low_quality"))
          .when(F.col("doc_id") != keeper, F.lit("duplicate"))
          .otherwise(F.lit("kept")))
@@ -122,13 +122,13 @@ def curate_web_corpus(docs: DataFrame, html_col: str = "html", *,
         keeper.alias("keeper_id"), verdict.alias("verdict"))
 
 
-def curated(docs: DataFrame, text_col: str = "text",
-            verdicts: DataFrame | None = None, **kwargs) -> DataFrame:
+def curated(docs: DataFrame, verdicts: DataFrame | None = None,
+            **kwargs) -> DataFrame:
     """The surviving corpus: input rows whose verdict is 'kept'. Pass
     already-materialized ``verdicts`` to avoid recomputing the plan
     (tools/curate_job.py does, after aggregating the verdict counts)."""
     if verdicts is None:
-        verdicts = curate_corpus(docs, text_col, **kwargs)
+        verdicts = curate_corpus(docs, **kwargs)
     return (docs.join(verdicts.where(F.col("verdict") == "kept")
                       .select("doc_id"), "doc_id"))
 

@@ -31,28 +31,33 @@ from .textstats import tokens_col
 # 2^31-1: keeps a*x + b below 2^62 under ANSI-checked int64 arithmetic
 MERSENNE_P = (1 << 31) - 1
 _HASH_SPACE = 1 << 30
+SHINGLE_N = 3      # words per shingle
+MINHASH_K = 64     # minhash permutations per signature
+LSH_BANDS = 16     # bands a signature splits into
+JACCARD_K = 8      # smallest shingle hashes kept per doc for jaccard
 
 
 def content_hash(text: Column) -> Column:
     return F.md5(text)
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup: keep the minimum id per content hash; adds
-    (content_hash, keeper_doc_id, is_duplicate)."""
-    h = content_hash(F.col(text_col)).alias("content_hash")
-    hashed = docs.select(F.col(id_col), h)
+def exact_dedup(docs: DataFrame) -> DataFrame:
+    """Exact dedup of (doc_id, text): keep the minimum id per content
+    hash; adds (content_hash, keeper_doc_id, is_duplicate)."""
+    h = content_hash(F.col("text")).alias("content_hash")
+    hashed = docs.select(F.col("doc_id"), h)
     w = Window.partitionBy("content_hash")
     return (hashed
-            .withColumn("keeper_doc_id", F.min(id_col).over(w))
-            .withColumn("is_duplicate", F.col(id_col) != F.col("keeper_doc_id")))
+            .withColumn("keeper_doc_id", F.min("doc_id").over(w))
+            .withColumn("is_duplicate",
+                        F.col("doc_id") != F.col("keeper_doc_id")))
 
 
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles. Docs with fewer than ``n`` tokens
+def shingles_col(text: Column) -> Column:
+    """Distinct word ``SHINGLE_N``-gram shingles. Docs with fewer tokens
     produce an empty shingle set (CASE WHEN is lazily evaluated, so the
     ANSI-mode element_at bound check never fires on the short branch)."""
+    n = SHINGLE_N
     toks = tokens_col(F.lower(text))
     size = F.size(toks)
     idx = F.sequence(F.lit(1), size - (n - 1))
@@ -63,27 +68,32 @@ def shingles_col(text: Column, n: int = 3) -> Column:
         F.array().cast("array<string>"))
 
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
+def shingle_hashes(text: Column) -> Column:
     """Shingles -> 60-bit integer hashes (md5-derived, engine-portable)."""
     return F.transform(
-        shingles_col(text, n),
+        shingles_col(text),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
 
 
-def minhash_signature(text: Column, k: int = 64, n: int = 3) -> Column:
+def minhash_permutations() -> tuple[np.ndarray, np.ndarray]:
+    """The ``MINHASH_K`` seeded (a_i, b_i) pairs."""
+    rng = np.random.default_rng(42)
+    return (rng.integers(1, MERSENNE_P, size=MINHASH_K, dtype=np.int64),
+            rng.integers(0, MERSENNE_P, size=MINHASH_K, dtype=np.int64))
+
+
+def minhash_signature(text: Column) -> Column:
     """K-permutation minhash signature over shingle hashes.
 
     h_i(x) = (a_i * x + b_i) mod p with deterministic (a_i, b_i) from a
     seeded generator — identical on every executor and run.
     """
-    rng = np.random.default_rng(42)
-    a = rng.integers(1, MERSENNE_P, size=k, dtype=np.int64)
-    b = rng.integers(0, MERSENNE_P, size=k, dtype=np.int64)
-    hashes = F.transform(shingle_hashes(text, n),
+    a, b = minhash_permutations()
+    hashes = F.transform(shingle_hashes(text),
                          lambda x: F.pmod(x, F.lit(_HASH_SPACE)))
     perms = F.array(*[
         F.struct(F.lit(int(a[i])).alias("a"), F.lit(int(b[i])).alias("b"))
-        for i in range(k)])
+        for i in range(MINHASH_K)])
     sig = F.transform(
         perms,
         lambda p: F.array_min(F.transform(
@@ -94,8 +104,10 @@ def minhash_signature(text: Column, k: int = 64, n: int = 3) -> Column:
     return F.when(F.size(hashes) > 0, sig)
 
 
-def lsh_bands(signature: Column, bands: int = 16) -> Column:
-    """Split a signature into band hashes: array<struct<band:int,h:string>>."""
+def lsh_bands(signature: Column) -> Column:
+    """Split a signature into ``LSH_BANDS`` band hashes:
+    array<struct<band:int,h:string>>."""
+    bands = LSH_BANDS
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda band: F.struct(
@@ -117,7 +129,7 @@ def _bucketed_pairs(banded: DataFrame, keys: list[str],
     the 100x-scale skew guard (round-2 verdict item 6). Star pairs keep
     every member connected to the keeper, which is what dedup consumes;
     the traded-away pairs are member-member edges inside one hot bucket.
-    Default None preserves exact all-pairs semantics.
+    ``max_bucket=None`` keeps exact all-pairs semantics.
     """
     if max_bucket is None:
         left = banded.select(*keys, F.col("id").alias("id_a"))
@@ -142,13 +154,14 @@ def _bucketed_pairs(banded: DataFrame, keys: list[str],
     return cold_pairs.union(hot_pairs).distinct()
 
 
-def _doc_shingle_hashes(text: str, n: int) -> list[int]:
+def _doc_shingle_hashes(text: str) -> list[int]:
     """Python twin of shingle_hashes: distinct word n-gram shingles of
     lower(text) -> 60-bit ints from the first 15 md5 hex digits. hashlib
     md5 is C-speed, so the per-shingle cost is ~1us vs the interpreted
     Catalyst transform's per-element expression walk."""
     import hashlib
 
+    n = SHINGLE_N
     toks = text.lower().split() if text else []
     if len(toks) < n:
         return []
@@ -162,11 +175,10 @@ def _doc_shingle_hashes(text: str, n: int) -> list[int]:
     return out
 
 
-def minhash_signatures_arrow(docs: DataFrame, text_col: str = "text",
-                             id_col: str = "doc_id", k: int = 64,
-                             n: int = 3) -> DataFrame:
-    """(id, sig) computed per doc in one mapInArrow pass — zero shuffle,
-    value-identical to minhash_signature (same seeded permutations over
+def minhash_signatures_arrow(docs: DataFrame) -> DataFrame:
+    """(id, sig) of (doc_id, text) computed per doc in one mapInArrow
+    pass — zero shuffle, value-identical to minhash_signature (same
+    seeded permutations over
     the same md5 shingle hashes; asserted by
     tests/test_training_data_ops.py).
 
@@ -177,9 +189,7 @@ def minhash_signatures_arrow(docs: DataFrame, text_col: str = "text",
     the 64 permutations are one (n_shingles x 64) numpy modmul. Products
     stay below 2^61 (MERSENNE_P * _HASH_SPACE), so int64 never wraps.
     """
-    rng = np.random.default_rng(42)
-    a = rng.integers(1, MERSENNE_P, size=k, dtype=np.int64)
-    b = rng.integers(0, MERSENNE_P, size=k, dtype=np.int64)
+    a, b = minhash_permutations()
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
@@ -188,7 +198,7 @@ def minhash_signatures_arrow(docs: DataFrame, text_col: str = "text",
             sigs: list[list[int] | None] = []
             keep_ids = []
             for i, text in enumerate(texts):
-                hs = _doc_shingle_hashes(text or "", n)
+                hs = _doc_shingle_hashes(text or "")
                 if not hs:
                     continue  # same contract: unshingleable docs drop out
                 x = np.asarray(hs, dtype=np.int64) % _HASH_SPACE
@@ -201,27 +211,24 @@ def minhash_signatures_arrow(docs: DataFrame, text_col: str = "text",
                  pa.array(sigs, type=pa.list_(pa.int64()))],
                 names=["id", "sig"])
 
-    src = docs.select(F.col(id_col).alias("id"),
-                      F.col(text_col).alias("t"))
+    src = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("t"))
     id_type = dict(src.dtypes)["id"]
     return src.mapInArrow(run, schema=f"id {id_type}, sig array<long>")
 
 
-def minhash_candidates(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = 64,
-                       bands: int = 16,
+def minhash_candidates(docs: DataFrame,
                        max_bucket: int | None = None) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one band bucket, with the
     minhash jaccard estimate. Shuffles on (band, band_hash) only.
     ``max_bucket`` (e.g. 10_000 at corpus scale) star-joins degenerate
     buckets instead of all-pairs — see _bucketed_pairs."""
-    sigs = minhash_signatures_arrow(docs, text_col, id_col, k)
+    sigs = minhash_signatures_arrow(docs)
     # Band with (id, band, h) ONLY: the k-long signature arrays never enter
     # the candidate shuffle or the distinct — at 10^9 docs that saves
     # ~bands x signature bytes of shuffle I/O. Signatures are re-attached
     # once per distinct pair afterwards.
     banded = sigs.select(
-        "id", F.explode(lsh_bands(F.col("sig"), bands)).alias("b")) \
+        "id", F.explode(lsh_bands(F.col("sig"))).alias("b")) \
         .select("id", F.col("b.band").alias("band"), F.col("b.h").alias("h"))
     id_pairs = _bucketed_pairs(banded, ["band", "h"], max_bucket)
     pairs = (id_pairs
@@ -236,32 +243,28 @@ def minhash_candidates(docs: DataFrame, text_col: str = "text",
         (agree / F.size("sig_a")).alias("jaccard_est"))
 
 
-def minhash_dedup(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", threshold: float = 0.8,
-                  k: int = 64, bands: int = 16,
+def minhash_dedup(docs: DataFrame, threshold: float = 0.8,
                   max_bucket: int | None = None) -> DataFrame:
     """Near-dup verdict: per doc, the minimum partner id among pairs with
     jaccard_est >= threshold (single-hop keeper assignment; full
     connected components would iterate this join to a fixpoint)."""
-    pairs = minhash_candidates(docs, text_col, id_col, k, bands,
-                               max_bucket) \
+    pairs = minhash_candidates(docs, max_bucket) \
         .where(F.col("jaccard_est") >= threshold)
     partners = pairs.select(F.col("id_a").alias("id"),
                             F.col("id_b").alias("partner")) \
         .union(pairs.select(F.col("id_b").alias("id"),
                             F.col("id_a").alias("partner")))
     keeper = partners.groupBy("id").agg(F.min("partner").alias("min_partner"))
-    return (docs.join(keeper, docs[id_col] == keeper["id"], "left")
+    return (docs.join(keeper, docs["doc_id"] == keeper["id"], "left")
             .select(docs["*"],
-                    F.least(F.coalesce("min_partner", docs[id_col]),
-                            docs[id_col]).alias("keeper_doc_id"))
+                    F.least(F.coalesce("min_partner", docs["doc_id"]),
+                            docs["doc_id"]).alias("keeper_doc_id"))
             .withColumn("is_near_duplicate",
-                        F.col("keeper_doc_id") != F.col(id_col)))
+                        F.col("keeper_doc_id") != F.col("doc_id")))
 
 
 def _incremental_candidates(new_banded: DataFrame, o_banded: DataFrame,
-                            max_bucket: int | None,
-                            broadcast_new: bool = True) -> DataFrame:
+                            max_bucket: int | None) -> DataFrame:
     """Distinct (id_n, id_o, o_new) candidate pairs for the incremental
     probe: ``new_banded(id, band, h)`` joined against the corpus+batch
     band table ``o_banded(band, h, id_o, o_new)``.
@@ -274,18 +277,15 @@ def _incremental_candidates(new_banded: DataFrame, o_banded: DataFrame,
     and the corpus is never shuffled — only re-scanned map-side once.
     """
     if max_bucket is not None:
-        probed = new_banded.select("band", "h").distinct()
-        if broadcast_new:
-            probed = F.broadcast(probed)
-        stats = (o_banded.join(probed, ["band", "h"])
-                 .groupBy("band", "h")
-                 .agg(F.count(F.lit(1)).alias("_n"),
-                      F.min(F.when(~F.col("o_new"), F.col("id_o")))
-                      .alias("_hub_corpus"),
-                      F.min(F.when(F.col("o_new"), F.col("id_o")))
-                      .alias("_hub_new")))
-        if broadcast_new:
-            stats = F.broadcast(stats)
+        probed = F.broadcast(new_banded.select("band", "h").distinct())
+        stats = F.broadcast(
+            o_banded.join(probed, ["band", "h"])
+            .groupBy("band", "h")
+            .agg(F.count(F.lit(1)).alias("_n"),
+                 F.min(F.when(~F.col("o_new"), F.col("id_o")))
+                 .alias("_hub_corpus"),
+                 F.min(F.when(F.col("o_new"), F.col("id_o")))
+                 .alias("_hub_new")))
         # hot buckets shrink to their two hubs; the stats join also
         # prunes un-probed buckets (they could never match anyway)
         o_banded = (o_banded.join(stats, ["band", "h"])
@@ -301,11 +301,7 @@ def _incremental_candidates(new_banded: DataFrame, o_banded: DataFrame,
 
 
 def minhash_dedup_incremental(new_docs: DataFrame, corpus_sigs: DataFrame,
-                              text_col: str = "text",
-                              id_col: str = "doc_id",
-                              threshold: float = 0.8, k: int = 64,
-                              bands: int = 16,
-                              broadcast_new: bool = True,
+                              threshold: float = 0.8,
                               new_sigs: DataFrame | None = None,
                               max_bucket: int | None = None) -> DataFrame:
     """Near-dup verdicts for a NEW batch against an already-deduped
@@ -326,11 +322,11 @@ def minhash_dedup_incremental(new_docs: DataFrame, corpus_sigs: DataFrame,
     minimum; otherwise it keeps itself.
 
     Scale shape: the corpus signature table is SCANNED twice (band-hash
-    probe, then pair verification) and SHUFFLED never: with
-    ``broadcast_new`` (default) both joins broadcast the batch-derived
-    side — the banded batch into the probe, the candidate set with
-    batch signatures attached into the verification — so per ingest the
-    corpus contributes two map-side scans and zero exchanges.
+    probe, then pair verification) and SHUFFLED never: both joins
+    broadcast the batch-derived side — the banded batch into the probe,
+    the candidate set with batch signatures attached into the
+    verification — so per ingest the corpus contributes two map-side
+    scans and zero exchanges.
     Signatures never enter the band join.
 
     ``max_bucket`` is the hot-bucket guard (the incremental analogue of
@@ -354,7 +350,7 @@ def minhash_dedup_incremental(new_docs: DataFrame, corpus_sigs: DataFrame,
     batch-bounded shuffle) — the corpus still shuffles never.
     """
     if new_sigs is None:
-        new_sigs = minhash_signatures_arrow(new_docs, text_col, id_col, k)
+        new_sigs = minhash_signatures_arrow(new_docs)
     all_sigs = (corpus_sigs.select("id", "sig",
                                    F.lit(False).alias("is_new"))
                 .unionByName(new_sigs.select(
@@ -363,27 +359,21 @@ def minhash_dedup_incremental(new_docs: DataFrame, corpus_sigs: DataFrame,
     def band(sigs: DataFrame) -> DataFrame:
         return sigs.select(
             "id", "is_new",
-            F.explode(lsh_bands(F.col("sig"), bands)).alias("b")) \
+            F.explode(lsh_bands(F.col("sig"))).alias("b")) \
             .select("id", "is_new", F.col("b.band").alias("band"),
                     F.col("b.h").alias("h"))
 
-    new_banded = band(new_sigs.withColumn("is_new", F.lit(True)))
-    if broadcast_new:
-        new_banded = F.broadcast(new_banded)
+    new_banded = F.broadcast(band(new_sigs.withColumn("is_new", F.lit(True))))
     o_banded = band(all_sigs).select(
         "band", "h", F.col("id").alias("id_o"),
         F.col("is_new").alias("o_new"))
     # probe: new batch against corpus+batch; >=1 new side by construction
-    cand = _incremental_candidates(new_banded, o_banded, max_bucket,
-                                   broadcast_new)
+    cand = _incremental_candidates(new_banded, o_banded, max_bucket)
     # sig_n comes from the batch-sized table, and the candidate set
     # (with sig_n attached) is broadcast into the corpus-side attach:
     # the corpus signature table is never shuffled
-    cand_n = cand.join(new_sigs.select(F.col("id").alias("id_n"),
-                                       F.col("sig").alias("sig_n")),
-                       "id_n")
-    if broadcast_new:
-        cand_n = F.broadcast(cand_n)
+    cand_n = F.broadcast(cand.join(new_sigs.select(
+        F.col("id").alias("id_n"), F.col("sig").alias("sig_n")), "id_n"))
     pairs = cand_n.join(all_sigs.select(F.col("id").alias("id_o"),
                                         F.col("sig").alias("sig_o")),
                         "id_o")
@@ -399,26 +389,22 @@ def minhash_dedup_incremental(new_docs: DataFrame, corpus_sigs: DataFrame,
         .alias("corpus_partner"),
         F.min(F.when(F.col("o_new"), F.col("id_o")))
         .alias("batch_partner"))
-    return (new_docs.join(verdict,
-                          new_docs[id_col] == verdict["id_n"], "left")
+    doc_id = new_docs["doc_id"]
+    return (new_docs.join(verdict, doc_id == verdict["id_n"], "left")
             .select(new_docs["*"],
                     F.coalesce(
                         "corpus_partner",
-                        F.least(F.coalesce("batch_partner",
-                                           new_docs[id_col]),
-                                new_docs[id_col]))
+                        F.least(F.coalesce("batch_partner", doc_id), doc_id))
                     .alias("keeper_doc_id"))
             .withColumn("is_near_duplicate",
-                        F.col("keeper_doc_id") != F.col(id_col)))
+                        F.col("keeper_doc_id") != F.col("doc_id")))
 
 
 def update_signature_store(spark, new_docs: DataFrame, store,
-                           ident: str = "minhash_sigs",
-                           text_col: str = "text", id_col: str = "doc_id",
-                           threshold: float = 0.8, k: int = 64,
-                           bands: int = 16,
+                           threshold: float = 0.8,
                            max_bucket: int | None = 10_000) -> DataFrame:
-    """Incremental-dedup driver over a ``sources.catalog`` TableStore:
+    """Incremental-dedup driver over a ``sources.catalog`` TableStore
+    (signatures in its ``minhash_sigs`` table):
     verdicts for the new batch against the stored corpus signatures, then
     append the batch's signatures (keepers AND duplicates — a later copy
     of a duplicate must still find a partner) to the store. Returns the
@@ -438,18 +424,16 @@ def update_signature_store(spark, new_docs: DataFrame, store,
     candidates, small corpora only)."""
     # one batch signature pass total: checkpointed, then reused by the
     # verdict plan (3 references) and the store append
-    new_sigs = minhash_signatures_arrow(new_docs, text_col, id_col, k) \
-        .localCheckpoint(eager=True)
+    ident = "minhash_sigs"
+    new_sigs = minhash_signatures_arrow(new_docs).localCheckpoint(eager=True)
     existed = store.exists(spark, ident)
     if existed:
         corpus_sigs = store.read(spark, ident)
         verdicts = minhash_dedup_incremental(
-            new_docs, corpus_sigs, text_col, id_col,
-            threshold=threshold, k=k, bands=bands, new_sigs=new_sigs,
+            new_docs, corpus_sigs, threshold=threshold, new_sigs=new_sigs,
             max_bucket=max_bucket)
     else:
-        verdicts = minhash_dedup(new_docs, text_col, id_col,
-                                 threshold=threshold, k=k, bands=bands,
+        verdicts = minhash_dedup(new_docs, threshold=threshold,
                                  max_bucket=max_bucket)
     # localCheckpoint, not persist: the store append below invalidates
     # any cached plan that scans the store path, and a recompute would
@@ -468,24 +452,26 @@ def update_signature_store(spark, new_docs: DataFrame, store,
     return out
 
 
-def topk_shingle_hashes(text: Column, k: int = 8, n: int = 3) -> Column:
-    """K smallest md5(shingle) values — the bounded candidate-generation
-    set used by jaccard pair mining (portable across engines)."""
+def topk_shingle_hashes(text: Column) -> Column:
+    """``JACCARD_K`` smallest md5(shingle) values — the bounded
+    candidate-generation set used by jaccard pair mining (portable across
+    engines)."""
     return F.slice(F.array_sort(
-        F.transform(shingles_col(text, n), lambda s: F.md5(s))), 1, k)
+        F.transform(shingles_col(text), lambda s: F.md5(s))), 1, JACCARD_K)
 
 
-def topk_shingle_hashes_arrow(docs: DataFrame, text_col: str = "text",
-                              id_col: str = "doc_id", k: int = 8,
-                              n: int = 3) -> DataFrame:
-    """(id, hs) twin of topk_shingle_hashes in one mapInArrow pass —
-    value-identical (K lexicographically-smallest md5 hex digests of the
-    distinct shingles; hashlib and Spark md5 both emit lowercase hex).
+def topk_shingle_hashes_arrow(docs: DataFrame) -> DataFrame:
+    """(id, hs) of (doc_id, text): twin of topk_shingle_hashes in one
+    mapInArrow pass — value-identical (K lexicographically-smallest md5
+    hex digests of the distinct shingles; hashlib and Spark md5 both emit
+    lowercase hex).
     Same rationale as minhash_signatures_arrow: the interpreted shingle
     transform + per-element md5 + array_sort dominated the sf0.1 kernel
     bench at 37s for 5 000 docs; C-speed md5 + heapq take ~2s."""
     import hashlib
     import heapq
+
+    n = SHINGLE_N
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
@@ -500,23 +486,21 @@ def topk_shingle_hashes_arrow(docs: DataFrame, text_col: str = "text",
                 digests = {hashlib.md5(" ".join(toks[i:i + n]).encode())
                            .hexdigest()
                            for i in range(len(toks) - n + 1)}
-                out.append(heapq.nsmallest(k, digests))
+                out.append(heapq.nsmallest(JACCARD_K, digests))
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array(out, type=pa.list_(pa.string()))],
                 names=["id", "hs"])
 
-    src = docs.select(F.col(id_col).alias("id"),
-                      F.col(text_col).alias("t"))
+    src = docs.select(F.col("doc_id").alias("id"), F.col("text").alias("t"))
     id_type = dict(src.dtypes)["id"]
     return src.mapInArrow(run, schema=f"id {id_type}, hs array<string>")
 
 
-def jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", k: int = 8,
-                  min_shared: int = 2) -> DataFrame:
+def jaccard_pairs(docs: DataFrame) -> DataFrame:
     """N-gram jaccard near-dup pairs over bounded top-K shingle sets:
-    join on shared shingle hash, then exact jaccard of the two K-sets."""
-    sets_df = topk_shingle_hashes_arrow(docs, text_col, id_col, k)
+    join on shared shingle hash, keep pairs sharing at least two, then
+    exact jaccard of the two K-sets."""
+    sets_df = topk_shingle_hashes_arrow(docs)
     exploded = sets_df.select("id", "hs", F.explode("hs").alias("h"))
     left = exploded.select(F.col("h"), F.col("id").alias("id_a"),
                            F.col("hs").alias("hs_a"))
@@ -529,7 +513,7 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
                   F.count(F.lit(1)).alias("n_shared")))
     inter = F.size(F.array_intersect("hs_a", "hs_b"))
     union = F.size(F.array_union("hs_a", "hs_b"))
-    return (pairs.where(F.col("n_shared") >= min_shared)
+    return (pairs.where(F.col("n_shared") >= 2)
             .select("id_a", "id_b",
                     inter.cast("long").alias("n_intersect"),
                     (inter / union).alias("jaccard")))
@@ -539,14 +523,14 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
 # SimHash (vectorized bit votes in one mapInArrow pass)
 # ---------------------------------------------------------------------------
 
-def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
-    """64-bit simhash per doc: per-token 64-bit hashes vote +1/-1 per bit;
-    the sign of each bit-sum forms the signature. Token hashing is the
+def simhash(docs: DataFrame) -> DataFrame:
+    """64-bit simhash per (doc_id, text) doc: per-token 64-bit hashes
+    vote +1/-1 per bit; the sign of each bit-sum forms the signature.
+    Token hashing is the
     first 64 bits of md5 — engine-portable (DuckDB computes the identical
     signature in SQL, so the gate query has a brute-force oracle); the
     bit-vote accumulation is numpy-vectorized per Arrow batch."""
-    df = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("t"))
+    df = docs.select("doc_id", F.col("text").alias("t"))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import hashlib
@@ -587,39 +571,20 @@ def simhash(docs: DataFrame, text_col: str = "text",
     return df.mapInArrow(run, schema="doc_id string, simhash long")
 
 
-def simhash_pairs(sigs: DataFrame, max_hamming: int = 3,
-                  max_bucket: int | None = None) -> DataFrame:
-    """Near-dup pairs with Hamming distance <= max_hamming via chunk
-    banding into ``max_hamming + 1`` chunks: a pair differing in at most
-    ``max_hamming`` bits cannot touch every chunk (pigeonhole), so it must
-    agree exactly on >=1 chunk — candidate recall is exact, not
-    probabilistic. Narrow chunks (large max_hamming) mean bigger buckets;
-    keep max_hamming small (<=7) at corpus scale. ``max_bucket``
-    star-joins degenerate chunk buckets (identical-signature spam) —
-    exact recall then holds only for pairs involving a hot bucket's hub."""
-    if not 0 <= max_hamming < 64:
-        raise ValueError("max_hamming must be in [0, 64)")
-    nchunks = max_hamming + 1
-    base, rem = divmod(64, nchunks)
-    widths = [base + 1 if i < rem else base for i in range(nchunks)]
-    starts = [sum(widths[:i]) for i in range(nchunks)]
-
-    def mask(width: int) -> Column:
-        # (1 << 64) - 1 overflows a signed long literal (max_hamming=0
-        # puts the whole signature in one chunk); -1 is all 64 bits set
-        if width >= 64:
-            return F.lit(-1).cast("long")
-        return F.lit((1 << width) - 1).cast("long")
-
+def simhash_pairs(sigs: DataFrame) -> DataFrame:
+    """Near-dup pairs with Hamming distance <= 3 via chunk banding into
+    four 16-bit chunks: a pair differing in at most 3 bits cannot touch
+    every chunk (pigeonhole), so it must agree exactly on >=1 chunk —
+    candidate recall is exact, not probabilistic."""
+    max_hamming = 3
     chunks = F.array(*[
-        F.shiftrightunsigned(F.col("simhash"), starts[i])
-        .bitwiseAND(mask(widths[i])).alias(f"c{i}")
-        for i in range(nchunks)])
+        F.shiftrightunsigned(F.col("simhash"), 16 * i)
+        .bitwiseAND(F.lit(0xFFFF).cast("long")).alias(f"c{i}")
+        for i in range(max_hamming + 1)])
     banded = sigs.select(
         F.col("doc_id").alias("id"),
         F.posexplode(chunks).alias("chunk_idx", "chunk_val"))
-    id_pairs = _bucketed_pairs(banded, ["chunk_idx", "chunk_val"],
-                               max_bucket)
+    id_pairs = _bucketed_pairs(banded, ["chunk_idx", "chunk_val"], None)
     sig_a = sigs.select(F.col("doc_id").alias("id_a"),
                         F.col("simhash").alias("sig_a"))
     sig_b = sigs.select(F.col("doc_id").alias("id_b"),
@@ -635,7 +600,7 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = 3,
 # Connected-components keeper assignment (full transitive dedup)
 # ---------------------------------------------------------------------------
 
-def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(id_a, id_b) near-dup edges -> (id, component) where component is
     the minimum id in each connected component — the full transitive
     keeper assignment (vs minhash_dedup's single-hop min-partner).
@@ -645,8 +610,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     converging in O(component diameter) rounds — near-dup clusters are
     shallow, so this is a handful of narrow shuffles at any scale. Rounds
     localCheckpoint to cut lineage; iteration stops at the first round
-    with zero label changes.
+    with zero label changes, and a component still changing after
+    ``max_iter`` rounds raises.
     """
+    max_iter = 20
     edges = (pairs.select("id_a", "id_b")
              .union(pairs.select(F.col("id_b").alias("id_a"),
                                  F.col("id_a").alias("id_b")))
@@ -678,8 +645,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         # silently split into several keepers (round-2 ADVICE)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter — "
-            "propagation needs O(max component diameter) rounds")
+            f"({changed} labels still changing); propagation needs "
+            "O(max component diameter) rounds")
     return labels
 
 
@@ -697,11 +664,10 @@ def dedup_components(docs: DataFrame, pairs: DataFrame,
 
 def embedding_near_dup(embeddings: DataFrame, dim: int,
                        threshold_milli: int = 900, n_planes: int = 8,
-                       n_tables: int = 2, id_col: str = "vec_id",
-                       emb_col: str = "embedding",
-                       max_bucket: int | None = None) -> DataFrame:
-    """Embedding-cosine near-duplicate detection — the vector-space dedup
-    tier (exact / minhash / simhash / jaccard cover the token space).
+                       n_tables: int = 2) -> DataFrame:
+    """Embedding-cosine near-duplicate detection over (vec_id, embedding)
+    — the vector-space dedup tier (exact / minhash / simhash / jaccard
+    cover the token space).
 
     Pipeline, all bucketed (no crossJoin anywhere):
       1. candidate pairs from L seeded hyperplane LSH tables with
@@ -719,33 +685,30 @@ def embedding_near_dup(embeddings: DataFrame, dim: int,
     verdict, not just the approximation family."""
     from .similarity import lsh_candidate_pairs, pair_cosine_arrow
 
-    cands = lsh_candidate_pairs(embeddings, dim, n_planes, n_tables,
-                                True, id_col, emb_col,
-                                max_bucket=max_bucket) \
+    cands = lsh_candidate_pairs(embeddings, dim, n_planes, n_tables) \
         .where(F.col("id_a") < F.col("id_b"))
     attached = (cands
-                .join(embeddings.select(F.col(id_col).alias("id_a"),
-                                        F.col(emb_col).alias("e_a")),
+                .join(embeddings.select(F.col("vec_id").alias("id_a"),
+                                        F.col("embedding").alias("e_a")),
                       "id_a")
-                .join(embeddings.select(F.col(id_col).alias("id_b"),
-                                        F.col(emb_col).alias("e_b")),
+                .join(embeddings.select(F.col("vec_id").alias("id_b"),
+                                        F.col("embedding").alias("e_b")),
                       "id_b"))
     edges = (pair_cosine_arrow(attached, "e_a", "e_b", dim)
              .where(F.floor(F.col("cosine") * 1000) >= threshold_milli)
              .select("id_a", "id_b"))
-    out = dedup_components(embeddings, edges, id_col=id_col)
+    out = dedup_components(embeddings, edges, id_col="vec_id")
     return out.withColumnRenamed("keeper_doc_id", "keeper_id")
 
 
-def substring_dup_stats(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", *,
-                        window: int = 50, stride: int = 50,
-                        min_count: int = 2) -> DataFrame:
+def substring_dup_stats(docs: DataFrame, *, window: int = 50,
+                        stride: int = 50) -> DataFrame:
     """Cross-document windowed substring duplication — the
     ExactSubstr-dedup signal (Lee et al., "Deduplicating Training
     Data Makes Language Models Better") in its Spark-tractable form:
     hash every ``stride``-strided ``window``-token span of every
-    document, count occurrences corpus-wide, and report per document
+    (doc_id, text) document, count occurrences corpus-wide (a window
+    seen twice is duplicated), and report per document
     how much of it is duplicated text that exact/minhash DOC-level
     dedup cannot see (boilerplate paragraphs, licence blocks, quoted
     chains shared across otherwise-distinct documents).
@@ -773,7 +736,7 @@ def substring_dup_stats(docs: DataFrame, text_col: str = "text",
     ``dup_ppm`` = duplicated-window share in parts per million
     (integer — engine-stable), 0 for docs shorter than ``window``
     tokens."""
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     n = F.size(toks)
     n_win = F.greatest(
         F.floor((n - F.lit(window)) / F.lit(stride)) + 1, F.lit(0))
@@ -783,12 +746,11 @@ def substring_dup_stats(docs: DataFrame, text_col: str = "text",
         lambda i: F.md5(F.array_join(
             F.slice(toks, (i - 1) * stride + 1, window), " ")))
     exploded = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode_outer(F.when(n_win > 0, wins)).alias("whash"))
+        "doc_id", F.explode_outer(F.when(n_win > 0, wins)).alias("whash"))
 
     counts = exploded.where(F.col("whash").isNotNull()) \
         .groupBy("whash").agg(F.count(F.lit(1)).alias("occ"))
-    dup = counts.where(F.col("occ") >= min_count) \
+    dup = counts.where(F.col("occ") >= 2) \
         .select("whash", F.lit(1).alias("is_dup"))
     marked = exploded.join(dup, "whash", "left")
     out = marked.groupBy("doc_id").agg(

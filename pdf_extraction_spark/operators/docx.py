@@ -138,21 +138,19 @@ ROWS_SCHEMA = ("doc_id string, el_idx int, kind string, style string, "
                "text string, media_ref string, n_cells int")
 
 
-def docx_rows_from_files(files: DataFrame, bytes_col: str = "docx",
-                         id_col: str = "doc_id") -> DataFrame:
+def docx_rows_from_files(files: DataFrame) -> DataFrame:
     """(doc_id, docx binary) -> typed element rows in document order.
     ONE map-only ``file_pass`` — zip open + XML scan happen inside
     the scan stage; only the rows flow downstream."""
     return file_pass(
-        files, id_col, [bytes_col], ROWS_SCHEMA,
+        files, "doc_id", ["docx"], ROWS_SCHEMA,
         lambda _key, blob: [
             (i, r["kind"], r["style"], r["text"], r["media_ref"],
              r["n_cells"])
             for i, r in enumerate(parse_docx(blob or b""))])
 
 
-def docx_to_spans(files: DataFrame, bytes_col: str = "docx",
-                  id_col: str = "doc_id") -> DataFrame:
+def docx_to_spans(files: DataFrame) -> DataFrame:
     """DOCX files -> BASELINE.json contract span arrays: every
     text-bearing element (heading/para/table_row) a ``text`` span,
     every inline image a ``media`` span with the resolved media part
@@ -163,7 +161,7 @@ def docx_to_spans(files: DataFrame, bytes_col: str = "docx",
     from ..corpus import SPAN_SCHEMA  # local: corpus loads pandas
 
     return file_pass(
-        files, id_col, [bytes_col], SPAN_SCHEMA,
+        files, "doc_id", ["docx"], SPAN_SCHEMA,
         lambda _key, blob: [(element_spans(parse_docx(blob or b"")),)])
 
 
@@ -247,12 +245,11 @@ def build_one_docx(doc: int, text: str) -> bytes:
     return buf.getvalue()
 
 
-def build_docx_files(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def build_docx_files(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, docx binary) via the deterministic
     writer; one map-only Arrow pass (gate/scaling-corpus
     synthesizer)."""
     return file_pass(
-        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        docs, "doc_id", [F.coalesce(F.col("text"), F.lit(""))],
         "doc_id string, docx binary",
         lambda key, text: [(build_one_docx(id_number(key), text),)])

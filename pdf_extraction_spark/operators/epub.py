@@ -107,8 +107,7 @@ def parse_epub(data: bytes) -> list[dict[str, Any]]:
     return rows
 
 
-def epub_to_spans(files: DataFrame, bytes_col: str = "epub",
-                  id_col: str = "doc_id") -> DataFrame:
+def epub_to_spans(files: DataFrame) -> DataFrame:
     """EPUB files -> BASELINE.json contract span arrays: every
     chapter through the gated html block classifier
     (``html.html_blocks_col`` -> ``html.block_spans`` — content blocks
@@ -124,7 +123,7 @@ def epub_to_spans(files: DataFrame, bytes_col: str = "epub",
     from .html import block_spans, html_blocks_col
 
     books = file_pass(
-        files, id_col, [bytes_col], "doc_id string, chapters array<string>",
+        files, "doc_id", ["epub"], "doc_id string, chapters array<string>",
         lambda _key, blob: [([r["html"] for r in parse_epub(blob or b"")],)])
     blocks = F.flatten(F.transform("chapters", html_blocks_col))
     return books.select("doc_id", block_spans(blocks).alias("spans"))
@@ -195,11 +194,10 @@ def build_one_epub(doc: int, text: str) -> bytes:
     return buf.getvalue()
 
 
-def build_epub_files(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def build_epub_files(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, epub binary) via the deterministic
     writer; one map-only Arrow pass."""
     return file_pass(
-        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        docs, "doc_id", [F.coalesce(F.col("text"), F.lit(""))],
         "doc_id string, epub binary",
         lambda key, text: [(build_one_epub(id_number(key), text),)])

@@ -179,8 +179,7 @@ def html_blocks_col(html: Column) -> Column:
     return F.transform(F.split(cleaned, SENT_A), _block_struct)
 
 
-def extract_main_content(docs: DataFrame, html_col: str = "html",
-                         id_col: str = "doc_id") -> DataFrame:
+def extract_main_content(docs: DataFrame) -> DataFrame:
     """Per-document main content + block census.  Zero shuffle: narrow
     projections only, so at 100 TB this runs entirely in the scan stage
     of whatever plan consumes it.
@@ -221,29 +220,28 @@ def extract_main_content(docs: DataFrame, html_col: str = "html",
         F.transform(F.filter(bl, lambda b: b["cls"] == "content"),
                     lambda b: b["text"]), " ")
     staged = docs.select(
-        F.col(id_col), html_blocks_col(F.col(html_col)).alias(
+        F.col("doc_id"), html_blocks_col(F.col("html")).alias(
             "__html_blocks")) \
-        .select(F.col(id_col), main_text.alias("main_text"),
+        .select(F.col("doc_id"), main_text.alias("main_text"),
                 stats.alias("__stats"))
     return staged.select(
-        id_col, "main_text",
+        "doc_id", "main_text",
         *[F.col("__stats")[n].alias(n)
           for n in ("n_blocks", "n_content", "n_nav", "n_short",
                     "n_link", "n_media", "main_chars",
                     "anchor_chars")])
 
 
-def html_block_table(docs: DataFrame, html_col: str = "html",
-                     id_col: str = "doc_id") -> DataFrame:
+def html_block_table(docs: DataFrame) -> DataFrame:
     """Exploded per-block view (doc_id, block_idx, tag, cls, text_len,
     n_tags, text).  ``posexplode`` is a narrow transform — no shuffle;
     consumers that re-aggregate per doc should prefer the array form
     above instead of paying a groupBy."""
-    blocks = html_blocks_col(F.col(html_col))
-    e = docs.select(F.col(id_col),
+    blocks = html_blocks_col(F.col("html"))
+    e = docs.select(F.col("doc_id"),
                     F.posexplode(blocks).alias("block_idx", "b"))
     return e.select(
-        id_col,
+        "doc_id",
         F.col("block_idx").cast("long").alias("block_idx"),
         F.col("b.tag").alias("tag"), F.col("b.cls").alias("cls"),
         F.col("b.text_len").cast("long").alias("text_len"),
@@ -251,8 +249,7 @@ def html_block_table(docs: DataFrame, html_col: str = "html",
         F.col("b.text").alias("text"))
 
 
-def html_to_spans(docs: DataFrame, html_col: str = "html",
-                  id_col: str = "doc_id") -> DataFrame:
+def html_to_spans(docs: DataFrame) -> DataFrame:
     """Bridge a crawl-HTML corpus onto the pipeline's contract span
     schema (BASELINE.json input_hint): content blocks become ``text``
     spans, ``<img src>`` elements become ``media`` spans with the src
@@ -267,8 +264,8 @@ def html_to_spans(docs: DataFrame, html_col: str = "html",
     plus a filter/transform over the per-doc block array, so at crawl
     scale it fuses into the scan stage of the extraction job it feeds.
     """
-    return docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                       block_spans(html_blocks_col(F.col(html_col)))
+    return docs.select(F.col("doc_id").cast("string").alias("doc_id"),
+                       block_spans(html_blocks_col(F.col("html")))
                        .alias("spans"))
 
 
@@ -331,8 +328,7 @@ def html_tables_col(html: Column) -> Column:
             F.regexp_extract_all(t, F.lit(TR_PATTERN), 2), row_struct))
 
 
-def html_table_rows(docs: DataFrame, html_col: str = "html",
-                    id_col: str = "doc_id") -> DataFrame:
+def html_table_rows(docs: DataFrame) -> DataFrame:
     """HTML ``<table>`` markup -> one row per table row — the
     crawl-side twin of the PDF ruled/text table strategies, emitting
     the same ' | '-joined TABLE_ROW_MARKER shape, so
@@ -344,8 +340,8 @@ def html_table_rows(docs: DataFrame, html_col: str = "html",
     and rows.  Returns (doc_id, tbl_idx, row_idx, n_rows, n_cells,
     table_text), tables and rows both in document order."""
     t = docs.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.posexplode(html_tables_col(F.col(html_col)))
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.posexplode(html_tables_col(F.col("html")))
         .alias("tbl_idx", "rows"))
     r = t.select(
         "doc_id", F.col("tbl_idx").cast("int").alias("tbl_idx"),

@@ -302,16 +302,16 @@ def modal_font_size(runs: DataFrame) -> DataFrame:
 
 
 def reconstruct_blocks(runs: DataFrame, y_tol: float = 3.0,
-                       gap_tol: float = 10.0,
-                       size_slack: float = 0.5,
-                       with_headings: bool = True,
+                       gap_tol: float = 10.0, with_headings: bool = True,
                        space_frac: float | None = None) -> DataFrame:
     """Full layout parse: runs -> (doc_id, block_id, line_id, text, bbox,
     n_runs, is_heading).  One row per LINE, block-assigned, in reading
     order; heading-ness is per line (a block's first line may head a
     body block, as in real documents).
 
-    ``is_heading`` is False everywhere when the corpus carries no
+    A line is a heading when its largest run is more than half a
+    point above the document's modal size.  ``is_heading`` is False
+    everywhere when the corpus carries no
     ``size`` attribute (the same schema-tolerant fallback contract as
     C2/C3: fontless corpora get fontless semantics).
     """
@@ -322,7 +322,7 @@ def reconstruct_blocks(runs: DataFrame, y_tol: float = 3.0,
         blocks = blocks.join(mode, "doc_id", "left").withColumn(
             "is_heading",
             F.coalesce(
-                F.col("max_size") > F.col("modal_size") + size_slack,
+                F.col("max_size") > F.col("modal_size") + 0.5,
                 F.lit(False))).drop("modal_size")
     else:
         blocks = blocks.withColumn("is_heading", F.lit(False))

@@ -106,9 +106,7 @@ def links_col(html: Column) -> Column:
     return F.transform(anchors, one)
 
 
-def link_table(docs: DataFrame, html_col: str = "html",
-               id_col: str = "doc_id",
-               carry: tuple[str, ...] = ()) -> DataFrame:
+def link_table(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Exploded link list (doc_id, link_idx, href, anchor_text) plus the
     parsed/normalized URL parts of every href.  Narrow posexplode — no
     shuffle; at crawl scale this runs in the scan stage and the edge
@@ -117,12 +115,12 @@ def link_table(docs: DataFrame, html_col: str = "html",
     the page's own host for internal/external classification) — carried
     in the same projection, NOT joined back, so the plan stays a single
     narrow pass."""
-    e = docs.select(F.col(id_col), *[F.col(c) for c in carry],
-                    F.posexplode(links_col(F.col(html_col)))
+    e = docs.select(F.col("doc_id"), *[F.col(c) for c in carry],
+                    F.posexplode(links_col(F.col("html")))
                      .alias("link_idx", "l"))
     parts = url_parts(F.col("l.href"))
     return e.select(
-        id_col, *carry,
+        "doc_id", *carry,
         F.col("link_idx").cast("long").alias("link_idx"),
         F.col("l.href").alias("href"),
         F.col("l.text").alias("anchor_text"),
@@ -205,34 +203,22 @@ def sql_url_parts(u: str) -> dict[str, str]:
 
 # --- per-host rollup --------------------------------------------------
 
-def host_stats(links: DataFrame, page_host_col: str = "page_host",
-               id_col: str = "doc_id",
-               exact_distinct: bool = True) -> DataFrame:
+def host_stats(links: DataFrame) -> DataFrame:
     """Per-host link rollup over an exploded link table that carries the
     linking page's own host: inlink count, distinct linking pages and
     hosts, internal-link count (self-references and relative links).
 
-    Shuffle shape (plan-asserted, tests/test_plan_shapes.py): with
-    ``exact_distinct=True`` the two count-distincts plan as Spark's
-    standard Expand + two hash exchanges on host — exact, and what the
-    DuckDB gate compares.  At crawl scale that Expand triples the edge
-    list through the first shuffle, so the 100 TB default is
-    ``exact_distinct=False``: ``approx_count_distinct`` (HyperLogLog++,
-    default 5% rsd) keeps the rollup a SINGLE hash exchange on ``host``
-    with map-side partials — per-executor traffic bounded by the
-    distinct-host count, not the edge count, and domain allow/deny
-    decisions don't need exact page counts.  The host key is
-    Zipf-skewed; AQE's skew handling (enabled session-wide,
-    session.py) splits the straggler post-shuffle partitions, and a
-    pre-salted two-level rollup is the documented escalation if a
-    single host exceeds one executor's memory (same playbook as
-    operators/dedup.py's hot-bucket guard).
+    Shuffle shape (plan-asserted, tests/test_plan_shapes.py): the two
+    exact count-distincts plan as Spark's standard Expand + two hash
+    exchanges on host — exact, and what the DuckDB gate compares.  The
+    host key is Zipf-skewed; AQE's skew handling (enabled session-wide,
+    session.py) splits the straggler post-shuffle partitions.
 
     Internal = a relative link (no host AND no scheme) or an absolute
     link to the page's own host; scheme-only pseudo-links (mailto:,
     tel:, javascript:) have an empty host but are NOT internal
     navigation — they land in the '' host bucket as external."""
-    for col in ("host", "scheme", page_host_col, id_col):
+    for col in ("host", "scheme", "page_host", "doc_id"):
         if col not in links.columns:
             raise ValueError(
                 f"host_stats needs column {col!r}; build the input "
@@ -240,17 +226,11 @@ def host_stats(links: DataFrame, page_host_col: str = "page_host",
                 "page's own host rides along")
     internal = ((F.col("host") == "") & (F.col("scheme") == "")) | \
         ((F.col("host") != "") &
-         (F.col("host") == F.col(page_host_col)))
-    if exact_distinct:
-        n_pages = F.countDistinct(id_col)
-        n_hosts = F.countDistinct(page_host_col)
-    else:
-        n_pages = F.approx_count_distinct(id_col)
-        n_hosts = F.approx_count_distinct(page_host_col)
+         (F.col("host") == F.col("page_host")))
     return links.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_links"),
-        n_pages.alias("n_pages"),
-        n_hosts.alias("n_linking_hosts"),
+        F.countDistinct("doc_id").alias("n_pages"),
+        F.countDistinct("page_host").alias("n_linking_hosts"),
         F.sum(F.when(internal, 1).otherwise(0)).cast("long")
          .alias("n_internal"),
         F.sum(F.when(F.col("scheme") == "https", 1).otherwise(0))
@@ -267,8 +247,7 @@ META_TAG_PATTERN = (r'(?is)<meta(?:\s[^>]*?)?\sname\s*=\s*"{name}"'
 META_CONTENT_PATTERN = r'(?is)\scontent\s*=\s*"([^"]*)"'
 
 
-def head_meta(docs: DataFrame, html_col: str = "html",
-              id_col: str = "doc_id") -> DataFrame:
+def head_meta(docs: DataFrame) -> DataFrame:
     """(doc_id, title, meta_description, meta_keywords): document
     metadata from the ``<head>`` that operators/html.py deliberately
     drops before block segmentation.  Two-step meta extraction (find
@@ -278,7 +257,7 @@ def head_meta(docs: DataFrame, html_col: str = "html",
     zero UDF."""
     from .html import TAG_PATTERN, WS_PATTERN
 
-    h = F.coalesce(F.col(html_col), F.lit(""))
+    h = F.coalesce(F.col("html"), F.lit(""))
     for pat, repl in META_QUOTE_NORM:
         h = F.regexp_replace(h, F.lit(pat), F.lit(repl))
 
@@ -294,7 +273,7 @@ def head_meta(docs: DataFrame, html_col: str = "html",
             F.regexp_extract(tag, META_CONTENT_PATTERN, 1)))
 
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         clean(F.regexp_extract(h, TITLE_PATTERN, 1)).alias("title"),
         meta("description").alias("meta_description"),
         meta("keywords").alias("meta_keywords"))

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..rules import int32_or_none
 from .filepass import file_pass, id_number
 
 FEATURE_DIM = 16
@@ -36,12 +37,11 @@ FEATURES_SCHEMA = (f"media_ref string, mime string, "
 FRAMES_SCHEMA = "media_ref string, frame_idx int, ts_ms int, frame binary"
 
 
-def synthesize_media(spark, refs_df: DataFrame,
-                     ref_col: str = "media_ref") -> DataFrame:
+def synthesize_media(spark, refs_df: DataFrame) -> DataFrame:
     """Deterministic fake media table for the given refs: content bytes and
     metadata derived from md5(media_ref). Stands in for the Iceberg media
     table the refs point at."""
-    r = F.col(ref_col)
+    r = F.col("media_ref")
     h = F.md5(r)
     width = (F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % 1920) + 16
     height = (F.conv(F.substring(h, 5, 4), 16, 10).cast("int") % 1080) + 16
@@ -113,9 +113,8 @@ def decode_media(media: DataFrame, fake: bool = False,
     return media.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 80,
-                  fake: bool = False) -> DataFrame:
-    """Frame sampling for video media: one row per sampled frame with a
+def sample_frames(media: DataFrame, fake: bool = False) -> DataFrame:
+    """Frame sampling for video media: one row per 80 ms frame with a
     deterministic fake frame payload (real extraction would call ffmpeg
     inside the same batch iterator)."""
     video = media.where(F.col("meta.mime") == "video/mp4")
@@ -129,7 +128,7 @@ def sample_frames(media: DataFrame, every_ms: int = 80,
             rows = []
             for ref, meta in zip(pdf["media_ref"], pdf["meta"]):
                 duration = int(meta["duration_ms"])
-                for idx, ts in enumerate(range(0, duration, every_ms)):
+                for idx, ts in enumerate(range(0, duration, 80)):
                     payload = hashlib.md5(
                         f"{ref}:{idx}".encode()).digest()
                     rows.append({"media_ref": ref, "frame_idx": idx,
@@ -231,18 +230,23 @@ def sniff_image(content: bytes) -> tuple:
     return (None, None, None, None)
 
 
-def image_header_meta(media: DataFrame, bytes_col: str = "content",
-                      ref_col: str = "media_ref") -> DataFrame:
+def image_header_meta(media: DataFrame) -> DataFrame:
     """(media_ref, content binary) -> typed header metadata as ONE
     map-only ``file_pass`` (zero shuffle, plan-asserted) — at
     media-corpus scale only the ~30 header bytes per blob are touched
-    CPU-side and only the metadata rows flow downstream."""
-    return file_pass(media, ref_col, [bytes_col], IMAGE_META_SCHEMA,
-                     lambda _ref, content: [sniff_image(content)])
+    CPU-side and only the metadata rows flow downstream.  A width or
+    height past int32 (a PNG IHDR field is 32 unsigned bits, a BMP
+    magnitude can reach 2^31) is NULL, like the metadata fields'
+    ``rules.int32_or_none``."""
+    def meta(_ref, content):
+        mime, w, h, depth = sniff_image(content)
+        return [(mime, int32_or_none(w), int32_or_none(h), depth)]
+
+    return file_pass(media, "media_ref", ["content"], IMAGE_META_SCHEMA,
+                     meta)
 
 
-def build_image_blobs(docs: DataFrame, id_col: str = "doc_id"
-                      ) -> DataFrame:
+def build_image_blobs(docs: DataFrame) -> DataFrame:
     """Deterministic synthetic image headers from doc_id arithmetic
     (the gate/scaling-corpus synthesizer): format rotates through
     png/jpeg/gif/bmp/webp-lossless by doc_id % 5, dimensions are
@@ -284,5 +288,5 @@ def build_image_blobs(docs: DataFrame, id_col: str = "doc_id"
                 struct.pack("<I", 10) + b"\x2f" +
                 struct.pack("<I", bits) + b"\x00")
 
-    return file_pass(docs, id_col, [], "media_ref string, content binary",
+    return file_pass(docs, "doc_id", [], "media_ref string, content binary",
                      lambda key: [(_build_one(id_number(key)),)])

@@ -923,7 +923,7 @@ class PdfFile:
                 "password-protected PDF (non-empty user password)")
         self._file_key = key
 
-    def _decrypt(self, obj: Any, num: int, gen: int = 0) -> Any:
+    def _decrypt(self, obj: Any, num: int) -> Any:
         """Recursively decrypt literal/hex strings and stream bytes
         with the per-object key; names/numbers/refs pass through."""
         if self._cipher == "aes256":  # file key used directly (§7.6.4)
@@ -936,12 +936,14 @@ class PdfFile:
         elif self._cipher == "aes":
             from ..functions.aes import cbc_decrypt
 
-            key = object_key(self._file_key, num, gen, aes=True)
+            # generation fixed at 0: wrong for G != 0 objects (CHANGES.md
+            # FOUND, PdfFile._load generation)
+            key = object_key(self._file_key, num, 0, aes=True)
 
             def raw_dec(b: bytes) -> bytes:
                 return cbc_decrypt(key, b)
         else:
-            key = object_key(self._file_key, num, gen)
+            key = object_key(self._file_key, num, 0)  # see G != 0 above
 
             def raw_dec(b: bytes) -> bytes:
                 return rc4(key, b)
@@ -1073,15 +1075,15 @@ class PdfFile:
             result.append((filters, b"\n".join(decoded)))
         return result
 
-    def page_texts(self, apply_rotation: bool = True) -> list[str]:
+    def page_texts(self) -> list[str]:
         """Decoded content streams as str (UTF-8 first, latin-1
         fallback — content-stream text encoding is font-dependent in
         general; this matches the writer below and degrades
         deterministically on foreign corpora).
 
-        ``apply_rotation`` prepends the §14.11.2-style display
-        transform for pages with inherited ``/Rotate`` 90/180/270 as
-        a synthetic ``cm`` — the CTM then rotates every run into
+        A page with inherited ``/Rotate`` 90/180/270 gets the
+        §14.11.2-style display transform prepended as a synthetic
+        ``cm`` — the CTM then rotates every run into
         display space, so the layout stage clusters in READING order
         on rotated (scanner-output) pages.  The y-down conversion's
         fixed page height only shifts absolute coordinates, never
@@ -1093,17 +1095,16 @@ class PdfFile:
                 txt = raw.decode("utf-8")
             except UnicodeDecodeError:
                 txt = raw.decode("latin-1")
-            if apply_rotation:
-                rot = int(self.get(page.get("Rotate")) or 0) % 360
-                box = self.get(page.get("MediaBox")) or [0, 0, 612, 792]
-                w = float(self.get(box[2])) - float(self.get(box[0]))
-                h = float(self.get(box[3])) - float(self.get(box[1]))
-                if rot == 90:     # (x,y) -> (y, W - x)
-                    txt = f"0 -1 1 0 0 {w:g} cm " + txt
-                elif rot == 180:  # (x,y) -> (W - x, H - y)
-                    txt = f"-1 0 0 -1 {w:g} {h:g} cm " + txt
-                elif rot == 270:  # (x,y) -> (H - y, x)
-                    txt = f"0 1 -1 0 {h:g} 0 cm " + txt
+            rot = int(self.get(page.get("Rotate")) or 0) % 360
+            box = self.get(page.get("MediaBox")) or [0, 0, 612, 792]
+            w = float(self.get(box[2])) - float(self.get(box[0]))
+            h = float(self.get(box[3])) - float(self.get(box[1]))
+            if rot == 90:     # (x,y) -> (y, W - x)
+                txt = f"0 -1 1 0 0 {w:g} cm " + txt
+            elif rot == 180:  # (x,y) -> (W - x, H - y)
+                txt = f"-1 0 0 -1 {w:g} {h:g} cm " + txt
+            elif rot == 270:  # (x,y) -> (H - y, x)
+                txt = f"0 1 -1 0 {h:g} 0 cm " + txt
             out.append(txt)
         return out
 
@@ -2464,15 +2465,14 @@ def wrap_content_stream(variant: int, content: bytes) -> bytes:
     return bytes(out)
 
 
-def wrap_stream_files(docs: DataFrame, stream_col: str = "stream",
-                      id_col: str = "doc_id") -> DataFrame:
+def wrap_stream_files(docs: DataFrame) -> DataFrame:
     """(doc_id, stream) -> (doc_id, pdf binary): each rendered content
     stream wrapped as a whole single-page PDF file (variant chosen
     from the digits of doc_id — deterministic, partition-invariant).
     One map-only Arrow pass; the scaling-corpus synthesizer for the
     ``pdffile`` stage."""
     return file_pass(
-        docs, id_col, [stream_col], FILES_SCHEMA,
+        docs, "doc_id", ["stream"], FILES_SCHEMA,
         lambda key, stream: [(wrap_content_stream(
             id_number(key), (stream or "").encode("utf-8")),)])
 
@@ -2521,17 +2521,15 @@ def _meta(pf: "PdfFile") -> tuple:
             f1[0] if f1 else "none")
 
 
-def build_pdf_files(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def build_pdf_files(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, pdf binary) via the deterministic
     writer — ONE map-only Arrow pass (test-corpus synthesis; at
     production scale the binary column arrives from the lake)."""
-    return file_pass(docs, id_col, [text_col], FILES_SCHEMA,
+    return file_pass(docs, "doc_id", ["text"], FILES_SCHEMA,
                      lambda key, text: [(build_pdf(int(key), text or ""),)])
 
 
-def pages_from_files(files: DataFrame, bytes_col: str = "pdf",
-                     id_col: str = "doc_id") -> DataFrame:
+def pages_from_files(files: DataFrame) -> DataFrame:
     """Whole-file parse: (doc_id, pdf bytes) -> (doc_id, page, stream)
     — xref walk, filter decode, page-tree DFS, one map-only
     ``file_pass`` (zero shuffle, plan-asserted).  A file whose parse
@@ -2550,69 +2548,63 @@ def pages_from_files(files: DataFrame, bytes_col: str = "pdf",
                     fmaps[pg] if pg < len(fmaps) else {},
                     forms[pg] if pg < len(forms) else {})
 
-    return file_pass(files, id_col, [bytes_col], PAGES_SCHEMA, rows_of)
+    return file_pass(files, "doc_id", ["pdf"], PAGES_SCHEMA, rows_of)
 
 
-def file_meta(files: DataFrame, bytes_col: str = "pdf",
-              id_col: str = "doc_id") -> DataFrame:
+def file_meta(files: DataFrame) -> DataFrame:
     """Structural metadata per file: page/object/revision counts, xref
     flavor, /Info title (post-update), page-1 content filter.  A file
     whose parse raises yields no row."""
-    return file_pass(files, id_col, [bytes_col], META_SCHEMA,
+    return file_pass(files, "doc_id", ["pdf"], META_SCHEMA,
                      lambda _key, blob: _parsed(blob, _meta))
 
 
-def outline_table(files: DataFrame, bytes_col: str = "pdf",
-                  id_col: str = "doc_id") -> DataFrame:
+def outline_table(files: DataFrame) -> DataFrame:
     """(doc_id, pdf) -> flattened bookmark rows (doc_id, ord, depth,
     title, page) in display order — map-only; the document-structure
     side channel sectioning can join against the layout blocks."""
     return file_pass(
-        files, id_col, [bytes_col], OUTLINE_SCHEMA,
+        files, "doc_id", ["pdf"], OUTLINE_SCHEMA,
         lambda _key, blob: [(k, *r)
                             for rows in _parsed(blob, PdfFile.outlines)
                             for k, r in enumerate(rows)])
 
 
-def pdf_link_table(files: DataFrame, bytes_col: str = "pdf",
-                   id_col: str = "doc_id") -> DataFrame:
+def pdf_link_table(files: DataFrame) -> DataFrame:
     """(doc_id, pdf) -> (doc_id, page, uri) for /Link//URI annotations
     — map-only; feeds the crawl-curation link chain
     (`operators/links.py` url_parts / host_stats) unchanged."""
     return file_pass(
-        files, id_col, [bytes_col], LINKS_SCHEMA,
+        files, "doc_id", ["pdf"], LINKS_SCHEMA,
         lambda _key, blob: [
             r for rows in _parsed(blob, PdfFile.link_annotations)
             for r in rows])
 
 
-def annot_table(files: DataFrame, bytes_col: str = "pdf",
-                id_col: str = "doc_id") -> DataFrame:
+def annot_table(files: DataFrame) -> DataFrame:
     """(doc_id, pdf) -> (doc_id, page, subtype, contents) for every
     text-carrying annotation — map-only; reviewer markup becomes
     corpus rows alongside the extracted spans."""
     return file_pass(
-        files, id_col, [bytes_col], ANNOTS_SCHEMA,
+        files, "doc_id", ["pdf"], ANNOTS_SCHEMA,
         lambda _key, blob: [
             r for rows in _parsed(blob, PdfFile.annotation_texts)
             for r in rows])
 
 
-def acroform_table(files: DataFrame, bytes_col: str = "pdf",
-                   id_col: str = "doc_id") -> DataFrame:
+def acroform_table(files: DataFrame) -> DataFrame:
     """(doc_id, pdf) -> (doc_id, ord, name, ftype, value) for every
     terminal /AcroForm field — map-only; filled form values become
     queryable corpus rows the enrichment plans can consume like any
     other extracted attribute."""
     return file_pass(
-        files, id_col, [bytes_col], ACROFORM_SCHEMA,
+        files, "doc_id", ["pdf"], ACROFORM_SCHEMA,
         lambda _key, blob: [(k, *r)
                             for rows in _parsed(blob, PdfFile.form_fields)
                             for k, r in enumerate(rows)])
 
 
-def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
-                   id_col: str = "doc_id", **kw) -> DataFrame:
+def files_to_spans(files: DataFrame, **kw) -> DataFrame:
     """Whole PDF files -> contract span arrays in ONE map-only pass:
     parse -> per-page tokenize -> `layout.layout_page` -> page-ordered
     gapless spans, inside a single ``mapInArrow`` with zero exchanges
@@ -2626,25 +2618,19 @@ def files_to_spans(files: DataFrame, bytes_col: str = "pdf",
     ``kw`` takes the `pdfstream.pdf_to_spans` layout options
     (page_height, y_tol, gap_tol, with_fonts, space_frac,
     detect_tables, col_gap, col_tol, drop_artifacts).  ToUnicode
-    CMaps, /Encoding and /Widths metrics and Form XObjects apply by
-    default; ``maps_col=None`` tokenizes without them."""
+    CMaps, /Encoding and /Widths metrics and Form XObjects apply."""
     from .pdfstream import spans_pass
 
-    use_maps = kw.pop("maps_col", "fontmaps") is not None
-    sel = files.select(F.col(id_col).cast("string").alias("doc_id"),
-                       F.col(bytes_col).alias("pdf"))
-    return spans_pass(sel, lambda blob, _memo: file_pages(blob, use_maps),
-                      **kw)
+    sel = files.select(F.col("doc_id").cast("string").alias("doc_id"),
+                       "pdf")
+    return spans_pass(sel, lambda blob, _memo: file_pages(blob), **kw)
 
 
-def file_pages(blob: bytes | None, use_maps: bool = True) -> list | None:
+def file_pages(blob: bytes | None) -> list | None:
     """One PDF file -> its `pdfstream.doc_spans` page list, each page
     one ``(stream, font_maps, forms)`` content stream, or None when the
-    parse raises (the shared ``_parsed`` guard).  ``use_maps=False``
-    leaves out the font maps and Form XObjects."""
+    parse raises (the shared ``_parsed`` guard)."""
     for texts, fonts, forms in _parsed(blob, _page_payloads):
-        if not use_maps:
-            return [[(txt, None, None)] for txt in texts]
         return [[(txt, fonts[pg] if pg < len(fonts) else None,
                   forms[pg] if pg < len(forms) else None)]
                 for pg, txt in enumerate(texts)]

@@ -46,8 +46,8 @@ character (the flat-width heuristic; Tc/Tw/Tz ARE applied exactly).
 Positions of run ORIGINS are exact per the spec; only the x-extent of
 a run (``w``) and the inter-segment advance inside one Tj/TJ chain are
 heuristic.  The layout stage clusters on origins and tolerances, so
-block/line structure is insensitive to the approximation; a metrics
-table can be plugged in via ``char_width``.
+block/line structure is insensitive to the approximation; fonts with
+a /Widths table use their real advances.
 
 Scale shape (100 TB / 10^12 docs): the kernel is ONE ``mapInArrow``
 pass — map-only, zero shuffle, linear in stream bytes; 1000 executors
@@ -306,7 +306,7 @@ def _apply_cmap(raw: str, cmap: dict[int, str], width: int,
     FontDescriptor /MissingWidth fallback; ``advance_units`` is the
     summed advance in text-space ems (Σ w_c / 1000) or None when the
     font has no width table (caller falls back to the uniform
-    ``char_width``)."""
+    ``DEFAULT_CHAR_WIDTH``)."""
     if width == 2:
         codes = [(ord(raw[i]) << 8) | ord(raw[i + 1])
                  for i in range(0, len(raw) - 1, 2)]
@@ -335,7 +335,6 @@ _MAX_FORM_DEPTH = 8  # §8.10 nesting bound: cyclic/degenerate form
 
 
 def machine_runs(tokens: Iterator[tuple[str, Any]],
-                 char_width: float = DEFAULT_CHAR_WIDTH,
                  font_maps: dict[str, tuple[dict[int, str], int]]
                  | None = None,
                  forms: dict[str, dict] | None = None,
@@ -462,12 +461,12 @@ def machine_runs(tokens: Iterator[tuple[str, Any]],
         # advance in TEXT space (§9.4.4): per glyph
         #   (w0*size + Tc + (Tw if space)) * Tz/100; w0 from the
         #   font's /Widths table when it carries one, else the
-        #   uniform char_width fallback
+        #   uniform DEFAULT_CHAR_WIDTH fallback
         if units is not None:
             adv = (units * size + tc * n_glyphs + tw * n_sp) \
                 * (tz / 100.0)
         else:
-            adv = ((char_width * size + tc) * n_glyphs + tw * n_sp) \
+            adv = ((DEFAULT_CHAR_WIDTH * size + tc) * n_glyphs + tw * n_sp) \
                 * (tz / 100.0)
         h = size * abs(tm[3]) * abs(ctm[3])
         w_dev = adv * abs(tm[0]) * abs(ctm[0])
@@ -573,7 +572,6 @@ def machine_runs(tokens: Iterator[tuple[str, Any]],
                         mtx = form.get("mtx")
                         runs.extend(machine_runs(
                             lex_content(form.get("text") or ""),
-                            char_width,
                             {**(font_maps or {}), **sub_f}
                             if sub_f else font_maps,
                             {**(forms or {}), **sub_x}
@@ -641,15 +639,14 @@ def machine_runs(tokens: Iterator[tuple[str, Any]],
 
 
 def extract_runs(stream: str,
-                 char_width: float = DEFAULT_CHAR_WIDTH,
                  font_maps: dict[str, tuple[dict[int, str], int]]
                  | None = None,
                  forms: dict[str, dict] | None = None,
                  with_rules: bool = False,
                  drop_artifacts: bool = False) -> list[tuple]:
     """Lex + run the machine over one content stream."""
-    return machine_runs(lex_content(stream), char_width, font_maps,
-                        forms, with_rules=with_rules,
+    return machine_runs(lex_content(stream), font_maps, forms,
+                        with_rules=with_rules,
                         drop_artifacts=drop_artifacts)
 
 
@@ -739,10 +736,7 @@ def fontmaps_from_json(js: str | None, memo: dict) -> tuple:
     return memo[js]
 
 
-def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
-                     id_col: str = "doc_id",
-                     char_width: float = DEFAULT_CHAR_WIDTH,
-                     maps_col: str | None = None,
+def tokenize_streams(docs: DataFrame, maps_col: str | None = None,
                      with_rules: bool = False,
                      drop_artifacts: bool = False) -> DataFrame:
     """Batched byte-stream tokenization: (doc_id, stream) -> exploded
@@ -787,8 +781,7 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
             for doc_id, stream, js in zip(ids, streams, maps_js):
                 fmaps, forms = fontmaps_from_json(js, memo)
                 for idx, run in enumerate(
-                        extract_runs(stream or "", char_width,
-                                     fmaps, forms,
+                        extract_runs(stream or "", fmaps, forms,
                                      with_rules=with_rules,
                                      drop_artifacts=drop_artifacts)):
                     cols[0].append(doc_id)
@@ -799,8 +792,8 @@ def tokenize_streams(docs: DataFrame, stream_col: str = "stream",
                 [pa.array(c, type=t) for c, (_, t) in zip(cols, fields)],
                 schema=out_schema)
 
-    sel_cols = [F.col(id_col).cast("string").alias("doc_id"),
-                F.col(stream_col).alias("stream")]
+    sel_cols = [F.col("doc_id").cast("string").alias("doc_id"),
+                F.col("stream")]
     if maps_col:
         sel_cols.append(F.col(maps_col).alias("fontmaps"))
     sel = docs.select(*sel_cols)
@@ -832,8 +825,8 @@ def doc_spans(pages: list[list[tuple]], *, page_height: float = 792.0,
                  mref if kind == "media" else None)
                 for stream, fonts, forms in page
                 for kind, text, mref, font, size, x, y, w, h
-                in extract_runs(stream or "", DEFAULT_CHAR_WIDTH, fonts,
-                                forms, drop_artifacts=drop_artifacts)]
+                in extract_runs(stream or "", fonts, forms,
+                                drop_artifacts=drop_artifacts)]
         for kind, text, mref, font, size in layout_page(
                 runs, y_tol=y_tol, gap_tol=gap_tol,
                 space_frac=space_frac, with_fonts=with_fonts,
@@ -979,12 +972,9 @@ def pdf_to_spans(docs: DataFrame, stream_col: str = "stream",
                       col_tol=col_tol, drop_artifacts=drop_artifacts)
 
 
-def ruled_table_rows(docs: DataFrame, stream_col: str = "stream",
-                     id_col: str = "doc_id",
-                     maps_col: str | None = None,
-                     **kwargs) -> DataFrame:
-    """Content streams -> ruled-table rows: the pdfplumber-default
-    'lines' table strategy end-to-end (the reference's
+def ruled_table_rows(docs: DataFrame, **kwargs) -> DataFrame:
+    """(doc_id, stream) content streams -> ruled-table rows: the
+    pdfplumber-default 'lines' table strategy end-to-end (the reference's
     ``page.extract_tables()``, `src/table_extractor.py:9-56`, over
     bordered report tables).  One map-only tokenize pass with
     ``with_rules=True`` (drawn grid lines emit as rule runs alongside
@@ -998,6 +988,5 @@ def ruled_table_rows(docs: DataFrame, stream_col: str = "stream",
     """
     from .layout import detect_ruled_tables
 
-    runs = tokenize_streams(docs, stream_col, id_col,
-                            maps_col=maps_col, with_rules=True)
+    runs = tokenize_streams(docs, with_rules=True)
     return detect_ruled_tables(runs, **kwargs)

@@ -84,15 +84,15 @@ def redact_col(text: Column) -> Column:
     return out
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc scrub: original columns with ``text_col`` replaced by the
+def scrub_pii(docs: DataFrame) -> DataFrame:
+    """Per-doc scrub: original columns with ``text`` replaced by the
     redacted text, plus n_email/n_phone/n_ipv4 counts (= tokens inserted
     per rule) and ``has_pii``."""
-    text = F.col(text_col)
+    text = F.col("text")
     counts = pii_count_columns(text)
     out = docs.select(
-        *[c for c in docs.columns if c != text_col],
-        redact_col(text).alias(text_col),
+        *[c for c in docs.columns if c != "text"],
+        redact_col(text).alias("text"),
         *counts)
     total = sum((F.col(f"n_{name}") for name, _, _ in PII_RULES),
                 F.lit(0).cast("long"))

@@ -139,20 +139,18 @@ def parse_pptx(data: bytes) -> list[dict[str, Any]]:
 ROWS_SCHEMA = ("doc_id string, slide int, el_idx int, kind string, "
                "text string, media_ref string")
 
-def pptx_rows_from_files(files: DataFrame, bytes_col: str = "pptx",
-                         id_col: str = "doc_id") -> DataFrame:
+def pptx_rows_from_files(files: DataFrame) -> DataFrame:
     """(doc_id, pptx binary) -> typed element rows in deck order.
     ONE map-only ``file_pass`` (zero shuffle, zero joins): each deck
     arrives whole in its row and parses inside the scan stage."""
     return file_pass(
-        files, id_col, [bytes_col], ROWS_SCHEMA,
+        files, "doc_id", ["pptx"], ROWS_SCHEMA,
         lambda _key, blob: [
             (r["slide"], i, r["kind"], r["text"], r["media_ref"])
             for i, r in enumerate(parse_pptx(blob or b""))])
 
 
-def pptx_to_spans(files: DataFrame, bytes_col: str = "pptx",
-                  id_col: str = "doc_id") -> DataFrame:
+def pptx_to_spans(files: DataFrame) -> DataFrame:
     """PPTX files -> BASELINE.json contract span arrays: every
     text-bearing element a ``text`` span, every slide image a
     ``media`` span with the resolved media part path as
@@ -162,7 +160,7 @@ def pptx_to_spans(files: DataFrame, bytes_col: str = "pptx",
     from ..corpus import SPAN_SCHEMA  # local: corpus loads pandas
 
     return file_pass(
-        files, id_col, [bytes_col], SPAN_SCHEMA,
+        files, "doc_id", ["pptx"], SPAN_SCHEMA,
         lambda _key, blob: [(element_spans(parse_pptx(blob or b"")),)])
 
 
@@ -262,12 +260,11 @@ def build_one_pptx(doc: int, text: str) -> bytes:
     return buf.getvalue()
 
 
-def build_pptx_files(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def build_pptx_files(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, pptx binary) via the deterministic
     writer; one map-only Arrow pass (test-corpus synthesis — at
     production scale the binary column arrives from the lake)."""
     return file_pass(
-        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        docs, "doc_id", [F.coalesce(F.col("text"), F.lit(""))],
         "doc_id string, pptx binary",
         lambda key, text: [(build_one_pptx(id_number(key), text),)])

@@ -56,14 +56,14 @@ def line_stats_columns(text: Column) -> list[Column]:
     ]
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Per-doc repetition signals: (doc_id, n_tokens, n_lines,
     dup_line_ppm, top_bigram_count, top_bigram_ppm).
 
     top_bigram_ppm = tokens covered by the most frequent bigram
     (count x 2) per million tokens; 0 for docs with < 2 tokens.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     toks = tokens_col(F.lower(text))
     # no persist: the two consumers below (per-doc stats and the bigram
     # explode) each scan the input once — stateless and spill-free at

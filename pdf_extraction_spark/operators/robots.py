@@ -46,8 +46,7 @@ from pyspark.sql import functions as F
 _DIRECTIVE_RE = r"(?i)^[ \t]*(user-agent|allow|disallow|crawl-delay|sitemap)[ \t]*:[ \t]*(.*?)[ \t]*$"
 
 
-def parse_robots(robots: DataFrame, body_col: str = "robots",
-                 host_col: str = "host") -> DataFrame:
+def parse_robots(robots: DataFrame) -> DataFrame:
     """(host, robots body) -> one row per directive line:
     (host, line_no, group_id, directive, value).
 
@@ -60,8 +59,8 @@ def parse_robots(robots: DataFrame, body_col: str = "robots",
     group column is carried for audit)."""
     line = F.regexp_replace(F.col("raw"), r"#.*$", "")
     d = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(body_col), r"\r?\n"))
+        F.col("host"),
+        F.posexplode(F.split(F.col("robots"), r"\r?\n"))
         .alias("line_no", "raw"))
     d = d.select(
         "host", "line_no",
@@ -104,9 +103,7 @@ def _path_regex(rule: Column) -> Column:
 
 
 def robots_allowed(urls: DataFrame, rules: DataFrame,
-                   agent: str = "sparkbot",
-                   url_col: str = "path",
-                   host_col: str = "host") -> DataFrame:
+                   agent: str = "sparkbot") -> DataFrame:
     """Admission decision per (host, path) against a parsed rules
     table (``parse_robots`` output): adds ``allowed`` (boolean) and
     ``matched_rule`` (the winning rule path, NULL if none applied).
@@ -149,8 +146,8 @@ def robots_allowed(urls: DataFrame, rules: DataFrame,
                  .alias("rule_re"),
                 F.length("value").alias("rule_len"))
 
-    u = urls.select(F.col(host_col).alias("host"),
-                    F.col(url_col).alias("path")).distinct()
+    u = urls.select(F.col("host"),
+                    F.col("path")).distinct()
     m = u.join(F.broadcast(rr), "host", "left") \
         .where(F.col("rule_re").isNull() |
                F.expr("path rlike rule_re"))
@@ -169,16 +166,15 @@ def robots_allowed(urls: DataFrame, rules: DataFrame,
     return urls.join(
         dec.withColumnRenamed("host", "h")
            .withColumnRenamed("path", "p"),
-        (F.col(host_col) == F.col("h")) &
-        (F.col(url_col) == F.col("p")), "left") \
+        (F.col("host") == F.col("h")) &
+        (F.col("path") == F.col("p")), "left") \
         .drop("h", "p") \
         .withColumn("allowed", F.coalesce("allowed", F.lit(True)))
 
 
 # ------------------------------------------------------------ sitemap
 
-def sitemap_urls(docs: DataFrame, xml_col: str = "xml",
-                 host_col: str = "host") -> DataFrame:
+def sitemap_urls(docs: DataFrame) -> DataFrame:
     """Sitemap XML -> (host, kind, loc, lastmod) rows: ``<urlset>``
     entries yield kind='url', ``<sitemapindex>`` entries kind=
     'sitemap' (feed those back through fetch->parse for the index
@@ -186,14 +182,14 @@ def sitemap_urls(docs: DataFrame, xml_col: str = "xml",
     entry blocks come out of two ``regexp_extract_all`` calls (one
     per element name: no backreference, tri-engine subset),
     loc/lastmod out of per-element extracts over the block array."""
-    xml = F.col(xml_col)
+    xml = F.col("xml")
     blocks = F.concat(
         F.regexp_extract_all(xml, F.lit(r"(?is)<url>.*?</url>"),
                              F.lit(0)),
         F.regexp_extract_all(
             xml, F.lit(r"(?is)<sitemap>.*?</sitemap>"), F.lit(0)))
     entry = F.explode(blocks).alias("entry")
-    d = docs.select(F.col(host_col).alias("host"), entry)
+    d = docs.select(F.col("host"), entry)
     e = F.col("entry")
     return d.select(
         "host",
@@ -206,8 +202,7 @@ def sitemap_urls(docs: DataFrame, xml_col: str = "xml",
         .where(F.col("loc") != "")
 
 
-def feed_entries(docs: DataFrame, xml_col: str = "xml",
-                 host_col: str = "host") -> DataFrame:
+def feed_entries(docs: DataFrame) -> DataFrame:
     """RSS 2.0 / Atom feed XML -> (host, fmt, title, link, published)
     rows — the third frontier-seeding format next to sitemaps and
     page outlinks.  RSS ``<item>`` blocks carry ``<title>``,
@@ -217,13 +212,13 @@ def feed_entries(docs: DataFrame, xml_col: str = "xml",
     column expressions in the tri-engine subset — zero shuffle, zero
     UDF, no backreferences (one extract_all per element name, same
     trick as sitemap_urls)."""
-    xml = F.col(xml_col)
+    xml = F.col("xml")
     blocks = F.concat(
         F.regexp_extract_all(xml, F.lit(r"(?is)<item>.*?</item>"),
                              F.lit(0)),
         F.regexp_extract_all(xml, F.lit(r"(?is)<entry>.*?</entry>"),
                              F.lit(0)))
-    d = docs.select(F.col(host_col).alias("host"),
+    d = docs.select(F.col("host"),
                     F.explode(blocks).alias("entry"))
     e = F.col("entry")
     is_rss = F.lower(e).startswith("<item")

@@ -47,8 +47,7 @@ def _threshold(rate: float) -> int:
     return int(round(rate * SAMPLE_MOD))
 
 
-def sample_corpus(docs: DataFrame, rate: float, key_col: str = "doc_id",
-                  salt: str = "") -> DataFrame:
+def sample_corpus(docs: DataFrame, rate: float, salt: str = "") -> DataFrame:
     """Keep each row with probability ``rate``, deterministically by key.
 
     The predicate is a pure column expression, so Catalyst pushes it into
@@ -56,17 +55,14 @@ def sample_corpus(docs: DataFrame, rate: float, key_col: str = "doc_id",
     shuffles nothing and materializes only the kept 1 TB.
     """
     return docs.where(
-        sample_hash_col(F.col(key_col), salt) < F.lit(_threshold(rate)))
+        sample_hash_col(F.col("doc_id"), salt) < F.lit(_threshold(rate)))
 
 
 def stratified_sample(docs: DataFrame, rates: dict[str, float],
-                      strata_col: str = "source",
-                      default_rate: float = 0.0,
-                      key_col: str = "doc_id",
-                      salt: str = "") -> DataFrame:
-    """Per-stratum deterministic sampling: keep a row iff its key hash is
-    under its stratum's threshold.  ``rates`` maps stratum value -> keep
-    rate; strata not listed get ``default_rate``.
+                      default_rate: float = 0.0, salt: str = "") -> DataFrame:
+    """Per-stratum deterministic sampling: keep a row iff its ``doc_id``
+    hash is under its ``source`` stratum's threshold.  ``rates`` maps
+    stratum value -> keep rate; strata not listed get ``default_rate``.
 
     This is also the mixture-reweighting operator: to hit target source
     proportions in a training mix, set each source's rate to
@@ -85,22 +81,16 @@ def stratified_sample(docs: DataFrame, rates: dict[str, float],
         pairs.append(F.lit(value))
         pairs.append(F.lit(_threshold(rate)))
     thresholds = F.create_map(*pairs)
-    thr = F.coalesce(thresholds[F.col(strata_col)],
+    thr = F.coalesce(thresholds[F.col("source")],
                      F.lit(_threshold(default_rate)))
-    return docs.where(sample_hash_col(F.col(key_col), salt) < thr)
+    return docs.where(sample_hash_col(F.col("doc_id"), salt) < thr)
 
 
 def pack_shards(docs: DataFrame, token_budget: int,
-                n_partitions: int = 32, key_col: str = "doc_id",
-                text_col: str = "text",
-                counter: str = "whitespace") -> DataFrame:
+                n_partitions: int = 32) -> DataFrame:
     """Assign each document to a training shard of ~``token_budget``
-    tokens: first-fit by cumulative token count within a deterministic
-    pack partition.  ``counter`` picks the budget unit: ``whitespace``
-    (word-priced corpora, the gate's contract) or ``bpe`` (the
-    textstats BPE-ish pre-tokenizer count — use when shards are priced
-    in model tokens; same plan shape, only the counting expression
-    changes).
+    tokens (whitespace tokens of ``text``): first-fit by cumulative
+    token count within a deterministic pack partition of ``doc_id``.
 
     Layout contract (engine-portable, cluster-size-invariant):
       - ``pack_partition`` = key-hash mod ``n_partitions``,
@@ -127,27 +117,19 @@ def pack_shards(docs: DataFrame, token_budget: int,
     # engines disagree on NULL sort position (Spark first, DuckDB last)
     # — exactly the cross-engine nondeterminism the tie-break exists to
     # prevent. '' keeps identical semantics in both (1 token, md5('')).
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    if counter == "whitespace":
-        tok = F.size(tokens_col(txt)).cast("long")
-    elif counter == "bpe":
-        from .textstats import bpe_tokens_col
-        tok = F.greatest(F.size(bpe_tokens_col(txt)), F.lit(0)) \
-            .cast("long")
-    else:
-        raise ValueError(f"unknown counter {counter!r}"
-                         " (expected 'whitespace' or 'bpe')")
-    part = sample_hash_col(F.col(key_col), "pack") % n_partitions
+    txt = F.coalesce(F.col("text"), F.lit(""))
+    tok = F.size(tokens_col(txt)).cast("long")
+    part = sample_hash_col(F.col("doc_id"), "pack") % n_partitions
     staged = docs.withColumn("doc_tokens", tok) \
         .withColumn("pack_partition", part)
-    # key_col SHOULD be unique, but the window order must be total even
+    # doc_id SHOULD be unique, but the window order must be total even
     # when it is not: duplicate keys under a partial sort make the
     # running sum — and so every later doc's shard — nondeterministic
     # across runs/engines, silently breaking the module's
     # bit-reproducibility contract. doc_tokens + content hash break ties
     # deterministically (mirrored in the SQL oracle).
     w = Window.partitionBy("pack_partition") \
-        .orderBy(key_col, "doc_tokens", F.md5(txt)) \
+        .orderBy("doc_id", "doc_tokens", F.md5(txt)) \
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = F.sum("doc_tokens").over(w)
     local = F.floor((cum - F.col("doc_tokens")) / F.lit(token_budget))

@@ -1,4 +1,5 @@
-"""Similarity search over an embedding column (array<float/double>).
+"""Similarity search over ``(vec_id, embedding)`` tables, the embedding
+an array<float/double>.
 
 - brute-force cosine top-k: the exact baseline; JVM-side zip_with/aggregate
   dot products (no UDF).
@@ -55,33 +56,29 @@ def cosine_col(a: Column, b: Column, dim: int | None = None) -> Column:
     return _dot(a, b, dim) / (_norm(a, dim) * _norm(b, dim))
 
 
-def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-                id_col: str = "vec_id",
-                emb_col: str = "embedding") -> DataFrame:
-    """Exact top-k by cosine against one query vector (brute force via
+def cosine_topk(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
+    """Exact top-10 by cosine against one query vector (brute force via
     the Arrow scoring kernel; per-partition top-k then a driver-side
     TakeOrderedAndProject — no full sort materializes)."""
-    scored = cosine_scores_arrow(
-        embeddings.select(id_col, emb_col), query_vec, emb_col)
+    scored = cosine_scores_arrow(embeddings.select("vec_id", "embedding"),
+                                 query_vec)
     return (scored
-            .select(id_col, "cosine")
-            .orderBy(F.desc("cosine"), id_col)
-            .limit(k))
+            .select("vec_id", "cosine")
+            .orderBy(F.desc("cosine"), "vec_id")
+            .limit(10))
 
 
-def knn_label_vote(embeddings: DataFrame, query_vec: list[float],
-                   k: int = 10, id_col: str = "vec_id",
-                   emb_col: str = "embedding",
-                   label_col: str = "label") -> DataFrame:
-    """Majority label among the k nearest neighbours (ties -> smaller
-    label)."""
+def knn_label_vote(embeddings: DataFrame,
+                   query_vec: list[float]) -> DataFrame:
+    """Majority ``label`` among the 10 nearest neighbours (ties ->
+    smaller label)."""
     scored = cosine_scores_arrow(
-        embeddings.select(label_col, id_col, emb_col), query_vec, emb_col)
-    top = (scored.select(label_col, "cosine", id_col)
-           .orderBy(F.desc("cosine"), id_col).limit(k))
-    return (top.groupBy(label_col)
+        embeddings.select("label", "vec_id", "embedding"), query_vec)
+    top = (scored.select("label", "cosine", "vec_id")
+           .orderBy(F.desc("cosine"), "vec_id").limit(10))
+    return (top.groupBy("label")
             .agg(F.count(F.lit(1)).alias("votes"))
-            .orderBy(F.desc("votes"), label_col)
+            .orderBy(F.desc("votes"), "label")
             .limit(1))
 
 
@@ -140,10 +137,10 @@ def _ordered_proj(emb64: np.ndarray, plane: np.ndarray) -> np.ndarray:
 
 
 def lsh_buckets_arrow(embeddings: DataFrame, dim: int, n_planes: int = 16,
-                      seed: int = 42,
-                      emb_col: str = "embedding") -> DataFrame:
+                      seed: int = 42) -> DataFrame:
     """Arrow-kernel twin of the Catalyst bucket projection: appends the
-    sign-bit ``bucket`` column in one mapInArrow pass.
+    hyperplane sign-bit ``bucket`` column of ``embedding`` in one
+    mapInArrow pass.
 
     Why a python kernel is the production path: the unrolled JVM
     projection is n_planes x dim multiply-add terms PER TABLE — at
@@ -163,7 +160,7 @@ def lsh_buckets_arrow(embeddings: DataFrame, dim: int, n_planes: int = 16,
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            col = rb.column(rb.schema.get_field_index(emb_col))
+            col = rb.column(rb.schema.get_field_index("embedding"))
             n = len(col)
             if col.null_count:
                 valid = np.asarray(col.is_valid())
@@ -192,20 +189,6 @@ def lsh_buckets_arrow(embeddings: DataFrame, dim: int, n_planes: int = 16,
     return embeddings.mapInArrow(run, schema=out_schema)
 
 
-def with_lsh_buckets(embeddings: DataFrame, dim: int, n_planes: int = 16,
-                     seed: int = 42, emb_col: str = "embedding",
-                     arrow: bool = True) -> DataFrame:
-    """Append the hyperplane sign-bit ``bucket`` column. ``arrow=True``
-    (default) runs the O(1)-plan Arrow kernel; ``arrow=False`` keeps the
-    pure-Catalyst unrolled projection as the reference twin — both are
-    bit-identical per row."""
-    if arrow:
-        return lsh_buckets_arrow(embeddings, dim, n_planes, seed, emb_col)
-    planes = hyperplanes(dim, n_planes, seed)
-    return embeddings.withColumn("bucket",
-                                 lsh_bucket_col(F.col(emb_col), planes))
-
-
 def _ordered_sq_norm32(mat32: np.ndarray) -> np.ndarray:
     """Left-associated sum of float32 squares cast to double — mirrors
     _norm's `(element_at(a,j) * element_at(a,j)).cast("double")` terms
@@ -217,10 +200,10 @@ def _ordered_sq_norm32(mat32: np.ndarray) -> np.ndarray:
     return acc
 
 
-def cosine_scores_arrow(embeddings: DataFrame, query_vec: list[float],
-                        emb_col: str = "embedding",
-                        out_col: str = "cosine") -> DataFrame:
-    """Appends cosine-vs-query as ``out_col`` in one mapInArrow pass —
+def cosine_scores_arrow(embeddings: DataFrame,
+                        query_vec: list[float]) -> DataFrame:
+    """Appends cosine of ``embedding`` vs the query as ``cosine`` in one
+    mapInArrow pass —
     bit-identical to `cosine_col(col, F.array(*lits), dim)` (query
     literals are doubles, so dot terms widen the f32 element before the
     multiply; norms square in f32 first; all sums left-associated).
@@ -236,24 +219,23 @@ def cosine_scores_arrow(embeddings: DataFrame, query_vec: list[float],
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            col = rb.column(rb.schema.get_field_index(emb_col))
+            col = rb.column(rb.schema.get_field_index("embedding"))
             mat32 = _emb_matrix(col, dim)
             dot = _ordered_proj(mat32.astype(np.float64), q)
             na = np.sqrt(_ordered_sq_norm32(mat32))
             cos = dot / (na * nq)
             yield pa.RecordBatch.from_arrays(
                 [*rb.columns, pa.array(cos, type=pa.float64())],
-                names=[*rb.schema.names, out_col])
+                names=[*rb.schema.names, "cosine"])
 
     out_schema = T.StructType(
-        list(embeddings.schema) + [T.StructField(out_col, T.DoubleType())])
+        list(embeddings.schema) + [T.StructField("cosine", T.DoubleType())])
     return embeddings.mapInArrow(run, schema=out_schema)
 
 
-def pair_cosine_arrow(pairs: DataFrame, a_col: str, b_col: str, dim: int,
-                      out_col: str = "cosine",
-                      drop_vectors: bool = True) -> DataFrame:
-    """Appends pairwise cosine between two f32 embedding columns —
+def pair_cosine_arrow(pairs: DataFrame, a_col: str, b_col: str,
+                      dim: int) -> DataFrame:
+    """Replaces two f32 embedding columns with their pairwise ``cosine`` —
     bit-identical to `cosine_col(a, b, dim)` on float inputs (products
     round to f32 like Spark's float x float multiply, then widen; sums
     left-associated). Used by all_pairs_topk to score candidate pairs:
@@ -273,121 +255,84 @@ def pair_cosine_arrow(pairs: DataFrame, a_col: str, b_col: str, dim: int,
                 dot = dot + prod[:, j]
             cos = dot / (np.sqrt(_ordered_sq_norm32(a32))
                          * np.sqrt(_ordered_sq_norm32(b32)))
-            cols = [*rb.columns, pa.array(cos, type=pa.float64())]
-            names = [*rb.schema.names, out_col]
-            if drop_vectors:
-                keep = [i for i, nm in enumerate(names)
-                        if nm not in (a_col, b_col)]
-                cols = [cols[i] for i in keep]
-                names = [names[i] for i in keep]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            keep = [i for i, nm in enumerate(rb.schema.names)
+                    if nm not in (a_col, b_col)]
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(i) for i in keep]
+                + [pa.array(cos, type=pa.float64())],
+                names=[rb.schema.names[i] for i in keep] + ["cosine"])
 
-    fields = [f for f in pairs.schema
-              if not (drop_vectors and f.name in (a_col, b_col))]
-    out_schema = T.StructType(fields + [T.StructField(out_col,
+    fields = [f for f in pairs.schema if f.name not in (a_col, b_col)]
+    out_schema = T.StructType(fields + [T.StructField("cosine",
                                                       T.DoubleType())])
     return pairs.mapInArrow(run, schema=out_schema)
 
 
-def ann_topk(embeddings: DataFrame, query_vec: list[float], dim: int,
-             k: int = 10, n_planes: int = 8, seed: int = 42,
-             id_col: str = "vec_id",
-             emb_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: score only vectors in the query's LSH bucket or
-    any bucket at Hamming distance 1 (multi-probe). At scale this prunes
-    the candidate set by ~2^n_planes/(1+n_planes) while the brute-force
-    kernel stays identical."""
-    planes = hyperplanes(dim, n_planes, seed)
+def ann_topk(embeddings: DataFrame, query_vec: list[float],
+             dim: int) -> DataFrame:
+    """Approximate top-10: score only vectors in the query's 8-plane LSH
+    bucket or any bucket at Hamming distance 1 (multi-probe). At scale
+    this prunes the candidate set by ~2^8/9 while the brute-force kernel
+    stays identical."""
+    n_planes = 8
+    planes = hyperplanes(dim, n_planes)
     q = np.asarray(query_vec, dtype=float)
     q_bucket = int(sum((1 << i) for i, p in enumerate(planes)
                        if float(np.dot(q, p)) >= 0))
     probes = [q_bucket] + [q_bucket ^ (1 << i) for i in range(n_planes)]
-    bucketed = with_lsh_buckets(embeddings.select(id_col, emb_col),
-                                dim, n_planes, seed, emb_col)
+    bucketed = lsh_buckets_arrow(embeddings.select("vec_id", "embedding"),
+                                 dim, n_planes)
     cand = bucketed.where(F.col("bucket").isin(probes))
-    return (cosine_scores_arrow(cand, query_vec, emb_col)
-            .select(id_col, "cosine")
-            .orderBy(F.desc("cosine"), id_col).limit(k))
+    return (cosine_scores_arrow(cand, query_vec)
+            .select("vec_id", "cosine")
+            .orderBy(F.desc("cosine"), "vec_id").limit(10))
 
 
 def lsh_candidate_pairs(embeddings: DataFrame, dim: int, n_planes: int = 8,
-                        n_tables: int = 2, multiprobe: bool = True,
-                        id_col: str = "vec_id",
-                        emb_col: str = "embedding",
-                        max_bucket: int | None = None) -> DataFrame:
+                        n_tables: int = 2) -> DataFrame:
     """Distinct directed candidate pairs (id_a, id_b), id_a != id_b, from
-    L seeded hyperplane tables with optional Hamming-1 multi-probe — the
+    L seeded hyperplane tables with Hamming-1 multi-probe — the
     shared candidate generator for all_pairs_topk and embedding near-dup.
     Only (bucket, id) rows shuffle; vectors are re-attached by the caller
-    per DISTINCT pair.
-
-    ``max_bucket`` is the 100x-scale skew guard (same hub-star trade as
-    dedup._bucketed_pairs): a bucket with more than ``max_bucket``
-    members — e.g. a near-identical spam cluster collapsing onto one
-    sign pattern — keeps only its min-id hub on the probe-target side,
-    so every prober still connects to the hub (O(n) rows in that task)
-    but member-member pairs inside the hot bucket are traded away.
-    Right for near-dup keeper assignment; leave None for top-k ranking
-    semantics."""
+    per DISTINCT pair."""
     cands = None
-    src = embeddings.select(id_col, emb_col)
+    src = embeddings.select("vec_id", "embedding")
     for t in range(n_tables):
-        bucketed = with_lsh_buckets(src, dim, n_planes,
-                                    seed=42 + t, emb_col=emb_col)
-        if multiprobe:
-            probes = F.array(F.col("bucket"), *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i))
-                for i in range(n_planes)])
-            left = bucketed.select(F.explode(probes).alias("bucket"),
-                                   F.col(id_col).alias("id_a"))
-        else:
-            left = bucketed.select("bucket", F.col(id_col).alias("id_a"))
-        right = bucketed.select("bucket", F.col(id_col).alias("id_b"))
-        if max_bucket is not None:
-            stats = right.groupBy("bucket").agg(
-                F.count(F.lit(1)).alias("_n"), F.min("id_b").alias("_hub"))
-            right = (right.join(stats, "bucket")
-                     .where((F.col("_n") <= max_bucket)
-                            | (F.col("id_b") == F.col("_hub")))
-                     .select("bucket", "id_b"))
+        bucketed = lsh_buckets_arrow(src, dim, n_planes, seed=42 + t)
+        probes = F.array(F.col("bucket"), *[
+            F.col("bucket").bitwiseXOR(F.lit(1 << i))
+            for i in range(n_planes)])
+        left = bucketed.select(F.explode(probes).alias("bucket"),
+                               F.col("vec_id").alias("id_a"))
+        right = bucketed.select("bucket", F.col("vec_id").alias("id_b"))
         pairs_t = (left.join(right, "bucket")
                    .where(F.col("id_a") != F.col("id_b"))
                    .select("id_a", "id_b"))
         cands = pairs_t if cands is None else cands.union(pairs_t)
-    if max_bucket is not None:
-        # the hub star only materializes (prober -> hub) rows, and the
-        # hub is the bucket MIN — without the symmetric closure a caller
-        # normalizing to id_a < id_b would drop every guarded edge
-        cands = cands.union(cands.select(F.col("id_b").alias("id_a"),
-                                         F.col("id_a").alias("id_b")))
     return cands.distinct()
 
 
-def all_pairs_topk(embeddings: DataFrame, dim: int, k: int = 5,
-                   n_planes: int = 8, n_tables: int = 2,
-                   multiprobe: bool = True,
-                   id_col: str = "vec_id",
-                   emb_col: str = "embedding") -> DataFrame:
-    """Per-vector top-k neighbours via LSH-bucketed self-joins (the
+def all_pairs_topk(embeddings: DataFrame, dim: int) -> DataFrame:
+    """Per-vector top-5 neighbours via LSH-bucketed self-joins (the
     scale-path replacement for a quadratic crossJoin). ``dim`` is the
     embedding dimensionality — passed in rather than sniffed with a
     driver-side action.
 
-    Recall levers (round-2 verdict item 5 — one 8-plane exact-bucket
-    table has no recall guarantee):
+    Recall (round-2 verdict item 5 — one 8-plane exact-bucket table has
+    no recall guarantee) comes from two levers of lsh_candidate_pairs:
 
-    - ``multiprobe``: the left side of each self-join also emits every
+    - multi-probe: the left side of each self-join also emits every
       bucket at Hamming distance 1 (n_planes + 1 probe rows per vector),
       so a pair is a candidate iff its sign-bit buckets differ in at most
       one plane. P[candidate] for a pair at angle t rises from p^8 to
       p^8 + 8 p^7 (1-p), p = 1 - t/pi.
-    - ``n_tables``: independent seeded hyperplane tables; a pair is a
+    - two tables: independent seeded hyperplane tables; a pair is a
       candidate if ANY table admits it (miss prob compounds as (1-P)^L).
 
     Measured on 600 64-dim vectors with planted cosine-0.95 neighbours
     (200 bases x 2 perturbed copies): single exact table 0.36, +Hamming-1
-    probing 0.75, L=2+probing 0.94 (the default), L=3+probing 0.99 —
-    asserted >=0.9 in tests/test_training_data_ops.py. On ISOTROPIC
+    probing 0.75, L=2+probing 0.94 (the setting used), L=3+probing 0.99
+    — asserted >=0.9 in tests/test_training_data_ops.py. On ISOTROPIC
     random vectors recall of the "top-k" is inherently near zero at any
     L — those neighbours sit near 90 degrees where sign-LSH carries no
     signal; near-dup mining at corpus scale targets the high-cosine
@@ -397,17 +342,18 @@ def all_pairs_topk(embeddings: DataFrame, dim: int, k: int = 5,
     across tables and dedups BEFORE the embedding payloads are attached
     — the wide vectors cross the wire once per distinct candidate pair,
     not once per (table x probe) hit."""
-    cands = lsh_candidate_pairs(embeddings, dim, n_planes, n_tables,
-                                multiprobe, id_col, emb_col)
+    cands = lsh_candidate_pairs(embeddings, dim)
     attached = (cands
-                .join(embeddings.select(F.col(id_col).alias("id_a"),
-                                        F.col(emb_col).alias("e_a")), "id_a")
-                .join(embeddings.select(F.col(id_col).alias("id_b"),
-                                        F.col(emb_col).alias("e_b")), "id_b"))
+                .join(embeddings.select(F.col("vec_id").alias("id_a"),
+                                        F.col("embedding").alias("e_a")),
+                      "id_a")
+                .join(embeddings.select(F.col("vec_id").alias("id_b"),
+                                        F.col("embedding").alias("e_b")),
+                      "id_b"))
     scored = pair_cosine_arrow(attached, "e_a", "e_b", dim)
     w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), "id_b")
     return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
+            .where(F.col("rank") <= 5)
             .select("id_a", "id_b", "cosine", "rank"))
 
 
@@ -415,17 +361,15 @@ def all_pairs_topk(embeddings: DataFrame, dim: int, k: int = 5,
 # IVF (inverted-file) ANN — coarse-quantizer cells instead of hash buckets
 # ---------------------------------------------------------------------------
 
-def ivf_centroids(embeddings: DataFrame, n_list: int = 8,
-                  id_col: str = "vec_id",
-                  emb_col: str = "embedding") -> np.ndarray:
+def ivf_centroids(embeddings: DataFrame, n_list: int = 8) -> np.ndarray:
     """Deterministic coarse-quantizer centroids: the first ``n_list``
     vectors by id (seeded medoids). A production deployment would train
     k-means for balanced cells; the IVF mechanics — cell assignment,
     nprobe cell pruning, exact re-ranking inside probed cells — are
     identical, and medoids keep both engines exactly reproducible (the
     oracle re-derives the same centroids with ORDER BY id LIMIT n)."""
-    rows = (embeddings.select(id_col, emb_col)
-            .orderBy(id_col).limit(n_list).collect())
+    rows = (embeddings.select("vec_id", "embedding")
+            .orderBy("vec_id").limit(n_list).collect())
     return np.asarray([[float(x) for x in r[1]] for r in rows],
                       dtype=np.float64)
 
@@ -463,8 +407,7 @@ def _query_cell_order(query_vec: list[float],
 
 
 def ivf_assign_arrow(embeddings: DataFrame, centroids: np.ndarray,
-                     dim: int,
-                     emb_col: str = "embedding") -> DataFrame:
+                     dim: int) -> DataFrame:
     """Appends each vector's IVF ``cell`` (0-based centroid index) in one
     mapInArrow pass: milli-floored cosine to every centroid, argmax with
     smallest-index tie-break (numpy argmax returns the first maximum —
@@ -475,7 +418,7 @@ def ivf_assign_arrow(embeddings: DataFrame, centroids: np.ndarray,
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             mat32 = _emb_matrix(
-                rb.column(rb.schema.get_field_index(emb_col)), dim)
+                rb.column(rb.schema.get_field_index("embedding")), dim)
             na = np.sqrt(_ordered_sq_norm32(mat32))
             mat64 = mat32.astype(np.float64)
             millis = np.empty((len(mat32), len(centroids)), dtype=np.int64)
@@ -492,22 +435,20 @@ def ivf_assign_arrow(embeddings: DataFrame, centroids: np.ndarray,
     return embeddings.mapInArrow(run, schema=out_schema)
 
 
-def ivf_topk(embeddings: DataFrame, query_vec: list[float], dim: int,
-             k: int = 10, n_list: int = 8, nprobe: int = 2,
-             id_col: str = "vec_id",
-             emb_col: str = "embedding") -> DataFrame:
-    """IVF approximate top-k: score only vectors whose cell is among the
-    query's ``nprobe`` nearest centroids. The complement of the
+def ivf_topk(embeddings: DataFrame, query_vec: list[float],
+             dim: int) -> DataFrame:
+    """IVF approximate top-10 over 8 cells: score only vectors whose cell
+    is among the query's 2 nearest centroids. The complement of the
     hyperplane-LSH path (ann_topk): data-adaptive cells prune better on
     clustered corpora, hash buckets need no training pass. At scale the
     assignment is one narrow map (cell rides with the row; partition or
     Z-order by cell in the table layout to make the probe a partition
     prune instead of a scan filter)."""
-    cents = ivf_centroids(embeddings, n_list, id_col, emb_col)
-    probe = _query_cell_order(query_vec, cents)[:nprobe]
-    assigned = ivf_assign_arrow(embeddings.select(id_col, emb_col),
-                                cents, dim, emb_col)
+    cents = ivf_centroids(embeddings)
+    probe = _query_cell_order(query_vec, cents)[:2]
+    assigned = ivf_assign_arrow(embeddings.select("vec_id", "embedding"),
+                                cents, dim)
     cand = assigned.where(F.col("cell").isin(probe))
-    return (cosine_scores_arrow(cand, query_vec, emb_col)
-            .select(id_col, "cosine")
-            .orderBy(F.desc("cosine"), id_col).limit(k))
+    return (cosine_scores_arrow(cand, query_vec)
+            .select("vec_id", "cosine")
+            .orderBy(F.desc("cosine"), "vec_id").limit(10))

@@ -103,9 +103,7 @@ def dehyphenate(text: Column) -> Column:
         t, F.lit("([a-z])-\n[ \t]*([a-z])"), F.lit("$1$2"))
 
 
-def lexical_commonness(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", *,
-                       min_count: int = 2) -> DataFrame:
+def lexical_commonness(docs: DataFrame) -> DataFrame:
     """Corpus-statistics lexical quality — the CCNet idea (LM
     perplexity filtering) re-expressed with the corpus as its own
     language model: score each document by how COMMON its tokens are
@@ -115,9 +113,9 @@ def lexical_commonness(docs: DataFrame, text_col: str = "text",
     The per-token signal is ``floor(log2(corpus_count))`` computed as
     ``length(bin(count)) - 1`` — pure integer/string arithmetic, so
     Spark and the DuckDB oracle agree bit-for-bit where float ``log``
-    could differ in the last ulp.  Tokens seen fewer than
-    ``min_count`` times contribute 0 (the unseen-token floor), which
-    also lets a deployment prune the frequency table's long tail.
+    could differ in the last ulp.  Tokens seen only once contribute 0
+    (the unseen-token floor), which also prunes the frequency table's
+    long tail.
 
     Scale shape: explode -> token groupBy (map-side combined) builds
     the frequency table; the score join is hash-on-token — token keys
@@ -127,12 +125,11 @@ def lexical_commonness(docs: DataFrame, text_col: str = "text",
 
     Returns (doc_id, n_tokens, common_milli): ``common_milli`` =
     ``floor(sum(flog2) * 1000 / n_tokens)``, 0 for empty docs."""
-    toks = tokens_col(F.col(text_col))
-    ex = docs.select(F.col(id_col).alias("doc_id"),
-                     F.explode_outer(toks).alias("tok"))
+    toks = tokens_col(F.col("text"))
+    ex = docs.select("doc_id", F.explode_outer(toks).alias("tok"))
     freq = ex.where(F.col("tok").isNotNull() & (F.col("tok") != "")) \
         .groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")) \
-        .where(F.col("cnt") >= min_count) \
+        .where(F.col("cnt") >= 2) \
         .select("tok",
                 (F.length(F.bin(F.col("cnt"))) - 1).alias("flog2"))
     scored = ex.join(freq, "tok", "left")

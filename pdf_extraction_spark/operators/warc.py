@@ -7,10 +7,11 @@ exposed as ONE map-only `filepass.file_pass` (``records_from_warc``) —
 the same scale shape as the whole-PDF-file layer (operators/pdffile.py
 ``pages_from_files``): zero shuffle, zero joins, each file parsed once
 inside the scan stage, so 100 TB of crawl data costs exactly one pass
-before any downstream exchange.  ``warc_to_spans`` bridges HTTP 200
-``text/html`` response records onto the BASELINE.json input_hint
-contract schema via the already-gated ``html_to_spans`` — the fused
-extraction plan (plans/fused.py) runs unchanged on crawl pages.
+before any downstream exchange.  ``warc_dispatch_spans`` bridges HTTP
+200 response records of every payload type (``text/html`` via the
+already-gated ``html_to_spans``) onto the BASELINE.json input_hint
+contract schema, one row per captured URI — the fused extraction plan
+(plans/fused.py) runs unchanged on crawl pages.
 
 Reference anchor: the reference ingests one local PDF at a time
 (``/root/reference/src/pipeline.py:74-171`` walks files sequentially);
@@ -88,9 +89,9 @@ def gunzip_members(data: bytes) -> bytes:
     return b"".join(out)
 
 
-def gzip_bytes(data: bytes, level: int = 6) -> bytes:
+def gzip_bytes(data: bytes) -> bytes:
     """Deterministic gzip (no filename, zlib writes MTIME=0)."""
-    c = zlib.compressobj(level, zlib.DEFLATED, 31)
+    c = zlib.compressobj(6, zlib.DEFLATED, 31)
     return c.compress(data) + c.flush()
 
 
@@ -340,8 +341,7 @@ RECORDS_SCHEMA = ("warc_id string, rec_idx int, warc_type string, "
                   "payload_len long, text string, payload binary")
 
 
-def records_from_warc(files: DataFrame, bytes_col: str = "warc",
-                      id_col: str = "warc_id") -> DataFrame:
+def records_from_warc(files: DataFrame) -> DataFrame:
     """(warc_id, warc binary) -> one row per WARC record.  ONE
     map-only ``file_pass``: zero shuffle, zero joins
     (plan-asserted in tests/test_plan_shapes.py) — at crawl scale each
@@ -349,38 +349,26 @@ def records_from_warc(files: DataFrame, bytes_col: str = "warc",
     scan stage, and only the rows (not the container bytes) flow
     downstream."""
     return file_pass(
-        files, id_col, [bytes_col], RECORDS_SCHEMA,
+        files, "warc_id", ["warc"], RECORDS_SCHEMA,
         lambda key, blob: [r[1:] for r in
                            flatten_records(key, blob or b"")])
 
 
-def warc_to_pages(files: DataFrame, bytes_col: str = "warc",
-                  id_col: str = "warc_id",
-                  ok_only: bool = True) -> DataFrame:
-    """Response records carrying HTML -> (doc_id, html) pages, doc_id
-    = WARC-Target-URI (the crawl-native document identity).  Still
-    map-only: the filter fuses into the same scan stage."""
-    recs = records_from_warc(files, bytes_col, id_col)
+def warc_to_pages(files: DataFrame) -> DataFrame:
+    """HTTP-200 response records carrying HTML -> (doc_id, html) pages,
+    doc_id = WARC-Target-URI (the crawl-native document identity).
+    Every eligible capture comes out: there is no ``dedupe_captures``
+    here, so a URI captured twice gives two rows (``dispatch_spans`` is
+    the path that keeps one per URI).  Still map-only: the filter fuses
+    into the same scan stage."""
+    recs = records_from_warc(files)
     cond = (F.col("warc_type") == "response") & \
         F.col("content_type").isin(
             "text/html", "application/xhtml",
-            "application/xhtml+xml")
-    if ok_only:
-        cond = cond & (F.col("http_status") == 200)
+            "application/xhtml+xml") & (F.col("http_status") == 200)
     return recs.where(cond).select(
         F.col("target_uri").alias("doc_id"),
         F.col("text").alias("html"))
-
-
-def warc_to_spans(files: DataFrame, bytes_col: str = "warc",
-                  id_col: str = "warc_id") -> DataFrame:
-    """WARC files -> BASELINE.json contract span arrays end-to-end:
-    record split -> HTTP decode -> charset decode -> the gated
-    ``html_to_spans`` bridge (operators/html.py) — text blocks and
-    interleaved ``<img>`` media spans in document order.  The whole
-    chain is still ONE map-only stage."""
-    from .html import html_to_spans
-    return html_to_spans(warc_to_pages(files, bytes_col, id_col))
 
 
 # ------------------------------------------------ deterministic writer
@@ -400,8 +388,8 @@ def synth_png(width: int, height: int) -> bytes:
 
 
 def warc_record(wtype: str, headers: list[tuple[str, str]],
-                block: bytes, version: str = "1.1") -> bytes:
-    head = [f"WARC/{version}", f"WARC-Type: {wtype}",
+                block: bytes) -> bytes:
+    head = ["WARC/1.1", f"WARC-Type: {wtype}",
             *(f"{k}: {v}" for k, v in headers),
             f"Content-Length: {len(block)}"]
     return ("\r\n".join(head) + "\r\n\r\n").encode("ascii") + \
@@ -500,13 +488,12 @@ def build_one_warc(doc: int, text: str) -> bytes:
     return b"".join(records)
 
 
-def build_warc_files(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def build_warc_files(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (warc_id, warc binary) via the deterministic
     writer above; one map-only Arrow pass (the gate/scaling-corpus
     synthesizer, same role as pdffile.build_pdf_files)."""
     return file_pass(
-        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        docs, "doc_id", [F.coalesce(F.col("text"), F.lit(""))],
         "warc_id string, warc binary",
         lambda key, text: [(build_one_warc(id_number(key), text),)])
 
@@ -579,7 +566,7 @@ def dedupe_captures(recs: DataFrame) -> DataFrame:
 
 
 def _status_ok() -> Column:
-    """Rows ``ok_only`` keeps: every non-response record, and responses
+    """Rows dispatch keeps: every non-response record, and responses
     with HTTP status 200 (a missing status is not 200).  Applied BEFORE
     the capture dedupe, so a non-200 capture never competes: a newer
     404 of a URI cannot evict its older 200."""
@@ -587,8 +574,7 @@ def _status_ok() -> Column:
             | (F.col("http_status") == 200))
 
 
-def dispatch_spans(recs: DataFrame, ok_only: bool = True,
-                   dedupe: bool = True) -> DataFrame:
+def dispatch_spans(recs: DataFrame, dedupe: bool = True) -> DataFrame:
     """Typed WARC record rows -> ONE unified contract span table
     ``(doc_id, spans array<struct<kind,text,media_ref,offset>>)``,
     routed by effective media type: ``text/html`` responses through
@@ -627,8 +613,7 @@ def dispatch_spans(recs: DataFrame, ok_only: bool = True,
     from .epub import epub_to_spans
     from .html import html_to_spans
 
-    if ok_only:
-        recs = recs.where(_status_ok())
+    recs = recs.where(_status_ok())
     if dedupe:
         recs = dedupe_captures(recs)
     resp = recs.where(F.col("warc_type") == "response")
@@ -691,10 +676,7 @@ def _binary_spans(uri: str | None, ctype: str, blob: bytes | None
 
 
 def warc_dispatch_spans(files: DataFrame,
-                        stage_dir: str | None = None,
-                        bytes_col: str = "warc",
-                        id_col: str = "warc_id",
-                        ok_only: bool = True) -> DataFrame:
+                        stage_dir: str | None = None) -> DataFrame:
     """WARC container files -> unified contract spans across ALL
     payload types.  The container bytes are parsed and the revisit
     captures deduped ONCE, and the DEDUPED records are what lands: with ``stage_dir`` as parquet (each family branch then
@@ -713,16 +695,13 @@ def warc_dispatch_spans(files: DataFrame,
 
     For production runs prefer ``stage_dir`` (durable parquet,
     survives executor loss; localCheckpoint storage does not)."""
-    recs = records_from_warc(files, bytes_col, id_col)
-    if ok_only:
-        recs = recs.where(_status_ok())
-    recs = dedupe_captures(recs)
+    recs = dedupe_captures(records_from_warc(files).where(_status_ok()))
     if stage_dir is not None:
         recs.write.mode("overwrite").parquet(stage_dir)
         recs = files.sparkSession.read.parquet(stage_dir)
     else:
         recs = recs.localCheckpoint(eager=True)
-    return dispatch_spans(recs, ok_only=ok_only, dedupe=False)
+    return dispatch_spans(recs, dedupe=False)
 
 
 def build_one_mixed_warc(doc: int, text: str, html: str) -> bytes:
@@ -773,16 +752,14 @@ def build_one_mixed_warc(doc: int, text: str, html: str) -> bytes:
     return b"".join(records)
 
 
-def build_mixed_warc_files(docs: DataFrame, text_col: str = "text",
-                           html_col: str = "html",
-                           id_col: str = "doc_id") -> DataFrame:
+def build_mixed_warc_files(docs: DataFrame) -> DataFrame:
     """(doc_id, text, html) -> (warc_id, warc binary) via the mixed
     writer; the html page column is caller-supplied so the gate keeps
     ONE source of truth for the synthetic page (the same expression
     DuckDB evaluates).  One map-only Arrow pass."""
     return file_pass(
-        docs, id_col, [F.coalesce(F.col(c), F.lit(""))
-                       for c in (text_col, html_col)],
+        docs, "doc_id", [F.coalesce(F.col(c), F.lit(""))
+                         for c in ("text", "html")],
         "warc_id string, warc binary",
         lambda key, text, html: [
             (build_one_mixed_warc(id_number(key), text, html),)])

@@ -143,19 +143,17 @@ def parse_xlsx(data: bytes) -> list[dict[str, Any]]:
 ROWS_SCHEMA = ("doc_id string, sheet int, el_idx int, kind string, "
                "text string, n_cells int")
 
-def xlsx_rows_from_files(files: DataFrame, bytes_col: str = "xlsx",
-                         id_col: str = "doc_id") -> DataFrame:
+def xlsx_rows_from_files(files: DataFrame) -> DataFrame:
     """(doc_id, xlsx binary) -> typed element rows in workbook order.
     ONE map-only ``file_pass`` (zero shuffle, zero joins)."""
     return file_pass(
-        files, id_col, [bytes_col], ROWS_SCHEMA,
+        files, "doc_id", ["xlsx"], ROWS_SCHEMA,
         lambda _key, blob: [
             (r["sheet"], i, r["kind"], r["text"], r["n_cells"])
             for i, r in enumerate(parse_xlsx(blob or b""))])
 
 
-def xlsx_to_spans(files: DataFrame, bytes_col: str = "xlsx",
-                  id_col: str = "doc_id") -> DataFrame:
+def xlsx_to_spans(files: DataFrame) -> DataFrame:
     """XLSX files -> BASELINE.json contract span arrays: sheet names
     and row texts as ``text`` spans in workbook order, gapless
     offsets — so the fused extraction plan (whose table machinery
@@ -164,7 +162,7 @@ def xlsx_to_spans(files: DataFrame, bytes_col: str = "xlsx",
     from ..corpus import SPAN_SCHEMA  # local: corpus loads pandas
 
     return file_pass(
-        files, id_col, [bytes_col], SPAN_SCHEMA,
+        files, "doc_id", ["xlsx"], SPAN_SCHEMA,
         lambda _key, blob: [(element_spans(parse_xlsx(blob or b"")),)])
 
 
@@ -237,11 +235,10 @@ def build_one_xlsx(doc: int, text: str) -> bytes:
     return buf.getvalue()
 
 
-def build_xlsx_files(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def build_xlsx_files(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, xlsx binary) via the deterministic
     writer; one map-only Arrow pass."""
     return file_pass(
-        docs, id_col, [F.coalesce(F.col(text_col), F.lit(""))],
+        docs, "doc_id", [F.coalesce(F.col("text"), F.lit(""))],
         "doc_id string, xlsx binary",
         lambda key, text: [(build_one_xlsx(id_number(key), text),)])

@@ -218,7 +218,7 @@ def clean_estimate(estimate: dict) -> dict:
     return cleaned
 
 
-def validate_estimate(estimate: dict, strict: bool = True) -> dict:
+def validate_estimate(estimate: dict) -> dict:
     """output_validator.py:87-168: full validation pass over one estimate
     record. Returns the reference's result shape plus flat error/warning
     counts for columnar output."""
@@ -236,10 +236,8 @@ def validate_estimate(estimate: dict, strict: bool = True) -> dict:
     quality_score = _calculate_quality_score(estimate, errors, warnings)
     needs_review = _needs_manual_review(estimate, errors, warnings,
                                         quality_score)
-    is_valid = (len(errors) == 0 if strict
-                else len(errors) == 0 or not needs_review)
     return {
-        "valid": is_valid,
+        "valid": not errors,
         "errors": errors,
         "warnings": warnings,
         "n_errors": len(errors),

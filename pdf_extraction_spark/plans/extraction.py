@@ -262,12 +262,10 @@ def raw_sections(blocks: DataFrame) -> DataFrame:
                 .alias("raw_sections")))
 
 
-def assemble(docs: DataFrame, persist: bool = True) -> DataFrame:
-    """Full extraction: docs(doc_id, spans) -> one structured row per doc."""
-    spans = classify_spans(explode_spans(docs))
-    spans = track_sections(spans)
-    if persist:
-        spans = spans.persist()
+def assemble(docs: DataFrame) -> DataFrame:
+    """Full extraction: docs(doc_id, spans) -> one structured row per doc;
+    the classified spans are persisted, since every branch reads them."""
+    spans = track_sections(classify_spans(explode_spans(docs))).persist()
 
     blocks = build_blocks(spans)
     issues = segment_issues(blocks)

@@ -991,7 +991,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
-    return jaccard_pairs(d, min_shared=2)
+    return jaccard_pairs(d)
 
 
 SQL_JACCARD_PAIRS = r"""
@@ -1030,7 +1030,7 @@ def q_knn_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qv = e.orderBy("vec_id").limit(1).collect()[0]["embedding"]
-    return knn_label_vote(e, [float(x) for x in qv], k=10)
+    return knn_label_vote(e, [float(x) for x in qv])
 
 
 SQL_KNN_VOTE = """
@@ -1051,7 +1051,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
-    return simhash_pairs(simhash(d), max_hamming=3)
+    return simhash_pairs(simhash(d))
 
 
 SQL_SIMHASH_PAIRS = r"""
@@ -1092,19 +1092,24 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "keeper_doc_id", "is_near_duplicate")
 
 
-def _sql_minhash_dedup(k: int = 64, bands: int = 16,
-                       threshold: float = 0.5) -> str:
-    """Full SQL transcription of minhash_dedup: same seeded (a_i, b_i)
-    permutation constants (numpy default_rng(42), as in
-    operators/dedup.py minhash_signature), same banding, same keeper rule."""
-    import numpy as np
+def _minhash_sql_params() -> tuple[int, int, int, str]:
+    """(k, bands, Mersenne prime, permutations as a DuckDB list-of-structs
+    body): the constants operators/dedup.py signs and bands with."""
+    from .operators.dedup import (LSH_BANDS, MERSENNE_P, MINHASH_K,
+                                  minhash_permutations)
 
-    rng = np.random.default_rng(42)
-    mersenne = (1 << 31) - 1
-    a = rng.integers(1, mersenne, size=k, dtype=np.int64)
-    b = rng.integers(0, mersenne, size=k, dtype=np.int64)
-    perms = ", ".join("{'a': %d, 'b': %d}" % (int(a[i]), int(b[i]))
-                      for i in range(k))
+    a, b = minhash_permutations()
+    perms = ", ".join("{'a': %d, 'b': %d}" % (int(x), int(y))
+                      for x, y in zip(a, b))
+    return MINHASH_K, LSH_BANDS, MERSENNE_P, perms
+
+
+def _sql_minhash_dedup() -> str:
+    """Full SQL transcription of minhash_dedup at threshold 0.5: same
+    seeded (a_i, b_i) permutation constants, same banding, same keeper
+    rule."""
+    k, bands, mersenne, perms = _minhash_sql_params()
+    threshold = 0.5
     rows = k // bands
     return rf"""
 WITH t AS (
@@ -1190,21 +1195,14 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "keeper_doc_id", "is_near_duplicate")
 
 
-def _sql_minhash_incremental(k: int = 64, bands: int = 16,
-                             threshold: float = 0.5) -> str:
-    """SQL transcription of minhash_dedup_incremental over the same
-    dyadic corpus/batch split: same seeded permutations and banding as
-    _sql_minhash_dedup, candidate pairs restricted to >=1 new side, and
-    the corpus-canonical keeper rule (min corpus partner first, else
-    batch minimum, else self)."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    mersenne = (1 << 31) - 1
-    a = rng.integers(1, mersenne, size=k, dtype=np.int64)
-    b = rng.integers(0, mersenne, size=k, dtype=np.int64)
-    perms = ", ".join("{'a': %d, 'b': %d}" % (int(a[i]), int(b[i]))
-                      for i in range(k))
+def _sql_minhash_incremental() -> str:
+    """SQL transcription of minhash_dedup_incremental at threshold 0.5
+    over the same dyadic corpus/batch split: same seeded permutations and
+    banding as _sql_minhash_dedup, candidate pairs restricted to >=1 new
+    side, and the corpus-canonical keeper rule (min corpus partner first,
+    else batch minimum, else self)."""
+    k, bands, mersenne, perms = _minhash_sql_params()
+    threshold = 0.5
     rows = k // bands
     return rf"""
 WITH corpus AS (
@@ -1289,8 +1287,8 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     of operators/similarity.py ann_topk — bucket + Hamming-1 multi-probe),
     scored at milli precision so float fold-order differences between
     engines cannot reorder the top-k."""
-    from .operators.similarity import (cosine_scores_arrow, with_lsh_buckets,
-                                       hyperplanes)
+    from .operators.similarity import (cosine_scores_arrow, hyperplanes,
+                                       lsh_buckets_arrow)
     import numpy as np
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1299,7 +1297,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = hyperplanes(ANN_DIM, ANN_N_PLANES)
     q_bucket = int(sum((1 << i) for i, p in enumerate(planes)
                        if float(np.dot(np.asarray(qv), p)) >= 0))
-    bucketed = with_lsh_buckets(e, ANN_DIM, ANN_N_PLANES)
+    bucketed = lsh_buckets_arrow(e, ANN_DIM, ANN_N_PLANES)
     cand = bucketed.where(
         F.bit_count(F.col("bucket").bitwiseXOR(F.lit(q_bucket))) <= 1)
     # Arrow scoring kernel — bit-identical to the unrolled
@@ -1350,7 +1348,7 @@ def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.events import windowed_counts
 
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return windowed_counts(e, "1 hour")
+    return windowed_counts(e)
 
 
 SQL_EVENTS_WINDOW = """

@@ -220,7 +220,7 @@ def q_html_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(_html_expr("CAST(doc_id AS STRING)")).alias("html"))
     return curate_web_corpus(
         pages, min_tokens=WCUR_MIN_TOK, max_tokens=WCUR_MAX_TOK,
-        allowed_langs=("en",), min_stop_ppm=WCUR_MIN_STOP_PPM)
+        min_stop_ppm=WCUR_MIN_STOP_PPM)
 
 
 def _sql_html_curation() -> str:

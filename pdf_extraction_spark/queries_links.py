@@ -205,10 +205,10 @@ def q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return host_stats(links).orderBy("host")
 
 
-def sql_host_stats(pages_sql: str | None = None) -> str:
+def sql_host_stats() -> str:
     p = sql_url_parts("href")
     return f"""
-WITH {_sql_links_cte(pages_sql)},
+WITH {_sql_links_cte()},
 parsed AS (
   SELECT doc_id, page_host, {p['host']} AS host,
          {p['scheme']} AS scheme

@@ -573,7 +573,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
-    pairs = jaccard_pairs(d, min_shared=2).where(F.col("jaccard") >= 0.5)
+    pairs = jaccard_pairs(d).where(F.col("jaccard") >= 0.5)
     out = dedup_components(d, pairs)
     return out.select("doc_id", "keeper_doc_id", "is_near_duplicate")
 
@@ -618,23 +618,11 @@ def q_all_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a deterministic tie-break so both engines cut identical top-k
     sets."""
     from pyspark.sql import Window
-    from .operators.similarity import pair_cosine_arrow, with_lsh_buckets
+    from .operators.similarity import lsh_candidate_pairs, pair_cosine_arrow
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cands = None
-    for t in range(APT_TABLES):
-        bucketed = with_lsh_buckets(e, APT_DIM, APT_PLANES, seed=42 + t)
-        probes = F.array(F.col("bucket"), *[
-            F.col("bucket").bitwiseXOR(F.lit(1 << i))
-            for i in range(APT_PLANES)])
-        left = bucketed.select(F.explode(probes).alias("bucket"),
-                               F.col("vec_id").alias("id_a"))
-        right = bucketed.select("bucket", F.col("vec_id").alias("id_b"))
-        pairs_t = (left.join(right, "bucket")
-                   .where(F.col("id_a") != F.col("id_b"))
-                   .select("id_a", "id_b"))
-        cands = pairs_t if cands is None else cands.union(pairs_t)
-    attached = (cands.distinct()
+    cands = lsh_candidate_pairs(e, APT_DIM, APT_PLANES, APT_TABLES)
+    attached = (cands
                 .join(e.select(F.col("vec_id").alias("id_a"),
                                F.col("embedding").alias("e_a")), "id_a")
                 .join(e.select(F.col("vec_id").alias("id_b"),
@@ -705,7 +693,7 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("img://doc_"), F.col("doc_id").cast("string"),
                  F.lit("/0")).alias("media_ref"))
     media = synthesize_media(spark, refs)
-    frames = sample_frames(media, every_ms=80, fake=True)
+    frames = sample_frames(media, fake=True)
     return frames.select(
         "media_ref", F.col("frame_idx").cast("long").alias("frame_idx"),
         F.col("ts_ms").cast("long").alias("ts_ms"),

@@ -55,8 +55,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source mixture reweighting: three explicit source rates plus
     the default tier, as one zero-shuffle scan-stage filter."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return stratified_sample(d, STRAT_RATES, strata_col="source",
-                             default_rate=STRAT_DEFAULT,
+    return stratified_sample(d, STRAT_RATES, default_rate=STRAT_DEFAULT,
                              salt=STRAT_SALT) \
         .select("doc_id", "source", "lang")
 

@@ -102,7 +102,7 @@ FROM u ORDER BY doc_id, rec_idx
 def q_warc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-page bridge: HTTP-200 text/html response records ->
     (doc_id = target URI, decoded html) — the row set the fused
-    extraction plan ingests via warc_to_spans."""
+    extraction plan ingests through dispatch_spans' html branch."""
     pages = warc_to_pages(_warc_files(spark, sf_dir))
     return pages.select(
         F.col("doc_id").alias("uri"),

@@ -47,8 +47,7 @@ def content_hash_col() -> F.Column:
 
 
 def run_incremental(spark: SparkSession, docs: DataFrame, out_dir: str,
-                    plan=None, stage: str = "extract",
-                    store=None) -> dict:
+                    plan=None, store=None) -> dict:
     """Run ``plan`` over the docs not yet in the checkpoint; append output
     + processed-keys + per-partition metrics. Returns run stats.
 
@@ -101,7 +100,7 @@ def run_incremental(spark: SparkSession, docs: DataFrame, out_dir: str,
                             F.sum(F.size("spans")).alias("span_count"),
                             F.sum(F.size("issues")).alias("issue_count"))
                        .select(F.lit(run_id).alias("run_id"),
-                               F.lit(stage).alias("stage"),
+                               F.lit("extract").alias("stage"),
                                "partition_id", "doc_count", "span_count",
                                "issue_count",
                                F.lit(wall_ms).alias("wall_ms"),

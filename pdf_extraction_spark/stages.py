@@ -24,7 +24,7 @@ from .operators.docx import docx_to_spans
 from .operators.html import html_to_spans
 from .operators.pdffile import files_to_spans
 from .operators.pdfstream import pdf_to_spans, ruled_table_rows
-from .operators.warc import warc_dispatch_spans, warc_to_spans
+from .operators.warc import warc_dispatch_spans
 from .plans.enrichment import enrich_extracted
 from .plans.fused import assemble_fused
 
@@ -75,15 +75,13 @@ STAGES: dict[str, Stage] = {
                      "whole PDF files (doc_id, pdf binary) -> "
                      "files_to_spans (xref/filter/page-tree parse + "
                      "tokenize + layout) -> extraction"),
-    "warc": Stage(WARC_SCHEMA, warc_to_spans,
-                  "WARC files -> warc_to_spans (record framing + HTTP "
-                  "decode + html bridge) -> extraction"),
     "docx": Stage(DOCX_SCHEMA, docx_to_spans,
                   "DOCX files (doc_id, docx binary) -> docx_to_spans "
                   "-> extraction"),
     "dispatch": Stage(WARC_SCHEMA, warc_dispatch_spans,
-                      "mixed WARC files -> warc_dispatch_spans "
-                      "(mime-routed html/pdf/docx/pptx/xlsx/epub/image "
+                      "WARC files -> warc_dispatch_spans (record "
+                      "framing + HTTP decode + capture dedupe, then "
+                      "mime-routed html/pdf/docx/pptx/xlsx/epub/image "
                       "payloads) -> extraction"),
     "ruled": Stage(PDF_SCHEMA, ruled_table_rows,
                    "content streams -> ruled_table_rows (path "

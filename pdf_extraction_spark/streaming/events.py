@@ -13,10 +13,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Tumbling event-time window per event_type: count + value sum."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Tumbling one-hour event-time window per event_type: count + value
+    sum."""
     return (events
-            .groupBy(F.window("ts", window).alias("w"), "event_type")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.sum("value").alias("value_sum"))
             .select(F.col("w.start").alias("window_start"), "event_type",

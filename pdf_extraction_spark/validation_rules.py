@@ -15,7 +15,7 @@ tests/test_phase1_improvements.py:277.
 Two forms:
 
 - ``validate_estimate``: the pure-python rule core (exact reference
-  semantics, both auto_correct modes, including the top-level
+  semantics with auto-correction, including the top-level
   estimated_low/high "simple estimate" path) — used by unit tests as
   the reference for the column form.
 - ``with_validation``: the scale path — the same decision cascade as
@@ -175,11 +175,11 @@ def adjust_range_by_confidence(estimate: dict, confidence: float) -> dict:
     return adjusted
 
 
-def validate_estimate(estimate: dict, issue: Optional[dict] = None,
-                      auto_correct: bool = True) -> dict:
-    """Validate one estimate; returns {valid, reason, action, errors,
-    warnings, corrected_estimate}. Check order matches the reference
-    (estimation_validator.py:123-298): ranges -> component math ->
+def validate_estimate(estimate: dict, issue: Optional[dict] = None) -> dict:
+    """Validate one estimate, auto-correcting what it can; returns
+    {valid, reason, action, errors, warnings, corrected_estimate}.
+    Check order matches the reference (estimation_validator.py:123-298):
+    ranges -> component math ->
     extreme cost -> zero costs -> ratios -> confidence -> timeline ->
     Houston rates -> required fields -> confidence-based adjustment."""
     errors: list[str] = []
@@ -198,25 +198,19 @@ def validate_estimate(estimate: dict, issue: Optional[dict] = None,
         touched = False
         if isinstance(low, (int, float)) and isinstance(high, (int, float)):
             if low >= high:
-                if auto_correct:
-                    est["estimated_low"], est["estimated_high"] = high, low
-                    touched = True
-                    warnings.append("auto-corrected inverted low/high")
-                else:
-                    errors.append(f"estimated_low ({low}) >= "
-                                  f"estimated_high ({high})")
+                est["estimated_low"], est["estimated_high"] = high, low
+                touched = True
+                warnings.append("auto-corrected inverted low/high")
             low, high = est["estimated_low"], est["estimated_high"]
             if low == 0 and high > 0:
                 warnings.append("estimated_low is $0 - auto-adjusted")
-                if auto_correct:
-                    est["estimated_low"] = max(100, int(high * 0.1))
-                    touched = True
+                est["estimated_low"] = max(100, int(high * 0.1))
+                touched = True
             low, high = est["estimated_low"], est["estimated_high"]
             if low > 0 and high / low > 10:
                 warnings.append("range wider than 10x - capped to 5x")
-                if auto_correct:
-                    est["estimated_high"] = int(low * 5)
-                    touched = True
+                est["estimated_high"] = int(low * 5)
+                touched = True
         if touched:
             corrected = dict(est)
         cost = {"total": {"min": est.get("estimated_low", 0),
@@ -231,16 +225,13 @@ def validate_estimate(estimate: dict, issue: Optional[dict] = None,
     range_errs = _range_errors(cost)
     if range_errs:
         errors.extend(range_errs)
-        if auto_correct:
-            cost = _swap_inverted(cost)
-            corrected = {**estimate, "cost": cost}
-            warnings.append("auto-corrected inverted min/max ranges")
-        else:
-            return error_result("invalid cost ranges", RECALCULATE, errors)
+        cost = _swap_inverted(cost)
+        corrected = {**estimate, "cost": cost}
+        warnings.append("auto-corrected inverted min/max ranges")
 
     math_errs, math_corrected = _component_math(cost)
     if math_errs:
-        if auto_correct and math_corrected:
+        if math_corrected:
             corrected = {**estimate, "cost": math_corrected}
             warnings.append("auto-corrected component sum")
         else:
@@ -341,7 +332,7 @@ def validate_estimate(estimate: dict, issue: Optional[dict] = None,
 
 
 # ---------------------------------------------------------------------------
-# Catalyst column-expression form (the scale path; auto_correct=True)
+# Catalyst column-expression form (the scale path, auto-correcting)
 # ---------------------------------------------------------------------------
 
 def _cascade_parts(

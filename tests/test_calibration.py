@@ -20,7 +20,7 @@ def _store(n: int, variance_pct: float, category: str = "roofing",
 def test_factor_and_gating():
     # consistent +15% underestimates -> factor 1.15, applied
     store = _store(10, 15.0)
-    f = cal.calibration_factor(store, "roofing", "medium", "rule_based")
+    f = cal.calibration_factor(store, "roofing")
     assert f is not None
     assert abs(f["factor"] - 1.15) < 1e-9
     assert f["sample_count"] == 10
@@ -28,16 +28,16 @@ def test_factor_and_gating():
 
     # under the sample minimum -> no factor
     assert cal.calibration_factor(
-        _store(3, 15.0), "roofing", "medium", "rule_based") is None
+        _store(3, 15.0), "roofing") is None
 
     # negligible adjustment (+1%) -> gated off
     f2 = cal.calibration_factor(
-        _store(10, 1.0), "roofing", "medium", "rule_based")
+        _store(10, 1.0), "roofing")
     assert f2 is not None and not cal.should_apply(f2)
 
     # extreme adjustment (+60%) capped at 1.5 but gated (>1.35)
     f3 = cal.calibration_factor(
-        _store(10, 60.0), "roofing", "medium", "rule_based")
+        _store(10, 60.0), "roofing")
     assert f3["factor"] == 1.5 and not cal.should_apply(f3)
 
 
@@ -70,7 +70,7 @@ def test_durable_store_roundtrip(spark, tmp_path):
 
     loaded = cal.CalibrationStore.load(spark, path)
     assert len(loaded.records) == 12
-    f = cal.calibration_factor(loaded, "roofing", "medium", "rule_based")
+    f = cal.calibration_factor(loaded, "roofing")
     assert f is not None and f["sample_count"] == 12
     assert abs(f["factor"] - 1.15) < 1e-9  # mean of 20% and 10%
     assert cal.should_apply(f)

@@ -9,6 +9,9 @@
 - Every import in the package, ``tools/``, ``bench.py`` and
   ``__spark_entry__.py`` is used in its module or imported from it
   elsewhere.
+- Every defaulted parameter of a package def is set to another value
+  by some non-test caller, unless :data:`FIXED_OPTIONS` names it with
+  its reason (see :func:`unset_options`).
 
 A reference is a code reference: a ``Name``, an ``Attribute`` or an
 import alias.  A mention in a docstring, a comment or a string does
@@ -37,6 +40,9 @@ TEST_ONLY = {
     f"{PKG}.operators.dedup.topk_shingle_hashes":
         "the Column-expression reference the Arrow shingle kernel is "
         "tested against",
+    f"{PKG}.operators.similarity.lsh_bucket_col":
+        "the Column-expression reference the Arrow bucket kernel is "
+        "tested against",
     f"{PKG}.operators.similarity.cosine_col":
         "the Column-expression reference the Arrow cosine kernel is "
         "tested against",
@@ -46,6 +52,33 @@ TEST_ONLY = {
     f"{PKG}.validation_rules.validate_estimate":
         "the pure-python reference the with_validation column form is "
         "tested against",
+}
+
+# Defaulted parameters that no non-test caller sets to another value,
+# each kept for a stated reason.
+_DEPLOYMENT = "deployment setting: where a cluster run keeps its tables"
+_FILTER = ("signature fixed by the decode_stream filter table, which "
+           "passes each filter its /DecodeParms")
+FIXED_OPTIONS = {
+    f"{PKG}.operators.warc.warc_dispatch_spans(stage_dir)": _DEPLOYMENT,
+    f"{PKG}.sources.checkpoint.run_incremental(store)": _DEPLOYMENT,
+    f"{PKG}.sources.checkpoint.read_output(store)": _DEPLOYMENT,
+    f"{PKG}.sources.checkpoint.read_metrics(store)": _DEPLOYMENT,
+    f"{PKG}.sources.catalog.IcebergStore.__init__(bucket_key)":
+        "deployment setting: the Iceberg bucketing column",
+    f"{PKG}.sources.catalog.IcebergStore.__init__(buckets)":
+        "deployment setting: the Iceberg bucket count",
+    f"{PKG}.operators.multimodal.decode_media(decoder)":
+        "test seam: a real codec plugs in here",
+    f"{PKG}.operators.pdffile.lzw_encode(early)":
+        "test seam: makes the EarlyChange 0 streams lzw_decode reads",
+    f"{PKG}.operators.pdffile.flate_decode(parms)": _FILTER,
+    f"{PKG}.operators.pdffile.lzw_decode(parms)": _FILTER,
+    f"{PKG}.operators.pdffile.ascii_hex_decode(parms)": _FILTER,
+    f"{PKG}.operators.pdffile.ascii85_decode(parms)": _FILTER,
+    f"{PKG}.operators.pdffile.run_length_decode(parms)": _FILTER,
+    f"{PKG}.operators.pdffile.PdfFile._name_tree(seen)":
+        "recursion accumulator",
 }
 
 # ``__spark_entry__._MODULES`` reads these dicts by string.
@@ -249,6 +282,158 @@ def unused_imports() -> list[str]:
     return unused
 
 
+class _Def(NamedTuple):
+    ident: str                  # module.qualname
+    name: str                   # the name a call uses
+    module: str
+    bound: bool                 # called with the first parameter bound
+    positional: list[str]
+    defaults: dict[str, ast.expr]
+    node: ast.AST
+
+
+def _package_defs(sources: tuple[Source, ...]) -> list[_Def]:
+    """Every def of the package, nested ones and methods included.  A
+    class's ``__init__`` is called by the class name."""
+    defs = []
+
+    def visit(src, node, qual, in_class):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(src, child, qual + [child.name], True)
+                continue
+            if not isinstance(child, (ast.FunctionDef,
+                                      ast.AsyncFunctionDef)):
+                visit(src, child, qual, in_class)
+                continue
+            a = child.args
+            positional = [x.arg for x in a.posonlyargs + a.args]
+            defaults = dict(zip(positional[len(positional)
+                                           - len(a.defaults):], a.defaults))
+            defaults.update((x.arg, d) for x, d in
+                            zip(a.kwonlyargs, a.kw_defaults)
+                            if d is not None)
+            static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                         for d in child.decorator_list)
+            name = qual[-1] if in_class and child.name == "__init__" \
+                else child.name
+            defs.append(_Def(".".join([src.module] + qual + [child.name]),
+                             name, src.module, in_class and not static,
+                             positional, defaults, child))
+            visit(src, child, qual + [child.name], False)
+
+    for src in sources:
+        if src.rel.startswith(f"{PKG}/"):
+            visit(src, src.tree, [], False)
+    return defs
+
+
+def _same(value: ast.expr, default: ast.expr) -> bool:
+    if ast.dump(value) == ast.dump(default):
+        return True
+    try:
+        v, d = ast.literal_eval(value), ast.literal_eval(default)
+    except ValueError:
+        return False
+    return type(v) is type(d) and v == d
+
+
+def _passed(call: ast.Call, d: _Def):
+    """(parameter, value) per defaulted parameter of ``d`` that ``call``
+    passes; value None stands for a ``*``/``**`` splat."""
+    pos = d.positional[1:] if d.bound else d.positional
+    for i, a in enumerate(call.args):
+        if isinstance(a, ast.Starred):
+            yield from ((p, None) for p in pos[i:] if p in d.defaults)
+            break
+        if i < len(pos) and pos[i] in d.defaults:
+            yield pos[i], a
+    for kw in call.keywords:
+        if kw.arg is None:
+            yield from ((p, None) for p in d.defaults)
+        elif kw.arg in d.defaults:
+            yield kw.arg, kw.value
+
+
+def _scopes(node: ast.AST, params: dict, own: dict[int, dict]):
+    """(call, parameters in scope) per call under ``node``; the scope
+    maps a name to the ``def(parameter)`` it is, or None where it is a
+    parameter without a default.  ``own`` maps a package def node to
+    its defaulted parameters."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.Lambda)):
+            inner = dict(params)
+            a = child.args
+            args = a.posonlyargs + a.args + a.kwonlyargs \
+                + [x for x in (a.vararg, a.kwarg) if x]
+            inner.update((x.arg, None) for x in args)
+            inner.update(own.get(id(child), {}))
+            yield from _scopes(child, inner, own)
+            continue
+        if isinstance(child, ast.Call):
+            yield child, params
+        yield from _scopes(child, params, own)
+
+
+def unset_options(fixed=()) -> list[str]:
+    """``module.qualname(parameter)`` per defaulted parameter of a
+    package def that no non-test caller sets to a value other than its
+    default, by keyword, by position or through a splat, and that is not
+    passed through from an enclosing parameter with the same default
+    that is set.  Calls are matched by name (a method by its attribute
+    name) and keyed by module like the references above; a value
+    spelled the same as the default, or equal to it as a literal, does
+    not set it.  ``fixed`` counts as set.  Calls from tests count for a
+    :data:`TEST_ONLY` reference."""
+    sources = _sources()
+    defs = _package_defs(sources)
+    by_name: dict[str, list[_Def]] = {}
+    for d in defs:
+        by_name.setdefault(d.name, []).append(d)
+    own = {id(d.node): {p: f"{d.ident}({p})" for p in d.defaults}
+           for d in defs}
+    default_of = {f"{d.ident}({p})": v for d in defs
+                  for p, v in d.defaults.items()}
+    is_set = set(fixed)
+    through = []   # (enclosing parameter, parameter it is passed to)
+    for src in sources:
+        test = _is_test(src.rel)
+        for call, scope in _scopes(src.tree, {}, own):
+            f = call.func
+            if isinstance(f, ast.Name):
+                key = src.imports.get(f.id, (src.module, f.id))
+            elif isinstance(f, ast.Attribute):
+                key = (_module_of(src, f.value) or "*", f.attr)
+            else:
+                continue
+            for d in by_name.get(key[1], ()):
+                if key[0] not in ("*", d.module) or (
+                        test and f"{d.module}.{d.name}" not in TEST_ONLY):
+                    continue
+                if d.bound and isinstance(f, ast.Name) \
+                        and not d.ident.endswith(".__init__"):
+                    continue
+                for p, value in _passed(call, d):
+                    target = f"{d.ident}({p})"
+                    if value is not None and _same(value, d.defaults[p]):
+                        continue
+                    outer = scope.get(value.id) \
+                        if isinstance(value, ast.Name) else None
+                    if outer and _same(default_of[outer], d.defaults[p]):
+                        through.append((outer, target))
+                    else:
+                        is_set.add(target)
+    grew = True
+    while grew:
+        grew = False
+        for outer, target in through:
+            if outer in is_set and target not in is_set:
+                is_set.add(target)
+                grew = True
+    return sorted(default_of.keys() - is_set)
+
+
 def test_no_unreferenced_top_level_defs():
     assert unreferenced_defs() == []
 
@@ -263,3 +448,10 @@ def test_no_unread_module_constants():
 
 def test_no_unused_imports():
     assert unused_imports() == []
+
+
+def test_no_unset_options():
+    unset = set(unset_options())
+    stale = [o for o in FIXED_OPTIONS if o not in unset]
+    assert stale == [], "FIXED_OPTIONS names an option a caller sets"
+    assert unset_options(FIXED_OPTIONS) == []

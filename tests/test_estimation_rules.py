@@ -236,10 +236,3 @@ def test_hybrid_estimate_chain():
         "category": "", "severity": "low"})
     assert (h["strategy"], h["fallback_depth"]) == ("hybrid", 1)
     assert h["estimator_used"] == "fallback_heuristic"
-
-    # houston off: raw chain costs, no trade metadata
-    h = est.hybrid_estimate({
-        "title": "", "description": "replace the gfci outlet in den",
-        "category": "", "severity": "low"}, apply_houston=False)
-    assert not h["houston_adjusted"] and h["trade"] is None
-    assert h["total_min"] == 80 + 30 + 0

@@ -54,7 +54,8 @@ def test_no_mapinarrow_outside_file_pass(path):
 # name -> (function, declared DDL); writers take (doc_id, text, html)
 _WRITERS = {
     "pdffile.wrap_stream_files": (
-        lambda d: pdffile.wrap_stream_files(d, stream_col="text"),
+        lambda d: pdffile.wrap_stream_files(
+            d.withColumnRenamed("text", "stream")),
         "doc_id string, pdf binary"),
     "pdffile.build_pdf_files": (pdffile.build_pdf_files,
                                 "doc_id string, pdf binary"),

@@ -113,3 +113,22 @@ def test_image_meta_plan_is_map_only(spark, docs):
     plan = image_header_meta(build_image_blobs(docs)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def test_image_meta_dimension_past_int32_is_null(spark):
+    """A header claiming a dimension at or past 2^31 (PNG IHDR holds 32
+    unsigned bits; a BMP height of -2^31 has magnitude 2^31) gives NULL
+    for that dimension instead of failing the task; a normal image in
+    the same batch keeps its dimensions."""
+    bmp = (b"BM" + struct.pack("<IHHI", 62, 0, 0, 62) +
+           struct.pack("<IiiHH", 40, 7, -2**31, 1, 24) + b"\x00" * 24)
+    assert sniff_image(bmp) == ("image/bmp", 7, 2**31, 24)
+    media = spark.createDataFrame(
+        [("wide", synth_png(2**32 - 1, 9)), ("tall", bmp),
+         ("ok", synth_png(123, 45))],
+        "media_ref string, content binary").coalesce(1)
+    rows = {r["media_ref"]: (r["mime"], r["width"], r["height"], r["depth"])
+            for r in image_header_meta(media).collect()}
+    assert rows == {"wide": ("image/png", None, 9, 8),
+                    "tall": ("image/bmp", 7, None, 24),
+                    "ok": ("image/png", 123, 45, 8)}

@@ -38,10 +38,9 @@ def test_no_cartesian_products(docs, emb):
         "minhash_dedup": _plan(dedup.minhash_dedup(docs)),
         "jaccard_pairs": _plan(dedup.jaccard_pairs(docs)),
         "simhash_pairs": _plan(
-            dedup.simhash_pairs(dedup.simhash(docs), max_hamming=3)),
-        "all_pairs_topk": _plan(similarity.all_pairs_topk(emb, 64, k=5)),
-        "lsh_candidates": _plan(
-            similarity.lsh_candidate_pairs(emb, 64, max_bucket=100)),
+            dedup.simhash_pairs(dedup.simhash(docs))),
+        "all_pairs_topk": _plan(similarity.all_pairs_topk(emb, 64)),
+        "lsh_candidates": _plan(similarity.lsh_candidate_pairs(emb, 64)),
     }
     for name, p in plans.items():
         assert "CartesianProduct" not in p, name
@@ -106,7 +105,7 @@ def test_cosine_topk_no_global_sort(emb):
     """Top-k against a query is a per-partition TakeOrdered, never a
     full sort + single-partition exchange."""
     q = [float(x) for x in emb.select("embedding").head()[0]]
-    plan = _plan(similarity.cosine_topk(emb, q, k=10))
+    plan = _plan(similarity.cosine_topk(emb, q))
     assert "TakeOrderedAndProject" in plan
     assert "Sort [" not in plan
 
@@ -123,10 +122,10 @@ def test_arrow_kernels_keep_plan_small(emb):
     (planes, dim) — the unrolled Catalyst twin at (8, 64) is a 512-term
     tree that breaks janino. Pin an upper bound on plan text size as a
     cheap proxy (the regressed form is ~100x larger)."""
-    bucketed = similarity.with_lsh_buckets(emb, 64, n_planes=8)
+    bucketed = similarity.lsh_buckets_arrow(emb, 64, n_planes=8)
     assert len(_plan(bucketed)) < 20_000
     q = [float(x) for x in emb.select("embedding").head()[0]]
-    assert len(_plan(similarity.cosine_topk(emb, q, k=10))) < 20_000
+    assert len(_plan(similarity.cosine_topk(emb, q))) < 20_000
 
 
 def _walk_jvm_plan(node):
@@ -205,10 +204,8 @@ def test_incremental_dedup_never_shuffles_corpus(spark, tmp_path):
 
 def test_link_family_plan_shapes(spark):
     """link_table is a narrow scan-stage pass (zero Exchange).  The
-    host rollup: exact count-distincts plan as Spark's Expand + two
-    exchanges (the gate path); the approx (HLL) 100 TB path is a
-    SINGLE hash exchange on host with a map-side partial aggregate
-    below it (operators/links.py scale notes)."""
+    host rollup's exact count-distincts plan as Spark's Expand + two
+    exchanges (operators/links.py scale notes)."""
     from pdf_extraction_spark.operators.links import (host_stats,
                                                       link_table)
     from pdf_extraction_spark.queries_links import _pages_spark
@@ -218,10 +215,6 @@ def test_link_family_plan_shapes(spark):
     assert "Exchange" not in _plan(links)
     exact = _plan(host_stats(links))
     assert exact.count("Exchange hashpartitioning") == 2
-    approx = _plan(host_stats(links, exact_distinct=False))
-    assert approx.count("Exchange hashpartitioning") == 1
-    # partial aggregate below the exchange == map-side combine survived
-    assert "partial_" in approx
 
 
 def test_html_extraction_zero_shuffle(spark):

@@ -72,7 +72,7 @@ def test_stratified_rates_and_default(spark):
         .alias("source"))
     out = stratified_sample(
         big, {"src0": 1.0, "src1": 0.5, "src2": 0.0},
-        strata_col="source", default_rate=0.25, salt="st")
+        default_rate=0.25, salt="st")
     got = {r.source: r.n for r in
            out.groupBy("source").agg(F.count("*").alias("n")).collect()}
     assert got.get("src0") == n // 4            # rate 1.0 keeps all
@@ -147,32 +147,3 @@ def test_sampling_plan_shapes(docs):
     assert plan(pack_shards(docs.select("doc_id", "text"), 1000)) \
         .count("Exchange") == 1
 
-
-def test_pack_shards_bpe_counter(spark):
-    """counter='bpe' budgets shards in BPE-ish pieces: punctuation-
-    heavy docs cost more than their whitespace word count, so the same
-    budget closes a shard earlier than the whitespace counter would."""
-    from pyspark.sql import functions as F
-
-    from pdf_extraction_spark.operators.sampling import pack_shards
-    from pdf_extraction_spark.operators.textstats import bpe_tokens_col
-
-    # each doc: 5 whitespace tokens but 15 BPE pieces (punct-dense)
-    text = "a,b c,d e,f g,h i,j"
-    docs = spark.createDataFrame(
-        [(f"d{i}", text) for i in range(8)], "doc_id string, text string")
-    n_bpe = docs.select(F.size(bpe_tokens_col(F.col("text")))
-                        .alias("n")).head().n
-    assert n_bpe > 5
-    ws = pack_shards(docs, token_budget=20, n_partitions=1)
-    bpe = pack_shards(docs, token_budget=20, n_partitions=1,
-                      counter="bpe")
-    n_ws_shards = ws.select("shard_id").distinct().count()
-    n_bpe_shards = bpe.select("shard_id").distinct().count()
-    # 8 docs x 5 ws tokens / 20 = 2 shards; x n_bpe pieces / 20 = more
-    assert n_bpe_shards > n_ws_shards
-    assert n_ws_shards == 2
-
-    import pytest
-    with pytest.raises(ValueError):
-        pack_shards(docs, token_budget=20, counter="chars")

@@ -18,8 +18,7 @@ def _rows(stage: str) -> list[tuple]:
     """<= 4 input rows of the stage's declared schema."""
     from pdf_extraction_spark.operators.docx import build_one_docx
     from pdf_extraction_spark.operators.pdffile import build_pdf
-    from pdf_extraction_spark.operators.warc import (build_one_mixed_warc,
-                                                     build_one_warc)
+    from pdf_extraction_spark.operators.warc import build_one_mixed_warc
     page = f"<html><body><h1>{TEXT}</h1><p>{TEXT} {{}}</p></body></html>"
     return {
         "extract": [(f"d{i}", [("text", f"{TEXT} {i}", "", 0),
@@ -32,8 +31,6 @@ def _rows(stage: str) -> list[tuple]:
                   for i in range(2)],
         "pdffile": [(f"d{i}", bytearray(build_pdf(i, f"{TEXT} {i}")))
                     for i in range(2)],
-        "warc": [(f"w{i}", bytearray(build_one_warc(i, f"{TEXT} {i}")))
-                 for i in (1, 2)],
         "docx": [(f"d{i}", bytearray(build_one_docx(i, f"{TEXT} {i}")))
                  for i in range(2)],
         "dispatch": [(f"w{i}", bytearray(build_one_mixed_warc(
@@ -61,6 +58,29 @@ def test_stage_bridge_runs_on_its_declared_schema(spark, stage):
         assert {"doc_id", "tbl_idx", "row_idx", "table_text"} <= set(
             out.columns)
         assert {r["doc_id"] for r in rows} == {"d0", "d1"}
+
+
+def test_warc_stages_keep_one_row_per_captured_uri(spark):
+    """A URI captured twice in a segment (a re-crawl) is one document:
+    every stage reading WARC files returns one row for it, from the
+    capture that ``dedupe_captures`` keeps (same date, larger
+    warc_id)."""
+    from pdf_extraction_spark.operators.warc import build_one_warc
+    from pdf_extraction_spark.stages import WARC_SCHEMA
+
+    docs = spark.createDataFrame(
+        [("w0", bytearray(build_one_warc(1, f"{TEXT} older"))),
+         ("w1", bytearray(build_one_warc(1, f"{TEXT} newer")))],
+        WARC_SCHEMA)
+    stages = [name for name, spec in STAGES.items()
+              if spec.schema == WARC_SCHEMA]
+    assert stages
+    for name in stages:
+        rows = STAGES[name].bridge(docs).collect()
+        assert [r["doc_id"] for r in rows] == \
+            ["https://host1.example/doc/1"], name
+        text = " ".join(s["text"] for s in rows[0]["spans"])
+        assert "newer" in text and "older" not in text, name
 
 
 def _write_round(root, rnd: int, rows: dict) -> None:

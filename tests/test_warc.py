@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.warc import (
     build_one_warc, build_warc_files, chunkify, content_decode,
-    dechunk, decode_text, flatten_records, gunzip_members,
-    gzip_bytes, parse_http, parse_warc, records_from_warc,
-    resolve_charset, synth_png, warc_record, warc_to_pages,
-    warc_to_spans)
+    dechunk, decode_text, dispatch_spans, flatten_records,
+    gunzip_members, gzip_bytes, parse_http, parse_warc,
+    records_from_warc, resolve_charset, synth_png, warc_dispatch_spans,
+    warc_record, warc_to_pages)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -180,8 +180,8 @@ def test_warc_to_pages_filters_errors(spark, docs):
     assert ids and all(i % 7 != 0 for i in ids)
 
 
-def test_warc_to_spans_contract_schema(spark, docs):
-    spans = warc_to_spans(build_warc_files(docs))
+def test_warc_dispatch_spans_contract_schema(spark, docs):
+    spans = warc_dispatch_spans(build_warc_files(docs))
     assert [f.name for f in spans.schema.fields] == \
         ["doc_id", "spans"]
     row = spans.where(
@@ -207,7 +207,10 @@ def test_records_plan_is_map_only(spark, docs):
 
 
 def test_spans_bridge_plan_is_map_only(spark, docs):
-    plan = warc_to_spans(build_warc_files(docs)) \
+    """Over records that need no capture dedupe, the dispatch spans
+    bridge adds no exchange to the container parse."""
+    plan = dispatch_spans(records_from_warc(build_warc_files(docs)),
+                          dedupe=False) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

@@ -32,8 +32,7 @@ from pdf_extraction_spark.operators.pdffile import (  # noqa: E402
 from pdf_extraction_spark.operators.pdfstream import (  # noqa: E402
     pdf_to_spans, ruled_table_rows)
 from pdf_extraction_spark.operators.warc import (  # noqa: E402
-    build_mixed_warc_files, build_warc_files, warc_dispatch_spans,
-    warc_to_spans)
+    build_mixed_warc_files, warc_dispatch_spans)
 from pdf_extraction_spark.queries_html import (  # noqa: E402
     _html_expr, _media_page_expr)
 from pdf_extraction_spark.stages import STAGES  # noqa: E402
@@ -67,16 +66,6 @@ def _html_pages(docs):
                     "AS BIGINT) %")
     return docs.select("doc_id", _text().alias("t")) \
         .select("doc_id", F.expr(expr).alias("html"))
-
-
-def _warc_files(docs):
-    # crawl-container-shaped input: each doc's span text rebuilt
-    # as a complete WARC file (warcinfo + request + response,
-    # gzip-member/chunked/content-coding/charset variants by the
-    # numeric doc id) so the scaling run covers record framing +
-    # HTTP decode + charset resolution end to end
-    return build_warc_files(docs.select("doc_id",
-                                        _text().alias("text")))
 
 
 def _docx_files(docs):
@@ -150,7 +139,6 @@ def _pdf_files(docs):
 # as they are.
 CORPORA = {
     html_to_spans: _html_pages,
-    warc_to_spans: _warc_files,
     docx_to_spans: _docx_files,
     warc_dispatch_spans: _mixed_warc_files,
     pdf_to_spans: _content_streams,
