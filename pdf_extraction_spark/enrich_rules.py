@@ -19,6 +19,7 @@ from difflib import SequenceMatcher
 from typing import Any
 
 from . import rules
+from .memo import Memo, memoized
 
 # ---------------------------------------------------------------------------
 # F2 — schema validation (src/validation/schema_validator.py:35-204)
@@ -96,32 +97,13 @@ _DUP_PHRASE_RES = [
 ]  # text_cleaner.py:184-186
 
 
-# Memo admission gate: entry-count caps alone let a stream of unique
-# multi-KB giant-doc strings permanently pin executor memory with ~zero
-# hit rate (and then block the short boilerplate strings the caches
-# exist for). Long strings take the uncached path.
-_MEMO_MAX_LEN = 4096
-
-_CLEAN_CACHE: dict[tuple[str, bool], str] = {}
-
-
+@memoized(200_000)
 def clean_text(text: str, preserve_case: bool = False) -> str:
     """T2 (text_cleaner.py:70-114): NFKD, control-char strip, whitespace,
     OCR corrections, punctuation, de-repetition, casing. Memoized (pure;
     section/title strings repeat heavily across issues)."""
     if not text or not isinstance(text, str):
         return ""
-    key = (text, preserve_case)
-    cached = _CLEAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    result = _clean_text_impl(text, preserve_case)
-    if len(_CLEAN_CACHE) < 200_000 and len(text) <= _MEMO_MAX_LEN:
-        _CLEAN_CACHE[key] = result
-    return result
-
-
-def _clean_text_impl(text: str, preserve_case: bool) -> str:
     text = unicodedata.normalize("NFKD", text)
     text = "".join(c for c in text
                    if unicodedata.category(c)[0] != "C" or c in "\n\r\t")
@@ -168,17 +150,12 @@ def _clean_text_impl(text: str, preserve_case: bool) -> str:
     return text.strip()
 
 
-_DESC_CACHE: dict[str, str] = {}
-
-
+@memoized(200_000)
 def clean_description(description: str) -> str:
     """T2+T3 (text_cleaner.py:236-273). Memoized (pure; boilerplate
     descriptions recur heavily across issues and documents)."""
     if not description:
         return ""
-    cached = _DESC_CACHE.get(description)
-    if cached is not None:
-        return cached
     text = clean_text(description)
     if text:
         if text[0].islower():
@@ -187,37 +164,40 @@ def clean_description(description: str) -> str:
             text += "."
         text = re.sub(r"([.!?])\s+([a-z])",
                       lambda m: m.group(1) + " " + m.group(2).upper(), text)
-    if len(_DESC_CACHE) < 200_000 and len(description) <= _MEMO_MAX_LEN:
-        _DESC_CACHE[description] = text
     return text
 
 
-_ITEM_CACHE: dict[str, str] = {}
-
-
+@memoized(200_000)
 def clean_item_name(item: str) -> str:
     """T4 (text_cleaner.py:211-234). Memoized (pure)."""
     if not item:
         return ""
-    cached = _ITEM_CACHE.get(item)
-    if cached is not None:
-        return cached
-    out = clean_text(item, preserve_case=True).title()
+    out = clean_text(item, True).title()
     for term in rules.TITLE_CASE_ITEMS:
         out = re.sub(r"\b" + term + r"\b", term.upper(), out,
                      flags=re.IGNORECASE)
-    if len(_ITEM_CACHE) < 200_000 and len(item) <= _MEMO_MAX_LEN:
-        _ITEM_CACHE[item] = out
     return out
 
 
-_DUP_NORM_CACHE: dict[str, tuple[str, Counter]] = {}
-_PAIR_RATIO_CACHE: dict[tuple[str, str], float] = {}
-# full pair verdict (gates + ratio) at the DEFAULT threshold: recurring
-# boilerplate pairs skip even the length/counter quick-reject work
-_PAIR_VERDICT_CACHE: dict[tuple[str, str], bool] = {}
-_MATCHER_CACHE: dict[str, SequenceMatcher] = {}
-_DUP_CACHE_MAX = 500_000
+@memoized(500_000)
+def _dup_norm(text: str) -> tuple[str, Counter]:
+    """A tracker entry's normalized text and its character counts."""
+    normalized = clean_text(text.lower())
+    return normalized, Counter(normalized)
+
+
+@memoized(500_000)
+def _matcher(normalized: str) -> SequenceMatcher:
+    """A matcher with ``normalized`` as seq2. Its b2j index is the
+    expensive half of a matcher and pure per string, so it is shared
+    process-wide (workers are single-threaded, and set_seq1 does not
+    touch b2j)."""
+    return SequenceMatcher(b=normalized)
+
+
+# full pair verdict (gates + ratio): recurring boilerplate pairs skip
+# even the length/counter quick-reject work
+_PAIR_VERDICTS = Memo(500_000)
 
 
 class DuplicateTracker:
@@ -226,7 +206,7 @@ class DuplicateTracker:
     Exact accelerations: an identical string short-circuits (ratio 1.0),
     the length-ratio bound (== difflib real_quick_ratio) skips pairs that
     cannot reach the threshold, and quick_ratio gates the full ratio.
-    The tracker state is per-document, but normalization and pair ratios
+    The tracker state is per-document, but normalization and pair verdicts
     are pure string functions cached process-wide — boilerplate
     descriptions recur across documents, so repeat docs skip difflib."""
 
@@ -239,14 +219,7 @@ class DuplicateTracker:
         threshold = rules.DUPLICATE_SIMILARITY_THRESHOLD
         if not text:
             return False
-        cached = _DUP_NORM_CACHE.get(text)
-        if cached is None:
-            normalized = clean_text(text.lower())
-            cached = (normalized, Counter(normalized))
-            if len(_DUP_NORM_CACHE) < _DUP_CACHE_MAX \
-                    and len(text) <= _MEMO_MAX_LEN:
-                _DUP_NORM_CACHE[text] = cached
-        normalized, cn = cached
+        normalized, cn = _dup_norm(text)
         if normalized in self.seen_set:
             return True
         ln = len(normalized)
@@ -258,7 +231,7 @@ class DuplicateTracker:
         # computed from cached counters instead of per-pair rebuilds.
         for seen, ls, cs, sm in self.seen:
             pair = (normalized, seen)
-            v = _PAIR_VERDICT_CACHE.get(pair)
+            v = _PAIR_VERDICTS.get(pair)
             if v is not None:
                 if v:
                     return True
@@ -268,30 +241,12 @@ class DuplicateTracker:
             if 2 * mn >= threshold * (mn + mx):
                 overlap = sum(min(c, cn[ch]) for ch, c in cs.items())
                 if 2 * overlap >= threshold * (ln + ls):
-                    r = _PAIR_RATIO_CACHE.get(pair)
-                    if r is None:
-                        sm.set_seq1(normalized)
-                        r = sm.ratio()
-                        if len(_PAIR_RATIO_CACHE) < _DUP_CACHE_MAX \
-                                and len(normalized) + len(seen) \
-                                <= 2 * _MEMO_MAX_LEN:
-                            _PAIR_RATIO_CACHE[pair] = r
-                    verdict = r >= threshold
-            if len(_PAIR_VERDICT_CACHE) < _DUP_CACHE_MAX \
-                    and len(normalized) + len(seen) <= 2 * _MEMO_MAX_LEN:
-                _PAIR_VERDICT_CACHE[pair] = verdict
+                    sm.set_seq1(normalized)
+                    verdict = sm.ratio() >= threshold
+            _PAIR_VERDICTS.admit(pair, verdict)
             if verdict:
                 return True
-        sm = _MATCHER_CACHE.get(normalized)
-        if sm is None:
-            # set_seq2's b2j index is the expensive half of a matcher;
-            # it is pure per string, so share it process-wide (workers
-            # are single-threaded, and set_seq1 does not touch b2j)
-            sm = SequenceMatcher()
-            sm.set_seq2(normalized)
-            if len(_MATCHER_CACHE) < _DUP_CACHE_MAX \
-                    and len(normalized) <= _MEMO_MAX_LEN:
-                _MATCHER_CACHE[normalized] = sm
+        sm = _matcher(normalized)
         self.seen.append((normalized, ln, cn, sm))
         self.seen_set.add(normalized)
         return False
@@ -445,8 +400,7 @@ def _semantic_meaning(text: str) -> float:
     return min(1.0, max(0.0, score))
 
 
-_QUALITY_MEMO: dict[tuple, tuple[str, float, str]] = {}
-_QUALITY_MEMO_MAX = 200_000
+_QUALITY_MEMO = Memo(200_000)
 
 
 def quality_validate(issue: dict) -> tuple[str, float, str]:
@@ -458,15 +412,7 @@ def quality_validate(issue: dict) -> tuple[str, float, str]:
     key = (issue.get("description"), issue.get("title"),
            issue.get("status"), issue.get("section"),
            "HEADER" in str(issue.get("id", "unknown")).upper())
-    try:
-        hit = _QUALITY_MEMO.get(key)
-    except TypeError:          # unhashable field value: compute directly
-        return _quality_validate_impl(issue)
-    if hit is None:
-        hit = _quality_validate_impl(issue)
-        if len(_QUALITY_MEMO) < _QUALITY_MEMO_MAX:
-            _QUALITY_MEMO[key] = hit
-    return hit
+    return _QUALITY_MEMO.lookup(key, _quality_validate_impl, (issue,))
 
 
 def _quality_validate_impl(issue: dict) -> tuple[str, float, str]:
@@ -518,25 +464,13 @@ def _quality_validate_impl(issue: dict) -> tuple[str, float, str]:
 # C7 — severity normalization (src/normalization/severity_normalizer.py)
 # ---------------------------------------------------------------------------
 
-_SEVERITY_TEXT_CACHE: dict[str, tuple[str, float]] = {}
-
-
+@memoized(100_000)
 def _match_severity_text(text: str) -> tuple[str, float]:
     """severity_normalizer.py:106-143: exact membership, substring
     containment (conf = len ratio), difflib fuzzy tier. Memoized — the
     inputs are the low-cardinality severity/priority labels."""
     if not text:
         return "unknown", 0.0
-    cached = _SEVERITY_TEXT_CACHE.get(text)
-    if cached is not None:
-        return cached
-    result = _match_severity_text_impl(text)
-    if len(_SEVERITY_TEXT_CACHE) < 100_000:
-        _SEVERITY_TEXT_CACHE[text] = result
-    return result
-
-
-def _match_severity_text_impl(text: str) -> tuple[str, float]:
     low = text.lower().strip()
     for severity, keywords in rules.SEVERITY_MAPPING.items():
         if low in keywords:
@@ -657,6 +591,12 @@ def _build_lookup() -> dict[str, tuple[str, str | None, float]]:
 _TAXONOMY_LOOKUP = _build_lookup()
 
 
+# one matcher per lookup key, seq2 (the key) prepared once
+_TAXONOMY_MATCHERS = [(key, SequenceMatcher(b=key), val)
+                      for key, val in _TAXONOMY_LOOKUP.items()]
+
+
+@memoized(200_000)
 def taxonomy_standardize(item_name: str) -> tuple[str, str | None, float]:
     """component_taxonomy.py:102-162: exact lookup then difflib fuzzy.
 
@@ -666,49 +606,26 @@ def taxonomy_standardize(item_name: str) -> tuple[str, str | None, float]:
     (the reference keeps the first strictly-greater candidate)."""
     if not item_name:
         return "Unknown", None, 0.0
-    cached = _STANDARDIZE_CACHE.get(item_name)
-    if cached is not None:
-        return cached
     cleaned = item_name.lower().strip()
     cleaned = re.sub(r"[^\w\s/-]", "", cleaned)
     if cleaned in _TAXONOMY_LOOKUP:
-        result = _TAXONOMY_LOOKUP[cleaned]
-    else:
-        best: tuple[str, str | None, float] = ("Unknown", None, 0.0)
-        # Reference order (component_taxonomy.py:150): SequenceMatcher(
-        # None, text, key) — seq2 is the taxonomy KEY. The per-key
-        # matchers (seq2 prepared once, module-level) preserve that order
-        # without recomputing b2j per item.
-        for key, sm, (category, subcat, base_conf) in _taxonomy_matchers():
-            floor = 0.75 if (key in cleaned or cleaned in key) else 0.0
-            sm.set_seq1(cleaned)
-            if max(sm.real_quick_ratio(), floor) * base_conf <= best[2]:
-                continue
-            if max(sm.quick_ratio(), floor) * base_conf <= best[2]:
-                continue
-            confidence = max(sm.ratio(), floor) * base_conf
-            if confidence > best[2]:
-                best = (category, subcat, confidence)
-        result = best if best[2] > 0.6 else ("Unknown", None, 0.0)
-    if len(_STANDARDIZE_CACHE) < 200_000:
-        _STANDARDIZE_CACHE[item_name] = result
-    return result
-
-
-_STANDARDIZE_CACHE: dict[str, tuple[str, str | None, float]] = {}
-
-_TAXONOMY_MATCHERS: list[tuple[str, SequenceMatcher,
-                               tuple[str, str | None, float]]] = []
-
-
-def _taxonomy_matchers() -> list[tuple[str, SequenceMatcher,
-                                       tuple[str, str | None, float]]]:
-    if not _TAXONOMY_MATCHERS:
-        for key, val in _TAXONOMY_LOOKUP.items():
-            sm = SequenceMatcher()
-            sm.set_seq2(key)
-            _TAXONOMY_MATCHERS.append((key, sm, val))
-    return _TAXONOMY_MATCHERS
+        return _TAXONOMY_LOOKUP[cleaned]
+    best: tuple[str, str | None, float] = ("Unknown", None, 0.0)
+    # Reference order (component_taxonomy.py:150): SequenceMatcher(
+    # None, text, key) — seq2 is the taxonomy KEY. The per-key
+    # matchers (seq2 prepared once, module-level) preserve that order
+    # without recomputing b2j per item.
+    for key, sm, (category, subcat, base_conf) in _TAXONOMY_MATCHERS:
+        floor = 0.75 if (key in cleaned or cleaned in key) else 0.0
+        sm.set_seq1(cleaned)
+        if max(sm.real_quick_ratio(), floor) * base_conf <= best[2]:
+            continue
+        if max(sm.quick_ratio(), floor) * base_conf <= best[2]:
+            continue
+        confidence = max(sm.ratio(), floor) * base_conf
+        if confidence > best[2]:
+            best = (category, subcat, confidence)
+    return best if best[2] > 0.6 else ("Unknown", None, 0.0)
 
 
 def taxonomy_from_context(item_name: str, section: str | None,
@@ -1273,8 +1190,7 @@ _PURE_STR_FIELDS = ("description", "title", "item", "section", "subsection",
 _PURE_FLAG_FIELDS = ("safety_flag", "safety_related",
                      "requires_specialized_labor")
 
-_ISSUE_MEMO: dict[tuple, tuple[dict, dict, dict]] = {}
-_ISSUE_MEMO_MAX = 200_000
+_ISSUE_MEMO = Memo(200_000)
 
 
 def _enrich_issue_content(issue: dict) -> tuple[dict, dict, dict]:
@@ -1289,16 +1205,13 @@ def _enrich_issue_content(issue: dict) -> tuple[dict, dict, dict]:
     The returned sub-dicts are shared between cache hits — callers must
     treat them as immutable (the pipeline only reads them downstream).
     """
-    from . import estimation_rules as est2
-
     key = tuple(issue.get(f) for f in _PURE_STR_FIELDS) + tuple(
         bool(issue.get(f)) for f in _PURE_FLAG_FIELDS)
-    try:
-        hit = _ISSUE_MEMO.get(key)
-    except TypeError:
-        hit, key = None, None     # unhashable field value: compute, no memo
-    if hit is not None:
-        return hit
+    return _ISSUE_MEMO.lookup(key, _issue_content, (issue,))
+
+
+def _issue_content(issue: dict) -> tuple[dict, dict, dict]:
+    from . import estimation_rules as est2
 
     v = {f: issue[f] for f in _PURE_STR_FIELDS + _PURE_FLAG_FIELDS
          if f in issue}
@@ -1397,10 +1310,7 @@ def _enrich_issue_content(issue: dict) -> tuple[dict, dict, dict]:
         "manual_review": bool(conf2["manual_review_needed"]),
     }
 
-    result = (out, e18, p2)
-    if key is not None and len(_ISSUE_MEMO) < _ISSUE_MEMO_MAX:
-        _ISSUE_MEMO[key] = result
-    return result
+    return out, e18, p2
 
 
 def enrich_document(issues: list[dict]) -> dict:

@@ -923,9 +923,10 @@ class PdfFile:
                 "password-protected PDF (non-empty user password)")
         self._file_key = key
 
-    def _decrypt(self, obj: Any, num: int) -> Any:
+    def _decrypt(self, obj: Any, num: int, gen: int) -> Any:
         """Recursively decrypt literal/hex strings and stream bytes
-        with the per-object key; names/numbers/refs pass through."""
+        with the key of object ``num`` generation ``gen``; names,
+        numbers and refs pass through."""
         if self._cipher == "aes256":  # file key used directly (§7.6.4)
             from ..functions.aes import cbc_decrypt
 
@@ -936,14 +937,12 @@ class PdfFile:
         elif self._cipher == "aes":
             from ..functions.aes import cbc_decrypt
 
-            # generation fixed at 0: wrong for G != 0 objects (CHANGES.md
-            # FOUND, PdfFile._load generation)
-            key = object_key(self._file_key, num, 0, aes=True)
+            key = object_key(self._file_key, num, gen, aes=True)
 
             def raw_dec(b: bytes) -> bytes:
                 return cbc_decrypt(key, b)
         else:
-            key = object_key(self._file_key, num, 0)  # see G != 0 above
+            key = object_key(self._file_key, num, gen)
 
             def raw_dec(b: bytes) -> bytes:
                 return rc4(key, b)
@@ -980,7 +979,9 @@ class PdfFile:
         if entry[0] == "i":
             obj = parse_indirect(self.data, entry[1], self.get)
             if self._file_key is not None:
-                obj = self._decrypt(obj, num)
+                hdr = _OBJ_HDR_RE.match(self.data,
+                                        _skip_ws(self.data, entry[1]))
+                obj = self._decrypt(obj, num, int(hdr.group(2)))
         else:
             # ObjStm members are covered by the CONTAINER stream's
             # decryption (§7.6.2); no per-member pass

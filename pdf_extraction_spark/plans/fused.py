@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import re
 import warnings
+from functools import cache
 from typing import Any, Iterator
 
 import numpy as np
@@ -49,6 +50,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import rules
 
@@ -61,24 +63,6 @@ from ..oracle import (KIND_BOILERPLATE, KIND_MEDIA, KIND_SECTION, KIND_STATUS,
                       KIND_SUBSECTION, KIND_TABLE_ROW, KIND_TEXT,
                       TABLE_ROW_MARKER, _classify_table, _cost_from_table)
 
-OUTPUT_SCHEMA = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,order:int>>, "
-    "issues array<struct<id:string,section:string,subsection:string,"
-    "status:string,priority:string,title:string,description:string,"
-    "page_numbers:array<int>,"
-    "estimated_cost:struct<min:double,max:double,average:double>>>, "
-    "tables array<struct<page_num:int,section:string,table_type:string,"
-    "headers:array<string>,table_data:array<array<string>>>>, "
-    "raw_sections map<string,string>, "
-    "metadata struct<total_pages:int,report_type:string,report_number:string,"
-    "inspection_date:string,property_address:string,square_footage:int,"
-    "year_built:int,stories:int,home_type:string,lot_size:string,"
-    "bedrooms:int,bathrooms:double,location:string>, "
-    "summary struct<total_issues:int,deficient:long,inspected:long,"
-    "not_inspected:long,not_present:long,high:long,medium:long,low:long,"
-    "info:long,total_tables:long>"
-)
 
 _SPAN_T = pa.struct([("kind", pa.string()), ("text", pa.string()),
                      ("media_ref", pa.string()), ("order", pa.int32())])
@@ -111,9 +95,9 @@ PA_SCHEMA = pa.schema([
     ("issues", pa.list_(_ISSUE_T)), ("tables", pa.list_(_TABLE_T)),
     ("raw_sections", pa.map_(pa.string(), pa.string())),
     ("metadata", _META_T), ("summary", _SUMMARY_T)])
+OUTPUT_SCHEMA = from_arrow_schema(PA_SCHEMA)
 
 _DIRTY_RE = re.compile(r"[^\x01-\x7f]")
-_ALTERNATION_CACHE: dict[int, str] = {}
 
 # Python re twins for the classification scans. rules.re2 gives RE2 the
 # Python meaning of \s, but the bare-status scan's \b stays RE2's ASCII
@@ -158,18 +142,14 @@ def _checkbox_status(sub: pd.Series) -> tuple[pd.Series, pd.Series]:
     return out, matched_any
 
 
-def _alt_pattern(words: list[str]) -> str:
-    key = id(words)
-    pat = _ALTERNATION_CACHE.get(key)
-    if pat is None:
-        pat = "|".join(re.escape(w) for w in words)
-        _ALTERNATION_CACHE[key] = pat
-    return pat
+@cache
+def _alt_pattern(words: tuple[str, ...]) -> str:
+    return "|".join(re.escape(w) for w in words)
 
 
 def _contains_any_pa(low: "pa.Array", words: list[str]) -> np.ndarray:
     """Single RE2 alternation pass (== OR of substring-contains checks)."""
-    return pc.match_substring_regex(low, _alt_pattern(words)) \
+    return pc.match_substring_regex(low, _alt_pattern(tuple(words))) \
         .to_numpy(zero_copy_only=False)
 
 
@@ -638,7 +618,7 @@ def assemble_fused(docs: DataFrame) -> DataFrame:
     return docs.mapInArrow(run, schema=OUTPUT_SCHEMA)
 
 
-def assemble_auto(docs: DataFrame, giant_spans: int | None = 500_000,
+def assemble_auto(docs: DataFrame, giant_spans: int = 500_000,
                   chunk_spans: int = 16_384) -> DataFrame:
     """Skew-adaptive extraction: ONE entry point for mixed corpora.
 
@@ -657,11 +637,7 @@ def assemble_auto(docs: DataFrame, giant_spans: int | None = 500_000,
     11.35 s. With one giant per core fused wins (500k: 7.79 vs 9.13 s):
     the merge's fold is one task per doc and costs about what the
     classification does. 500k spans is about a 40 MB document.
-
-    ``giant_spans=None`` degrades to the pure fused plan.
     """
-    if giant_spans is None:
-        return assemble_fused(docs)
     from pyspark.sql import functions as F
 
     from .salted import assemble_salted

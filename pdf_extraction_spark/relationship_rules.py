@@ -8,7 +8,10 @@ the same per-doc mapInPandas batches as the rest of enrichment.
 
 from __future__ import annotations
 
+from functools import cache
 from typing import Any
+
+from .memo import memoized
 
 CAUSAL_RELATIONSHIPS: dict[str, list[str]] = {
     "foundation_cracks": ["grading_issues", "drainage_problems",
@@ -67,14 +70,13 @@ def _searchable_text(issue: dict) -> str:
                      issue.get("description", "")]).lower()
 
 
-_PATTERN_WORDS: dict[str, list[str]] = {}
+@cache
+def _pattern_words(pattern: str) -> list[str]:
+    return pattern.lower().replace("_", " ").split()
 
 
 def _matches_text(text: str, pattern: str) -> bool:
-    words = _PATTERN_WORDS.get(pattern)
-    if words is None:
-        words = pattern.lower().replace("_", " ").split()
-        _PATTERN_WORDS[pattern] = words
+    words = _pattern_words(pattern)
     if len(words) > 1:
         return sum(1 for w in words if w in text) >= 2
     return words[0] in text
@@ -95,26 +97,16 @@ _ALL_EFFECTS = sorted({e for effs in CAUSAL_RELATIONSHIPS.values()
                        for e in effs})
 
 
-_CTX_TEXT_CACHE: dict[tuple[str, str],
-                      tuple[list, set, bool, bool]] = {}
-_CTX_CACHE_MAX = 200_000
-
-
+@memoized(200_000)
 def _ctx_entry(text: str, issue_txt: str) -> tuple[list, set, bool, bool]:
     """Per-issue pattern matches are pure in (searchable text, raw issue
     text); cached process-wide because boilerplate issues recur across
     documents. The cached list/set are shared read-only by _caused_indices
     (intersections only, never mutated)."""
-    key = (text, issue_txt)
-    hit = _CTX_TEXT_CACHE.get(key)
-    if hit is None:
-        hit = ([p for p in CAUSAL_RELATIONSHIPS if _matches_text(text, p)],
-               {e for e in _ALL_EFFECTS if _matches_text(text, e)},
-               any(k in issue_txt for k in _WATER_KEYWORDS),
-               any(k in issue_txt for k in _STRUCTURAL_KEYWORDS))
-        if len(_CTX_TEXT_CACHE) < _CTX_CACHE_MAX:
-            _CTX_TEXT_CACHE[key] = hit
-    return hit
+    return ([p for p in CAUSAL_RELATIONSHIPS if _matches_text(text, p)],
+            {e for e in _ALL_EFFECTS if _matches_text(text, e)},
+            any(k in issue_txt for k in _WATER_KEYWORDS),
+            any(k in issue_txt for k in _STRUCTURAL_KEYWORDS))
 
 
 class _Ctx:

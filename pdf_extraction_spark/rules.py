@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import re
 import unicodedata
+from functools import cache
 
 # ---------------------------------------------------------------------------
 # T1 — unicode normalization (text_extractor.pyc:11-64)
@@ -66,9 +67,9 @@ _PY_S = r"[\s\x1c-\x1f]"
 _PY_B = (r"(?:(?<=[\p{L}\p{N}_])(?![\p{L}\p{N}_])"
          r"|(?<![\p{L}\p{N}_])(?=[\p{L}\p{N}_]))")
 _JRE_MAP = {"w": _PY_W, "s": _PY_S, "S": "[^\\s\\x1c-\\x1f]", "b": _PY_B}
-_JRE_CACHE: dict[str, str] = {}
 
 
+@cache
 def jre(pattern: str) -> str:
     """Compile a shared pattern to Java-regex form with python-re
     semantics (for rlike/regexp_extract in the exploded plan).
@@ -86,25 +87,21 @@ def jre(pattern: str) -> str:
     tests/test_extraction_fuzz.py (NBSP after 'Report Number:', CJK
     between a number and an address, combining marks inside an address).
     """
-    out = _JRE_CACHE.get(pattern)
-    if out is None:
-        parts: list[str] = []
-        i = 0
-        while i < len(pattern):
-            c = pattern[i]
-            if c == "\\" and i + 1 < len(pattern) and \
-                    pattern[i + 1] in _JRE_MAP:
-                parts.append(_JRE_MAP[pattern[i + 1]])
-                i += 2
-            elif c == "\\":
-                parts.append(pattern[i:i + 2])
-                i += 2
-            else:
-                parts.append(c)
-                i += 1
-        out = "(?Ud)" + "".join(parts)
-        _JRE_CACHE[pattern] = out
-    return out
+    parts: list[str] = []
+    i = 0
+    while i < len(pattern):
+        c = pattern[i]
+        if c == "\\" and i + 1 < len(pattern) and \
+                pattern[i + 1] in _JRE_MAP:
+            parts.append(_JRE_MAP[pattern[i + 1]])
+            i += 2
+        elif c == "\\":
+            parts.append(pattern[i:i + 2])
+            i += 2
+        else:
+            parts.append(c)
+            i += 1
+    return "(?Ud)" + "".join(parts)
 
 
 # Python re's \s, \d and \w as RE2 class members. RE2's own \s/\d/\w are
@@ -126,9 +123,9 @@ _RE2_MEMBERS = {
 # just those rows under Python re.
 RE2_DIVERGENT = (r"[\x{0130}\x{0131}\x{0345}\x{2028}\x{2029}"
                  r"\x{10000}-\x{10ffff}]")
-_RE2_CACHE: dict[tuple[str, str | None], str] = {}
 
 
+@cache
 def re2(pattern: str, group: str | None = None) -> str:
     """Compile a shared pattern to RE2 form with Python re semantics
     (for the pyarrow.compute regex scans of the fused kernels).
@@ -140,46 +137,41 @@ def re2(pattern: str, group: str | None = None) -> str:
     left as RE2's ASCII word boundary, so callers using it re-run
     non-ASCII rows under Python re. ``group`` names the pattern's single
     capture group, as ``pyarrow.compute.extract_regex`` requires."""
-    key = (pattern, group)
-    out = _RE2_CACHE.get(key)
-    if out is None:
-        parts: list[str] = []
-        in_class = False
-        groups = 0
-        i = 0
-        while i < len(pattern):
-            c = pattern[i]
-            nxt = pattern[i + 1] if i + 1 < len(pattern) else ""
-            if c == "\\" and nxt.lower() in _RE2_MEMBERS:
-                members = _RE2_MEMBERS[nxt.lower()]
-                if nxt.islower():
-                    parts.append(members if in_class else f"[{members}]")
-                elif in_class:
-                    raise ValueError(f"\\{nxt} inside a character class has "
-                                     "no RE2 member-list rewrite")
-                else:
-                    parts.append(f"[^{members}]")
-                i += 2
-            elif c == "\\":
-                parts.append(pattern[i:i + 2])
-                i += 2
+    parts: list[str] = []
+    in_class = False
+    groups = 0
+    i = 0
+    while i < len(pattern):
+        c = pattern[i]
+        nxt = pattern[i + 1] if i + 1 < len(pattern) else ""
+        if c == "\\" and nxt.lower() in _RE2_MEMBERS:
+            members = _RE2_MEMBERS[nxt.lower()]
+            if nxt.islower():
+                parts.append(members if in_class else f"[{members}]")
+            elif in_class:
+                raise ValueError(f"\\{nxt} inside a character class has "
+                                 "no RE2 member-list rewrite")
             else:
-                if c == "[" and not in_class:
-                    in_class = True
-                elif c == "]" and in_class:
-                    in_class = False
-                elif c == "(" and not in_class and nxt != "?":
-                    groups += 1
-                    if group is not None:
-                        c = f"(?P<{group}>"
-                parts.append(c)
-                i += 1
-        if group is not None and groups != 1:
-            raise ValueError(f"{pattern!r} has {groups} capture groups, "
-                             "not one")
-        out = "".join(parts)
-        _RE2_CACHE[key] = out
-    return out
+                parts.append(f"[^{members}]")
+            i += 2
+        elif c == "\\":
+            parts.append(pattern[i:i + 2])
+            i += 2
+        else:
+            if c == "[" and not in_class:
+                in_class = True
+            elif c == "]" and in_class:
+                in_class = False
+            elif c == "(" and not in_class and nxt != "?":
+                groups += 1
+                if group is not None:
+                    c = f"(?P<{group}>"
+            parts.append(c)
+            i += 1
+    if group is not None and groups != 1:
+        raise ValueError(f"{pattern!r} has {groups} capture groups, "
+                         "not one")
+    return "".join(parts)
 
 
 # ---------------------------------------------------------------------------

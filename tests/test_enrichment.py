@@ -280,6 +280,25 @@ def test_dup_tracker_memo_parity():
             assert got == want, (trial, run, stream)
 
 
+def test_memos_skip_long_keys():
+    """A description longer than the memo's key bar is computed but not
+    retained (a giant-doc string must not pin executor memory); a short
+    one is retained."""
+    from pdf_extraction_spark import enrich_rules as er
+
+    words = " ".join(f"crack{i}" for i in range(800))
+    long_desc = ("Water heater shows corrosion at the base. " + words)[:5000]
+    issue = {"id": "i1", "section": "Plumbing", "title": "Water heater",
+             "status": "D", "description": long_desc}
+    short = dict(issue, description=long_desc[:300])
+    for i in (issue, short):
+        er.quality_validate(i)
+        er._enrich_issue_content(i)
+    for memo in (er._QUALITY_MEMO, er._ISSUE_MEMO):
+        assert not any(long_desc in key for key in memo)
+        assert any(short["description"] in key for key in memo)
+
+
 def test_group_summary_golden():
     """A3 get_group_summary (issue_grouper.py:172-201): totals, per-type
     histogram, avg size with the reference's round(x, 1)."""

@@ -358,8 +358,8 @@ def test_auto_plan_matches_fused_on_mixed_corpus(spark):
         for key in ("spans", "issues", "tables", "raw_sections",
                     "metadata", "summary"):
             assert a[doc_id][key] == b[doc_id][key], f"{doc_id}.{key}"
-    # threshold None or a streaming-free corpus under the bar: pure fused
-    small = assemble_auto(docs.limit(2), giant_spans=None)
+    # a corpus under the default bar takes the fused branch alone
+    small = assemble_auto(docs.limit(2))
     assert small.count() == 2
     docs.unpersist()
 

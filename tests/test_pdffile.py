@@ -393,6 +393,38 @@ def test_encrypted_round_trip_and_lockout(doc_id):
         PdfFile(pdf.replace(b"/U (", b"/U (X", 1))
 
 
+# R3/RC4-128 and R4/AES-128 key each object by its number AND generation
+# (§7.6.2 Algorithm 1); R6/AES-256 uses the file key for every object
+@pytest.mark.parametrize("doc_id", [1, 2])
+def test_encrypted_object_keyed_by_its_generation(doc_id):
+    from pdf_extraction_spark.functions.aes import cbc_encrypt
+    from pdf_extraction_spark.operators.pdffile import (
+        _lit_bytes, build_pdf_encrypted, object_key, rc4)
+
+    pdf = build_pdf_encrypted(doc_id, TEXT)
+    fkey = PdfFile(pdf)._file_key
+    title = f"Doc {doc_id} enc".encode("latin-1")
+    if doc_id == 1:
+        enc = rc4(object_key(fkey, 7, 1), title)
+    else:
+        enc = cbc_encrypt(object_key(fkey, 7, 1, aes=True), bytes(16), title)
+    # object 7 (the /Info dict) becomes generation 1: header, body,
+    # xref entry and trailer reference
+    start = pdf.index(b"\nendobj\n7 0 obj\n") + 8
+    end = pdf.index(b"\nendobj\n8 0 obj\n") + 8
+    body = (pdf[:start] + b"7 1 obj\n<< /Title " + _lit_bytes(enc)
+            + b" >>\nendobj\n" + pdf[end:pdf.index(b"xref\n")])
+    xref = b"xref\n0 9\n0000000000 65535 f \n" + b"".join(
+        b"%010d %05d n \n" % (body.index(b"\n%d %d obj\n" % (n, g)) + 1, g)
+        for n, g in ((n, int(n == 7)) for n in range(1, 9)))
+    trailer = pdf[pdf.index(b"trailer\n"):pdf.index(b"startxref\n")] \
+        .replace(b"/Info 7 0 R", b"/Info 7 1 R")
+    regen = body + xref + trailer + b"startxref\n%d\n%%%%EOF\n" % len(body)
+    pf = PdfFile(regen)
+    assert pf.xref_kind == "table"
+    assert pf.info()["Title"] == f"Doc {doc_id} enc"
+
+
 def test_unsupported_encryption_raises():
     from pdf_extraction_spark.operators.pdffile import (
         build_pdf_encrypted)
