@@ -416,11 +416,13 @@ def quality_validate(issue: dict) -> tuple[str, float, str]:
 
 
 def _quality_validate_impl(issue: dict) -> tuple[str, float, str]:
-    description = issue.get("description", "").strip()
-    title = issue.get("title", "").strip()
-    status = issue.get("status", "")
-    section = issue.get("section", "")
-    issue_id = issue.get("id", "unknown")
+    # a field that is present but None reads as empty, as a missing one
+    # does: validate_schema passes such an issue on as 'failed'
+    description = (issue.get("description") or "").strip()
+    title = (issue.get("title") or "").strip()
+    status = issue.get("status") or ""
+    section = issue.get("section") or ""
+    issue_id = issue.get("id") or ""
     quality = 1.0
 
     if not description:
@@ -1213,8 +1215,10 @@ def _enrich_issue_content(issue: dict) -> tuple[dict, dict, dict]:
 def _issue_content(issue: dict) -> tuple[dict, dict, dict]:
     from . import estimation_rules as est2
 
+    # a None field reads as a missing one (validate_schema passes a None
+    # required field on), so every rule below sees its "" default
     v = {f: issue[f] for f in _PURE_STR_FIELDS + _PURE_FLAG_FIELDS
-         if f in issue}
+         if issue.get(f) is not None}
     out: dict = {}
 
     def setv(k: str, val) -> None:

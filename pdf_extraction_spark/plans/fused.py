@@ -29,9 +29,11 @@ loops over *blocks*:
 Scale notes (100 TB / 10^12 docs):
   - No shuffle: the job is map-only; 1000 executors scale linearly.
   - Skew: a giant doc (500k spans) is one row, so per-task cost is
-    bounded by the largest doc. ``assemble_auto`` routes the docs above
-    its giant threshold to plans/salted.py, which classifies a doc's span
-    chunks in parallel and merges them with this module's own fold.
+    bounded by the largest doc. ``assemble_auto`` probes the span counts
+    at plan time: an input with no doc above its giant threshold runs
+    this plan alone, map-only; otherwise the docs above it go to
+    plans/salted.py, which classifies a doc's span chunks in parallel
+    and merges them with this module's own fold.
   - Arrow batches are capped (session.py maxRecordsPerBatch) so a batch of
     doc rows with large span arrays stays within executor memory.
 
@@ -623,12 +625,21 @@ def assemble_auto(docs: DataFrame, giant_spans: int = 500_000,
     """Skew-adaptive extraction: ONE entry point for mixed corpora.
 
     Docs with ``size(spans) <= giant_spans`` run the zero-shuffle fused
-    plan; the giant tail runs through plans/salted.py IN THE SAME JOB and
-    is unioned back, so a giant doc classifies its span chunks on all
-    cores instead of pinning one task. Both branches give the same rows,
-    one per input row even where rows share a doc_id (golden seam-carry
-    and duplicate-id tests); only the giant tail pays the salt and merge
+    plan; the giant tail runs through plans/salted.py and is unioned
+    back, so a giant doc classifies its span chunks on all cores instead
+    of pinning one task. Both branches give the same rows, one per input
+    row even where rows share a doc_id (golden seam-carry and
+    duplicate-id tests); only the giant tail pays the salt and merge
     exchanges.
+
+    Routing is decided here, at plan time, by one probe job over the
+    span counts: an input with no doc above ``giant_spans`` gets the
+    fused plan alone (one map-only stage, no Exchange), since an empty
+    salted branch still starts its scan stage and one Python task per
+    stage-A partition. The probe is one more evaluation of ``docs``: an
+    input with no giant is evaluated twice (probe, fused), one with a
+    giant three times (probe, both branches). Persist an expensive input
+    first, as sources/checkpoint.run_incremental does.
 
     Threshold (4-core host, local[4], giants-only input with one parquet
     file per doc, best of 2 walls into a noop sink, 16k-span chunks): a
@@ -645,6 +656,8 @@ def assemble_auto(docs: DataFrame, giant_spans: int = 500_000,
     # BOTH branch predicates and silently drop the doc — assemble_fused
     # emits a row for a NULL spans column, so the dispatch must too
     n = F.coalesce(F.size("spans"), F.lit(0))
+    giants = docs.where(n > giant_spans)
+    if giants.isEmpty():
+        return assemble_fused(docs)
     normal = assemble_fused(docs.where(n <= giant_spans))
-    giants = assemble_salted(docs.where(n > giant_spans), chunk_spans)
-    return normal.unionByName(giants)
+    return normal.unionByName(assemble_salted(giants, chunk_spans))

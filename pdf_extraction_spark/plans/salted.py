@@ -25,7 +25,8 @@ are the fused kernel's own code, so the output equals
 fused.extract_record_batch's.
 
 Cost: two shuffles of the classified chunks, which is why
-fused.assemble_auto routes only documents above its giant threshold here.
+fused.assemble_auto routes only documents above its giant threshold here,
+and builds this plan only when its plan-time probe finds such a document.
 """
 
 from __future__ import annotations

@@ -10,10 +10,11 @@
 import math
 
 import pytest
+from pyspark.sql.types import StructType
 
 from pdf_extraction_spark import corpus, enrich_rules as er, oracle
 from pdf_extraction_spark.plans.enrichment import enrich_extracted
-from pdf_extraction_spark.plans.fused import assemble_fused
+from pdf_extraction_spark.plans.fused import OUTPUT_SCHEMA, assemble_fused
 
 SAMPLE_ISSUES = [
     {
@@ -166,6 +167,26 @@ def test_dedup_per_document():
     flags = {i["id"]: i.get("is_duplicate", False) for i in result["issues"]}
     assert flags["A"] is False
     assert flags["B"] is True
+
+
+@pytest.mark.parametrize("field", sorted(er.REQUIRED_FIELDS))
+def test_none_required_field_keeps_document(spark, field):
+    """An issue whose required field is present but None flows on as
+    schema-'failed' and must not fail its document (nor the whole
+    enrich_batch task): a None description is excluded as
+    empty_description, any other None field is kept."""
+    bad = dict(SAMPLE_ISSUES[1], **{field: None})
+    excluded = int(field == "description")
+    result = er.enrich_document([bad, dict(SAMPLE_ISSUES[0])])
+    assert (result["n_excluded"], len(result["issues"])) == \
+        (excluded, 2 - excluded)
+
+    extracted = spark.createDataFrame(
+        [("d1", [bad, SAMPLE_ISSUES[0]])],
+        StructType([OUTPUT_SCHEMA["doc_id"], OUTPUT_SCHEMA["issues"]]))
+    (row,) = enrich_extracted(extracted).collect()
+    assert (row["n_excluded"], len(row["issues"])) == \
+        (excluded, 2 - excluded)
 
 
 N_DOCS = 25

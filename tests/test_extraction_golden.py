@@ -341,8 +341,9 @@ def test_font_size_and_italic_branches(spark):
 def test_auto_plan_matches_fused_on_mixed_corpus(spark):
     """assemble_auto is the ONE skew-adaptive entry point: normal docs
     take the zero-shuffle fused branch, docs over the giant threshold
-    take the chunked+salted branch in the same job, and the unioned
-    output is row-identical to running everything fused."""
+    take the chunked+salted branch (built only when the plan-time probe
+    finds one), and the unioned output is row-identical to running
+    everything fused."""
     from pdf_extraction_spark.plans.fused import assemble_auto
 
     docs = corpus.generate_docs(spark, 9, giant_every=3, partitions=2).persist()

@@ -86,6 +86,30 @@ def test_salted_branch_salts_chunks(spark):
     assert max(tasks) > 1
 
 
+def test_auto_plan_builds_salted_branch_only_for_a_giant(spark):
+    """assemble_auto probes the span counts at plan time.  With the
+    largest doc exactly at ``giant_spans`` it builds the fused plan
+    alone (no salt Exchange, no stage-A Python stage) and returns the
+    fused plan's rows; one span more and the salted branch is back."""
+    from pdf_extraction_spark import corpus
+    from pdf_extraction_spark.plans.fused import assemble_auto, assemble_fused
+
+    docs = corpus.generate_docs(spark, 6, partitions=2)
+    n = F.size("spans")
+    top = docs.select(F.max(n)).first()[0]
+    auto = assemble_auto(docs, giant_spans=top)
+    plan = _plan(auto)
+    assert "Exchange" not in plan and "_classify_chunks" not in plan, plan
+    assert sorted(auto.collect()) == sorted(assemble_fused(docs).collect())
+
+    top_doc = docs.where(n == top).limit(1)
+    one_more = docs.where(n < top).unionByName(top_doc.withColumn(
+        "spans", F.concat("spans", F.slice("spans", 1, 1))))
+    plan = _plan(assemble_auto(one_more, giant_spans=top))
+    assert "Exchange RoundRobinPartitioning(" in plan, plan
+    assert "MapInArrow _classify_chunks" in plan, plan
+
+
 def test_parquet_scan_prunes_and_pushes(spark):
     """Column pruning + predicate pushdown must reach the parquet scan:
     a 2-column projection that reads all columns is wrong at any scale."""
@@ -253,8 +277,9 @@ def test_pdf_bridge_one_docid_exchange(spark):
 def test_pdf_file_bridge_is_one_stage(spark):
     """files_to_spans is parse -> tokenize -> layout -> offsets in one
     mapInArrow with no Exchange.  Over landed records dispatch_spans
-    has no Exchange at all: the pdf, docx, pptx, xlsx and image rows
-    take ONE routed mapInArrow, and epub_to_spans is map-only too."""
+    has no Exchange at all, on html-only and on mixed WARC files: the
+    pdf, docx, pptx, xlsx and image rows take ONE routed mapInArrow,
+    and epub_to_spans is map-only too."""
     import re
 
     from pdf_extraction_spark.operators.epub import (build_epub_files,
@@ -262,8 +287,8 @@ def test_pdf_file_bridge_is_one_stage(spark):
     from pdf_extraction_spark.operators.pdffile import (build_pdf_files,
                                                         files_to_spans)
     from pdf_extraction_spark.operators.warc import (
-        _BINARY_MIMES, build_mixed_warc_files, dispatch_spans,
-        records_from_warc)
+        _BINARY_MIMES, build_mixed_warc_files, build_warc_files,
+        dispatch_spans, records_from_warc)
     from pdf_extraction_spark.queries_html import _media_page_expr
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
@@ -275,6 +300,8 @@ def test_pdf_file_bridge_is_one_stage(spark):
         "doc_id", F.coalesce("text", F.lit("")).alias("t")).select(
         "doc_id", F.col("t").alias("text"),
         F.expr(_media_page_expr("CAST(doc_id AS STRING)")).alias("html"))
+    assert "Exchange" not in _plan(dispatch_spans(
+        records_from_warc(build_warc_files(docs)), dedupe=False))
     plan = _plan(dispatch_spans(records_from_warc(
         build_mixed_warc_files(pages)), dedupe=False))
     assert "Exchange" not in plan

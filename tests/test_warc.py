@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.warc import (
     build_one_warc, build_warc_files, chunkify, content_decode,
-    dechunk, decode_text, dispatch_spans, flatten_records,
+    dechunk, decode_text, flatten_records,
     gunzip_members, gzip_bytes, parse_http, parse_warc,
     records_from_warc, resolve_charset, synth_png, warc_dispatch_spans,
     warc_record, warc_to_pages)
@@ -204,15 +204,6 @@ def test_records_plan_is_map_only(spark, docs):
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert plan.count("MapInArrow") == 2    # writer + parser passes
-
-
-def test_spans_bridge_plan_is_map_only(spark, docs):
-    """Over records that need no capture dedupe, the dispatch spans
-    bridge adds no exchange to the container parse."""
-    plan = dispatch_spans(records_from_warc(build_warc_files(docs)),
-                          dedupe=False) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 # ------------------------------------------------------ fuzz sample

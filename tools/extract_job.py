@@ -31,9 +31,9 @@ def main() -> None:
     ap.add_argument("--warmup", type=int, default=2048)
     ap.add_argument("--plan", default="auto",
                     choices=["auto", "fused", "salted"],
-                    help="auto = fused with the giant-doc tail routed "
-                         "through the salted plan in the same job "
-                         "(span-count dispatch at 500k)")
+                    help="auto = fused, plus the salted plan for the "
+                         "giant-doc tail when a plan-time probe finds a "
+                         "doc above 500k spans (unioned back)")
     ap.add_argument("--stage", default="extract", choices=list(STAGES),
                     help="; ".join(f"{name} = {stage.about}"
                                    for name, stage in STAGES.items()))
