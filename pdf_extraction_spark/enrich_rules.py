@@ -3,7 +3,7 @@
 rule-based cost estimator (rule_based_cost_estimator.py:90-300).
 
 Pure python, per-issue / per-document functions. The Spark plan
-(plans/enrichment.py) executes these inside mapInArrow batches (per-doc
+(plans/enrichment.py) executes these inside mapInPandas batches (per-doc
 scope, zero shuffle); the pytest oracle calls them directly — one shared
 implementation, so Spark and oracle cannot drift.
 

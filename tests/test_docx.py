@@ -122,16 +122,6 @@ def test_docx_plans_are_map_only(spark, docs):
         assert "Exchange" not in plan
 
 
-def test_fuzz_docx_sample():
-    """50-seed sample of the by-construction campaign
-    (tools/fuzz_docx.py — 0 mismatches across the committed ranges)."""
-    import sys as _sys
-    _sys.path.insert(0, "tools")
-    from fuzz_docx import check_seed
-    for seed in range(50):
-        assert check_seed(seed) == []
-
-
 # ------------------------------------------------------------- pptx
 
 def test_pptx_parse_variants():
@@ -201,16 +191,6 @@ def test_pptx_media_part_feeds_image_sniffer():
     png = zf.read("ppt/media/image1.png")
     mime, w, h, d = sniff_image(png)
     assert (mime, w, h) == ("image/png", 40 + 6 % 12, 30 + 6 % 6)
-
-
-def test_fuzz_pptx_sample():
-    """50-seed sample of the by-construction campaign
-    (tools/fuzz_pptx.py — 0 mismatches across the committed ranges)."""
-    import sys as _sys
-    _sys.path.insert(0, "tools")
-    from fuzz_pptx import check_seed
-    for seed in range(50):
-        assert check_seed(seed) == []
 
 
 # ------------------------------------------------------------- xlsx
@@ -296,16 +276,6 @@ def test_dispatch_routes_xlsx_mime(spark):
         [tuple(s) for s in exp[0]["spans"]]
 
 
-def test_fuzz_xlsx_sample():
-    """50-seed sample of the by-construction campaign
-    (tools/fuzz_xlsx.py — 0 mismatches across the committed ranges)."""
-    import sys as _sys
-    _sys.path.insert(0, "tools")
-    from fuzz_xlsx import check_seed
-    for seed in range(50):
-        assert check_seed(seed) == []
-
-
 # ------------------------------------------------------------- epub
 
 def test_epub_spine_order_beats_filename_order():
@@ -374,16 +344,6 @@ def test_dispatch_routes_epub_mime(spark):
     assert len(got) == 1
     assert [tuple(s) for s in got[0]["spans"]] == \
         [tuple(s) for s in exp[0]["spans"]]
-
-
-def test_fuzz_epub_sample():
-    """50-seed sample of the by-construction campaign
-    (tools/fuzz_epub.py — 0 mismatches across the committed ranges)."""
-    import sys as _sys
-    _sys.path.insert(0, "tools")
-    from fuzz_epub import check_seed
-    for seed in range(50):
-        assert check_seed(seed) == []
 
 
 def test_pptx_rel_target_resolution_variants():

@@ -13,15 +13,12 @@ Seeds are fixed so the corpus is deterministic; each seed exercised a
 distinct bug class when it was found.
 """
 
-import math
 import random
 
 import pytest
 
 from pdf_extraction_spark import oracle
-from pdf_extraction_spark.plans.extraction import assemble
-from pdf_extraction_spark.plans.fused import assemble_fused
-from pdf_extraction_spark.plans.salted import assemble_salted
+from tools.fuzz_extraction import PLANS, doc_diff, docs_frame
 
 NASTY = [
     "", " ", "\t \t", " ​", "þþþ ¨✓þ",
@@ -113,61 +110,14 @@ def gen_docs(n_docs, seed):
     return docs
 
 
-
-PLANS = {
-    "exploded": assemble,
-    "fused": assemble_fused,
-    "salted": lambda df: assemble_salted(df, chunk_spans=16),
-}
-
-
 @pytest.mark.parametrize("seed", [1, 3, 6])
 @pytest.mark.parametrize("plan_name", list(PLANS))
 def test_adversarial_corpus_matches_oracle(spark, plan_name, seed):
     docs = gen_docs(40, seed)
-    sdf = spark.createDataFrame(
-        [(d, [(s["kind"], s["text"], s["media_ref"], s["offset"])
-              for s in spans]) for d, spans in docs],
-        "doc_id string, spans array<struct<kind string, text string, "
-        "media_ref string, offset int>>").repartition(4)
     want = {d: oracle.extract_doc(d, spans) for d, spans in docs}
     got = {r["doc_id"]: r.asDict(recursive=True)
-           for r in PLANS[plan_name](sdf).collect()}
-    assert set(got) == set(want)
-    for doc_id, w in want.items():
-        g = got[doc_id]
-        gs = [(s["kind"], s["text"], s["media_ref"], s["order"])
-              for s in g["spans"]]
-        ws = [(s["kind"], s["text"], s["media_ref"], s["order"])
-              for s in w["spans"]]
-        assert gs == ws, f"{doc_id}: span sequence"
-        gi = [(x["id"], x["section"], x["subsection"], x["status"],
-               x["priority"], x["title"], x["description"],
-               tuple(x["page_numbers"])) for x in g["issues"]]
-        wi = [(x["id"], x["section"], x["subsection"], x["status"],
-               x["priority"], x["title"], x["description"],
-               tuple(x["page_numbers"])) for x in w["issues"]]
-        assert gi == wi, f"{doc_id}: issues"
-        gt = [(t["page_num"], t["section"], t["table_type"],
-               tuple(t["headers"]),
-               tuple(tuple(r) for r in t["table_data"]))
-              for t in g["tables"]]
-        wt = [(t["page_num"], t["section"], t["table_type"],
-               tuple(t["headers"]),
-               tuple(tuple(r) for r in t["table_data"]))
-              for t in w["tables"]]
-        assert gt == wt, f"{doc_id}: tables"
-        assert (g["raw_sections"] or {}) == w["raw_sections"], \
-            f"{doc_id}: raw_sections"
-        for k, wv in w["summary"].items():
-            assert g["summary"][k] == wv, f"{doc_id}: summary {k}"
-        for k, wv in w["metadata"].items():
-            gv = g["metadata"][k]
-            if isinstance(wv, float) and gv is not None:
-                assert math.isclose(gv, wv, abs_tol=1e-9), \
-                    f"{doc_id}: metadata {k}"
-            else:
-                assert gv == wv, f"{doc_id}: metadata {k}: {gv!r} != {wv!r}"
+           for r in PLANS[plan_name](docs_frame(spark, docs)).collect()}
+    assert doc_diff(got, want) == []
 
 
 def test_null_text_span_is_skipped_by_every_plan(spark):

@@ -338,38 +338,3 @@ def test_ruled_rows_feed_the_s5_table_chain(spark):
     assert t.table_type == "cost_estimate"
     assert t.section == "PAGE_1"
     assert t.cost.min == 150.0 and t.cost.max == 150.0
-
-
-def test_ruled_fuzz_sample(spark):
-    """50 seeds of the by-construction ruled-table fuzz (the committed
-    campaign runs thousands): random grids, double-drawn and
-    translate-drawn boundaries, multi-word cells with x-tie
-    run_idx ordering, decoy family — expected rows computed from the
-    construction, one batched Spark job."""
-    import tools.fuzz_ruled as fz
-    from pdf_extraction_spark.operators.pdfstream import \
-        ruled_table_rows
-
-    cases = {s: fz.gen_case(s) for s in range(50)}
-    df = spark.createDataFrame(
-        [(str(s), stream) for s, (stream, _) in cases.items()],
-        "doc_id string, stream string")
-    got = {s: [] for s in cases}
-    for row in ruled_table_rows(df).collect():
-        got[int(row.doc_id)].append(
-            (row.tbl_idx, row.row_idx, row.n_rows, row.n_cols,
-             row.table_text))
-    for s, (_, expected) in cases.items():
-        assert sorted(got[s]) == sorted(expected), s
-
-
-def test_page_kernel_matches_sql_chain_fuzz_slice(spark):
-    """8 fixed seeds of the kernel-vs-SQL differential campaign
-    (tools/fuzz_layout.py --kernel), one per option set: layout_page
-    against spans_from_runs on positioned runs built on the y_tol /
-    gap_tol / space_frac / col_tol boundaries (duplicates, NULLs,
-    NaN, +-0.0, media), and pdf_to_spans against the SQL chain on
-    multi-page content streams with font maps."""
-    import tools.fuzz_layout as fz
-
-    assert fz.kernel_campaign(spark, 0, len(fz.OPTION_SETS)) == 0

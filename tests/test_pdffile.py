@@ -351,18 +351,6 @@ def test_wrap_content_stream_round_trip():
             ("table" if variant % 2 == 0 else "stream")
 
 
-def test_structural_fuzz_smoke():
-    """200 seeds of the randomized-writer fuzz (tools/fuzz_pdffile.py):
-    shuffled object numbers, multi-subsection xrefs, nested trees,
-    random filters/chains, indirect lengths, keyword bait in stream
-    data, ObjStm membership, content-revising /Prev updates.  The
-    committed campaign runs 100k seeds; this pins a fast sample."""
-    import tools.fuzz_pdffile as fz
-
-    for seed in range(200):
-        fz.one_case(seed)
-
-
 def test_rc4_known_vector():
     from pdf_extraction_spark.operators.pdffile import rc4
 

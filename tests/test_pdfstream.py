@@ -501,24 +501,6 @@ def test_rules_inside_form_xobject_emit_at_invocation():
         ("rule", "h", None, "", 0.0, 72.0, 700.0, 100.0, 0.0)]
 
 
-def test_path_axis_fuzz_sample():
-    """300 seeds of the path-axis differential fuzz (the committed
-    campaign runs tens of thousands): random m/l/re/h chains, curve
-    point-moves, every paint/discard op, mid-path CTM changes and
-    malformed operand lists — main machine vs the independent
-    numpy-matrix twin, bit-exact."""
-    import tools.fuzz_pdfstream as fz
-
-    for seed in range(300):
-        rng = random.Random(77000 + seed)
-        stream = fz.gen_stream(rng)
-        maps = fz.gen_maps(rng)
-        stream = (stream + " " + fz.gen_paths(rng)).rstrip()
-        assert fz.extract_runs(stream, font_maps=maps,
-                               with_rules=True) == \
-            fz.twin_runs(stream, font_maps=maps), seed
-
-
 # -------------------------------------------- §14.8 artifact marks
 
 

@@ -206,18 +206,6 @@ def test_records_plan_is_map_only(spark, docs):
     assert plan.count("MapInArrow") == 2    # writer + parser passes
 
 
-# ------------------------------------------------------ fuzz sample
-
-def test_fuzz_warc_sample():
-    """50-seed sample of the by-construction campaign
-    (tools/fuzz_warc.py — 0 mismatches across the committed ranges)."""
-    import sys as _sys
-    _sys.path.insert(0, "tools")
-    from fuzz_warc import check_seed
-    for seed in range(50):
-        assert check_seed(seed) == []
-
-
 # ------------------------------------------------- mime dispatch
 
 def _mixed(spark, docs):

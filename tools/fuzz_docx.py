@@ -1,5 +1,5 @@
 """By-construction fuzz for the DOCX layer (committed so the
-campaign is reproducible — usage: python tools/fuzz_docx.py LO HI).
+campaign is reproducible — usage: python tools/fuzz.py docx LO HI).
 
 Each seed builds one .docx with randomized structure and compares
 ``operators/docx.parse_docx`` output against ground truth known at
@@ -21,20 +21,16 @@ from __future__ import annotations
 
 import io
 import random
-import sys
 import zipfile
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os")
-                .path.dirname(__import__("os").path.abspath(__file__))))
+from pdf_extraction_spark.operators.docx import xml_escape
 
-from pdf_extraction_spark.operators.docx import (   # noqa: E402
-    parse_docx, xml_escape)
-
-_TEXT_POOL = "abc XY 09&<>\"'z .,"
+# the XML-escapable text the office generators draw from
+TEXT_POOL = "abc XY 09&<>\"'z .,"
 
 
-def _rand_text(rng: random.Random, n: int) -> str:
-    return "".join(rng.choice(_TEXT_POOL) for _ in range(n))
+def rand_text(rng: random.Random, pool: str, n: int) -> str:
+    return "".join(rng.choice(pool) for _ in range(n))
 
 
 def gen_case(seed: int) -> tuple[bytes, list[dict]]:
@@ -54,7 +50,7 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
                 tcs = []
                 texts = []
                 for _c in range(n_cols):
-                    runs = [_rand_text(rng, rng.randrange(0, 8))
+                    runs = [rand_text(rng, TEXT_POOL, rng.randrange(0, 8))
                             for _ in range(rng.randrange(0, 4))]
                     texts.append("".join(runs))
                     tcs.append("<w:tc><w:p>" + "".join(
@@ -82,7 +78,7 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
         for _ in range(rng.randrange(1, 7)):
             kind = rng.random()
             if kind < 0.6:
-                t = _rand_text(rng, rng.randrange(0, 12))
+                t = rand_text(rng, TEXT_POOL, rng.randrange(0, 12))
                 if rng.random() < 0.5:
                     t = " " + t + "  "
                 rpr = ("<w:rPr><w:b/></w:rPr>"
@@ -133,36 +129,3 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
         if rng.random() < 0.4:
             put("word/settings.xml", "<w:settings/>")
     return buf.getvalue(), expected
-
-
-def check_seed(seed: int) -> list[str]:
-    blob, expected = gen_case(seed)
-    rows = parse_docx(blob)
-    errs = []
-    if len(rows) != len(expected):
-        return [f"seed {seed}: {len(rows)} rows, "
-                f"expected {len(expected)}"]
-    for i, (row, exp) in enumerate(zip(rows, expected)):
-        for k, v in exp.items():
-            if row[k] != v:
-                errs.append(f"seed {seed} row {i} {k}: "
-                            f"{row[k]!r} != {v!r}")
-    return errs
-
-
-def main(lo: int, hi: int) -> None:
-    bad = 0
-    for s in range(lo, hi):
-        errs = check_seed(s)
-        if errs:
-            bad += 1
-            for e in errs[:4]:
-                print(e)
-        if (s - lo + 1) % 5000 == 0:
-            print(f"...{s - lo + 1} seeds, {bad} bad")
-    print(f"fuzz_docx: {hi - lo} seeds, {bad} mismatching")
-    sys.exit(1 if bad else 0)
-
-
-if __name__ == "__main__":
-    main(int(sys.argv[1]), int(sys.argv[2]))

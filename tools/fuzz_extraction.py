@@ -1,9 +1,9 @@
 """Differential fuzz harness (committed so the campaign is
-reproducible — usage: python tools/fuzz_extraction.py LO HI [plan]):
+reproducible — usage: python tools/fuzz.py extraction LO HI):
 the random-unicode + keyword-splice campaign from BENCH/BASELINE.md §20,
-run through the fused (and optionally exploded/salted) plans against the
-pure-python oracle, comparing the FULL output: span sequence, issues,
-tables, metadata struct, summary.
+run through the exploded, fused and salted plans against the
+pure-python oracle, comparing the FULL output (:func:`doc_diff`): span
+sequence, issues, tables, raw sections, metadata struct, summary.
 
 This campaign found the 4th tri-engine regex divergence (RE2's ``\\s``
 missing ``\\x0b``/``\\x1c-\\x1f``); divergent strings get promoted into
@@ -14,17 +14,12 @@ RE2 and Python re part ways (``rules.RE2_DIVERGENT``).
 
 from __future__ import annotations
 
+import math
 import random
-import sys
 
-sys.path.insert(0, __import__("os").path.dirname(
-    __import__("os").path.dirname(__import__("os").path.abspath(__file__))))
-
-from pdf_extraction_spark import oracle  # noqa: E402
-from pdf_extraction_spark.plans.extraction import assemble  # noqa: E402
-from pdf_extraction_spark.plans.fused import assemble_fused  # noqa: E402
-from pdf_extraction_spark.plans.salted import assemble_salted  # noqa: E402
-from pdf_extraction_spark.session import get_spark  # noqa: E402
+from pdf_extraction_spark.plans.extraction import assemble
+from pdf_extraction_spark.plans.fused import assemble_fused
+from pdf_extraction_spark.plans.salted import assemble_salted
 
 ASCII = "abcdefghij KLMNOP 0123456789 .,:;|$-()'\""
 UNI_POOLS = [
@@ -50,7 +45,7 @@ KEYWORDS = [
 ]
 
 
-def rand_text(rng: random.Random) -> str:
+def span_text(rng: random.Random) -> str:
     parts = []
     for _ in range(rng.randint(1, 10)):
         r = rng.random()
@@ -67,10 +62,11 @@ def rand_text(rng: random.Random) -> str:
     return "".join(parts)
 
 
-def gen_docs(n_docs: int, seed: int):
+def gen_case(seed: int) -> list[tuple]:
+    """(doc_id, spans) of the seed's 30 documents."""
     rng = random.Random(seed)
     docs = []
-    for d in range(n_docs):
+    for d in range(30):
         spans = []
         for i in range(rng.randint(1, 40)):
             if rng.random() < 0.1:
@@ -78,26 +74,20 @@ def gen_docs(n_docs: int, seed: int):
                               "media_ref": f"img_{d}_{i}.png",
                               "offset": i})
             else:
-                spans.append({"kind": "text", "text": rand_text(rng),
+                spans.append({"kind": "text", "text": span_text(rng),
                               "media_ref": "", "offset": i})
         rng.shuffle(spans)
         docs.append((f"r{seed}_{d:03d}", spans))
     return docs
 
 
-def norm(doc: dict) -> tuple:
-    return (
-        [(s["kind"], s["text"], s["media_ref"], s["order"])
-         for s in doc["spans"]],
-        [(x["id"], x["section"], x["subsection"], x["status"],
-          x["priority"], x["title"], x["description"],
-          tuple(x["page_numbers"])) for x in doc["issues"]],
-        [(t["page_num"], t["section"], t["table_type"],
-          tuple(t["headers"]),
-          tuple(tuple(r) for r in t["table_data"])) for t in doc["tables"]],
-        tuple(sorted(doc["metadata"].items())),
-        tuple(sorted(doc["summary"].items())),
-    )
+def docs_frame(spark, docs: list[tuple]):
+    """(doc_id, spans) documents as a four-partition span frame."""
+    return spark.createDataFrame(
+        [(d, [(s["kind"], s["text"], s["media_ref"], s["offset"])
+              for s in spans]) for d, spans in docs],
+        "doc_id string, spans array<struct<kind string, text string,"
+        " media_ref string, offset int>>").repartition(4)
 
 
 PLANS = {
@@ -107,41 +97,47 @@ PLANS = {
 }
 
 
-def main() -> None:
-    lo, hi = int(sys.argv[1]), int(sys.argv[2])
-    plans = ([sys.argv[3]] if len(sys.argv) > 3 and sys.argv[3] != "all"
-             else list(PLANS))
-    spark = get_spark(cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    bad = 0
-    for seed in range(lo, hi):
-        docs = gen_docs(30, seed)
-        sdf = spark.createDataFrame(
-            [(d, [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                  for s in spans]) for d, spans in docs],
-            "doc_id string, spans array<struct<kind string, text string,"
-            " media_ref string, offset int>>").repartition(4)
-        want = {d: norm(oracle.extract_doc(d, spans))
-                for d, spans in docs}
-        for plan in plans:
-            got = {r["doc_id"]: norm(r.asDict(recursive=True))
-                   for r in PLANS[plan](sdf).collect()}
-            for doc_id, w in want.items():
-                if got[doc_id] != w:
-                    bad += 1
-                    print(f"seed {seed} plan {plan} doc {doc_id}:"
-                          " DIVERGENCE")
-                    for i, part in enumerate(
-                            ["spans", "issues", "tables", "meta",
-                             "summary"]):
-                        if got[doc_id][i] != w[i]:
-                            print(" part", part)
-                            print("  spark", str(got[doc_id][i])[:400])
-                            print("  oracle", str(w[i])[:400])
-        if seed % 10 == 0:
-            print("seed", seed, "ok" if bad == 0 else f"bad={bad}")
-    print("DONE divergences:", bad)
+def _parts(doc: dict) -> dict:
+    return {
+        "spans": [(s["kind"], s["text"], s["media_ref"], s["order"])
+                  for s in doc["spans"]],
+        "issues": [(x["id"], x["section"], x["subsection"], x["status"],
+                    x["priority"], x["title"], x["description"],
+                    tuple(x["page_numbers"])) for x in doc["issues"]],
+        "tables": [(t["page_num"], t["section"], t["table_type"],
+                    tuple(t["headers"]),
+                    tuple(tuple(r) for r in t["table_data"]))
+                   for t in doc["tables"]],
+        "raw_sections": doc["raw_sections"] or {},
+        "summary": doc["summary"],
+    }
 
 
-if __name__ == "__main__":
-    main()
+def _same_value(got, want) -> bool:
+    if isinstance(want, float) and got is not None:
+        return math.isclose(got, want, abs_tol=1e-9)
+    return got == want
+
+
+def doc_diff(got: dict, want: dict) -> list[str]:
+    """One line per document part where a plan's output (doc_id ->
+    row dict) differs from the oracle's; metadata floats compare to
+    1e-9."""
+    if set(got) != set(want):
+        return [f"doc ids differ: {sorted(set(got) ^ set(want))[:5]}"]
+    errs = []
+    for doc_id, w in want.items():
+        g = got[doc_id]
+        gp, wp = _parts(g), _parts(w)
+        errs += [f"doc {doc_id} {part}: plan {str(gp[part])[:400]} "
+                 f"oracle {str(wp[part])[:400]}"
+                 for part in wp if gp[part] != wp[part]]
+        meta = g["metadata"]
+        errs += [f"doc {doc_id} metadata {k}: plan {meta.get(k)!r} "
+                 f"oracle {v!r}"
+                 for k, v in w["metadata"].items()
+                 if not _same_value(meta.get(k), v)]
+        if set(meta) != set(w["metadata"]):
+            errs.append(f"doc {doc_id} metadata fields: plan "
+                        f"{sorted(meta)} oracle {sorted(w['metadata'])}")
+    return errs

@@ -1,5 +1,5 @@
 """Differential fuzz harness (committed so the campaign is
-reproducible — usage: python tools/fuzz_html.py LO HI):
+reproducible — usage: python tools/fuzz.py html LO HI):
 operators/html.py (Spark) vs its DuckDB SQL twin on random adversarial
 HTML-ish documents.
 
@@ -13,19 +13,6 @@ bytes, DOCTYPE variants, and whitespace zoo (tab, CR, form feed).
 """
 
 import random
-import sys
-
-import duckdb
-import pandas as pd
-
-sys.path.insert(0, __import__("os").path.dirname(__import__("os")
-                .path.dirname(__import__("os").path.abspath(__file__))))
-
-from pdf_extraction_spark.operators.html import (extract_main_content,
-                                                 html_block_table)
-from pdf_extraction_spark.queries_html import (sql_html_blocks,
-                                               sql_html_main)
-from pdf_extraction_spark.session import get_spark
 
 WORDS = ["alpha", "beta", "gamma", "delta", "words", "make", "text",
          "long", "enough", "content", "x", "&", "<", ">", "&amp;",
@@ -101,49 +88,11 @@ BLOCK_COLS = ["doc_id", "block_idx", "tag", "cls", "text_len",
 PAGES = "SELECT doc_id, COALESCE(html, '') AS page FROM corpus"
 
 
-def main() -> None:
-    seeds = range(int(sys.argv[1]), int(sys.argv[2]))
-    spark = get_spark(cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    bad = 0
-    for seed in seeds:
-        rng = random.Random(seed)
-        rows = [(i, gen_html(rng)) for i in range(25)]
-        if seed % 7 == 0:
-            rows.append((len(rows), None))
-        pdf = pd.DataFrame(rows, columns=["doc_id", "html"])
-        sdf = spark.createDataFrame(pdf.assign(
-            doc_id=pdf.doc_id.astype("int64")))
-        con = duckdb.connect()
-        con.register("corpus", pdf)
-
-        for label, sdf_out, sql in (
-                ("main", extract_main_content(sdf).select(*MAIN_COLS),
-                 sql_html_main(PAGES)),
-                ("blocks",
-                 html_block_table(sdf).select(*BLOCK_COLS),
-                 sql_html_blocks(PAGES))):
-            keys = BLOCK_COLS[:2] if label == "blocks" else ["doc_id"]
-            s = sdf_out.toPandas().sort_values(keys) \
-                .reset_index(drop=True)
-            o = con.sql(sql).df()[s.columns].sort_values(keys) \
-                .reset_index(drop=True)
-            if not s.equals(o):
-                bad += 1
-                print(f"seed {seed}: {label} DIVERGENCE")
-                for c in s.columns:
-                    m = s[c] != o[c]
-                    if m.any():
-                        i = m.idxmax()
-                        did = s["doc_id"][i]
-                        src = pdf[pdf.doc_id == did].html.iloc[0]
-                        print(" col", c, "doc", did,
-                              repr(src)[:220], "\n  spark",
-                              repr(s[c][i])[:160], "\n  oracle",
-                              repr(o[c][i])[:160])
-                break
-    print(f"{len(list(seeds))} seeds, {bad} divergent")
-
-
-if __name__ == "__main__":
-    main()
+def gen_case(seed: int) -> list[tuple]:
+    """(doc_id, html) rows of one seed; every seventh seed adds a NULL
+    page."""
+    rng = random.Random(seed)
+    rows = [(i, gen_html(rng)) for i in range(25)]
+    if seed % 7 == 0:
+        rows.append((len(rows), None))
+    return rows

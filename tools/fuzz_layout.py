@@ -1,13 +1,13 @@
-"""Differential fuzz harness (committed so the campaign is
+"""Differential fuzz harnesses (committed so the campaigns are
 reproducible).
 
-``python tools/fuzz_layout.py LO HI``: operators/layout.py (Spark
+``python tools/fuzz.py layout LO HI``: operators/layout.py (Spark
 windows) vs a DuckDB SQL twin of the same clustering, on random run
 corpora that hit the tolerance boundaries (y diffs of exactly 3.0,
 gaps of exactly 10.0, duplicate (y,x,text) rows, single-run docs,
 media interleaves).
 
-``python tools/fuzz_layout.py LO HI --kernel``: the in-process page
+``python tools/fuzz.py layout_kernel LO HI``: the in-process page
 kernel (``layout.layout_page``, as the span bridges run it) vs the
 Spark SQL layout chain, on random positioned runs (``spans_from_runs``)
 and on random multi-page content streams with font maps
@@ -19,21 +19,15 @@ size/font/text, NaN and +-0.0 coordinates, media interleaves,
 ``with_fonts`` and ``detect_tables``."""
 import math
 import random
-import sys
 
-import duckdb
-import pandas as pd
 from pyspark.sql import Window, functions as F
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
-
 from pdf_extraction_spark.operators.layout import (layout_page,
-                                                   reconstruct_blocks,
                                                    spans_from_runs)
 from pdf_extraction_spark.operators.pdfstream import (fontmaps_json,
                                                       pdf_to_spans,
                                                       tokenize_streams)
-from pdf_extraction_spark.session import get_spark
+from tools import fuzz_pdfstream
 
 WORDS = ["roof", "leak", "a", "b", "x", "attic", "vent", "crack"]
 SIZES = [8.0, 10.0, 10.0, 10.0, 12.0, 14.0]
@@ -103,9 +97,15 @@ FROM units
 """
 
 
-def gen_runs(rng, n_docs=8):
+RUN_COLS = ["doc_id", "text", "x0", "y0", "x1", "y1", "size",
+            "media_ref"]
+
+
+def gen_case(seed: int) -> list[tuple]:
+    """Rows of :data:`RUN_COLS`: the seed's eight documents of runs."""
+    rng = random.Random(1000 + seed)
     rows = []
-    for d in range(n_docs):
+    for d in range(8):
         y = 0.0
         for _ in range(rng.randint(1, 40)):
             # y step: exact-boundary values included
@@ -209,10 +209,11 @@ def _canon(v):
     return v
 
 
-def gen_kernel_runs(rng, doc0: int, n_docs: int = 6) -> list[tuple]:
-    """Positioned runs built on the option sets' exact boundaries."""
+def gen_kernel_runs(rng, doc0: int) -> list[tuple]:
+    """Positioned runs of six documents, built on the option sets'
+    exact boundaries."""
     rows = []
-    for d in range(doc0, doc0 + n_docs):
+    for d in range(doc0, doc0 + 6):
         did = f"d{d}"
         y = rng.choice([0.0, -0.0, 100.0])
         cols = [rng.choice([0.0, 6.0, 12.0, 5.999, 6.001]),
@@ -297,17 +298,16 @@ def _diff(want: dict, got: dict) -> list[str]:
     return bad
 
 
-def gen_stream_docs(rng, doc0: int, n_docs: int = 4) -> list[tuple]:
-    """(doc_id, page, stream, fontmaps) rows: 1-3 pages per doc, a
-    repeated page number now and then (two streams, one page)."""
-    import tools.fuzz_pdfstream as fz
-
+def gen_stream_docs(rng) -> list[tuple]:
+    """(doc_id, page, stream, fontmaps) rows of four documents: 1-3
+    pages each, a repeated page number now and then (two streams, one
+    page)."""
     rows = []
-    for d in range(doc0, doc0 + n_docs):
+    for d in range(4):
         for pg in range(rng.randint(1, 3)):
             page = pg if rng.random() < 0.85 else 0
-            stream = fz.gen_stream(rng)
-            maps = fz.gen_maps(rng)
+            stream = fuzz_pdfstream.gen_stream(rng)
+            maps = fuzz_pdfstream.gen_maps(rng)
             rows.append((f"s{d}", page, stream,
                          fontmaps_json(maps or {}, {})))
     return rows
@@ -353,67 +353,12 @@ def check_streams(spark, rows, opts, page_col) -> list[str]:
                  collect(pdf_to_spans(sdf, **kw)))
 
 
-def kernel_campaign(spark, lo: int, hi: int) -> int:
-    bad = 0
-    for seed in range(lo, hi):
-        rng = random.Random(7000 + seed)
-        runs = [r for k in range(4) for r in gen_kernel_runs(rng, 10 * k)]
-        streams = gen_stream_docs(rng, 0)
-        opts = OPTION_SETS[seed % len(OPTION_SETS)]
-        for name, diffs in [
-                ("runs", check_runs(spark, runs, opts)),
-                ("streams", check_streams(
-                    spark, streams, opts,
-                    "page" if seed % 2 == 0 else None))]:
-            if diffs:
-                bad += 1
-                print(f"seed {seed} {name} {opts}: DIVERGENCE")
-                print("\n".join(diffs[:3]))
-    return bad
-
-
-def main():
-    lo, hi = int(sys.argv[1]), int(sys.argv[2])
-    spark = get_spark(cores=4)
-    spark.sparkContext.setLogLevel("ERROR")
-    if "--kernel" in sys.argv:
-        print("DONE divergences:", kernel_campaign(spark, lo, hi))
-        return
-    bad = 0
-    for seed in range(lo, hi):
-        rng = random.Random(1000 + seed)
-        rows = gen_runs(rng)
-        pdf = pd.DataFrame(rows, columns=[
-            "doc_id", "text", "x0", "y0", "x1", "y1", "size",
-            "media_ref"])
-        sdf = spark.createDataFrame(
-            pdf, "doc_id long, text string, x0 double, y0 double, "
-                 "x1 double, y1 double, size double, media_ref string")
-        con = duckdb.connect()
-        con.register("runs", pdf)
-
-        for name, sq, oq in [
-            ("blocks",
-             reconstruct_blocks(sdf.where("media_ref IS NULL")
-                                .drop("media_ref")), SQL_BLOCKS),
-            ("spans", spans_from_runs(sdf), SQL_SPANS),
-        ]:
-            s = sq.toPandas()
-            o = con.sql(oq).df()
-            key = sorted(s.columns)
-            s = s[key].sort_values(key).reset_index(drop=True)
-            o = o[key].sort_values(key).reset_index(drop=True)
-            if not s.equals(o):
-                bad += 1
-                print(f"seed {seed} {name}: DIVERGENCE")
-                cmp = (s != o) & ~(s.isna() & o.isna())
-                idx = cmp.any(axis=1)
-                print(s[idx].head(3))
-                print(o[idx].head(3))
-        if seed % 10 == 0:
-            print("seed", seed, "ok" if bad == 0 else f"bad={bad}")
-    print("DONE divergences:", bad)
-
-
-if __name__ == "__main__":
-    main()
+def gen_kernel_case(seed: int) -> tuple[list, list, dict, str | None]:
+    """(positioned runs, stream rows, layout options, page column) of
+    one seed: the seeds cycle through :data:`OPTION_SETS`, and even
+    seeds key the streams per page."""
+    rng = random.Random(7000 + seed)
+    runs = [r for k in range(4) for r in gen_kernel_runs(rng, 10 * k)]
+    streams = gen_stream_docs(rng)
+    return (runs, streams, OPTION_SETS[seed % len(OPTION_SETS)],
+            "page" if seed % 2 == 0 else None)

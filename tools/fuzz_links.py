@@ -1,6 +1,6 @@
 """Differential fuzz harness (committed so the campaign is
-reproducible — usage: python tools/fuzz_links.py LO HI):
-operators/links.py (Spark) vs its DuckDB SQL twin, two targets per
+reproducible — usage: python tools/fuzz.py links LO HI):
+operators/links.py (Spark) vs its DuckDB SQL twin, three targets per
 seed:
 
 * link extraction + per-link URL parsing over random adversarial
@@ -8,26 +8,14 @@ seed:
   anchors, entities in hrefs, nested markup, sentinel bytes);
 * URL parsing alone over random adversarial URL strings (scheme zoo,
   userinfo, ports, IPv6 brackets, %-escapes, empty parts, stray
-  delimiters, whitespace).
+  delimiters, whitespace);
+* head metadata (title, meta description/keywords) over random
+  <head> blocks (quote forms, attribute order, unclosed titles).
 """
 
 import random
-import sys
 
-import duckdb
-import pandas as pd
-
-sys.path.insert(0, __import__("os").path.dirname(__import__("os")
-                .path.dirname(__import__("os").path.abspath(__file__))))
-
-from pyspark.sql import functions as F
-
-from pdf_extraction_spark.operators.links import (head_meta, link_table,
-                                                  url_parts)
-from pdf_extraction_spark.queries_links import (_URL_COLS, sql_html_head,
-                                                sql_html_links,
-                                                sql_url_parts)
-from pdf_extraction_spark.session import get_spark
+from pdf_extraction_spark.queries_links import _URL_COLS
 
 WORDS = ["click", "here", "more", "x", "&amp;", "&lt;", "a<b", "5>4",
          "link", "text", "now", "&amp;amp;", "\x01", "read"]
@@ -109,7 +97,8 @@ LINK_COLS = ["doc_id", "link_idx", "href", "anchor_text",
              *_URL_COLS]
 PAGES = ("SELECT doc_id, COALESCE(html, '') AS page, "
          "'h.example' AS page_host FROM corpus")
-HEAD_PAGES = "SELECT doc_id, COALESCE(html, '') AS raw FROM corpus"
+HEAD_PAGES = ("SELECT doc_id, COALESCE(html, '') AS raw "
+              "FROM corpus_head")
 HEAD_COLS = ["doc_id", "title", "meta_description", "meta_keywords"]
 
 META_NAMES = ["description", "keywords", "viewport", "author"]
@@ -138,79 +127,16 @@ def gen_head(rng: random.Random) -> str:
     return "".join(parts)
 
 
-def main() -> None:
-    seeds = range(int(sys.argv[1]), int(sys.argv[2]))
-    spark = get_spark(cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    bad = 0
-    for seed in seeds:
-        rng = random.Random(seed)
-        rows = [(i, gen_page(rng)) for i in range(20)]
-        if seed % 7 == 0:
-            rows.append((len(rows), None))
-        pdf = pd.DataFrame(rows, columns=["doc_id", "html"])
-        sdf = spark.createDataFrame(pdf.assign(
-            doc_id=pdf.doc_id.astype("int64")))
-        con = duckdb.connect()
-        con.register("corpus", pdf)
-
-        s = link_table(sdf).toPandas()[LINK_COLS] \
-            .sort_values(["doc_id", "link_idx"]).reset_index(drop=True)
-        o = con.sql(sql_html_links(PAGES)).df()[LINK_COLS] \
-            .sort_values(["doc_id", "link_idx"]).reset_index(drop=True)
-
-        updf = pd.DataFrame(
-            [(i, gen_url(rng)) for i in range(60)],
-            columns=["doc_id", "u"])
-        su = spark.createDataFrame(updf.assign(
-            doc_id=updf.doc_id.astype("int64")))
-        parts = url_parts(F.col("u"))
-        s2 = su.select("doc_id",
-                       *[parts[n].alias(n) for n in _URL_COLS]) \
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        con.register("urls", updf)
-        p2 = sql_url_parts("u")
-        o2 = con.sql(
-            "SELECT doc_id, "
-            + ", ".join(f"{p2[n]} AS {n}" for n in _URL_COLS)
-            + " FROM urls ORDER BY doc_id").df() \
-            .sort_values("doc_id").reset_index(drop=True)
-
-        hrows = [(i, gen_head(rng)) for i in range(25)]
-        if seed % 5 == 0:
-            hrows.append((len(hrows), None))
-        hpdf = pd.DataFrame(hrows, columns=["doc_id", "html"])
-        hs = spark.createDataFrame(hpdf.assign(
-            doc_id=hpdf.doc_id.astype("int64")))
-        s3 = head_meta(hs).toPandas()[HEAD_COLS] \
-            .sort_values("doc_id").reset_index(drop=True)
-        con.register("corpus_head", hpdf)
-        o3 = con.sql(sql_html_head(
-            HEAD_PAGES.replace("corpus", "corpus_head"))) \
-            .df()[HEAD_COLS].sort_values("doc_id").reset_index(drop=True)
-
-        for label, sv, ov, src_df, src_col in (
-                ("links", s, o, pdf, "html"),
-                ("urls", s2, o2, updf, "u"),
-                ("head", s3, o3, hpdf, "html")):
-            if sv.equals(ov):
-                continue
-            bad += 1
-            print(f"seed {seed}: {label} DIVERGENCE "
-                  f"(spark {len(sv)} rows, oracle {len(ov)} rows)")
-            n = min(len(sv), len(ov))
-            for c in sv.columns:
-                m = sv[c][:n] != ov[c][:n]
-                if m.any():
-                    i = m.idxmax()
-                    did = sv["doc_id"][i]
-                    src = src_df[src_df.doc_id == did][src_col].iloc[0]
-                    print(" col", c, "doc", did, repr(src)[:200],
-                          "\n  spark", repr(sv[c][i])[:150],
-                          "\n  oracle", repr(ov[c][i])[:150])
-            break
-    print(f"{len(list(seeds))} seeds, {bad} divergent")
-
-
-if __name__ == "__main__":
-    main()
+def gen_case(seed: int) -> tuple[list, list, list]:
+    """(doc_id, html) page rows, (doc_id, u) URL rows and (doc_id,
+    html) head rows of one seed, drawn in that order; every seventh
+    seed adds a NULL page and every fifth a NULL head."""
+    rng = random.Random(seed)
+    pages = [(i, gen_page(rng)) for i in range(20)]
+    if seed % 7 == 0:
+        pages.append((len(pages), None))
+    urls = [(i, gen_url(rng)) for i in range(60)]
+    heads = [(i, gen_head(rng)) for i in range(25)]
+    if seed % 5 == 0:
+        heads.append((len(heads), None))
+    return pages, urls, heads

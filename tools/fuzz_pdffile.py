@@ -1,5 +1,5 @@
 """Structural fuzz harness for the whole-PDF-file layer (committed so
-the campaign is reproducible — usage: python tools/fuzz_pdffile.py LO HI):
+the campaign is reproducible — usage: python tools/fuzz.py pdffile LO HI):
 a randomized generalized writer emits files whose correct parse is
 known BY CONSTRUCTION, then `operators/pdffile.PdfFile` must recover
 exactly the expected per-page content streams, title, revision count
@@ -54,19 +54,15 @@ Any divergence is a real parser bug: there is no floating point here.
 """
 from __future__ import annotations
 
-import random
-import sys
-import zlib
-
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
-
 import hashlib
+import random
+import zlib
 
 from pdf_extraction_spark.functions.aes import (cbc_encrypt,
                                                 cbc_encrypt_raw)
 from pdf_extraction_spark.functions.glyphlist import encoding_map
 from pdf_extraction_spark.operators.pdffile import (
-    PdfFile, _ascii85_encode, _ascii_hex_encode, _lit_bytes,
+    _ascii85_encode, _ascii_hex_encode, _lit_bytes,
     _png_up_encode, _run_length_encode, lzw_encode, object_key, r6_hash,
     rc4, std_file_key, std_o_entry, std_u_entry)
 
@@ -759,7 +755,9 @@ def add_nav(w: Writer, rng: random.Random, root_extra: list,
     return expected_outline, expected_attach
 
 
-def one_case(seed: int) -> None:
+def gen_case(seed: int) -> tuple[bytes, dict]:
+    """(file bytes, expected parse): the fields a ``PdfFile`` of the
+    bytes must report, as built."""
     rng = random.Random(seed)
     w = Writer(rng)
     use_xref_stream = rng.random() < 0.5
@@ -904,45 +902,11 @@ def one_case(seed: int) -> None:
         out += f"startxref\n{x2}\n%%EOF\n".encode("latin-1")
         prev_off = x2
 
-    expected_pages = [b"\n".join(parts) for parts in page_parts]
-    pf = PdfFile(bytes(out))
-    assert (pf._file_key is not None) == encrypted, seed
-    got = [t.encode("latin-1") for t in pf.page_texts()]
-    assert got == expected_pages, (
-        f"seed {seed}: page texts diverge\n"
-        f" got {got!r}\n want {expected_pages!r}")
-    assert pf.info().get("Title") == title, seed
-    assert pf.outlines() == want_outline, (
-        f"seed {seed}: outlines diverge\n got {pf.outlines()!r}\n"
-        f" want {want_outline!r}")
-    got_attach = pf.embedded_files()
-    assert got_attach == want_attach, (
-        f"seed {seed}: attachments diverge\n got {got_attach!r}\n"
-        f" want {want_attach!r}")
-    got_fields = pf.form_fields()
-    assert got_fields == want_fields, (
-        f"seed {seed}: form fields diverge\n got {got_fields!r}\n"
-        f" want {want_fields!r}")
-    got_maps = pf.page_font_maps()
-    assert got_maps == want_maps, (
-        f"seed {seed}: font maps diverge\n got {got_maps!r}\n"
-        f" want {want_maps!r}")
-    got_forms = pf.page_forms()
-    assert got_forms == want_forms, (
-        f"seed {seed}: forms diverge\n got {got_forms!r}\n"
-        f" want {want_forms!r}")
-    assert pf.n_revisions == 1 + n_updates, seed
-    assert pf.xref_kind == ("stream" if use_xref_stream else "table"), \
-        seed
-
-
-def main(lo: int, hi: int) -> None:
-    for seed in range(lo, hi):
-        one_case(seed)
-        if seed % 500 == 0:
-            print(f"seed {seed} ok", flush=True)
-    print(f"{hi - lo} seeds clean")
-
-
-if __name__ == "__main__":
-    main(int(sys.argv[1]), int(sys.argv[2]))
+    return bytes(out), {
+        "encrypted": encrypted,
+        "pages": [b"\n".join(parts) for parts in page_parts],
+        "title": title, "outlines": want_outline,
+        "attachments": want_attach, "fields": want_fields,
+        "font_maps": want_maps, "forms": want_forms,
+        "n_revisions": 1 + n_updates,
+        "xref_kind": "stream" if use_xref_stream else "table"}

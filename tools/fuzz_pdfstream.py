@@ -1,5 +1,5 @@
 """Differential fuzz harness (committed so the campaign is
-reproducible — usage: python tools/fuzz_pdfstream.py LO HI):
+reproducible — usage: python tools/fuzz.py pdfstream LO HI):
 operators/pdfstream.py (regex lexer + 6-tuple matrix machine) vs an
 independently-written twin (char-by-char lexer, numpy homogeneous
 3x3 matrices), on random content streams covering the full operator
@@ -20,13 +20,8 @@ semantic divergence, not FP noise.
 from __future__ import annotations
 
 import random
-import sys
 
 import numpy as np
-
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
-
-from pdf_extraction_spark.operators.pdfstream import extract_runs
 
 WS = " \t\r\n\f\x00"
 DELIM = "()<>[]{}/%"
@@ -639,35 +634,12 @@ def gen_marks(rng) -> str:
     return " ".join(parts)
 
 
-def main() -> None:
-    lo, hi = int(sys.argv[1]), int(sys.argv[2])
-    bad = 0
-    for seed in range(lo, hi):
-        rng = random.Random(77000 + seed)
-        stream = gen_stream(rng)
-        maps = gen_maps(rng)
-        stream = (stream + " " + gen_paths(rng)).rstrip()
-        stream = (stream + " " + gen_marks(rng)).rstrip()
-        a = extract_runs(stream, font_maps=maps, with_rules=True)
-        b = twin_runs(stream, font_maps=maps)
-        if a == b:
-            a = extract_runs(stream, font_maps=maps, with_rules=True,
-                             drop_artifacts=True)
-            b = twin_runs(stream, font_maps=maps,
-                          drop_artifacts=True)
-        if a != b:
-            bad += 1
-            print(f"seed {seed}: DIVERGENCE ({len(a)} vs {len(b)} runs)")
-            for x, y in zip(a, b):
-                if x != y:
-                    print("  main:", x)
-                    print("  twin:", y)
-                    break
-            print("  stream:", stream[:400])
-        if seed % 1000 == 0:
-            print("seed", seed, "ok" if bad == 0 else f"bad={bad}")
-    print("DONE divergences:", bad)
-
-
-if __name__ == "__main__":
-    main()
+def gen_case(seed: int) -> tuple[str, dict | None]:
+    """(content stream, font maps) of one seed: every axis in the
+    order it was added, so earlier seeds keep their streams."""
+    rng = random.Random(77000 + seed)
+    stream = gen_stream(rng)
+    maps = gen_maps(rng)
+    stream = (stream + " " + gen_paths(rng)).rstrip()
+    stream = (stream + " " + gen_marks(rng)).rstrip()
+    return stream, maps

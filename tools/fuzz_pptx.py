@@ -1,5 +1,5 @@
 """By-construction fuzz for the PPTX layer (committed so the
-campaign is reproducible — usage: python tools/fuzz_pptx.py LO HI).
+campaign is reproducible — usage: python tools/fuzz.py pptx LO HI).
 
 Each seed builds one .pptx with randomized structure and compares
 ``operators/pptx.parse_pptx`` output against ground truth known at
@@ -23,20 +23,10 @@ from __future__ import annotations
 
 import io
 import random
-import sys
 import zipfile
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os")
-                .path.dirname(__import__("os").path.abspath(__file__))))
-
-from pdf_extraction_spark.operators.docx import xml_escape  # noqa: E402
-from pdf_extraction_spark.operators.pptx import parse_pptx  # noqa: E402
-
-_TEXT_POOL = "abc XY 09&<>\"'z .,"
-
-
-def _rand_text(rng: random.Random, n: int) -> str:
-    return "".join(rng.choice(_TEXT_POOL) for _ in range(n))
+from pdf_extraction_spark.operators.docx import xml_escape
+from tools.fuzz_docx import TEXT_POOL, rand_text
 
 
 def gen_case(seed: int) -> tuple[bytes, list[dict]]:
@@ -68,7 +58,7 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
                   + '"/></p:nvPr></p:nvSpPr>') if is_title else ""
             paras: list[str] = []
             for _p in range(rng.randrange(1, 5)):
-                runs = [_rand_text(rng, rng.randrange(0, 10))
+                runs = [rand_text(rng, TEXT_POOL, rng.randrange(0, 10))
                         for _ in range(rng.randrange(1, 5))]
                 attr = (' xml:space="preserve"'
                         if rng.random() < 0.4 else "")
@@ -140,33 +130,3 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
         if rng.random() < 0.4:
             put("ppt/notesSlides/notesSlide1.xml", "<p:notes/>")
     return buf.getvalue(), expected
-
-
-def check_seed(seed: int) -> list[str]:
-    blob, expected = gen_case(seed)
-    rows = parse_pptx(blob)
-    errs = []
-    if len(rows) != len(expected):
-        return [f"seed {seed}: {len(rows)} rows, "
-                f"expected {len(expected)}"]
-    for i, (row, exp) in enumerate(zip(rows, expected)):
-        for k, v in exp.items():
-            if row[k] != v:
-                errs.append(f"seed {seed} row {i} {k}: "
-                            f"{row[k]!r} != {v!r}")
-    return errs
-
-
-def main(lo: int, hi: int) -> None:
-    bad = 0
-    for s in range(lo, hi):
-        errs = check_seed(s)
-        if errs:
-            bad += 1
-            for e in errs[:4]:
-                print(e)
-    print(f"{hi - lo} seeds, {bad} bad")
-
-
-if __name__ == "__main__":
-    main(int(sys.argv[1]), int(sys.argv[2]))

@@ -1,6 +1,7 @@
 """Differential fuzz harness (committed so the campaign is
-reproducible — usage: python tools/fuzz_quality.py LO HI): operators/pii.py + operators/repetition.py (Spark)
-vs their DuckDB SQL twins on random adversarial ASCII corpora.
+reproducible — usage: python tools/fuzz.py quality LO HI):
+operators/pii.py + operators/repetition.py (Spark) vs their DuckDB SQL
+twins on random adversarial ASCII corpora.
 
 Corpus generator biases toward PII-shaped fragments (digit groups, dots,
 dashes, @, TLD-ish tails) and repetition-shaped structure (newlines,
@@ -8,16 +9,8 @@ repeated lines/tokens, blank/space-only lines) so both rule sets fire
 constantly rather than never.
 """
 import random
-import sys
 
-import duckdb
-import pandas as pd
-
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
-
-from pdf_extraction_spark.operators.pii import PII_RULES, scrub_pii
-from pdf_extraction_spark.operators.repetition import repetition_stats
-from pdf_extraction_spark.session import get_spark
+from pdf_extraction_spark.operators.pii import PII_RULES
 
 WORDS = ["mail", "call", "now", "user", "x", "example", "com", "co",
          "net", "a", "b", "dog", "table", "spark", "10", "713", "555",
@@ -86,52 +79,7 @@ FROM top ORDER BY doc_id
 """
 
 
-def main() -> None:
-    seeds = range(int(sys.argv[1]), int(sys.argv[2]))
-    spark = get_spark(cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    bad = 0
-    for seed in seeds:
-        rng = random.Random(seed)
-        rows = [(i, gen_text(rng)) for i in range(30)]
-        pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-        sdf = spark.createDataFrame(pdf.assign(
-            doc_id=pdf.doc_id.astype("int64")))
-        con = duckdb.connect()
-        con.register("corpus", pdf)
-
-        s1 = scrub_pii(sdf).select(
-            "doc_id", "n_email", "n_phone", "n_ipv4", "text") \
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        o1 = con.sql(sql_pii()).df()[s1.columns]
-        if not s1.equals(o1):
-            bad += 1
-            print(f"seed {seed}: PII DIVERGENCE")
-            for c in s1.columns:
-                m = s1[c] != o1[c]
-                if m.any():
-                    i = m.idxmax()
-                    print(" col", c, "row", i,
-                          repr(rows[i][1])[:200],
-                          "spark", repr(s1[c][i])[:120],
-                          "oracle", repr(o1[c][i])[:120])
-
-        s2 = repetition_stats(sdf).toPandas() \
-            .sort_values("doc_id").reset_index(drop=True)
-        o2 = con.sql(SQL_REP).df()[s2.columns]
-        if not s2.equals(o2):
-            bad += 1
-            print(f"seed {seed}: REPETITION DIVERGENCE")
-            for c in s2.columns:
-                m = s2[c] != o2[c]
-                if m.any():
-                    i = m.idxmax()
-                    print(" col", c, "row", i, repr(rows[i][1])[:200],
-                          "spark", s2[c][i], "oracle", o2[c][i])
-        if seed % 10 == 0:
-            print("seed", seed, "ok" if bad == 0 else f"bad={bad}")
-    print("DONE", "divergences:", bad)
-
-
-if __name__ == "__main__":
-    main()
+def gen_case(seed: int) -> list[tuple]:
+    """(doc_id, text) rows of one seed."""
+    rng = random.Random(seed)
+    return [(i, gen_text(rng)) for i in range(30)]

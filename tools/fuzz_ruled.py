@@ -1,5 +1,5 @@
 """By-construction fuzz for ruled-line table detection (committed so
-the campaign is reproducible — usage: python tools/fuzz_ruled.py LO HI).
+the campaign is reproducible — usage: python tools/fuzz.py ruled LO HI).
 
 Each seed builds one synthetic page: 1-2 drawn grids (random dyadic
 boundary positions >= 2*snap_tol apart, stacked tables separated by
@@ -19,9 +19,6 @@ dyadic translates are bit-exact across the machine and the plan.
 from __future__ import annotations
 
 import random
-import sys
-
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
 
 
 def gen_case(seed: int) -> tuple[str, list[tuple]]:
@@ -127,40 +124,3 @@ def gen_case(seed: int) -> tuple[str, list[tuple]]:
     text_parts.append(f"1 0 0 1 60 {band + 4} Tm (outside) Tj ")
     text_parts.append("ET")
     return "".join(parts) + "".join(text_parts), expected
-
-
-def main(lo: int, hi: int, batch: int = 200) -> None:
-    from pyspark.sql import SparkSession
-
-    from pdf_extraction_spark.operators.pdfstream import \
-        ruled_table_rows
-
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    bad = 0
-    for b0 in range(lo, hi, batch):
-        seeds = range(b0, min(b0 + batch, hi))
-        cases = {s: gen_case(s) for s in seeds}
-        df = spark.createDataFrame(
-            [(str(s), stream) for s, (stream, _) in cases.items()],
-            "doc_id string, stream string")
-        got: dict[int, list] = {s: [] for s in seeds}
-        for row in ruled_table_rows(df).collect():
-            got[int(row.doc_id)].append(
-                (row.tbl_idx, row.row_idx, row.n_rows, row.n_cols,
-                 row.table_text))
-        for s in seeds:
-            if sorted(got[s]) != sorted(cases[s][1]):
-                bad += 1
-                print(f"seed {s}: MISMATCH")
-                print("  got:     ", sorted(got[s])[:6])
-                print("  expected:", sorted(cases[s][1])[:6])
-        print(f"seeds {b0}..{min(b0 + batch, hi) - 1}",
-              "ok" if bad == 0 else f"bad={bad}")
-    print("DONE mismatches:", bad)
-
-
-if __name__ == "__main__":
-    main(int(sys.argv[1]), int(sys.argv[2]))

@@ -1,5 +1,5 @@
 """By-construction fuzz for the WARC container layer (committed so
-the campaign is reproducible — usage: python tools/fuzz_warc.py LO HI).
+the campaign is reproducible — usage: python tools/fuzz.py warc LO HI).
 
 Each seed builds one WARC file with randomized structure and compares
 ``operators/warc.flatten_records`` output against ground truth known
@@ -21,19 +21,14 @@ at construction — no second parser implementation:
   'WARC/' substring, exercising the inter-record skip).
 
 The pure-Python layer is fuzzed directly (no Spark session), so the
-campaign runs ~10k seeds/min; tests/test_warc.py samples 50 seeds per
-CI run via ``check_seed``.
+campaign runs ~10k seeds/min.
 """
 from __future__ import annotations
 
 import random
-import sys
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os")
-                .path.dirname(__import__("os").path.abspath(__file__))))
-
-from pdf_extraction_spark.operators.warc import (   # noqa: E402
-    chunkify, flatten_records, gzip_bytes)
+from pdf_extraction_spark.operators.warc import chunkify, gzip_bytes
+from tools.fuzz_docx import rand_text
 
 _CS_CHARS = {
     "utf-8": "abc XYZ 09 .,;-é漢字→",
@@ -41,11 +36,6 @@ _CS_CHARS = {
     "windows-1252": "abc XYZ 09 .,;-é€™œ",
 }
 _PAD_CHARS = "abcdefgh .,!?-=#"
-
-
-def _rand_text(rng: random.Random, charset: str, n: int) -> str:
-    pool = _CS_CHARS[charset]
-    return "".join(rng.choice(pool) for _ in range(n))
 
 
 def _mk_record(rng: random.Random, head_lines: list[str],
@@ -101,7 +91,7 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
             # meta prescan needs the label in the body; default
             # channel implies utf-8 content
             channel = "meta"
-        text = _rand_text(rng, charset, rng.randrange(5, 200))
+        text = rand_text(rng, _CS_CHARS[charset], rng.randrange(5, 200))
         meta = (f'<meta charset="{charset}">'
                 if channel == "meta" else "")
         html = f"<html><head>{meta}</head><body>{text}</body></html>"
@@ -150,45 +140,3 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
     else:
         blob = b"".join(p + r for p, r in zip(pads, recs))
     return blob, expected
-
-
-def check_seed(seed: int) -> list[str]:
-    blob, expected = gen_case(seed)
-    rows = flatten_records(str(seed), blob)
-    errs = []
-    if len(rows) != len(expected):
-        return [f"seed {seed}: {len(rows)} records, "
-                f"expected {len(expected)}"]
-    for i, (row, exp) in enumerate(zip(rows, expected)):
-        got = {"warc_type": row[2], "target_uri": row[3],
-               "http_status": row[6], "payload_len": row[9],
-               "text": row[10]}
-        if exp["text"] is not None and row[10] is not None:
-            # BOM channel: decoded text drops the BOM; payload_len
-            # counts the on-wire entity bytes including it
-            if exp["payload_len"] != row[9] and \
-                    row[9] == exp["payload_len"] + 3:
-                exp = dict(exp, payload_len=row[9])
-        for k, v in exp.items():
-            if got[k] != v:
-                errs.append(f"seed {seed} rec {i} {k}: "
-                            f"{got[k]!r} != {v!r}")
-    return errs
-
-
-def main(lo: int, hi: int) -> None:
-    bad = 0
-    for s in range(lo, hi):
-        errs = check_seed(s)
-        if errs:
-            bad += 1
-            for e in errs[:4]:
-                print(e)
-        if (s - lo + 1) % 5000 == 0:
-            print(f"...{s - lo + 1} seeds, {bad} bad")
-    print(f"fuzz_warc: {hi - lo} seeds, {bad} mismatching")
-    sys.exit(1 if bad else 0)
-
-
-if __name__ == "__main__":
-    main(int(sys.argv[1]), int(sys.argv[2]))

@@ -1,5 +1,5 @@
 """By-construction fuzz for the XLSX layer (committed so the
-campaign is reproducible — usage: python tools/fuzz_xlsx.py LO HI).
+campaign is reproducible — usage: python tools/fuzz.py xlsx LO HI).
 
 Each seed builds one .xlsx with randomized structure and compares
 ``operators/xlsx.parse_xlsx`` output against ground truth known at
@@ -22,20 +22,10 @@ from __future__ import annotations
 
 import io
 import random
-import sys
 import zipfile
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os")
-                .path.dirname(__import__("os").path.abspath(__file__))))
-
-from pdf_extraction_spark.operators.docx import xml_escape  # noqa: E402
-from pdf_extraction_spark.operators.xlsx import parse_xlsx  # noqa: E402
-
-_TEXT_POOL = "abc XY 09&<>\"'z .,"
-
-
-def _rand_text(rng: random.Random, n: int) -> str:
-    return "".join(rng.choice(_TEXT_POOL) for _ in range(n))
+from pdf_extraction_spark.operators.docx import xml_escape
+from tools.fuzz_docx import TEXT_POOL, rand_text
 
 
 def gen_case(seed: int) -> tuple[bytes, list[dict]]:
@@ -45,21 +35,21 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
     shared_xml: list[str] = []
     for _ in range(rng.randrange(0, 6)):
         if rng.random() < 0.4:
-            runs = [_rand_text(rng, rng.randrange(0, 6))
+            runs = [rand_text(rng, TEXT_POOL, rng.randrange(0, 6))
                     for _ in range(rng.randrange(1, 4))]
             shared.append("".join(runs))
             shared_xml.append("<si>" + "".join(
                 f'<r><t xml:space="preserve">{xml_escape(t)}</t></r>'
                 for t in runs) + "</si>")
         else:
-            t = _rand_text(rng, rng.randrange(0, 10))
+            t = rand_text(rng, TEXT_POOL, rng.randrange(0, 10))
             shared.append(t)
             shared_xml.append(f"<si><t>{xml_escape(t)}</t></si>")
     have_sst = bool(shared) and rng.random() < 0.8
 
     n_sheets = rng.randrange(1, 5)
     sheets: list[tuple[str, list[dict]]] = []   # (xml, expected rows)
-    names = [_rand_text(rng, rng.randrange(1, 8)) or "S"
+    names = [rand_text(rng, TEXT_POOL, rng.randrange(1, 8)) or "S"
              for _ in range(n_sheets)]
     for s in range(n_sheets):
         rows_xml: list[str] = []
@@ -77,13 +67,13 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
                                  if have_sst and idx < len(shared)
                                  else "")
                 elif kind < 0.45:
-                    t = _rand_text(rng, rng.randrange(0, 8))
+                    t = rand_text(rng, TEXT_POOL, rng.randrange(0, 8))
                     cells_xml.append(
                         f'<c t="inlineStr"><is><t xml:space='
                         f'"preserve">{xml_escape(t)}</t></is></c>')
                     texts.append(t)
                 elif kind < 0.6:
-                    t = _rand_text(rng, rng.randrange(0, 8))
+                    t = rand_text(rng, TEXT_POOL, rng.randrange(0, 8))
                     cells_xml.append(f'<c t="str"><f>F()</f>'
                                      f"<v>{xml_escape(t)}</v></c>")
                     texts.append(t)
@@ -149,33 +139,3 @@ def gen_case(seed: int) -> tuple[bytes, list[dict]]:
         if rng.random() < 0.4:
             put("xl/theme/theme1.xml", "<a:theme/>")
     return buf.getvalue(), expected
-
-
-def check_seed(seed: int) -> list[str]:
-    blob, expected = gen_case(seed)
-    rows = parse_xlsx(blob)
-    errs = []
-    if len(rows) != len(expected):
-        return [f"seed {seed}: {len(rows)} rows, "
-                f"expected {len(expected)}"]
-    for i, (row, exp) in enumerate(zip(rows, expected)):
-        for k, v in exp.items():
-            if row[k] != v:
-                errs.append(f"seed {seed} row {i} {k}: "
-                            f"{row[k]!r} != {v!r}")
-    return errs
-
-
-def main(lo: int, hi: int) -> None:
-    bad = 0
-    for s in range(lo, hi):
-        errs = check_seed(s)
-        if errs:
-            bad += 1
-            for e in errs[:4]:
-                print(e)
-    print(f"{hi - lo} seeds, {bad} bad")
-
-
-if __name__ == "__main__":
-    main(int(sys.argv[1]), int(sys.argv[2]))
