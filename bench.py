@@ -19,7 +19,7 @@ Headline workload:
   - extract_corpus: fused zero-shuffle extraction (mapInArrow: T1
     normalize -> classify -> W1 sections -> W2 segmentation -> tables/J1
     -> per-doc reassembly) over the canonical synthetic span corpus.
-  - enrich_corpus: full 6-phase enrichment (mapInPandas) of the
+  - enrich_corpus: full 6-phase enrichment (mapInArrow) of the
     extracted output.
   - dedup/similarity/textstats kernels straight on the SF-dir
     documents/embeddings parquet (the operators as a user calls them).

@@ -3,7 +3,7 @@
 rule-based cost estimator (rule_based_cost_estimator.py:90-300).
 
 Pure python, per-issue / per-document functions. The Spark plan
-(plans/enrichment.py) executes these inside mapInPandas batches (per-doc
+(plans/enrichment.py) executes these inside mapInArrow batches (per-doc
 scope, zero shuffle); the pytest oracle calls them directly — one shared
 implementation, so Spark and oracle cannot drift.
 
@@ -200,12 +200,58 @@ def _matcher(normalized: str) -> SequenceMatcher:
 _PAIR_VERDICTS = Memo(500_000)
 
 
+# difflib's autojunk drops the popular items of a seq2 this long or longer
+_AUTOJUNK_LEN = 200
+
+
+def _common_end(a: str, b: str) -> int:
+    """The longer of the common prefix and the common suffix of ``a``
+    and ``b``: a common substring, so at most difflib's longest match
+    when seq2 has no junk."""
+    n = min(len(a), len(b))
+    pre = next((i for i in range(n) if a[i] != b[i]), n)
+    suf = next((i for i in range(n) if a[-1 - i] != b[-1 - i]), n)
+    return max(pre, suf)
+
+
+def _char_masks(a: str) -> dict[str, int]:
+    """Per character of ``a``, the bit set of its positions."""
+    masks: dict[str, int] = {}
+    for i, ch in enumerate(a):
+        masks[ch] = masks.get(ch, 0) | (1 << i)
+    return masks
+
+
+def _lcs_len(masks: dict[str, int], la: int, b: str) -> int:
+    """Length of a longest common subsequence of ``a`` and ``b``, from
+    ``a``'s :func:`_char_masks` and length: the bit-parallel column
+    recurrence of Allison & Dix (1986) in Hyyrö's (2004) form, one
+    big-int step per character of ``b``; the zero bits of ``v`` count
+    the LCS."""
+    full = (1 << la) - 1
+    v = full
+    for ch in b:
+        m = masks.get(ch)
+        if m:
+            u = v & m
+            v = ((v + u) | (v - u)) & full
+    return la - v.bit_count()
+
+
 class DuplicateTracker:
     """T5 (text_cleaner.py:275-301): per-document sequential near-dup check.
 
     Exact accelerations: an identical string short-circuits (ratio 1.0),
     the length-ratio bound (== difflib real_quick_ratio) skips pairs that
-    cannot reach the threshold, and quick_ratio gates the full ratio.
+    cannot reach the threshold, quick_ratio gates the LCS bound, and the
+    LCS bound gates the full ratio: difflib's matching blocks form a
+    common subsequence, so ``ratio() <= 2.0 * lcs / (la + lb)`` in the
+    same float form (difflib._calculate_ratio), and a pair whose bound
+    is below the threshold is no duplicate. From below, a seen text under
+    200 chars has no autojunk, so difflib's first block is a longest
+    common substring, at least as long as the common prefix or suffix:
+    a pair whose prefix/suffix bound reaches the threshold is a
+    duplicate without difflib.
     The tracker state is per-document, but normalization and pair verdicts
     are pure string functions cached process-wide — boilerplate
     descriptions recur across documents, so repeat docs skip difflib."""
@@ -223,6 +269,7 @@ class DuplicateTracker:
         if normalized in self.seen_set:
             return True
         ln = len(normalized)
+        masks = None
         # Reference order (text_cleaner.py:294): SequenceMatcher(None,
         # new, seen) — seq2 (where autojunk applies for >200-char strings)
         # is the SEEN text. One prepared matcher per seen entry keeps the
@@ -236,11 +283,21 @@ class DuplicateTracker:
                 if v:
                     return True
                 continue
-            verdict = False
             mn, mx = (ls, ln) if ls < ln else (ln, ls)
-            if 2 * mn >= threshold * (mn + mx):
-                overlap = sum(min(c, cn[ch]) for ch, c in cs.items())
-                if 2 * overlap >= threshold * (ln + ls):
+            if 2 * mn < threshold * (mn + mx):                # lengths
+                verdict = False
+            elif 2 * sum(min(c, cn[ch]) for ch, c in cs.items()) < \
+                    threshold * (ln + ls):                    # counters
+                verdict = False
+            elif ls < _AUTOJUNK_LEN and 2.0 * _common_end(
+                    normalized, seen) / (ln + ls) >= threshold:
+                verdict = True                                # prefix/suffix
+            else:
+                if masks is None:
+                    masks = _char_masks(normalized)
+                verdict = 2.0 * _lcs_len(masks, ln, seen) / (ln + ls) \
+                    >= threshold
+                if verdict:
                     sm.set_seq1(normalized)
                     verdict = sm.ratio() >= threshold
             _PAIR_VERDICTS.admit(pair, verdict)

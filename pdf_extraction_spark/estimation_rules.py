@@ -7,7 +7,7 @@ houston_cost_multipliers.py, confidence_scorer.py). These replace the
 reference's "hybrid AI" glue with its own deterministic components, per
 the north-star ("LLM-enrichment glue re-implemented as deterministic
 rule-based classifiers"). Pure python per-issue functions, executed inside
-the same mapInPandas batches as enrich_rules.
+the same mapInArrow batches as enrich_rules.
 """
 
 from __future__ import annotations

@@ -53,7 +53,7 @@ the doc_id shuffle gathers them.  The PDF span bridges
 (`pdfstream.pdf_to_spans`, `pdffile.files_to_spans`) already hold each
 page whole in one task and call :func:`layout_page` instead — the
 in-process twin at the end of this module, checked against
-:func:`spans_from_runs` by ``tools/fuzz_layout.py --kernel``.
+:func:`spans_from_runs` by ``python tools/fuzz.py layout_kernel LO HI``.
 """
 
 from __future__ import annotations

@@ -8,8 +8,8 @@ reference these checks screen LLM responses; here they validate any
 estimate record (e.g. the C18/hybrid chain output), so the same
 screening runs with no LLM in the loop.
 
-Pure per-record python, executed inside mapInPandas batches like the
-other rule modules; the gate query transcribes every check in SQL.
+Pure per-record python, like the other rule modules; the gate query
+transcribes every check in SQL.
 """
 
 from __future__ import annotations

@@ -5,114 +5,128 @@ document-scoped: the duplicate tracker resets per doc (:131), grouping keys
 and group ids are per-report counters (issue_grouper.py:31-33), and every
 phase is a per-issue map. Since the extraction output already carries one
 row per document with its issues array, the whole 6-phase pipeline + the
-deterministic C18 estimator runs as ONE ``mapInPandas`` pass — zero
-shuffles, linear scaling, same architecture as plans/fused.py.
+deterministic C18 estimator runs as ONE ``mapInArrow`` pass over the
+Arrow kernel :func:`enrich_record_batch` — zero shuffles, linear scaling,
+same architecture as plans/fused.py.
 
-Issue counts are ~50/doc (vs hundreds of spans), so per-issue python inside
-the Arrow batch is not the hot path; the heavy span-level work already
-happened in the fused extraction pass.
+The kernel decodes the issue structs once from flat per-field columns
+and builds its output with one ``RecordBatch.from_pylist``: no pandas
+frame on either side, so the per-issue Python rules are the only
+interpreted work.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import enrich_rules as er
+from . import fused
 
-_ATTRS_T = ("struct<locations:array<string>,"
-            "measurements:struct<dimensions:array<string>,"
-            "lengths:array<string>,areas:array<string>>,"
-            "materials:array<string>,damage_types:array<string>,"
-            "safety_related:boolean,accessibility:string>")
-_AREA_T = "struct<square_feet:double,dimensions:string,size_category:string>"
-_CLS_T = ("struct<trade:string,trade_confidence:double,work_type:string,"
-          "work_type_confidence:double,complexity:string,"
-          "complexity_confidence:double>")
-_ISSUE_T = (
-    "struct<id:string,section:string,subsection:string,status:string,"
-    "priority:string,title:string,description:string,"
-    "page_numbers:array<int>,"
-    "estimated_cost:struct<min:double,max:double,average:double>,"
-    "severity:string,validation_status:string,is_duplicate:boolean,"
-    "data_quality_score:double,needs_manual_review:boolean,"
-    "review_reason:string,"
-    "standard_severity:string,severity_confidence:double,"
-    "standard_action:string,action_confidence:double,action_priority:int,"
-    "standard_category:string,standard_subcategory:string,"
-    "category_confidence:double,"
-    f"extracted_attributes:{_ATTRS_T},"
-    "safety_flag:boolean,accessibility_complexity:string,"
-    "urgency_score:double,complexity_factor:double,"
-    "requires_specialized_labor:boolean,"
-    f"estimated_affected_area:{_AREA_T},"
-    f"classification:{_CLS_T},"
-    "grouped_with:array<string>,is_grouped:boolean,"
-    "cost_strategy:string,strategy_confidence:double,"
-    "matched_standard_item:string>"
-)
-_GROUP_T = ("struct<group_id:string,grouping_key:string,issue_count:int,"
-            "issue_ids:array<string>,group_type:string>")
-_EST_T = ("struct<issue_id:string,category:string,sub_type:string,"
-          "estimated_low:int,estimated_high:int,confidence_score:int,"
-          "reasoning:string,risk_factors:array<string>,needs_review:boolean>")
-_SUMMARY_T = ("struct<total_issues:int,by_severity:map<string,int>,"
-              "by_action:map<string,int>,by_category:map<string,int>,"
-              "by_trade:map<string,int>,by_complexity:map<string,int>,"
-              "by_strategy:map<string,int>,safety_issues:int,"
-              "grouped_issues:int,avg_urgency:double,avg_complexity:double>")
-_EST_SUMMARY_T = ("struct<estimated_issues:int,total_estimated_low:long,"
-                  "total_estimated_high:long,average_confidence:int,"
-                  "needs_review:int>")
-_PHASE2_T = ("struct<issue_id:string,strategy:string,"
-             "strategy_confidence:double,adjusted_low:double,"
-             "adjusted_high:double,permit_type:string,trade:string,"
-             "confidence_overall:double,manual_review:boolean>")
-_REL_T = ("struct<causal_chains:array<struct<root_cause_id:string,"
-          "caused_issue_ids:array<string>,chain_length:int,priority:string>>,"
-          "bundles:array<struct<bundle_type:string,key:string,"
-          "issue_ids:array<string>,savings_pct:double>>,"
-          "isolated_issue_ids:array<string>,"
-          "statistics:struct<total_issues:int,issues_in_chains:int,"
-          "isolated_issues:int,potential_bundles:int,"
-          "average_savings_pct:double,max_savings_pct:double>>")
+_STRS = pa.list_(pa.string())
+_ATTRS_T = pa.struct([
+    ("locations", _STRS),
+    ("measurements", pa.struct([("dimensions", _STRS), ("lengths", _STRS),
+                                ("areas", _STRS)])),
+    ("materials", _STRS), ("damage_types", _STRS),
+    ("safety_related", pa.bool_()), ("accessibility", pa.string())])
+_AREA_T = pa.struct([("square_feet", pa.float64()),
+                     ("dimensions", pa.string()),
+                     ("size_category", pa.string())])
+_CLS_T = pa.struct([
+    ("trade", pa.string()), ("trade_confidence", pa.float64()),
+    ("work_type", pa.string()), ("work_type_confidence", pa.float64()),
+    ("complexity", pa.string()), ("complexity_confidence", pa.float64())])
+_ISSUE_T = pa.struct([
+    ("id", pa.string()), ("section", pa.string()), ("subsection", pa.string()),
+    ("status", pa.string()), ("priority", pa.string()), ("title", pa.string()),
+    ("description", pa.string()), ("page_numbers", pa.list_(pa.int32())),
+    ("estimated_cost", fused._COST_T), ("severity", pa.string()),
+    ("validation_status", pa.string()), ("is_duplicate", pa.bool_()),
+    ("data_quality_score", pa.float64()),
+    ("needs_manual_review", pa.bool_()), ("review_reason", pa.string()),
+    ("standard_severity", pa.string()),
+    ("severity_confidence", pa.float64()),
+    ("standard_action", pa.string()), ("action_confidence", pa.float64()),
+    ("action_priority", pa.int32()), ("standard_category", pa.string()),
+    ("standard_subcategory", pa.string()),
+    ("category_confidence", pa.float64()),
+    ("extracted_attributes", _ATTRS_T), ("safety_flag", pa.bool_()),
+    ("accessibility_complexity", pa.string()),
+    ("urgency_score", pa.float64()), ("complexity_factor", pa.float64()),
+    ("requires_specialized_labor", pa.bool_()),
+    ("estimated_affected_area", _AREA_T), ("classification", _CLS_T),
+    ("grouped_with", _STRS), ("is_grouped", pa.bool_()),
+    ("cost_strategy", pa.string()), ("strategy_confidence", pa.float64()),
+    ("matched_standard_item", pa.string())])
+_GROUP_T = pa.struct([
+    ("group_id", pa.string()), ("grouping_key", pa.string()),
+    ("issue_count", pa.int32()), ("issue_ids", _STRS),
+    ("group_type", pa.string())])
+_EST_T = pa.struct([
+    ("issue_id", pa.string()), ("category", pa.string()),
+    ("sub_type", pa.string()), ("estimated_low", pa.int32()),
+    ("estimated_high", pa.int32()), ("confidence_score", pa.int32()),
+    ("reasoning", pa.string()), ("risk_factors", _STRS),
+    ("needs_review", pa.bool_())])
+_COUNTS = pa.map_(pa.string(), pa.int32())
+_SUMMARY_T = pa.struct([
+    ("total_issues", pa.int32()), ("by_severity", _COUNTS),
+    ("by_action", _COUNTS), ("by_category", _COUNTS), ("by_trade", _COUNTS),
+    ("by_complexity", _COUNTS), ("by_strategy", _COUNTS),
+    ("safety_issues", pa.int32()), ("grouped_issues", pa.int32()),
+    ("avg_urgency", pa.float64()), ("avg_complexity", pa.float64())])
+_EST_SUMMARY_T = pa.struct([
+    ("estimated_issues", pa.int32()), ("total_estimated_low", pa.int64()),
+    ("total_estimated_high", pa.int64()), ("average_confidence", pa.int32()),
+    ("needs_review", pa.int32())])
+_PHASE2_T = pa.struct([
+    ("issue_id", pa.string()), ("strategy", pa.string()),
+    ("strategy_confidence", pa.float64()), ("adjusted_low", pa.float64()),
+    ("adjusted_high", pa.float64()), ("permit_type", pa.string()),
+    ("trade", pa.string()), ("confidence_overall", pa.float64()),
+    ("manual_review", pa.bool_())])
+_REL_T = pa.struct([
+    ("causal_chains", pa.list_(pa.struct([
+        ("root_cause_id", pa.string()), ("caused_issue_ids", _STRS),
+        ("chain_length", pa.int32()), ("priority", pa.string())]))),
+    ("bundles", pa.list_(pa.struct([
+        ("bundle_type", pa.string()), ("key", pa.string()),
+        ("issue_ids", _STRS), ("savings_pct", pa.float64())]))),
+    ("isolated_issue_ids", _STRS),
+    ("statistics", pa.struct([
+        ("total_issues", pa.int32()), ("issues_in_chains", pa.int32()),
+        ("isolated_issues", pa.int32()), ("potential_bundles", pa.int32()),
+        ("average_savings_pct", pa.float64()),
+        ("max_savings_pct", pa.float64())]))])
 
-ENRICHED_SCHEMA = (
-    "doc_id string, "
-    f"issues array<{_ISSUE_T}>, "
-    f"groups array<{_GROUP_T}>, "
-    f"estimates array<{_EST_T}>, "
-    f"summary {_SUMMARY_T}, "
-    f"estimate_summary {_EST_SUMMARY_T}, "
-    f"phase2 array<{_PHASE2_T}>, "
-    f"relationships {_REL_T}, "
-    "n_excluded int"
-)
-
-_ISSUE_FIELDS = [
-    "id", "section", "subsection", "status", "priority", "title",
-    "description", "page_numbers", "estimated_cost", "severity",
-    "validation_status", "is_duplicate", "data_quality_score",
-    "needs_manual_review", "review_reason", "standard_severity",
-    "severity_confidence", "standard_action", "action_confidence",
-    "action_priority", "standard_category", "standard_subcategory",
-    "category_confidence", "extracted_attributes", "safety_flag",
-    "accessibility_complexity", "urgency_score", "complexity_factor",
-    "requires_specialized_labor", "estimated_affected_area",
-    "classification", "grouped_with", "is_grouped", "cost_strategy",
-    "strategy_confidence", "matched_standard_item",
-]
+PA_SCHEMA = pa.schema([
+    ("doc_id", pa.string()), ("issues", pa.list_(_ISSUE_T)),
+    ("groups", pa.list_(_GROUP_T)), ("estimates", pa.list_(_EST_T)),
+    ("summary", _SUMMARY_T), ("estimate_summary", _EST_SUMMARY_T),
+    ("phase2", pa.list_(_PHASE2_T)), ("relationships", _REL_T),
+    ("n_excluded", pa.int32())])
+ENRICHED_SCHEMA = from_arrow_schema(PA_SCHEMA)
+# the extraction output columns the kernel reads
+_IN_SCHEMA = pa.schema([fused.PA_SCHEMA.field("doc_id"),
+                        fused.PA_SCHEMA.field("issues")])
+# the enrich_document result fields that go out as they are
+_RESULT_FIELDS = PA_SCHEMA.names[2:]
 
 
 def _issue_row(issue: dict) -> dict:
-    """Project an enriched issue dict onto the fixed output struct."""
+    """Give an enriched issue dict the output struct's value rules, in
+    place (the Arrow conversion reads only the struct's fields, and a
+    missing one is null)."""
     attrs = issue.get("extracted_attributes") or {}
     meas = attrs.get("measurements") or {}
-    out = {k: issue.get(k) for k in _ISSUE_FIELDS}
-    out["page_numbers"] = [int(p) for p in (issue.get("page_numbers") or [])]
-    out["extracted_attributes"] = {
+    issue["page_numbers"] = [int(p) for p in (issue.get("page_numbers") or [])]
+    issue["extracted_attributes"] = {
         "locations": attrs.get("locations") or [],
         "measurements": {
             "dimensions": meas.get("dimensions") or [],
@@ -124,49 +138,65 @@ def _issue_row(issue: dict) -> dict:
         "safety_related": bool(attrs.get("safety_related", False)),
         "accessibility": attrs.get("accessibility"),
     }
-    out["is_duplicate"] = bool(issue.get("is_duplicate", False))
-    out["needs_manual_review"] = bool(issue.get("needs_manual_review", False))
-    out["safety_flag"] = bool(issue.get("safety_flag", False))
-    out["is_grouped"] = bool(issue.get("is_grouped", False))
-    out["requires_specialized_labor"] = bool(
-        issue.get("requires_specialized_labor", False))
+    for k in ("is_duplicate", "needs_manual_review", "safety_flag",
+              "is_grouped", "requires_specialized_labor"):
+        issue[k] = bool(issue.get(k, False))
     area = issue.get("estimated_affected_area")
     if area is not None:
-        out["estimated_affected_area"] = {
+        issue["estimated_affected_area"] = {
             "square_feet": float(area["square_feet"])
             if "square_feet" in area else None,
             "dimensions": area.get("dimensions"),
             "size_category": area.get("size_category"),
         }
-    cost = issue.get("estimated_cost")
-    if cost is not None and not isinstance(cost, dict):
-        cost = None
-    out["estimated_cost"] = cost
+    if not isinstance(issue.get("estimated_cost"), dict):
+        issue["estimated_cost"] = None
+    return issue
+
+
+def _pylist(arr: pa.Array) -> list:
+    """``arr.to_pylist()``; a string array goes through numpy, which
+    builds its Python strings several times faster."""
+    if arr.type == pa.string():
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    return arr.to_pylist()
+
+
+def _doc_issues(rb: pa.RecordBatch) -> list[list[dict]]:
+    """Each row's issue structs as dicts (a null list reads as empty),
+    decoded from the flat per-field columns of the issues list."""
+    col = rb.column(rb.schema.get_field_index("issues"))
+    flat = pc.list_flatten(col)
+    names = [f.name for f in flat.type]
+    issues = [dict(zip(names, v))
+              for v in zip(*map(_pylist, flat.flatten()))]
+    out, at = [], 0
+    for n in pc.list_value_length(col).fill_null(0).to_pylist():
+        out.append(issues[at:at + n])
+        at += n
     return out
 
 
-def enrich_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def enrich_record_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     """Run the 6-phase enrichment + C18 estimation for a batch of extracted
-    document rows (doc_id, issues, ...)."""
-    rows: list[dict[str, Any]] = []
-    for doc_id, issues in zip(pdf["doc_id"], pdf["issues"]):
-        issues_py = [dict(i) for i in issues] if issues is not None else []
-        result = er.enrich_document(issues_py)
-        rows.append({
-            "doc_id": doc_id,
-            "issues": [_issue_row(i) for i in result["issues"]],
-            "groups": result["groups"],
-            "estimates": result["estimates"],
-            "summary": result["summary"],
-            "estimate_summary": result["estimate_summary"],
-            "phase2": result["phase2"],
-            "relationships": result["relationships"],
-            "n_excluded": result["n_excluded"],
-        })
-    return pd.DataFrame(
-        rows, columns=["doc_id", "issues", "groups", "estimates",
-                       "summary", "estimate_summary", "phase2",
-                       "relationships", "n_excluded"])
+    document rows (doc_id, issues, ...): one output row per input row."""
+    rows = []
+    doc_ids = rb.column(rb.schema.get_field_index("doc_id")).to_pylist()
+    for doc_id, issues in zip(doc_ids, _doc_issues(rb)):
+        result = er.enrich_document(issues)
+        row = {k: result[k] for k in _RESULT_FIELDS}
+        row["doc_id"] = doc_id
+        row["issues"] = [_issue_row(i) for i in result["issues"]]
+        rows.append(row)
+    return pa.RecordBatch.from_pylist(rows, schema=PA_SCHEMA)
+
+
+def enrich_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """:func:`enrich_record_batch` over a pandas frame of extracted rows;
+    returns its output batch as an Arrow-backed frame."""
+    rb = pa.RecordBatch.from_pandas(pdf[["doc_id", "issues"]],
+                                    schema=_IN_SCHEMA, preserve_index=False)
+    return enrich_record_batch(rb).to_pandas(types_mapper=pd.ArrowDtype)
 
 
 def enrich_extracted(extracted: DataFrame) -> DataFrame:
@@ -178,11 +208,11 @@ def enrich_extracted(extracted: DataFrame) -> DataFrame:
     wall is work-bound, not straggler-bound — a measured giant-isolation
     union variant came out 50% SLOWER (its second stage serializes giant
     tasks behind the normal wave; BENCH/BASELINE.md §23)."""
-    docs = extracted.select("doc_id", "issues")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield enrich_batch(pdf)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows:
+                yield enrich_record_batch(rb)
 
-    return docs.mapInPandas(run, schema=ENRICHED_SCHEMA)
+    return extracted.select("doc_id", "issues").mapInArrow(
+        run, schema=ENRICHED_SCHEMA)

@@ -3,7 +3,7 @@
 Faithful transcription of src/estimation/relationship_analyzer.py
 (:31-100 pattern tables, :237-460 chain/bundle discovery). Document-local
 (an issue only relates to issues of the same report), so it runs inside
-the same per-doc mapInPandas batches as the rest of enrichment.
+the same per-doc mapInArrow batches as the rest of enrichment.
 """
 
 from __future__ import annotations

@@ -1,9 +1,9 @@
 """Adversarial parity fuzz: the production enrichment plan
-(plans/enrichment.enrich_extracted, the mapInPandas pass the jobs run)
+(plans/enrichment.enrich_extracted, the mapInArrow pass the jobs run)
 must stay field-identical to the all-python enrich_document path on
 hostile issue corpora — unicode text, empty/giant descriptions, odd
-statuses, boilerplate titles, measurement soup — after the issues cross
-the Arrow<->pandas struct mapping both ways. Complements
+statuses, boilerplate titles, measurement soup, zero to three pages —
+after the issues cross the Spark<->Arrow struct mapping both ways. Complements
 test_enrichment.py's standard-corpus parity with the nasty tail."""
 
 import math
@@ -63,7 +63,8 @@ def gen(n_docs, seed):
                 "title": rng.choice(TITLES),
                 "description": rng.choice(DESCS) + (
                     " " + rng.choice(DESCS) if rng.random() < 0.4 else ""),
-                "page_numbers": [rng.randint(1, 40)],
+                "page_numbers": sorted(rng.sample(range(1, 41),
+                                                  rng.randint(0, 3))),
                 "estimated_cost": (
                     {"min": 100.0, "max": 900.0, "average": 500.0}
                     if rng.random() < 0.3 else None),
@@ -115,6 +116,8 @@ def test_enrich_parity_on_adversarial_issues(spark):
             for k in STRS:
                 assert row[k] == issue.get(k), \
                     f"{ctx}.{k}: {row[k]!r} != {issue.get(k)!r}"
+            assert row["page_numbers"] == issue["page_numbers"], \
+                f"{ctx}.page_numbers"
             for k in FLOATS:
                 assert math.isclose(row[k], issue.get(k), abs_tol=1e-9), \
                     f"{ctx}.{k}: {row[k]} != {issue.get(k)}"

@@ -3,8 +3,8 @@
 1. Reference-derived behavioural expectations on the 6-issue SAMPLE corpus
    (transcribed from /root/reference/tests/test_enrichment_pipeline.py:23-90
    and its asserts at :103-328).
-2. Spark (mapInPandas) vs direct-python golden equality on the synthetic
-   extraction corpus.
+2. Spark (the mapInArrow enrichment pass) vs direct-python golden
+   equality on the synthetic extraction corpus.
 """
 
 import math
@@ -206,6 +206,7 @@ def test_spark_matches_python(spark):
         assert len(g["issues"]) == len(want["issues"]), row.doc_id
         for gi, wi in zip(g["issues"], want["issues"]):
             for k in ("id", "section", "subsection", "status",
+                      "priority", "title", "description", "page_numbers",
                       "standard_severity", "standard_action",
                       "standard_category", "cost_strategy",
                       "is_grouped", "grouped_with", "is_duplicate",
@@ -241,15 +242,52 @@ def test_spark_matches_python(spark):
         assert ge == we, row.doc_id
 
 
+def _lcs_dp(a: str, b: str) -> int:
+    """Textbook O(len(a) * len(b)) LCS length."""
+    prev = [0] * (len(b) + 1)
+    for x in a:
+        cur = [0]
+        for j, y in enumerate(b):
+            cur.append(prev[j] + 1 if x == y else max(prev[j + 1], cur[j]))
+        prev = cur
+    return prev[-1]
+
+
+def _edited(rng, text: str, frac: float) -> str:
+    """``text`` with about ``frac`` of its characters substituted,
+    deleted or followed by an insertion."""
+    alphabet = "aeiou rstlnkzé中ß"
+    out = []
+    for ch in text:
+        if rng.random() >= frac:
+            out.append(ch)
+            continue
+        op = rng.randrange(3)
+        if op == 0:
+            out.append(rng.choice(alphabet))
+        elif op == 2:
+            out += [ch, rng.choice(alphabet)]
+    return "".join(out)
+
+
 def test_dup_tracker_memo_parity():
     """The process-wide memo layers (norm / matcher / pair-ratio /
-    pair-verdict caches) must be pure accelerators: a tracker running
-    with warm caches and one with cold caches give identical verdicts on
-    identical streams, including across repeated documents (hypothesis
-    property, seeded for determinism)."""
+    pair-verdict caches) and the LCS and prefix/suffix gates must be pure
+    accelerators: a tracker running with warm caches and one with cold
+    caches give identical verdicts on identical streams, including across
+    repeated documents (hypothesis property, seeded for determinism).
+
+    The second family of streams straddles the threshold: near-duplicates
+    whose LCS bound passes while difflib's ratio fails (over 200 chars
+    difflib's autojunk drops popular characters of the seen text), pairs
+    whose bound falls just short, and true duplicates, over repeated-char
+    and non-ASCII text. On every pair difflib's ratio is at most the LCS
+    bound, and the bit-parallel LCS equals the textbook one; under 200
+    chars it is at least the common prefix/suffix bound."""
     import random
 
     from difflib import SequenceMatcher
+    from os.path import commonprefix
 
     from pdf_extraction_spark import enrich_rules as er
     from pdf_extraction_spark import rules
@@ -277,6 +315,7 @@ def test_dup_tracker_memo_parity():
     words = ["water", "heater", "shows", "corrosion", "at", "the", "base",
              "roof", "leak", "window", "crack", "minor", "repair", "wall",
              "électrique", "中文"]
+    streams = []
     for trial in range(30):
         base = " ".join(rng.choices(words, k=rng.randint(3, 12)))
         stream = []
@@ -291,6 +330,45 @@ def test_dup_tracker_memo_parity():
             else:                                        # unrelated
                 stream.append(" ".join(
                     rng.choices(words, k=rng.randint(3, 12))))
+        streams.append(stream)
+
+    thr = rules.DUPLICATE_SIMILARITY_THRESHOLD
+    words += ["aaaaaaaa", "zzz", "ooooo leak", "ñandú", "straße", "水"]
+    seen_kinds = {"lcs_only": 0, "near_miss": 0, "dup": 0, "long": 0,
+                  "ends_proof": 0}
+    for trial in range(24):
+        k = rng.randint(40, 60) if trial % 2 else rng.randint(4, 14)
+        base = " ".join(rng.choices(words, k=k))
+        stream = [base]
+        for _ in range(rng.randint(3, 6)):
+            # every char may change, or only the tail's
+            cut = rng.choice([0, len(base) * 7 // 8])
+            stream.append(base[:cut] + _edited(
+                rng, base[cut:], rng.uniform(0.02, 0.12) * len(base) /
+                (len(base) - cut)))
+        norms = [er.clean_text(t.lower()) for t in stream]
+        for i, a in enumerate(norms):
+            for b in norms[:i]:
+                lcs = _lcs_dp(a, b)
+                assert er._lcs_len(er._char_masks(a), len(a), b) == lcs
+                bound = 2.0 * lcs / (len(a) + len(b))
+                ratio = SequenceMatcher(None, a, b).ratio()
+                assert ratio <= bound, (a, b)
+                ends = max(len(commonprefix([a, b])),
+                           len(commonprefix([a[::-1], b[::-1]])))
+                assert er._common_end(a, b) == ends
+                floor = 2.0 * ends / (len(a) + len(b))
+                if len(b) < 200:
+                    assert ratio >= floor, (a, b)
+                    seen_kinds["ends_proof"] += floor >= thr
+                seen_kinds["lcs_only"] += ratio < thr <= bound
+                seen_kinds["near_miss"] += thr - 0.05 <= bound < thr
+                seen_kinds["dup"] += ratio >= thr
+                seen_kinds["long"] += len(b) > 200 and bound >= thr
+        streams.append(stream)
+    assert min(seen_kinds.values()) > 0, seen_kinds
+
+    for trial, stream in enumerate(streams):
         want = reference_verdicts(stream)
         # run the SAME stream twice: first call warms the process-wide
         # caches, second call must hit the verdict memo — both equal the

@@ -50,12 +50,18 @@ def test_no_cartesian_products(docs, emb):
 def test_fused_extraction_zero_shuffle(spark):
     """The fused extraction kernel is scan -> mapInArrow -> project:
     embarrassingly parallel, no Exchange anywhere (BENCH/BASELINE.md's
-    headline 100x-scale property)."""
+    headline 100x-scale property). Enrichment after it adds one more
+    mapInArrow and still no Exchange."""
     from pdf_extraction_spark import corpus
+    from pdf_extraction_spark.plans.enrichment import enrich_extracted
     from pdf_extraction_spark.plans.fused import assemble_fused
 
     df = assemble_fused(corpus.generate_docs(spark, 50, partitions=2))
     assert "Exchange" not in _plan(df)
+    plan = _plan(enrich_extracted(df))
+    assert plan.count("MapInArrow") == 2 and "Exchange" not in plan, plan
+    # the one MapInPandas is the corpus generator under the fused pass
+    assert plan.count("MapInPandas") == 1, plan
 
 
 def test_salted_branch_salts_chunks(spark):

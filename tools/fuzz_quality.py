@@ -6,7 +6,10 @@ twins on random adversarial ASCII corpora.
 Corpus generator biases toward PII-shaped fragments (digit groups, dots,
 dashes, @, TLD-ish tails) and repetition-shaped structure (newlines,
 repeated lines/tokens, blank/space-only lines) so both rule sets fire
-constantly rather than never.
+constantly rather than never: about a third of the documents repeat one
+of their own lines one to three times, space-padded (the same line once
+trimmed) or tab-padded (another line), so duplicate-line ppm is often
+non-zero and sometimes counts a line repeated more than once.
 """
 import random
 
@@ -33,7 +36,17 @@ def gen_text(rng: random.Random) -> str:
             parts.append(rng.choice(WORDS))
         if rng.random() < 0.85:
             parts.append(rng.choice([" ", " ", "  ", "\t"]))
-    return "".join(parts)
+    text = "".join(parts)
+    lines = text.split("\n")
+    own = [ln for ln in lines if ln.strip(" ")]
+    if own and rng.random() < 0.4:
+        pad = ["", " ", " ", "  ", "\t"]
+        line = rng.choice(own)
+        for _ in range(rng.randint(1, 3)):
+            lines.insert(rng.randint(0, len(lines)),
+                         rng.choice(pad) + line + rng.choice(pad))
+        text = "\n".join(lines)
+    return text
 
 
 def sql_pii() -> str:
