@@ -1623,36 +1623,134 @@ def _png_up_encode(data: bytes, columns: int) -> bytes:
     return bytes(out)
 
 
+# ------------------------------------------------------ PDF serializer
+# Every writer below and tools/fuzz_pdffile.py lay files out through
+# these helpers: objects, classic xref tables, xref and object streams.
+
 def _stream_obj(body: bytes, extra: str = "") -> bytes:
     return (f"<< /Length {len(body)}{extra} >>\nstream\n"
             .encode("latin-1") + body + b"\nendstream")
 
 
-def _encode_page1(content: bytes, doc_id: int) -> bytes:
-    v = doc_id % 4
-    if v == 1:
-        return _stream_obj(zlib.compress(content),
-                           " /Filter /FlateDecode")
-    if v == 2:
-        return _stream_obj(_ascii_hex_encode(content),
-                           " /Filter /ASCIIHexDecode")
-    if v == 3:
-        return _stream_obj(_ascii85_encode(content),
-                           " /Filter /ASCII85Decode")
-    return _stream_obj(content)
+# (encoder, /Filter clause) per stream encoding, indexed by the
+# writers: none, Flate, AHx, A85, RunLength, LZW, and the [AHx Fl]
+# chain (Flate first at write time, so a reader decodes AHx, then Flate)
+_ENCODINGS: tuple[tuple[Callable[[bytes], bytes], str], ...] = (
+    (lambda data: data, ""),
+    (zlib.compress, " /Filter /FlateDecode"),
+    (_ascii_hex_encode, " /Filter /ASCIIHexDecode"),
+    (_ascii85_encode, " /Filter /ASCII85Decode"),
+    (_run_length_encode, " /Filter /RunLengthDecode"),
+    (lzw_encode, " /Filter /LZWDecode"),
+    (lambda data: _ascii_hex_encode(zlib.compress(data)),
+     " /Filter [/ASCIIHexDecode /FlateDecode]"),
+)
 
 
-def _encode_page2(content: bytes, doc_id: int) -> bytes:
-    v = doc_id % 3
-    if v == 0:
-        return _stream_obj(_run_length_encode(content),
-                           " /Filter /RunLengthDecode")
-    if v == 2:
-        return _stream_obj(lzw_encode(content), " /Filter /LZWDecode")
-    # chain: Flate first at write time, AHx second -> decode AHx, Flate
-    enc = _ascii_hex_encode(zlib.compress(content))
-    return _stream_obj(enc,
-                       " /Filter [/ASCIIHexDecode /FlateDecode]")
+def _encoded_stream(k: int, data: bytes) -> bytes:
+    """Stream object of ``data`` under encoding ``_ENCODINGS[k]``."""
+    encode, clause = _ENCODINGS[k]
+    return _stream_obj(encode(data), clause)
+
+
+_HEADER = b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n"
+
+
+def _emit(out: bytearray, num: int, body: bytes) -> int:
+    """Append indirect object ``num``; returns its offset."""
+    off = len(out)
+    out += f"{num} 0 obj\n".encode("latin-1") + body + b"\nendobj\n"
+    return off
+
+
+def _objects(bodies: dict[int, bytes]) -> tuple[bytearray, dict[int, int]]:
+    """The header and ``bodies`` in object-number order: (file so far,
+    offset per object)."""
+    out = bytearray(_HEADER)
+    return out, {num: _emit(out, num, bodies[num]) for num in sorted(bodies)}
+
+
+def _runs(nums) -> list[tuple[int, int]]:
+    """(start, count) per run of consecutive numbers in ``nums``."""
+    runs: list[tuple[int, int]] = []
+    for num in sorted(nums):
+        if runs and runs[-1][0] + runs[-1][1] == num:
+            runs[-1] = (runs[-1][0], runs[-1][1] + 1)
+        else:
+            runs.append((num, 1))
+    return runs
+
+
+def _startxref(out: bytearray, xref_off: int) -> None:
+    out += f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1")
+
+
+def _xref_table(out: bytearray, offsets: dict[int, int],
+                sections: list[tuple[int, int]], trailer: str) -> int:
+    """Append a classic xref table with one subsection per (start,
+    count) of ``sections`` (object 0 is the free-list head), a trailer
+    dict of the ``trailer`` entries and the footer; returns the table's
+    offset."""
+    xref_off = len(out)
+    out += b"xref\n"
+    for start, count in sections:
+        out += f"{start} {count}\n".encode("latin-1")
+        for num in range(start, start + count):
+            out += (f"{offsets[num]:010d} 00000 n \n".encode("latin-1")
+                    if num else b"0000000000 65535 f \n")
+    out += f"trailer\n<< {trailer} >>\n".encode("latin-1")
+    _startxref(out, xref_off)
+    return xref_off
+
+
+def _classic_pdf(bodies: dict[int, bytes],
+                 sections: list[tuple[int, int]], trailer: str) -> bytes:
+    """One-revision file: ``bodies`` in number order, then a classic
+    xref over ``sections`` whose trailer holds ``/Size`` and the
+    ``trailer`` entries."""
+    out, offsets = _objects(bodies)
+    _xref_table(out, offsets, sections,
+                f"/Size {max(bodies) + 1} {trailer}")
+    return bytes(out)
+
+
+def _xref_row(typ: int, f2: int, f3: int) -> bytes:
+    """One ``/W [1 3 1]`` xref-stream entry."""
+    return bytes([typ]) + f2.to_bytes(3, "big") + bytes([f3])
+
+
+def _xref_stream(rows: dict[int, bytes], sections: list[tuple[int, int]],
+                 size: int, trailer: str, png: bool, extra: str) -> bytes:
+    """Xref stream object: the ``rows`` (number -> ``_xref_row``) of
+    each (start, count) of ``sections`` in that order, Flate-compressed
+    (through the PNG Up predictor when ``png``), with the ``trailer``
+    entries before ``/Filter`` and ``extra`` at the end of the dict."""
+    table = b"".join(rows[num] for start, count in sections
+                     for num in range(start, start + count))
+    parms = ""
+    if png:
+        table = _png_up_encode(table, 5)
+        parms = " /DecodeParms << /Predictor 12 /Columns 5 >>"
+    index = " ".join(f"{start} {count}" for start, count in sections)
+    return _stream_obj(
+        zlib.compress(table),
+        f" /Type /XRef /Size {size} /W [1 3 1] /Index [{index}] "
+        f"{trailer} /Filter /FlateDecode{parms}{extra}")
+
+
+def _objstm(members: list[tuple[int, bytes]]) -> bytes:
+    """Flate object stream holding the (number, body) ``members`` in
+    that order."""
+    head, off = [], 0
+    for num, body in members:
+        head.append(f"{num} {off}")
+        off += len(body) + 1
+    first = " ".join(head).encode("latin-1") + b"\n"
+    payload = first + b"\n".join(body for _, body in members) + b"\n"
+    return _stream_obj(
+        zlib.compress(payload),
+        f" /Type /ObjStm /N {len(members)} /First {len(first)} "
+        f"/Filter /FlateDecode")
 
 
 def build_pdf(doc_id: int, text: str) -> bytes:
@@ -1664,7 +1762,9 @@ def build_pdf(doc_id: int, text: str) -> bytes:
     the title — classic xref table for even doc_id, xref STREAM +
     object stream (fonts + Info compressed) for odd.  Every
     structural branch of the parser above is reached across
-    doc_id mod 12."""
+    doc_id mod 12.
+
+    Text domain: any ``str``; the text is written as utf-8."""
     p = (text or "") + PAD
     sl = {k: escape_literal(p[a - 1:a - 1 + n])
           for k, (a, n) in SLICES.items()}
@@ -1683,8 +1783,8 @@ def build_pdf(doc_id: int, text: str) -> bytes:
         4: (b"<< /Type /Pages /Parent 2 0 R /Kids [5 0 R] "
             b"/Count 1 >>"),
         5: b"<< /Type /Page /Parent 4 0 R /Contents [7 0 R] >>",
-        6: _encode_page1(page1, doc_id),
-        7: _encode_page2(page2, doc_id),
+        6: _encoded_stream(doc_id % 4, page1),
+        7: _encoded_stream((4, 6, 5)[doc_id % 3], page2),
         10: (b"<< /Type /XObject /Subtype /Image /Width 4 /Height 4 "
              b"/ColorSpace /DeviceGray /BitsPerComponent 8 "
              b"/Length 16 >>\nstream\n" + img + b"\nendstream"),
@@ -1695,91 +1795,36 @@ def build_pdf(doc_id: int, text: str) -> bytes:
             f"/Producer (pdf-extraction-spark) >>").encode("latin-1")
     info2 = (f"<< /Title (Doc {doc_id} rev2) "
              f"/Producer (pdf-extraction-spark) >>").encode("latin-1")
-
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets: dict[int, int] = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(body)
-        out.extend(b"\nendobj\n")
+    trailer = "/Root 1 0 R /Info 11 0 R"
 
     if doc_id % 2 == 0:  # ---------- classic xref table
         bodies[8], bodies[9], bodies[11] = font1, font2, info
-        for num in sorted(bodies):
-            emit(num, bodies[num])
-        xref_off = len(out)
-        out.extend(b"xref\n0 12\n")
-        out.extend(b"0000000000 65535 f \n")
-        for num in range(1, 12):
-            out.extend(f"{offsets[num]:010d} 00000 n \n"
-                       .encode("latin-1"))
-        out.extend(b"trailer\n<< /Size 12 /Root 1 0 R /Info 11 0 R >>\n")
-        out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
+        out, offsets = _objects(bodies)
+        xref_off = _xref_table(out, offsets, _runs({0, *bodies}),
+                               f"/Size 12 {trailer}")
         # incremental update: revise the title
-        emit(11, info2)
-        x2 = len(out)
-        out.extend(b"xref\n11 1\n")
-        out.extend(f"{offsets[11]:010d} 00000 n \n".encode("latin-1"))
-        out.extend(f"trailer\n<< /Size 12 /Root 1 0 R /Info 11 0 R "
-                   f"/Prev {xref_off} >>\n".encode("latin-1"))
-        out.extend(f"startxref\n{x2}\n%%EOF\n".encode("latin-1"))
-    else:  # ---------- xref stream + object stream
-        for num in sorted(bodies):
-            emit(num, bodies[num])
-        # ObjStm 12 holds 8, 9, 11 (fonts + Info)
-        parts = [(8, font1), (9, font2), (11, info)]
-        hdr, body, off = [], [], 0
-        for num, b in parts:
-            hdr.append(f"{num} {off}")
-            body.append(b)
-            off += len(b) + 1
-        payload = (" ".join(hdr)).encode("latin-1") + b"\n" \
-            + b"\n".join(body) + b"\n"
-        first = len((" ".join(hdr)).encode("latin-1")) + 1
-        emit(12, _stream_obj(
-            zlib.compress(payload),
-            f" /Type /ObjStm /N 3 /First {first} "
-            f"/Filter /FlateDecode"))
-
-        def xrow(typ: int, f2: int, f3: int) -> bytes:
-            return bytes([typ]) + f2.to_bytes(3, "big") + bytes([f3])
-
-        rows = [xrow(0, 0, 255)]
-        for num in range(1, 8):
-            rows.append(xrow(1, offsets[num], 0))
-        rows.append(xrow(2, 12, 0))   # 8
-        rows.append(xrow(2, 12, 1))   # 9
-        rows.append(xrow(1, offsets[10], 0))
-        rows.append(xrow(2, 12, 2))   # 11
-        rows.append(xrow(1, offsets[12], 0))
-        xref_off = len(out)
-        rows.append(xrow(1, xref_off, 0))  # 13 = this stream
-        table = b"".join(rows)
-        if doc_id % 4 == 1:  # PNG Up predictor on the xref stream
-            enc = zlib.compress(_png_up_encode(table, 5))
-            extra = (" /Type /XRef /Size 14 /W [1 3 1] /Index [0 14] "
-                     "/Root 1 0 R /Info 11 0 R /Filter /FlateDecode "
-                     "/DecodeParms << /Predictor 12 /Columns 5 >>")
-        else:
-            enc = zlib.compress(table)
-            extra = (" /Type /XRef /Size 14 /W [1 3 1] /Index [0 14] "
-                     "/Root 1 0 R /Info 11 0 R /Filter /FlateDecode")
-        emit(13, _stream_obj(enc, extra))
-        out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
-        # incremental update: plain revised Info + new xref stream
-        emit(11, info2)
-        x2 = len(out)
-        rows2 = [xrow(1, offsets[11], 0), xrow(1, x2, 0)]
-        enc2 = zlib.compress(b"".join(rows2))
-        emit(14, _stream_obj(
-            enc2,
-            f" /Type /XRef /Size 15 /W [1 3 1] /Index [11 1 14 1] "
-            f"/Root 1 0 R /Info 11 0 R /Prev {xref_off} "
-            f"/Filter /FlateDecode"))
-        # fix: the emit above recorded offsets[14] == x2 already
-        out.extend(f"startxref\n{x2}\n%%EOF\n".encode("latin-1"))
+        offsets[11] = _emit(out, 11, info2)
+        _xref_table(out, offsets, [(11, 1)],
+                    f"/Size 12 {trailer} /Prev {xref_off}")
+        return bytes(out)
+    # ---------- xref stream + object stream 12 (fonts + Info)
+    bodies[12] = _objstm([(8, font1), (9, font2), (11, info)])
+    out, offsets = _objects(bodies)
+    xref_off = len(out)
+    rows = {num: _xref_row(1, off, 0) for num, off in offsets.items()}
+    rows |= {num: _xref_row(2, 12, k) for k, num in enumerate((8, 9, 11))}
+    rows |= {0: _xref_row(0, 0, 255), 13: _xref_row(1, xref_off, 0)}
+    # PNG Up predictor on the xref stream for doc_id % 4 == 1
+    _emit(out, 13, _xref_stream(rows, _runs(rows), 14, trailer,
+                                doc_id % 4 == 1, ""))
+    _startxref(out, xref_off)
+    # incremental update: plain revised Info + new xref stream
+    info2_off = _emit(out, 11, info2)
+    x2 = len(out)
+    rows = {11: _xref_row(1, info2_off, 0), 14: _xref_row(1, x2, 0)}
+    _emit(out, 14, _xref_stream(rows, _runs(rows), 15,
+                                f"{trailer} /Prev {xref_off}", False, ""))
+    _startxref(out, x2)
     return bytes(out)
 
 
@@ -1794,7 +1839,9 @@ def build_pdf_cmap(doc_id: int, text: str) -> bytes:
     mapped back by one bfrange) next to a plain-encoded line — the
     embedded-font shape real PDFs use.  Parsing it to the original
     text exercises CMap extraction end-to-end; the oracle states the
-    expected spans in closed form from the same slices."""
+    expected spans in closed form from the same slices.
+
+    Text domain: any ``str``; the text is written as utf-8."""
     p = (text or "") + PAD
     sl = {k: p[a - 1:a - 1 + n] for k, (a, n) in CMAP_SLICES.items()}
 
@@ -1817,28 +1864,13 @@ def build_pdf_cmap(doc_id: int, text: str) -> bytes:
             b"/MediaBox [0 0 612 792] /Resources << /Font "
             b"<< /F1 5 0 R /TU 6 0 R >> >> >>"),
         3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
-        4: (f"<< /Length {len(content)} >>\nstream\n".encode("latin-1")
-            + content + b"\nendstream"),
+        4: _stream_obj(content),
         5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
         6: (b"<< /Type /Font /Subtype /Type0 /BaseFont /Embedded-TU "
             b"/Encoding /Identity-H /ToUnicode 7 0 R >>"),
-        7: (f"<< /Length {len(cmap_enc)} /Filter /FlateDecode >>\n"
-            f"stream\n".encode("latin-1") + cmap_enc + b"\nendstream"),
+        7: _stream_obj(cmap_enc, " /Filter /FlateDecode"),
     }
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    xref_off = len(out)
-    out.extend(b"xref\n0 8\n0000000000 65535 f \n")
-    for num in range(1, 8):
-        out.extend(f"{offsets[num]:010d} 00000 n \n".encode("latin-1"))
-    out.extend(b"trailer\n<< /Size 8 /Root 1 0 R >>\n")
-    out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
-    return bytes(out)
+    return _classic_pdf(bodies, _runs({0, *bodies}), "/Root 1 0 R")
 
 
 # decorations the simple-font encodings resolve, stated once so the
@@ -1863,7 +1895,11 @@ def build_pdf_encoding(doc_id: int, text: str) -> bytes:
     back to the decorated text proves the glyphlist/encoding_map path
     end-to-end (reference src/extraction/text_extractor.pyc reads
     already-decoded text from its PDF library; rebuilt from scratch
-    the §9.6.5 resolution is explicit — functions/glyphlist.py)."""
+    the §9.6.5 resolution is explicit — functions/glyphlist.py).
+
+    Text domain: latin-1.  The slices of ``text`` it shows are
+    written as latin-1, so any other character in them raises
+    ``UnicodeEncodeError``."""
     p = (text or "") + PAD
     sl = {k: escape_literal(p[a - 1:a - 1 + n])
           for k, (a, n) in CMAP_SLICES.items()}
@@ -1880,8 +1916,7 @@ def build_pdf_encoding(doc_id: int, text: str) -> bytes:
             b"/MediaBox [0 0 612 792] /Resources << /Font "
             b"<< /F1 5 0 R /FW 6 0 R /FD 7 0 R >> >> >>"),
         3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
-        4: (f"<< /Length {len(content)} >>\nstream\n".encode("latin-1")
-            + content + b"\nendstream"),
+        4: _stream_obj(content),
         5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
         6: (b"<< /Type /Font /Subtype /TrueType /BaseFont /Arial "
             b"/Encoding /WinAnsiEncoding >>"),
@@ -1890,20 +1925,7 @@ def build_pdf_encoding(doc_id: int, text: str) -> bytes:
         8: (b"<< /Type /Encoding /BaseEncoding /MacRomanEncoding "
             b"/Differences [36 /Euro /bullet 216 /emdash] >>"),
     }
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    xref_off = len(out)
-    out.extend(b"xref\n0 9\n0000000000 65535 f \n")
-    for num in range(1, 9):
-        out.extend(f"{offsets[num]:010d} 00000 n \n".encode("latin-1"))
-    out.extend(b"trailer\n<< /Size 9 /Root 1 0 R >>\n")
-    out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
-    return bytes(out)
+    return _classic_pdf(bodies, _runs({0, *bodies}), "/Root 1 0 R")
 
 
 # slices for the /Widths gate (fixed lengths -> constant geometry)
@@ -1930,6 +1952,10 @@ def build_pdf_widths(doc_id: int, text: str) -> bytes:
       geometry through 2-byte CIDs, so the §9.7.4.3 /W parse (both
       forms) and the /DW fallback are pinned by the same join
       pattern.
+
+    Text domain: latin-1.  The slices of ``text`` it shows are
+    written as latin-1, so any other character in them raises
+    ``UnicodeEncodeError``.
     """
     p = (text or "") + PAD
     sl = {k: escape_literal(p[a - 1:a - 1 + n])
@@ -1960,8 +1986,7 @@ def build_pdf_widths(doc_id: int, text: str) -> bytes:
             b"/MediaBox [0 0 612 792] /Resources << /Font "
             b"<< /F1 5 0 R /FV 6 0 R /FB 7 0 R /FC 10 0 R >> >> >>"),
         3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
-        4: (f"<< /Length {len(content)} >>\nstream\n".encode("latin-1")
-            + content + b"\nendstream"),
+        4: _stream_obj(content),
         5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
         6: (b"<< /Type /Font /Subtype /Type1 /BaseFont /VarWidths "
             b"/FirstChar 105 /LastChar 109 "
@@ -1978,23 +2003,9 @@ def build_pdf_widths(doc_id: int, text: str) -> bytes:
              b"/ToUnicode 12 0 R >>"),
         11: (b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /CidW "
              b"/W [105 [250] 109 109 1000] /DW 500 >>"),
-        12: (f"<< /Length {len(cmap)} >>\nstream\n".encode("latin-1")
-             + cmap + b"\nendstream"),
+        12: _stream_obj(cmap),
     }
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    xref_off = len(out)
-    out.extend(b"xref\n0 13\n0000000000 65535 f \n")
-    for num in range(1, 13):
-        out.extend(f"{offsets[num]:010d} 00000 n \n".encode("latin-1"))
-    out.extend(b"trailer\n<< /Size 13 /Root 1 0 R >>\n")
-    out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
-    return bytes(out)
+    return _classic_pdf(bodies, _runs({0, *bodies}), "/Root 1 0 R")
 
 
 def build_pdf_xobject(doc_id: int, text: str) -> bytes:
@@ -2009,7 +2020,11 @@ def build_pdf_xobject(doc_id: int, text: str) -> bytes:
     the invoking scope.  Expected spans are closed-form: each
     invocation re-emits the form's text at its translated position,
     so layout yields p | enc(a) | b | enc(a) | b | Im1 | Im1 in
-    y-order."""
+    y-order.
+
+    Text domain: latin-1.  The slices of ``text`` it shows are
+    written as latin-1, so any other character in them raises
+    ``UnicodeEncodeError``."""
     p = (text or "") + PAD
     sl = {k: escape_literal(p[a - 1:a - 1 + n])
           for k, (a, n) in CMAP_SLICES.items()}
@@ -2031,8 +2046,7 @@ def build_pdf_xobject(doc_id: int, text: str) -> bytes:
             b"/Font << /F1 5 0 R >> "
             b"/XObject << /Fm1 6 0 R >> >> >>"),
         3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
-        4: (f"<< /Length {len(page)} >>\nstream\n".encode("latin-1")
-            + page + b"\nendstream"),
+        4: _stream_obj(page),
         5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
         6: (f"<< /Type /XObject /Subtype /Form /Matrix [1 0 0 1 0 -6] "
             f"/BBox [0 0 612 792] /Resources << "
@@ -2050,20 +2064,7 @@ def build_pdf_xobject(doc_id: int, text: str) -> bytes:
             f"/Length {len(fm2)} >>\nstream\n".encode("latin-1")
             + fm2 + b"\nendstream"),
     }
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    xref_off = len(out)
-    out.extend(b"xref\n0 10\n0000000000 65535 f \n")
-    for num in range(1, 10):
-        out.extend(f"{offsets[num]:010d} 00000 n \n".encode("latin-1"))
-    out.extend(b"trailer\n<< /Size 10 /Root 1 0 R >>\n")
-    out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
-    return bytes(out)
+    return _classic_pdf(bodies, _runs({0, *bodies}), "/Root 1 0 R")
 
 
 def build_pdf_acroform(doc_id: int, text: str) -> bytes:
@@ -2074,7 +2075,11 @@ def build_pdf_acroform(doc_id: int, text: str) -> bytes:
     by the valueless `note` kid), an own-typed choice kid, and a
     button field whose two /T-less widget kids must collapse to ONE
     row.  Values are text slices / doc_id-parity picks so the oracle
-    states every row in closed form."""
+    states every row in closed form.
+
+    Text domain: latin-1.  The slices of ``text`` it shows are
+    written as latin-1, so any other character in them raises
+    ``UnicodeEncodeError``."""
     p = (text or "") + PAD
     sl = {k: escape_literal(p[a - 1:a - 1 + n])
           for k, (a, n) in CMAP_SLICES.items()}
@@ -2088,8 +2093,7 @@ def build_pdf_acroform(doc_id: int, text: str) -> bytes:
             b"/MediaBox [0 0 612 792] /Resources << /Font "
             b"<< /F1 5 0 R >> >> >>"),
         3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
-        4: (f"<< /Length {len(content)} >>\nstream\n".encode("latin-1")
-            + content + b"\nendstream"),
+        4: _stream_obj(content),
         5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
         10: (f"<< /T (owner) /FT /Tx /V ({sl['a']}) >>"
              .encode("latin-1")),
@@ -2107,21 +2111,9 @@ def build_pdf_acroform(doc_id: int, text: str) -> bytes:
         17: (b"<< /Type /Annot /Subtype /Widget "
              b"/Rect [72 140 90 158] >>"),
     }
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    xref_off = len(out)
-    out.extend(b"xref\n0 1\n0000000000 65535 f \n")
-    for num in sorted(bodies):
-        out.extend(f"{num} 1\n{offsets[num]:010d} 00000 n \n"
-                   .encode("latin-1"))
-    out.extend(b"trailer\n<< /Size 18 /Root 1 0 R >>\n")
-    out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
-    return bytes(out)
+    return _classic_pdf(
+        bodies, [(0, 1)] + [(num, 1) for num in sorted(bodies)],
+        "/Root 1 0 R")
 
 
 def build_pdf_annots(doc_id: int, text: str) -> bytes:
@@ -2130,7 +2122,12 @@ def build_pdf_annots(doc_id: int, text: str) -> bytes:
     NOT produce a second row) on page 1 next to a /Link (no reviewer
     text, excluded), a /Highlight on page 2 and — odd docs only — a
     /Square; all /Contents are text slices so the oracle states every
-    row in closed form."""
+    row in closed form.
+
+    Text domain: latin-1 over characters 21-132 of
+    ``text`` (the /Contents slices), which raise
+    ``UnicodeEncodeError`` on any other character;
+    the rest is not written."""
     p = (text or "") + PAD
     sl = {k: escape_literal(p[a - 1:a - 1 + n])
           for k, (a, n) in SLICES.items()}
@@ -2147,10 +2144,8 @@ def build_pdf_annots(doc_id: int, text: str) -> bytes:
             b"/Annots [8 0 R 9 0 R 10 0 R 11 0 R] >>"),
         4: (b"<< /Type /Page /Parent 2 0 R /Contents 6 0 R "
             b"/Annots " + annots2 + b" >>"),
-        5: (f"<< /Length {len(page1)} >>\nstream\n".encode("latin-1")
-            + page1 + b"\nendstream"),
-        6: (f"<< /Length {len(page2)} >>\nstream\n".encode("latin-1")
-            + page2 + b"\nendstream"),
+        5: _stream_obj(page1),
+        6: _stream_obj(page2),
         7: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
         8: (f"<< /Type /Annot /Subtype /FreeText /Rect [72 600 200 "
             f"620] /Contents ({sl['a']}) >>".encode("latin-1")),
@@ -2169,22 +2164,9 @@ def build_pdf_annots(doc_id: int, text: str) -> bytes:
     }
     if not odd:
         del bodies[13]
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    xref_off = len(out)
-    out.extend(b"xref\n0 1\n0000000000 65535 f \n")
-    for num in sorted(bodies):
-        out.extend(f"{num} 1\n{offsets[num]:010d} 00000 n \n"
-                   .encode("latin-1"))
-    out.extend(f"trailer\n<< /Size {max(bodies) + 1} /Root 1 0 R "
-               f">>\n".encode("latin-1"))
-    out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
-    return bytes(out)
+    return _classic_pdf(
+        bodies, [(0, 1)] + [(num, 1) for num in sorted(bodies)],
+        "/Root 1 0 R")
 
 
 def build_pdf_nav(doc_id: int, text: str) -> bytes:
@@ -2193,7 +2175,9 @@ def build_pdf_nav(doc_id: int, text: str) -> bytes:
     second top item via an /A GoTo action) and /Link annotations
     carrying /URI actions (two on page 1, one doc_id%2-conditional on
     page 2) — the writer for the `pdf_file_outline` /
-    `pdf_file_links` oracle gates."""
+    `pdf_file_links` oracle gates.
+
+    Text domain: any ``str``; the text is written as utf-8."""
     p = (text or "") + PAD
     sl = {k: escape_literal(p[a - 1:a - 1 + n])
           for k, (a, n) in CMAP_SLICES.items()}
@@ -2212,10 +2196,8 @@ def build_pdf_nav(doc_id: int, text: str) -> bytes:
             b"/Annots [10 0 R 11 0 R] >>"),
         4: (b"<< /Type /Page /Parent 2 0 R /Contents 6 0 R"
             + annots2 + b" >>"),
-        5: (f"<< /Length {len(page1)} >>\nstream\n".encode()
-            + page1 + b"\nendstream"),
-        6: (f"<< /Length {len(page2)} >>\nstream\n".encode()
-            + page2 + b"\nendstream"),
+        5: _stream_obj(page1),
+        6: _stream_obj(page2),
         7: (b"<< /Type /Outlines /First 8 0 R /Last 13 0 R "
             b"/Count 3 >>"),
         8: (b"<< /Title " + _lit_bytes(
@@ -2242,38 +2224,14 @@ def build_pdf_nav(doc_id: int, text: str) -> bytes:
                   ).encode()
     bodies[16] = (b"<< /Type /Filespec /F (a.txt) "
                   b"/EF << /F 17 0 R >> >>")
-    bodies[17] = (f"<< /Length {len(attach_enc)} /Type /EmbeddedFile "
-                  f"/Filter /FlateDecode >>\nstream\n".encode()
-                  + attach_enc + b"\nendstream")
+    bodies[17] = _stream_obj(attach_enc,
+                             " /Type /EmbeddedFile /Filter /FlateDecode")
     if odd:
         bodies[12] = (
             f"<< /Type /Annot /Subtype /Link /Rect [0 0 50 10] "
             f"/A << /S /URI /URI (http://h{doc_id % 5}.test/p"
             f"{doc_id}) >> >>").encode()
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    size = max(bodies) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n")
-    entries = sorted(offsets)
-    i = 0
-    out.extend(b"0 1\n0000000000 65535 f \n")
-    while i < len(entries):
-        j = i
-        while j + 1 < len(entries) and entries[j + 1] == entries[j] + 1:
-            j += 1
-        out.extend(f"{entries[i]} {j - i + 1}\n".encode())
-        for num in entries[i:j + 1]:
-            out.extend(f"{offsets[num]:010d} 00000 n \n".encode())
-        i = j + 1
-    out.extend(f"trailer\n<< /Size {size} /Root 1 0 R >>\n"
-               f"startxref\n{xref_off}\n%%EOF\n".encode())
-    return bytes(out)
+    return _classic_pdf(bodies, [(0, 1)] + _runs(bodies), "/Root 1 0 R")
 
 
 def _lit_bytes(b: bytes) -> bytes:
@@ -2298,7 +2256,9 @@ def build_pdf_encrypted(doc_id: int, text: str) -> bytes:
     page content stream and the /Info title are encrypted with the
     per-object (or, for R6, file) keys; the password-record entries
     follow the spec's algorithms so any conforming reader opens the
-    file."""
+    file.
+
+    Text domain: any ``str``; the text is written as utf-8."""
     import hashlib
 
     p = (text or "") + PAD
@@ -2381,8 +2341,7 @@ def build_pdf_encrypted(doc_id: int, text: str) -> bytes:
             b"/MediaBox [0 0 612 792] /Resources << /Font "
             b"<< /F1 5 0 R /F2 6 0 R >> >> >>"),
         3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
-        4: (f"<< /Length {len(content_enc)} >>\nstream\n"
-            .encode("latin-1") + content_enc + b"\nendstream"),
+        4: _stream_obj(content_enc),
         5: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
         6: b"<< /Type /Font /Subtype /Type1 /BaseFont /Courier >>",
         7: b"<< /Title " + _lit_bytes(title_enc) + b" >>",
@@ -2390,79 +2349,42 @@ def build_pdf_encrypted(doc_id: int, text: str) -> bytes:
             f"/P {perm} /O ".encode("latin-1") + _lit_bytes(o_val)
             + b" /U " + _lit_bytes(u_val) + extra_entries + b" >>"),
     }
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    xref_off = len(out)
-    out.extend(b"xref\n0 9\n0000000000 65535 f \n")
-    for num in range(1, 9):
-        out.extend(f"{offsets[num]:010d} 00000 n \n".encode("latin-1"))
-    hid = fid.hex().encode("ascii")
-    out.extend(b"trailer\n<< /Size 9 /Root 1 0 R /Info 7 0 R "
-               b"/Encrypt 8 0 R /ID [<" + hid + b"> <" + hid
-               + b">] >>\n")
-    out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
-    return bytes(out)
+    hid = fid.hex()
+    return _classic_pdf(
+        bodies, _runs({0, *bodies}),
+        f"/Root 1 0 R /Info 7 0 R /Encrypt 8 0 R "
+        f"/ID [<{hid}> <{hid}>]")
 
 
+
+# every deterministic (doc_id, text) -> file writer, in the order the
+# damaged-file corpus cycles through them
+WRITERS = (build_pdf, build_pdf_cmap, build_pdf_encoding, build_pdf_widths,
+           build_pdf_xobject, build_pdf_encrypted, build_pdf_acroform,
+           build_pdf_annots, build_pdf_nav)
 def wrap_content_stream(variant: int, content: bytes) -> bytes:
     """Minimal single-page PDF file around a ready content stream —
     the scaling-corpus shape, where stream bytes track document size.
-    ``variant`` picks the stream filter (mod 4, same ladder as
-    ``build_pdf``) and the xref flavor (classic for even, xref STREAM
-    for odd), so a scaling run exercises both decode paths at corpus
-    width."""
-    v = variant % 4
-    if v == 1:
-        enc, filt = zlib.compress(content), " /Filter /FlateDecode"
-    elif v == 2:
-        enc, filt = _ascii_hex_encode(content), \
-            " /Filter /ASCIIHexDecode"
-    elif v == 3:
-        enc, filt = _ascii85_encode(content), \
-            " /Filter /ASCII85Decode"
-    else:
-        enc, filt = content, ""
+    ``variant`` picks the stream filter (``_ENCODINGS[variant % 4]``,
+    as ``build_pdf`` page 1) and the xref flavor (classic for even,
+    xref STREAM for odd), so a scaling run exercises both decode paths
+    at corpus width."""
     bodies = {
         1: b"<< /Type /Catalog /Pages 2 0 R >>",
         2: (b"<< /Type /Pages /Kids [3 0 R] /Count 1 "
             b"/MediaBox [0 0 612 792] >>"),
         3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
-        4: (f"<< /Length {len(enc)}{filt} >>\nstream\n"
-            .encode("latin-1") + enc + b"\nendstream"),
+        4: _encoded_stream(variant % 4, content),
     }
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-    for num in sorted(bodies):
-        offsets[num] = len(out)
-        out.extend(f"{num} 0 obj\n".encode("latin-1"))
-        out.extend(bodies[num])
-        out.extend(b"\nendobj\n")
-    xref_off = len(out)
     if variant % 2 == 0:
-        out.extend(b"xref\n0 5\n0000000000 65535 f \n")
-        for num in range(1, 5):
-            out.extend(f"{offsets[num]:010d} 00000 n \n"
-                       .encode("latin-1"))
-        out.extend(b"trailer\n<< /Size 5 /Root 1 0 R >>\n")
-    else:
-        rows = [bytes([0, 0, 0, 0, 255])]
-        for num in range(1, 5):
-            rows.append(bytes([1]) + offsets[num].to_bytes(3, "big")
-                        + b"\x00")
-        rows.append(bytes([1]) + xref_off.to_bytes(3, "big") + b"\x00")
-        enc2 = zlib.compress(b"".join(rows))
-        out.extend(
-            (f"5 0 obj\n<< /Length {len(enc2)} /Type /XRef /Size 6 "
-             f"/W [1 3 1] /Index [0 6] /Root 1 0 R "
-             f"/Filter /FlateDecode >>\nstream\n").encode("latin-1"))
-        out.extend(enc2)
-        out.extend(b"\nendstream\nendobj\n")
-    out.extend(f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1"))
+        return _classic_pdf(bodies, _runs({0, *bodies}), "/Root 1 0 R")
+    out, offsets = _objects(bodies)
+    xref_off = len(out)
+    rows = {num: _xref_row(1, off, 0) for num, off in offsets.items()}
+    rows |= {0: _xref_row(0, 0, 255), 5: _xref_row(1, xref_off, 0)}
+    _emit(out, 5, _xref_stream(rows, _runs(rows), 6, "/Root 1 0 R",
+                               False, ""))
+    _startxref(out, xref_off)
     return bytes(out)
 
 

@@ -351,6 +351,57 @@ def test_wrap_content_stream_round_trip():
             ("table" if variant % 2 == 0 else "stream")
 
 
+# sha256 over each writer's files for doc_id 0-47 of every _PIN_TEXTS
+# entry; the gate fixtures, the damaged-file corpus and the benchmark
+# inputs are these bytes
+_PIN_TEXTS = ("", "The quick brown fox jumps over the lazy dog near the "
+              "river bank.",
+              r"Parens (nested (twice)) and a back\slash \ at (the) end)")
+_PINNED = {
+    "build_pdf":
+        "1024e35c914bde6ffc546962a2d3f3383381a4b1a23168b7ea03bc193f3dcfdf",
+    "build_pdf_cmap":
+        "51c3e850c46d4bc584f5425d0eb244e62a780385c4f6249e5e5f1dd7841c811c",
+    "build_pdf_encoding":
+        "671d4f4eb07365f9f0ce0e6c2ef8eeaa522bb81bad123c9699596f57b330e96c",
+    "build_pdf_widths":
+        "75dbac386b46afa84c5b2fabf1ce96ecd867280f9b1123a5556e8e5663768a54",
+    "build_pdf_xobject":
+        "e02f64de0d662616d398ef60fbd3cc1aa50a6a0cc18bada7527e8e9d601c858c",
+    "build_pdf_encrypted":
+        "d62a231068979f71766fc34864dfad3f7948bf2569d021089354e0972d2bbbc3",
+    "build_pdf_acroform":
+        "9621fb5f71a32e333284ebded4577263a95e39e8f4c1795f8eafcfed70d42088",
+    "build_pdf_annots":
+        "6967eb15e6d10671e611ee7ef525b4da73b08dfca2b0911c9cc76a01346c81f7",
+    "build_pdf_nav":
+        "baa1ba31779dd4db1f924409f194440ff0bbafc2b27c6abcfa6d1faa5769f0c5",
+    "wrap_content_stream":
+        "5f7328fe12ceb8dd7deb78fe019b00f73404bc9156fb73851037ea2b87980a76",
+}
+
+
+def test_writer_bytes_are_pinned():
+    """Every writer's output is byte for byte what it was when the
+    writers were moved onto one serializer."""
+    import hashlib
+
+    from pdf_extraction_spark.operators.pdffile import (
+        WRITERS, wrap_content_stream)
+
+    writers = {writer.__name__: writer for writer in WRITERS}
+    writers["wrap_content_stream"] = lambda doc_id, text: \
+        wrap_content_stream(doc_id, text.encode("utf-8"))
+    got = {}
+    for name, writer in writers.items():
+        h = hashlib.sha256()
+        for text in _PIN_TEXTS:
+            for doc_id in range(48):
+                h.update(writer(doc_id, text))
+        got[name] = h.hexdigest()
+    assert got == _PINNED
+
+
 def test_rc4_known_vector():
     from pdf_extraction_spark.operators.pdffile import rc4
 

@@ -314,22 +314,18 @@ def gen_stream_docs(rng) -> list[tuple]:
 
 
 def damaged_pdf_files(seed: int, n: int = 60) -> list[tuple]:
-    """(doc_id, pdf bytes) from every deterministic PDF writer (plain,
-    cmap, encoding, widths, xobject, encrypted, acroform, annots, nav),
-    each left intact, byte-flipped (1-8 random bytes), truncated, or
-    both — the damage a crawl hands the whole-file bridge."""
-    from pdf_extraction_spark.operators import pdffile as pf
+    """(doc_id, pdf bytes) from every deterministic PDF writer (file i
+    from ``pdffile.WRITERS[i % len(WRITERS)]``), each left intact,
+    byte-flipped (1-8 random bytes), truncated, or both — the damage a
+    crawl hands the whole-file bridge."""
+    from pdf_extraction_spark.operators.pdffile import WRITERS
 
-    writers = [pf.build_pdf, pf.build_pdf_cmap, pf.build_pdf_encoding,
-               pf.build_pdf_widths, pf.build_pdf_xobject,
-               pf.build_pdf_encrypted, pf.build_pdf_acroform,
-               pf.build_pdf_annots, pf.build_pdf_nav]
     rng = random.Random(seed)
     out = []
     for i in range(n):
         text = " ".join(rng.choice(WORDS) for _ in range(rng.randint(
             0, 60)))
-        blob = bytearray(writers[i % len(writers)](i, text))
+        blob = bytearray(WRITERS[i % len(WRITERS)](i, text))
         mode = rng.random()
         if 0.25 <= mode < 0.75:
             for _ in range(rng.randint(1, 8)):

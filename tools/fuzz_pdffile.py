@@ -12,8 +12,9 @@ gates, every structural axis is randomized per seed:
 - the page tree nests randomly up to depth 3 with random fan-out;
 - /Contents is a single stream or an ARRAY of up to 3 part-streams
   (parts must re-join with a newline);
-- each stream independently picks none/Flate/AHx/A85/RL or the
-  [AHx Fl] chain; xref streams flip a PNG-Up predictor coin;
+- each stream independently picks one of the seven encodings of
+  ``pdffile._ENCODINGS`` (none/Flate/AHx/A85/RL/LZW or the [AHx Fl]
+  chain); xref streams flip a PNG-Up predictor coin;
 - /Length is sometimes an INDIRECT reference to an int object that
   may live elsewhere in the file (forward resolution through the
   xref);
@@ -56,14 +57,13 @@ from __future__ import annotations
 
 import hashlib
 import random
-import zlib
 
 from pdf_extraction_spark.functions.aes import (cbc_encrypt,
                                                 cbc_encrypt_raw)
 from pdf_extraction_spark.functions.glyphlist import encoding_map
 from pdf_extraction_spark.operators.pdffile import (
-    _ascii85_encode, _ascii_hex_encode, _lit_bytes,
-    _png_up_encode, _run_length_encode, lzw_encode, object_key, r6_hash,
+    _ENCODINGS, _HEADER, _emit, _lit_bytes, _objstm, _runs, _startxref,
+    _stream_obj, _xref_row, _xref_stream, _xref_table, object_key, r6_hash,
     rc4, std_file_key, std_o_entry, std_u_entry)
 
 CHARS = ("abcdefghijklmnop qrstuvwxyz0123456789 ()\\<>[]/% \n\t"
@@ -82,21 +82,8 @@ def rand_content(rng: random.Random) -> bytes:
 
 def encode_stream(rng: random.Random, data: bytes) -> tuple[bytes, str]:
     """Pick a random filter; return (encoded, /Filter clause)."""
-    choice = rng.randrange(7)
-    if choice == 0:
-        return data, ""
-    if choice == 1:
-        return zlib.compress(data), " /Filter /FlateDecode"
-    if choice == 2:
-        return _ascii_hex_encode(data), " /Filter /ASCIIHexDecode"
-    if choice == 3:
-        return _ascii85_encode(data), " /Filter /ASCII85Decode"
-    if choice == 4:
-        return _run_length_encode(data), " /Filter /RunLengthDecode"
-    if choice == 5:
-        return lzw_encode(data), " /Filter /LZWDecode"
-    return (_ascii_hex_encode(zlib.compress(data)),
-            " /Filter [/ASCIIHexDecode /FlateDecode]")
+    encode, clause = _ENCODINGS[rng.randrange(len(_ENCODINGS))]
+    return encode(data), clause
 
 
 class Writer:
@@ -208,7 +195,7 @@ def serialize(w: Writer, root: int, info: int, use_xref_stream: bool,
     ``trailer_extra`` is appended to the trailer dict (classic) or the
     XRef stream dict (the trailer of that flavor) — the encryption
     axis injects ``/Encrypt``+``/ID`` through it."""
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
+    out = bytearray(_HEADER)
     offsets: dict[int, int] = {}
     order = list(w.bodies)
     rng.shuffle(order)
@@ -233,17 +220,15 @@ def serialize(w: Writer, root: int, info: int, use_xref_stream: bool,
         if num in objstm_members:
             continue
         out += junk()
-        offsets[num] = len(out)
-        out += f"{num} 0 obj\n".encode("latin-1")
-        out += w.bodies[num]
-        out += b"\nendobj\n"
+        offsets[num] = _emit(out, num, w.bodies[num])
 
     size = max(w.bodies, default=0) + 1
+    trailer = f"/Root {root} 0 R /Info {info} 0 R"
     if not use_xref_stream:
         # hybrid-reference axis (§7.5.8.4): with p=.3 a random subset
         # of plain objects moves into an ObjStm reachable only via the
         # /XRefStm stream; the classic table omits them entirely
-        xrefstm_off = None
+        stm_decl = ""
         hybrid = [n for n in order if n not in w.stream_nums
                   and n != root and n in offsets]
         rng.shuffle(hybrid)
@@ -256,135 +241,46 @@ def serialize(w: Writer, root: int, info: int, use_xref_stream: bool,
             # point at them, and the parser must not scan for them
             for num in hybrid:
                 del offsets[num]
-            hdr, body, off = [], [], 0
-            for num in hybrid:
-                b = w.bodies[num]
-                hdr.append(f"{num} {off}")
-                body.append(b)
-                off += len(b) + 1
-            payload = " ".join(hdr).encode("latin-1") + b"\n" \
-                + b"\n".join(body) + b"\n"
-            first = len(" ".join(hdr).encode("latin-1")) + 1
             objstm_num = w.alloc()
-            offsets[objstm_num] = len(out)
-            enc = zlib.compress(payload)
-            out += (f"{objstm_num} 0 obj\n<< /Length {len(enc)} "
-                    f"/Type /ObjStm /N {len(hybrid)} /First {first} "
-                    f"/Filter /FlateDecode >>\nstream\n"
-                    ).encode("latin-1")
-            out += enc + b"\nendstream\nendobj\n"
+            offsets[objstm_num] = _emit(
+                out, objstm_num, _objstm([(n, w.bodies[n]) for n in hybrid]))
             xnum = w.alloc()
             size = max(size, xnum + 1)
             xrefstm_off = len(out)
+            rows = {n: _xref_row(2, objstm_num, k)
+                    for k, n in enumerate(hybrid)}
+            rows[objstm_num] = _xref_row(1, offsets[objstm_num], 0)
+            rows[xnum] = _xref_row(1, xrefstm_off, 0)
             # one /Index pair per object, sorted (valid per spec,
             # exercises many-pair parsing)
-            row_of = {}
-            for k, num in enumerate(hybrid):
-                row_of[num] = bytes([2]) \
-                    + objstm_num.to_bytes(3, "big") + bytes([k])
-            row_of[objstm_num] = bytes([1]) \
-                + offsets[objstm_num].to_bytes(3, "big") + b"\x00"
-            row_of[xnum] = bytes([1]) \
-                + xrefstm_off.to_bytes(3, "big") + b"\x00"
-            pairs = sorted((num, 1) for num in row_of)
-            rows = b"".join(row_of[num] for num, _ in pairs)
-            idxs = "[" + " ".join(f"{a} {b}" for a, b in pairs) + "]"
-            enc2 = zlib.compress(rows)
-            out += (f"{xnum} 0 obj\n<< /Length {len(enc2)} /Type /XRef "
-                    f"/Size {size} /W [1 3 1] /Index {idxs} "
-                    f"/Root {root} 0 R /Info {info} 0 R "
-                    f"/Filter /FlateDecode >>\nstream\n"
-                    ).encode("latin-1")
-            out += enc2 + b"\nendstream\nendobj\n"
-        xref_off = len(out)
-        entries = sorted(offsets)
-        out += b"xref\n0 1\n0000000000 65535 f \n"
-        i = 0
-        while i < len(entries):  # one subsection per consecutive run
-            j = i
-            while j + 1 < len(entries) \
-                    and entries[j + 1] == entries[j] + 1:
-                j += 1
-            out += f"{entries[i]} {j - i + 1}\n".encode("latin-1")
-            for num in entries[i:j + 1]:
-                out += f"{offsets[num]:010d} 00000 n \n" \
-                    .encode("latin-1")
-            i = j + 1
-        stm_decl = f" /XRefStm {xrefstm_off}" if xrefstm_off else ""
-        out += (f"trailer\n<< /Size {size} /Root {root} 0 R "
-                f"/Info {info} 0 R{stm_decl}{trailer_extra} >>\n"
-                ).encode("latin-1")
-        out += f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1")
+            _emit(out, xnum, _xref_stream(
+                rows, [(n, 1) for n in sorted(rows)], size, trailer,
+                False, ""))
+            stm_decl = f" /XRefStm {xrefstm_off}"
+        # one subsection per consecutive run
+        xref_off = _xref_table(
+            out, offsets, [(0, 1)] + _runs(offsets),
+            f"/Size {size} {trailer}{stm_decl}{trailer_extra}")
         return out, offsets, xref_off
 
     # xref-stream flavor: optional ObjStm + the XRef stream object
-    stm_entries: dict[int, tuple] = {}
+    rows: dict[int, bytes] = {}
     if objstm_members:
-        hdr, body, off = [], [], 0
-        for idx, num in enumerate(objstm_members):
-            b = w.bodies[num]
-            hdr.append(f"{num} {off}")
-            body.append(b)
-            off += len(b) + 1
-            stm_entries[num] = ("c", idx)
-        payload = " ".join(hdr).encode("latin-1") + b"\n" \
-            + b"\n".join(body) + b"\n"
-        first = len(" ".join(hdr).encode("latin-1")) + 1
         objstm_num = w.alloc()
         size = max(size, objstm_num + 1)
         out += junk()
-        offsets[objstm_num] = len(out)
-        enc = zlib.compress(payload)
-        out += f"{objstm_num} 0 obj\n".encode("latin-1")
-        out += (f"<< /Length {len(enc)} /Type /ObjStm "
-                f"/N {len(objstm_members)} /First {first} "
-                f"/Filter /FlateDecode >>\nstream\n").encode("latin-1")
-        out += enc + b"\nendstream\nendobj\n"
-        for num in stm_entries:
-            stm_entries[num] = ("c", objstm_num, stm_entries[num][1])
-
+        offsets[objstm_num] = _emit(out, objstm_num, _objstm(
+            [(n, w.bodies[n]) for n in objstm_members]))
+        rows = {n: _xref_row(2, objstm_num, k)
+                for k, n in enumerate(objstm_members)}
     xnum = w.alloc()
     size = max(size, xnum + 1)
     xref_off = len(out)
-    all_nums = sorted(set(offsets) | set(stm_entries) | {xnum})
-    rows = {}
-    for num in all_nums:
-        if num == xnum:
-            rows[num] = bytes([1]) + xref_off.to_bytes(3, "big") \
-                + b"\x00"
-        elif num in stm_entries:
-            _, snum, idx = stm_entries[num]
-            rows[num] = bytes([2]) + snum.to_bytes(3, "big") \
-                + bytes([idx])
-        else:
-            rows[num] = bytes([1]) + offsets[num].to_bytes(3, "big") \
-                + b"\x00"
-    index_pairs = []
-    table = b""
-    i = 0
-    while i < len(all_nums):
-        j = i
-        while j + 1 < len(all_nums) \
-                and all_nums[j + 1] == all_nums[j] + 1:
-            j += 1
-        index_pairs += [all_nums[i], j - i + 1]
-        for num in all_nums[i:j + 1]:
-            table += rows[num]
-        i = j + 1
-    if rng.random() < 0.5:
-        enc = zlib.compress(_png_up_encode(table, 5))
-        parms = " /DecodeParms << /Predictor 12 /Columns 5 >>"
-    else:
-        enc = zlib.compress(table)
-        parms = ""
-    idx = "[" + " ".join(str(x) for x in index_pairs) + "]"
-    out += (f"{xnum} 0 obj\n<< /Length {len(enc)} /Type /XRef "
-            f"/Size {size} /W [1 3 1] /Index {idx} /Root {root} 0 R "
-            f"/Info {info} 0 R /Filter /FlateDecode{parms}"
-            f"{trailer_extra} >>\n"
-            f"stream\n").encode("latin-1")
-    out += enc + b"\nendstream\nendobj\n"
-    out += f"startxref\n{xref_off}\n%%EOF\n".encode("latin-1")
+    rows |= {n: _xref_row(1, off, 0) for n, off in offsets.items()}
+    rows[xnum] = _xref_row(1, xref_off, 0)
+    _emit(out, xnum, _xref_stream(rows, _runs(rows), size, trailer,
+                                  rng.random() < 0.5, trailer_extra))
+    _startxref(out, xref_off)
     return out, offsets, xref_off
 
 
@@ -862,45 +758,26 @@ def gen_case(seed: int) -> tuple[bytes, dict]:
             enc, filt = encode_stream(rng, new)
             if w.fkey is not None:
                 enc = w.enc_bytes(cnum, enc)
-            changed[cnum] = (
-                f"<< /Length {len(enc)}{filt} >>\nstream\n"
-                .encode("latin-1") + enc + b"\nendstream")
+            changed[cnum] = _stream_obj(enc, filt)
         out += b"\n"
-        offs2: dict[int, int] = {}
-        for num, body in changed.items():
-            offs2[num] = len(out)
-            out += f"{num} 0 obj\n".encode("latin-1")
-            out += body
-            out += b"\nendobj\n"
-        x2 = len(out)
+        offs2 = {num: _emit(out, num, body)
+                 for num, body in changed.items()}
+        trailer = f"/Root {root} 0 R /Info {info} 0 R /Prev {prev_off}"
         if not use_xref_stream:
-            out += b"xref\n"
-            for num in sorted(offs2):
-                out += f"{num} 1\n{offs2[num]:010d} 00000 n \n" \
-                    .encode("latin-1")
-            out += (f"trailer\n<< /Size {size} /Root {root} 0 R "
-                    f"/Info {info} 0 R /Prev {prev_off} >>\n"
-                    ).encode("latin-1")
+            prev_off = _xref_table(out, offs2,
+                                   [(n, 1) for n in sorted(offs2)],
+                                   f"/Size {size} {trailer}")
         else:
             xnum = w.alloc()
             size = max(size, xnum + 1)
-            nums2 = sorted(offs2) + [xnum]
-            rows2 = b""
-            idx2 = []
-            for num in nums2:
-                off = offs2.get(num, x2)
-                rows2 += bytes([1]) + off.to_bytes(3, "big") + b"\x00"
-                idx2 += [num, 1]
-            enc2 = zlib.compress(rows2)
-            idxs = "[" + " ".join(str(x) for x in idx2) + "]"
-            out += (f"{xnum} 0 obj\n<< /Length {len(enc2)} /Type /XRef "
-                    f"/Size {size} /W [1 3 1] /Index {idxs} "
-                    f"/Root {root} 0 R /Info {info} 0 R "
-                    f"/Prev {prev_off} /Filter /FlateDecode >>\n"
-                    f"stream\n").encode("latin-1")
-            out += enc2 + b"\nendstream\nendobj\n"
-        out += f"startxref\n{x2}\n%%EOF\n".encode("latin-1")
-        prev_off = x2
+            x2 = len(out)
+            rows = {n: _xref_row(1, off, 0) for n, off in offs2.items()}
+            rows[xnum] = _xref_row(1, x2, 0)
+            _emit(out, xnum, _xref_stream(
+                rows, [(n, 1) for n in [*sorted(offs2), xnum]], size,
+                trailer, False, ""))
+            _startxref(out, x2)
+            prev_off = x2
 
     return bytes(out), {
         "encrypted": encrypted,
